@@ -40,7 +40,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from databricks_end_to_end_lakeflow_project_spark.registry import query
-from databricks_end_to_end_lakeflow_project_spark.sources.readers import read_table
+from databricks_end_to_end_lakeflow_project_spark.sources.readers import (
+    read_spark_parquet,
+    read_table,
+)
 
 _SRC = "__is_update"
 _RN = "__cdc_rn"
@@ -190,6 +193,15 @@ class ManagedParquetTable:
     snapshots, so in-flight scans finish against inodes that still
     exist. Single-process pipelines (this engine's DLT runtime) order
     reads and commits and never hit it.
+
+    Read schema: Delta takes it from the log; here ``read`` takes the
+    schema Spark stored in the footer of the first data file by path (the
+    file Spark's own inference reads), by one pyarrow metadata read on
+    the driver (`sources.readers.read_spark_parquet`), so a read launches
+    no Spark job. It falls back to Spark's inference job for a
+    partitioned table (partition-column types come from directory names),
+    for a file without the stored schema, and for a directory with no
+    data file.
     """
 
     def __init__(
@@ -249,10 +261,9 @@ class ManagedParquetTable:
         # descend into them; recursiveFileLookup is incompatible with
         # partition discovery, which is exactly why partitioned tables
         # keep the per-file append path instead
-        reader = self.spark.read
-        if not self.partition_by:
-            reader = reader.option("recursiveFileLookup", "true")
-        return reader.parquet(path)
+        return read_spark_parquet(
+            self.spark, path, recursive=not self.partition_by
+        )
 
     def _versions_dir(self) -> str:
         return f"{self.path}.__versions"
@@ -1789,7 +1800,7 @@ def cdc_deletion_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
         return sorted(out)
 
     inv0 = inventory()
-    scan = spark.read.parquet(path).select(
+    scan = read_spark_parquet(spark, path).select(
         "*",
         F.col("_metadata.file_path").alias("__file"),
         F.col("_metadata.row_index").alias("__pos"),

@@ -38,6 +38,7 @@ from databricks_end_to_end_lakeflow_project_spark.plans.gold import (
     build_dim,
     build_fact,
 )
+from databricks_end_to_end_lakeflow_project_spark.sources.readers import read_spark_parquet
 from databricks_end_to_end_lakeflow_project_spark.streaming.ingest import (
     INGEST_FILE_COL,
     INGEST_TIME_COL,
@@ -105,7 +106,7 @@ class FlightLakehouse:
             return {e: drain_ingest_stream(f.result()) for e, f in started.items()}
 
     def _bronze(self, entity: str) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.bronze_root, entity))
+        return read_spark_parquet(self.spark, os.path.join(self.bronze_root, entity))
 
     def ingest_and_silver(self, clock: dt.datetime | None = None, then=None):
         """Overlapped bronze→silver pass: one chain per entity that

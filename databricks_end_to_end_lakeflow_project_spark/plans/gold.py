@@ -205,9 +205,11 @@ def build_fact(
     """
     if target.exists():
         last_load = target.read().agg(F.max(cfg.cdc_col)).collect()[0][0]
-        src = source.filter(F.col(cfg.cdc_col) >= F.lit(last_load).cast("timestamp"))
     else:
-        src = source
+        last_load = None
+    # an existing but EMPTY target has no cursor: slicing on `>= NULL`
+    # would drop every later row and leave the fact empty forever
+    src = source.filter(F.col(cfg.cdc_col) >= F.lit(last_load).cast("timestamp")) if last_load else source
     src = latest_by_key(src, cfg.grain_keys, [cfg.cdc_col])
 
     out = src

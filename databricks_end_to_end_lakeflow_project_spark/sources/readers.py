@@ -8,6 +8,7 @@ timestamps, matching DuckDB's ns→µs truncation so oracle hashes agree.
 
 from __future__ import annotations
 
+import json
 import os
 import tempfile
 
@@ -76,6 +77,54 @@ def table_row_count(sf_dir: str, name: str) -> int:
     import pyarrow.parquet as pq
 
     return pq.read_metadata(os.path.join(sf_dir, f"{name}.parquet")).num_rows
+
+
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _hidden(name: str) -> bool:
+    # Spark's listing filter: `_x=1` is a partition dir, not a marker
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
+def read_spark_parquet(
+    spark: SparkSession, path: str, recursive: bool = False
+) -> DataFrame:
+    """Read a parquet directory Spark wrote, with the schema Spark stored
+    in its footer (the ``org.apache.spark.sql.parquet.row.metadata`` key),
+    taken by one pyarrow metadata read on the driver. A plain
+    ``read.parquet`` blocks on a one-task footer job before any plan
+    exists; Delta avoids it by keeping the schema in its log, and this is
+    the same shortcut.
+
+    Spark's own inference (``mergeSchema`` off) reads one footer: that of
+    the first data file sorted by path, skipping the hidden names its
+    listing skips. This reads the same file, so the schema is the one
+    inference would give. Falls back to inference when there is no data
+    file (Spark raises as before), the file lacks the key (pyarrow-written
+    inputs), or, without ``recursive``, the directory has a visible
+    subdir (a partitioned table, whose partition-column types only
+    inference derives from the directory names)."""
+    import pyarrow.parquet as pq
+
+    reader = spark.read
+    if recursive:
+        reader = reader.option("recursiveFileLookup", "true")
+    files = []
+    for root, dirs, names in os.walk(path):
+        dirs[:] = [d for d in dirs if not _hidden(d)]
+        if dirs and not recursive:
+            return reader.parquet(path)
+        files += [os.path.join(root, f) for f in names if not _hidden(f)]
+    if not files:
+        return reader.parquet(path)
+    try:
+        stored = (pq.read_metadata(min(files)).metadata or {}).get(_SPARK_ROW_METADATA)
+    except (OSError, ValueError):
+        return reader.parquet(path)
+    if stored is None:
+        return reader.parquet(path)
+    return reader.schema(T.StructType.fromJson(json.loads(stored))).parquet(path)
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

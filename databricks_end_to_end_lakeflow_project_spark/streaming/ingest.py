@@ -26,7 +26,7 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
 RESCUE_COL = "_rescued_data"
@@ -129,8 +129,3 @@ def drain_ingest_stream(query) -> int:
     query.awaitTermination()
     progress = query.recentProgress
     return sum(1 for p in progress if p["numInputRows"] > 0)
-
-
-def read_bronze(spark: SparkSession, target_dir: str) -> DataFrame:
-    """Batch view over a bronze parquet dir (reference S2)."""
-    return spark.read.parquet(target_dir)

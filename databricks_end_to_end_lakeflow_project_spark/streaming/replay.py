@@ -40,7 +40,10 @@ from databricks_end_to_end_lakeflow_project_spark.operators.cdc import (
     latest_by_key,
 )
 from databricks_end_to_end_lakeflow_project_spark.registry import query
-from databricks_end_to_end_lakeflow_project_spark.sources.readers import read_table
+from databricks_end_to_end_lakeflow_project_spark.sources.readers import (
+    read_spark_parquet,
+    read_table,
+)
 
 
 def prepare_replay(
@@ -75,7 +78,7 @@ def replay_stream(
 ) -> DataFrame:
     """Stream the prepared dir, ``files_per_trigger`` slices per
     micro-batch (the rate limit)."""
-    schema = spark.read.parquet(replay_dir).schema
+    schema = read_spark_parquet(spark, replay_dir).schema
     return (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", files_per_trigger)

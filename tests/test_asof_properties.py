@@ -19,6 +19,7 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from databricks_end_to_end_lakeflow_project_spark.operators.asof import asof_join
+from tests.conftest import arrow_frame
 
 # timestamps as small ints (the plan only compares/orders them); right
 # rows unique per (key, ts) as the operator requires
@@ -57,9 +58,9 @@ def _model(left, right, strict):
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 def test_asof_join_matches_reference_model(spark, left, right, strict, parts):
-    ldf = spark.createDataFrame(left, "key string, lts int, lid int").repartition(parts)
-    rdf = spark.createDataFrame(
-        right or [("Z", -99, -1)], "key string, rts int, rval int"
+    ldf = arrow_frame(spark, left, "key string, lts int, lid int").repartition(parts)
+    rdf = arrow_frame(
+        spark, right or [("Z", -99, -1)], "key string, rts int, rval int"
     ).repartition(parts)
     got = {
         r["lid"]: (r["rts"], r["rval"])
@@ -94,9 +95,9 @@ def _model_forward(left, right, strict):
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 def test_asof_join_forward_matches_reference_model(spark, left, right, strict, parts):
-    ldf = spark.createDataFrame(left, "key string, lts int, lid int").repartition(parts)
-    rdf = spark.createDataFrame(
-        right or [("Z", -99, -1)], "key string, rts int, rval int"
+    ldf = arrow_frame(spark, left, "key string, lts int, lid int").repartition(parts)
+    rdf = arrow_frame(
+        spark, right or [("Z", -99, -1)], "key string, rts int, rval int"
     ).repartition(parts)
     got = {
         r["lid"]: (r["rts"], r["rval"])

@@ -983,3 +983,163 @@ def test_pruned_upsert_occ_conflict_cleans_tmp(spark, tmp_path):
     assert _file_inventory(t.path) == before
     parent = os.path.dirname(t.path)
     assert [d for d in os.listdir(parent) if "__tmp_" in d] == []
+
+
+# ---------------------------------------------------------------------------
+# read schema from the parquet footer (sources.readers.read_spark_parquet)
+# ---------------------------------------------------------------------------
+
+
+def _jobs(spark) -> int:
+    return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+
+
+def _rows(df) -> list[str]:
+    # repr: map columns arrive as dicts, which do not order
+    return sorted(repr(r) for r in df.collect())
+
+
+def _assert_reads_as_inferred(spark, got, path, recursive=True):
+    """``got`` has the schema and rows of Spark's own inference over
+    ``path`` (the read that ``ManagedParquetTable.read`` made before)."""
+    reader = spark.read
+    if recursive:
+        reader = reader.option("recursiveFileLookup", "true")
+    inferred = reader.parquet(path)
+    assert got.schema == inferred.schema
+    assert _rows(got) == _rows(inferred)
+
+
+def test_footer_schema_overwrite_then_append(spark, tmp_path):
+    t = ManagedParquetTable(spark, str(tmp_path / "t"))
+    t.overwrite(spark.createDataFrame([("a", 1)], "k string, v long"))
+    t.append(spark.createDataFrame([("b", 2), ("c", None)], "k string, v long"))
+    _assert_reads_as_inferred(spark, t.read(), t.path)
+    assert len(_rows(t.read())) == 3
+
+
+def test_footer_schema_empty_upsert(spark, tmp_path, base_rows):
+    t = ManagedParquetTable(spark, str(tmp_path / "t"), keys=["key"], sequence_by="seq")
+    t.upsert(_df(spark, []))  # first write of an empty batch
+    _assert_reads_as_inferred(spark, t.read(), t.path)
+    t.upsert(_df(spark, base_rows))
+    t.upsert(_df(spark, []))
+    _assert_reads_as_inferred(spark, t.read(), t.path)
+    assert len(_rows(t.read())) == 3
+
+
+def test_footer_schema_merge_schema_widening(spark, tmp_path):
+    t = ManagedParquetTable(spark, str(tmp_path / "t"), keys=["k"], sequence_by="seq")
+    t.upsert(spark.createDataFrame([("a", 1, "v1")], "k string, seq int, v string"))
+    t.upsert(
+        spark.createDataFrame(
+            [("a", 2, "v2", 9.5), ("b", 2, "v1", 7.0)],
+            "k string, seq int, v string, score double",
+        ),
+        merge_schema=True,
+    )
+    _assert_reads_as_inferred(spark, t.read(), t.path)
+    assert "score" in t.read().columns
+
+
+def test_footer_schema_partitioned_table_falls_back(spark, tmp_path):
+    t = _mk_partitioned(spark, tmp_path)
+    got = t.read()
+    # partition discovery types `month` from the directory names, which
+    # only Spark's inference does; recursive lookup would drop it
+    _assert_reads_as_inferred(spark, got, t.path, recursive=False)
+    assert "month" in got.columns
+
+
+def test_footer_schema_bronze_with_rescued_data(spark, tmp_path):
+    from databricks_end_to_end_lakeflow_project_spark.sources.readers import (
+        read_spark_parquet,
+    )
+    from databricks_end_to_end_lakeflow_project_spark.streaming.ingest import (
+        RESCUE_COL,
+        ingest_csv_stream,
+    )
+
+    src, target = tmp_path / "raw", str(tmp_path / "bronze")
+    src.mkdir()
+    dirs = [target, str(tmp_path / "ckpt"), str(tmp_path / "schema")]
+    (src / "a.csv").write_text("id,name\n1,x\n2,y\n")
+    ingest_csv_stream(spark, str(src), *dirs)
+    (src / "b.csv").write_text("id,name\nnot-an-int,z\n")  # drifts → rescue
+    ingest_csv_stream(spark, str(src), *dirs)
+
+    got = read_spark_parquet(spark, target)
+    _assert_reads_as_inferred(spark, got, target, recursive=False)
+    assert RESCUE_COL in got.columns
+    assert got.filter(F.col(RESCUE_COL).isNotNull()).count() == 1
+
+
+def test_footer_schema_column_types(spark, tmp_path):
+    from decimal import Decimal
+
+    row = (
+        _ts("2024-01-02T03:04:05.123456"),
+        _ts("2024-01-02T03:04:05.654321"),
+        dt.date(2024, 1, 2),
+        Decimal("1234567890.12"),
+        [1, None, 3],
+        {"a": 1, "b": None},
+        (7, "s"),
+        None,
+    )
+    schema = (
+        "ts timestamp, ntz timestamp_ntz, d date, amt decimal(12,2), "
+        "arr array<int>, m map<string,int>, st struct<a:int,b:string>, "
+        "nothing string"
+    )
+    df = spark.createDataFrame([row, row], schema).withColumn("one", F.lit(1))
+    t = ManagedParquetTable(spark, str(tmp_path / "t"))
+    t.overwrite(df)
+    got = t.read()
+    _assert_reads_as_inferred(spark, got, t.path)
+    assert dict(got.dtypes)["ntz"] == "timestamp_ntz"
+
+
+def test_footer_schema_files_disagree_reads_first_file(spark, tmp_path):
+    """Files with different stored schemas: Spark's inference uses the
+    first data file by path, and so does the footer read."""
+    from databricks_end_to_end_lakeflow_project_spark.sources.readers import (
+        read_spark_parquet,
+    )
+
+    narrow = spark.createDataFrame([("a", 1)], "k string, v long")
+    wide = spark.createDataFrame([("b", 2, "x")], "k string, v long, w string")
+    for first, second in ((narrow, wide), (wide, narrow)):
+        path = tmp_path / f"t_{len(first.columns)}"
+        first.coalesce(1).write.parquet(str(path / "batch_a"))
+        second.coalesce(1).write.parquet(str(path / "batch_b"))
+        got = read_spark_parquet(spark, str(path), recursive=True)
+        assert got.columns == first.columns
+        _assert_reads_as_inferred(spark, got, str(path))
+
+
+def test_footer_schema_reads_launch_no_job(spark, tmp_path):
+    from databricks_end_to_end_lakeflow_project_spark.sources.readers import (
+        read_spark_parquet,
+    )
+    from databricks_end_to_end_lakeflow_project_spark.streaming.ingest import (
+        ingest_csv_stream,
+    )
+
+    t = ManagedParquetTable(spark, str(tmp_path / "t"))
+    t.overwrite(spark.createDataFrame([("a", 1)], "k string, v long"))
+    t.append(spark.createDataFrame([("b", 2)], "k string, v long"))
+    src, bronze = tmp_path / "raw", str(tmp_path / "bronze")
+    src.mkdir()
+    (src / "a.csv").write_text("id,name\n1,x\n")
+    ingest_csv_stream(
+        spark, str(src), bronze, str(tmp_path / "ckpt"), str(tmp_path / "schema")
+    )
+
+    before = _jobs(spark)
+    t.read()
+    read_spark_parquet(spark, bronze)
+    assert _jobs(spark) - before == 0
+    # the inference the reads replaced is a job each
+    spark.read.option("recursiveFileLookup", "true").parquet(t.path)
+    assert _jobs(spark) - before == 1

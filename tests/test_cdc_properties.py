@@ -35,6 +35,7 @@ from databricks_end_to_end_lakeflow_project_spark.operators.cdc import (
     latest_by_key,
     merge_upsert_plan,
 )
+from tests.conftest import arrow_frame
 
 SCHEMA = "key string, seq int, val int"
 SCHEMA_STR = "key string, seq int, val string"
@@ -81,6 +82,20 @@ def _to_state(df) -> dict:
     return {r["key"]: (r["seq"], r["val"]) for r in rows}
 
 
+def test_arrow_frame_keeps_list_frame_partitions(spark):
+    """The properties below build inputs with ``arrow_frame``; they must
+    reach the operators in the input partitions a list-built frame has,
+    so partial results (e.g. the window group limit under
+    ``latest_by_key``) still merge across partitions."""
+    for n in (0, 3, 14, 20, 60):
+        rows = [("ABCD"[i % 4], i, i) for i in range(n)]
+        fast, ref = arrow_frame(spark, rows, SCHEMA), spark.createDataFrame(rows, SCHEMA)
+        got, want = ([[tuple(r) for r in p] for p in df.rdd.glom().collect() if p]
+                     for df in (fast, ref))
+        assert got == want
+        assert "LogicalRDD" in fast._jdf.queryExecution().optimizedPlan().toString()
+
+
 @settings(max_examples=12, deadline=None, suppress_health_check=list(HealthCheck))
 @given(data=_rows_and_cuts)
 def test_merge_plan_matches_model_and_split_invariant(spark, data):
@@ -88,19 +103,19 @@ def test_merge_plan_matches_model_and_split_invariant(spark, data):
     batches = _split(rows, cuts)
 
     # fold the batches through the DataFrame merge plan
-    state_df = spark.createDataFrame([], SCHEMA)
+    state_df = arrow_frame(spark, [], SCHEMA)
     model = {}
     for batch in batches:
         state_df = merge_upsert_plan(
-            state_df, spark.createDataFrame(batch, SCHEMA), ["key"], "seq"
+            state_df, arrow_frame(spark, batch, SCHEMA), ["key"], "seq"
         )
         model = _model_merge(model, batch)
         assert _to_state(state_df) == model
 
     # batch-split invariance: the same rows as ONE batch reach the same state
     one_shot = merge_upsert_plan(
-        spark.createDataFrame([], SCHEMA),
-        spark.createDataFrame(rows, SCHEMA),
+        arrow_frame(spark, [], SCHEMA),
+        arrow_frame(spark, rows, SCHEMA),
         ["key"],
         "seq",
     )
@@ -108,7 +123,7 @@ def test_merge_plan_matches_model_and_split_invariant(spark, data):
 
     # idempotency: re-applying the final batch changes nothing
     again = merge_upsert_plan(
-        state_df, spark.createDataFrame(batches[-1], SCHEMA), ["key"], "seq"
+        state_df, arrow_frame(spark, batches[-1], SCHEMA), ["key"], "seq"
     )
     assert _to_state(again) == model
 
@@ -116,7 +131,7 @@ def test_merge_plan_matches_model_and_split_invariant(spark, data):
 @settings(max_examples=12, deadline=None, suppress_health_check=list(HealthCheck))
 @given(rows=_rows)
 def test_latest_by_key_is_model_argmax(spark, rows):
-    df = spark.createDataFrame(rows, SCHEMA)
+    df = arrow_frame(spark, rows, SCHEMA)
     got = _to_state(latest_by_key(df, ["key"], ["seq"]))
     assert got == _model_merge({}, rows)
 
@@ -135,10 +150,10 @@ def test_managed_table_upsert_matches_model(spark, data):
         tbl = ManagedParquetTable(spark, path, keys=["key"], sequence_by="seq")
         model = {}
         for batch in batches:
-            tbl.upsert(spark.createDataFrame(batch, SCHEMA))
+            tbl.upsert(arrow_frame(spark, batch, SCHEMA))
             model = _model_merge(model, batch)
         assert _to_state(tbl.read()) == model
-        tbl.upsert(spark.createDataFrame(batches[-1], SCHEMA))
+        tbl.upsert(arrow_frame(spark, batches[-1], SCHEMA))
         assert _to_state(tbl.read()) == model
     finally:
         import shutil
@@ -188,12 +203,12 @@ def _model_merge_deletes(state: dict, batch: list) -> dict:
 def test_merge_with_deletes_matches_model(spark, data):
     rows, cuts = data
     batches = _split(rows, cuts)
-    state_df = spark.createDataFrame([], SCHEMA)
+    state_df = arrow_frame(spark, [], SCHEMA)
     model = {}
     for batch in batches:
         state_df = merge_upsert_plan(
             state_df,
-            spark.createDataFrame(batch, DSCHEMA),
+            arrow_frame(spark, batch, DSCHEMA),
             ["key"],
             "seq",
             delete_col="is_del",
@@ -205,7 +220,7 @@ def test_merge_with_deletes_matches_model(spark, data):
     # removed its key wins again and removes nothing new
     again = merge_upsert_plan(
         state_df,
-        spark.createDataFrame(batches[-1], DSCHEMA),
+        arrow_frame(spark, batches[-1], DSCHEMA),
         ["key"],
         "seq",
         delete_col="is_del",
@@ -256,7 +271,7 @@ def test_scd2_incremental_matches_model(spark, rows_cuts):
         for cut in [*cuts, len(rows)]:
             if cut <= prev:
                 continue
-            batch = spark.createDataFrame(rows[prev:cut], SCHEMA)
+            batch = arrow_frame(spark, rows[prev:cut], SCHEMA)
             scd2_apply(t, batch, ["key"], "seq")
             prev = cut
         got = {(r["key"], r["val"], r["__START_AT"], r["__END_AT"])

@@ -168,3 +168,22 @@ def test_business_silver_stream_equals_batch(spark, tmp_path_factory):
     assert batch.select(*cols).exceptAll(streamed.select(*cols)).count() == 0
     n = streamed.count()
     assert 0 < n <= 1000 and n == batch.count()
+
+
+def test_fact_fills_after_run_with_only_invalid_bookings(spark, tmp_path):
+    """A first run whose bookings all fail expectations leaves an EMPTY
+    fact table; its NULL cursor must not slice away the next run's
+    bookings."""
+    raw = str(tmp_path / "raw")
+    fx.write_base(raw)
+    bad = ("B99991", "", "F0001", "A001", "100.00", "2025-04-01")
+    fx._write(f"{raw}/bookings/base.csv", fx.BOOKING_HDR, [bad])
+    lk = FlightLakehouse(spark, raw, str(tmp_path / "lake"))
+    lk.run_all(clock=T1)
+    assert lk._gold_table("Fact_Bookings").read().count() == 0
+
+    fx._write(f"{raw}/bookings/increment.csv", fx.BOOKING_HDR, [fx.booking_row(1)])
+    lk.run_all(clock=T2)
+    assert _count(lk, "bookings_silver") == 1
+    fact = lk._gold_table("Fact_Bookings").read().collect()
+    assert [r["booking_id"] for r in fact] == ["B00001"]

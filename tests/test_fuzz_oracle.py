@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from databricks_end_to_end_lakeflow_project_spark.session import cloned_session
+from tests.conftest import arrow_frame
 
 MAX_EXAMPLES = int(os.environ.get("SPARK_GRAFT_FUZZ_EXAMPLES", "12"))
 EX_PER_JOB = 5
@@ -350,8 +351,8 @@ def duck():
 @given(batch=_batch)
 def test_fuzz_operator_matches_duckdb(name, spark_fn, sql, tiny, duck, batch):
     rows1, rows2 = _tag(batch, 0), _tag(batch, 1)
-    a = tiny.createDataFrame(rows1, _SCHEMA)
-    b = tiny.createDataFrame(rows2, _SCHEMA)
+    a = arrow_frame(tiny, rows1, _SCHEMA)
+    b = arrow_frame(tiny, rows2, _SCHEMA)
     sdf = spark_fn(a, b)
     got = _rows_of(sdf.columns, sdf.collect())
 

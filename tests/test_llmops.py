@@ -972,6 +972,7 @@ def test_connected_components_random_graphs_match_union_find(spark):
     from databricks_end_to_end_lakeflow_project_spark.operators.dedup import (
         connected_components,
     )
+    from tests.conftest import arrow_frame
 
     def uf_components(n_nodes, edge_list):
         parent = list(range(n_nodes))
@@ -1005,11 +1006,9 @@ def test_connected_components_random_graphs_match_union_find(spark):
     cases.append((12, []))
     for n_nodes, edge_list in cases:
         edge_list = [(a, b) for a, b in edge_list if a != b]
-        nodes = spark.createDataFrame([(i,) for i in range(n_nodes)], "node long")
-        if edge_list:
-            edges = spark.createDataFrame(edge_list, "src long, dst long")
-        else:
-            edges = spark.createDataFrame([], "src long, dst long")
+        # Arrow-built inputs: the propagation loop re-reads them each round
+        nodes = arrow_frame(spark, [(i,) for i in range(n_nodes)], "node long")
+        edges = arrow_frame(spark, edge_list, "src long, dst long")
         want = uf_components(n_nodes, edge_list)
         # BOTH execution paths must agree with the reference: the bounded
         # driver union-find fast path (default threshold) and the

@@ -119,6 +119,18 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+_QUERY_PLANS: dict[str, str] = {}
+
+
+def _query_plan(spark, name: str) -> str:
+    """Executed plan of registry query ``name`` at SF, built once per
+    session: the per-query guards below all read the same plan, and the
+    build (eager fixture-scale sections, then planning) is what costs."""
+    if name not in _QUERY_PLANS:
+        _QUERY_PLANS[name] = _plan(registry.all_queries()[name](spark, SF))
+    return _QUERY_PLANS[name]
+
+
 def unpartitioned_windows(plan: str) -> list[str]:
     """Window operator lines whose partition spec is EMPTY (the
     single-partition `WindowExec: No Partition Defined` shape). A Window
@@ -392,8 +404,7 @@ def test_no_unpartitioned_window(spark, name):
     order statistics go through operators/scalerank.py instead."""
     if name in UNPARTITIONED_WINDOW_WHITELIST:
         pytest.skip("documented bounded-frame / global-sequence window")
-    df = registry.all_queries()[name](spark, SF)
-    bad = unpartitioned_windows(_plan(df))
+    bad = unpartitioned_windows(_query_plan(spark, name))
     assert not bad, f"{name}: {bad}"
 
 
@@ -403,8 +414,7 @@ def test_no_accidental_cartesian(spark, name):
     join — the classic silent 100TB-killer."""
     if name in NON_EQUI_WHITELIST:
         pytest.skip("intentional all-pairs/cross join")
-    df = registry.all_queries()[name](spark, SF)
-    plan = _plan(df)
+    plan = _query_plan(spark, name)
     assert "CartesianProduct" not in plan, name
     assert "BroadcastNestedLoopJoin" not in plan, name
 
