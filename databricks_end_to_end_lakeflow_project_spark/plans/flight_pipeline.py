@@ -38,7 +38,10 @@ from databricks_end_to_end_lakeflow_project_spark.plans.gold import (
     build_dim,
     build_fact,
 )
-from databricks_end_to_end_lakeflow_project_spark.sources.readers import read_spark_parquet
+from databricks_end_to_end_lakeflow_project_spark.sources.readers import (
+    read_spark_parquet,
+    spark_parquet_rows,
+)
 from databricks_end_to_end_lakeflow_project_spark.streaming.ingest import (
     INGEST_FILE_COL,
     INGEST_TIME_COL,
@@ -357,7 +360,6 @@ class FlightLakehouse:
 import tempfile  # noqa: E402
 
 from databricks_end_to_end_lakeflow_project_spark.registry import query
-from databricks_end_to_end_lakeflow_project_spark.session import cloned_session  # noqa: E402
 from databricks_end_to_end_lakeflow_project_spark.sources.scratch import ephemeral_dir  # noqa: E402
 from databricks_end_to_end_lakeflow_project_spark.sources import flight_fixtures  # noqa: E402
 
@@ -398,18 +400,13 @@ def pipeline_medallion_scd_replay(spark: SparkSession, sf_dir: str) -> DataFrame
     Hash-checked against a golden VALUES oracle, so this single query
     verifies ingest checkpointing, expectations, SCD1 CDC, surrogate
     assignment, and audit-column semantics end to end."""
+    from databricks_end_to_end_lakeflow_project_spark.streaming.structured import sized_session
+
     root = ephemeral_dir("flight_demo_")
     raw = os.path.join(root, "raw")
-    flight_fixtures.write_base(raw)
-    # The replay executes EAGERLY here (availableNow drains + upserts),
-    # over fixture-sized micro-batches where 32-partition shuffles are
-    # pure scheduling overhead (~13% of wall at sf0.01). Run the whole
-    # eager section on an ISOLATED cloned session with a small shuffle
-    # width — the caller's session conf is never touched, so concurrent
-    # registry queries in one session can't observe it. At 100 TB the
-    # replay's batches are data-sized and the override disappears with
-    # the fixture.
-    eager = cloned_session(spark, {"spark.sql.shuffle.partitions": "8"})
+    # the replay executes eagerly (availableNow drains + upserts) on an
+    # isolated clone sized from the rows it ingests
+    eager = sized_session(spark, flight_fixtures.write_base(raw))
     lake = FlightLakehouse(eager, raw, os.path.join(root, "lake"))
     lake.run_all(clock=_T1)
     flight_fixtures.write_scd(raw)
@@ -447,10 +444,7 @@ def business_silver_stream(lake: FlightLakehouse) -> DataFrame:
     verification harness, like the other stream queries)."""
     import uuid as _uuid
 
-    from databricks_end_to_end_lakeflow_project_spark.streaming.structured import (
-        STATE_PARTITIONS,
-        run_to_memory,
-    )
+    from databricks_end_to_end_lakeflow_project_spark.streaming.structured import run_to_memory
 
     # capture only paths + schemas so the join plan can be rebuilt on the
     # run_to_memory builder session (conf overrides bind to a cloned
@@ -503,19 +497,10 @@ def business_silver_stream(lake: FlightLakehouse) -> DataFrame:
     # as the data batch (full queryPlanning + 6 state-store commit
     # rounds for zero rows). A LEFT OUTER join would need it back on —
     # null-padded rows emit on eviction.
-    # state_partitions=2 (not the global STATE_PARTITIONS=8): this drain
-    # runs THREE chained stream-stream joins, and every partition of
-    # every join carries 4 state stores — 3×8×4 = 96 store
-    # init+commit lifecycles per micro-batch at width 8 vs 24 at width
-    # 2, on a fixture-sized batch (~1k rows/side). Measured (r10,
-    # warmed session, same drain): width 8 ≈ 4.8–5.2 s, width 2 ≈
-    # 3.7 s. Width is a per-call knob — a production deployment sizes
-    # it to the arrival rate; rows are width-invariant (the golden
-    # VALUES oracle pins them).
     return run_to_memory(
         build,
         f"bizsilver_{_uuid.uuid4().hex[:8]}",
-        state_partitions=2,
+        input_rows=sum(spark_parquet_rows(path) for path, _ in sides.values()),
         extra_conf={"spark.sql.streaming.noDataMicroBatches.enabled": "false"},
         spark=lake.spark,
     )
@@ -567,18 +552,18 @@ def stream_business_silver(spark: SparkSession, sf_dir: str) -> DataFrame:
     exercise."""
     root = ephemeral_dir("flight_stream_")
     raw = os.path.join(root, "raw")
-    flight_fixtures.write_base(raw)
     # Fixed-cost shape (the registry's slowest entry before this form):
     # per-entity ingest→silver chains instead of two phase barriers, the
-    # whole eager section on an ISOLATED cloned session with a
-    # fixture-sized shuffle width (the caller's conf is never mutated —
-    # same rationale as the medallion replay above), and the silver
+    # whole eager section on an isolated clone sized from the rows it
+    # ingests (the caller's conf is never mutated), and the silver
     # finalize (quarantine/event-log — the join reads only the silver
     # TABLES) overlapped with the stream drain. Identical rows by
     # construction; the golden VALUES oracle pins it.
     from concurrent.futures import ThreadPoolExecutor
 
-    eager = cloned_session(spark, {"spark.sql.shuffle.partitions": "8"})
+    from databricks_end_to_end_lakeflow_project_spark.streaming.structured import sized_session
+
+    eager = sized_session(spark, flight_fixtures.write_base(raw))
     lake = FlightLakehouse(eager, raw, os.path.join(root, "lake"))
     finalize = lake.ingest_and_silver(clock=_T1)
     with ThreadPoolExecutor(max_workers=1) as ex:

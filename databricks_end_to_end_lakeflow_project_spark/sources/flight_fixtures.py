@@ -17,12 +17,13 @@ COUNTRIES = [f"Country{i:02d}" for i in range(20)]
 NATIONALITIES = [f"Nation{i:02d}" for i in range(15)]
 
 
-def _write(path: str, header: list[str], rows: list[tuple]) -> None:
+def _write(path: str, header: list[str], rows: list[tuple]) -> int:
     os.makedirs(os.path.dirname(path), exist_ok=True)
     with open(path, "w", newline="") as fh:
         w = csv.writer(fh)
         w.writerow(header)
         w.writerows(rows)
+    return len(rows)
 
 
 def airport_row(i: int, scd: bool = False) -> tuple:
@@ -72,18 +73,19 @@ FLIGHT_SCD_IDS = [3, 8, 21, 34, 55, 60, 77, 89]
 PASSENGER_SCD_IDS = [2, 5, 19, 23, 47, 58, 77, 101, 120, 133, 150, 161, 170, 188, 199]
 
 
-def write_base(raw_root: str, n_bad_bookings: int = 4) -> None:
-    _write(
+def write_base(raw_root: str, n_bad_bookings: int = 4) -> int:
+    """Write the base CSVs; returns the number of data rows written."""
+    n = _write(
         os.path.join(raw_root, "airports", "base.csv"),
         AIRPORT_HDR,
         [airport_row(i) for i in range(1, 51)],
     )
-    _write(
+    n += _write(
         os.path.join(raw_root, "flights", "base.csv"),
         FLIGHT_HDR,
         [flight_row(i) for i in range(1, 101)],
     )
-    _write(
+    n += _write(
         os.path.join(raw_root, "customers", "base.csv"),
         PASSENGER_HDR,
         [passenger_row(i) for i in range(1, 201)],
@@ -96,7 +98,9 @@ def write_base(raw_root: str, n_bad_bookings: int = 4) -> None:
         ("B99992", "P0001", "", "A001", "100.00", "2025-04-01"),
         ("B99993", "P0001", "F0001", "", "100.00", "2025-04-01"),
     ][:n_bad_bookings]
-    _write(os.path.join(raw_root, "bookings", "base.csv"), BOOKING_HDR, bookings + bad)
+    return n + _write(
+        os.path.join(raw_root, "bookings", "base.csv"), BOOKING_HDR, bookings + bad
+    )
 
 
 def write_increment(raw_root: str) -> None:

@@ -87,6 +87,28 @@ def _hidden(name: str) -> bool:
     return name.startswith(".") or (name.startswith("_") and "=" not in name)
 
 
+def _data_files(path: str, recursive: bool) -> list[str] | None:
+    """The data files Spark's listing of ``path`` reads, skipping the
+    hidden names it skips; None for a partitioned directory (a visible
+    subdir without ``recursive``)."""
+    files = []
+    for root, dirs, names in os.walk(path):
+        dirs[:] = [d for d in dirs if not _hidden(d)]
+        if dirs and not recursive:
+            return None
+        files += [os.path.join(root, f) for f in names if not _hidden(f)]
+    return files
+
+
+def spark_parquet_rows(path: str) -> int:
+    """Row count of a parquet directory Spark wrote, summed from the
+    footers of every data file under it (pyarrow metadata reads, no
+    Spark job); 0 for a missing or empty directory."""
+    import pyarrow.parquet as pq
+
+    return sum(pq.read_metadata(f).num_rows for f in _data_files(path, True))
+
+
 def read_spark_parquet(
     spark: SparkSession, path: str, recursive: bool = False
 ) -> DataFrame:
@@ -110,12 +132,7 @@ def read_spark_parquet(
     reader = spark.read
     if recursive:
         reader = reader.option("recursiveFileLookup", "true")
-    files = []
-    for root, dirs, names in os.walk(path):
-        dirs[:] = [d for d in dirs if not _hidden(d)]
-        if dirs and not recursive:
-            return reader.parquet(path)
-        files += [os.path.join(root, f) for f in names if not _hidden(f)]
+    files = _data_files(path, recursive)
     if not files:
         return reader.parquet(path)
     try:

@@ -43,7 +43,9 @@ from databricks_end_to_end_lakeflow_project_spark.registry import query
 from databricks_end_to_end_lakeflow_project_spark.sources.readers import (
     read_spark_parquet,
     read_table,
+    table_row_count,
 )
+from databricks_end_to_end_lakeflow_project_spark.streaming.structured import sized_session
 
 
 def prepare_replay(
@@ -102,16 +104,9 @@ def replay_scd1(
     history regardless of the slicing.
     """
     replay_dir = prepare_replay(spark, sf_dir, "events", slices, order_by=sequence_by)
-    # The replay executes EAGERLY over fixture-sized micro-batches where
-    # 32-partition shuffles are pure scheduling overhead; run it on an
-    # ISOLATED cloned session with a small shuffle width (the caller's
-    # conf is never touched — the same pattern the medallion replay
-    # uses, guide §2.2: partition count should track the data, and each
-    # micro-batch here is one time slice of a fixture table). At 100 TB
-    # the batches are data-sized and the override disappears with them.
-    from databricks_end_to_end_lakeflow_project_spark.session import cloned_session
-
-    spark = cloned_session(spark, {"spark.sql.shuffle.partitions": "8"})
+    # the replay executes eagerly on an isolated clone sized from the
+    # table it replays (the caller's conf is never touched)
+    spark = sized_session(spark, table_row_count(sf_dir, "events"))
     run = uuid.uuid4().hex[:8]
     table = ManagedParquetTable(
         spark,

@@ -20,6 +20,7 @@ import tempfile
 import uuid
 from collections.abc import Callable, Sequence
 from typing import Any
+from urllib.parse import quote
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -34,6 +35,7 @@ from pyspark.sql.streaming.stateful_processor import (
 from databricks_end_to_end_lakeflow_project_spark.operators.cdc import ManagedParquetTable
 from databricks_end_to_end_lakeflow_project_spark.registry import query
 from databricks_end_to_end_lakeflow_project_spark.session import cloned_session
+from databricks_end_to_end_lakeflow_project_spark.sources.readers import table_row_count
 from databricks_end_to_end_lakeflow_project_spark.sources.scratch import ephemeral_dir
 from databricks_end_to_end_lakeflow_project_spark.streaming.windows import tumbling_agg
 
@@ -61,26 +63,54 @@ def stream_from_dir(
     return reader.parquet(src_dir)
 
 
-STATE_PARTITIONS = 8
-"""Shuffle-partition count bound into STATEFUL streaming queries at start.
+ROWS_PER_STATE_PARTITION = 100_000
 
-A stateful stream's partition count is a deliberate sizing decision, not
-an inherited default: it is frozen into the checkpoint at first start
-(Spark cannot repartition state later), and every partition carries a
-state store whose per-micro-batch maintenance (snapshot, commit, load)
-costs the same whether it holds 10 keys or 10 million. Oversizing burns
-fixed overhead per batch — measured here: the interval join over 100k
-events runs 3.3× faster at 8 state partitions than at 32, identical
-results. Size to expected keys-in-state / executor count in deployment;
-the test streams hold ≤150 distinct users, so 8 is already generous.
-"""
+
+def state_width(spark: SparkSession, input_rows: int) -> int:
+    """Shuffle-partition count for a stateful stream over ``input_rows``
+    rows: ``ceil(input_rows / ROWS_PER_STATE_PARTITION)``, at least 1 and
+    at most the session's ``spark.sql.shuffle.partitions`` (the global
+    default is the cap, never narrowed).
+
+    Every state partition carries a state store whose load and commit in
+    each micro-batch cost the same whether it holds 10 keys or 10
+    million, so each partition beyond what the rows need is a fixed cost
+    per batch. The interval join, swept on 4 vCPU (warmed session, median
+    of 3-5 runs, identical rows at every width):
+
+    ==========  =======  =======  =======  =======
+    events      width 1  width 2  width 4  width 8
+    ==========  =======  =======  =======  =======
+    7k          1.32 s   1.43 s   1.78 s   2.24 s
+    100k        1.70 s   1.70 s   1.90 s   2.30 s
+    400k        2.72 s   2.14 s   2.05 s   2.54 s
+    ==========  =======  =======  =======  =======
+
+    so 100k rows per partition is the crossover. At 7k events width 1
+    against width 8 cut state commit from 2,529 ms to 125 ms.
+
+    Spark pins the width in the checkpoint's offset metadata when a
+    stateful query first starts, and restores it from there on restart,
+    so this rule only acts when a checkpoint is created; a restart over
+    more rows keeps the recorded width."""
+    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    return max(1, min(cap, -(-input_rows // ROWS_PER_STATE_PARTITION)))
+
+
+def sized_session(
+    spark: SparkSession, input_rows: int, extra_conf: dict[str, str] | None = None
+) -> SparkSession:
+    """A ``cloned_session`` whose shuffle width is ``state_width`` of
+    ``input_rows``, plus ``extra_conf``; the caller's conf is untouched."""
+    width = str(state_width(spark, input_rows))
+    return cloned_session(spark, {"spark.sql.shuffle.partitions": width, **(extra_conf or {})})
 
 
 def run_to_memory(
     stream: DataFrame | Callable[[SparkSession], DataFrame],
     name: str,
     output_mode: str = "append",
-    state_partitions: int | None = None,
+    input_rows: int | None = None,
     extra_conf: dict[str, str] | None = None,
     spark: SparkSession | None = None,
 ) -> DataFrame:
@@ -89,26 +119,28 @@ def run_to_memory(
 
     ``stream`` is either a streaming DataFrame (drained as-is on its own
     session, no conf overrides allowed) or a BUILDER
-    ``SparkSession -> streaming DataFrame``. Conf overrides
-    (``state_partitions`` / ``extra_conf``) require the builder form:
-    a streaming query binds its conf from the session the plan was built
-    on, so the builder is invoked against a ``cloned_session`` carrying
-    the overrides — its own SQLConf, shared SparkContext — and the
-    caller's session conf is NEVER touched. (The previous save/restore
-    implementation mutated the shared session for the duration of the
-    drain; a concurrently-running query could observe the overridden
-    values — the exact hazard tests/test_plans.py's conf guard bans.)
+    ``SparkSession -> streaming DataFrame``. A stateful stream passes the
+    rows it reads as ``input_rows``, and its width is
+    ``state_width(spark, input_rows)``; that and ``extra_conf`` require
+    the builder form: a streaming query binds its conf from the session
+    the plan was built on, so the builder is invoked against a
+    ``cloned_session`` carrying the overrides — its own SQLConf, shared
+    SparkContext — and the caller's session conf is NEVER touched. (The
+    previous save/restore implementation mutated the shared session for
+    the duration of the drain; a concurrently-running query could observe
+    the overridden values — the exact hazard tests/test_plans.py's conf
+    guard bans.)
     """
-    overrides = dict(extra_conf or {})
-    if state_partitions:
-        overrides["spark.sql.shuffle.partitions"] = str(state_partitions)
     if callable(stream) and not isinstance(stream, DataFrame):
         if spark is None:
             raise ValueError("the builder form of run_to_memory requires spark=")
-        session = cloned_session(spark, overrides) if overrides else spark
+        if input_rows is not None:
+            session = sized_session(spark, input_rows, extra_conf)
+        else:
+            session = cloned_session(spark, extra_conf) if extra_conf else spark
         stream_df = stream(session)
     else:
-        if overrides:
+        if input_rows is not None or extra_conf:
             raise ValueError(
                 "conf overrides require the builder form: pass a "
                 "Callable[[SparkSession], DataFrame] so the plan binds to an "
@@ -186,10 +218,12 @@ def running_totals_per_user(stream_events: DataFrame) -> DataFrame:
 def _stream_dir_for(sf_dir: str, table: str) -> str:
     """Spark's file streaming source lists a DIRECTORY; the testdata
     tables are single parquet files. Build (once) a tmp dir holding a
-    symlink to the file and stream from that."""
-    base = os.path.join(
-        tempfile.gettempdir(), "lakeflow_streams", sf_dir.strip("/").replace("/", "_"), table
-    )
+    symlink to the file and stream from that. The dir is keyed by the
+    percent-encoded absolute ``sf_dir`` (``/`` and ``%`` escaped), which
+    is one flat name per path, so two inputs never share a link."""
+    sf_dir = os.path.abspath(sf_dir)
+    key = quote(sf_dir, safe="")
+    base = os.path.join(tempfile.gettempdir(), "lakeflow_streams", key, table)
     os.makedirs(base, exist_ok=True)
     link = os.path.join(base, f"{table}.parquet")
     src = os.path.join(sf_dir, f"{table}.parquet")
@@ -289,7 +323,7 @@ def stream_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     drained = run_to_memory(build, f"sst_{uuid.uuid4().hex[:8]}", output_mode="update",
-                            state_partitions=STATE_PARTITIONS, spark=spark)
+                            input_rows=table_row_count(sf_dir, "events"), spark=spark)
     return drained.groupBy("user_id").agg(
         F.max("n_events").alias("n_events"), F.max("total_cents").alias("total_cents")
     )
@@ -310,7 +344,7 @@ def stream_watermark_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).select("user_id", "event_type")
 
     drained = run_to_memory(build, f"swd_{uuid.uuid4().hex[:8]}",
-                            state_partitions=STATE_PARTITIONS, spark=spark)
+                            input_rows=table_row_count(sf_dir, "events"), spark=spark)
     return drained.distinct()
 
 
@@ -353,7 +387,7 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     drained = run_to_memory(
         build, f"sse_{uuid.uuid4().hex[:8]}", output_mode="complete",
-        state_partitions=STATE_PARTITIONS, spark=spark,
+        input_rows=table_row_count(sf_dir, "events"), spark=spark,
     )
     return drained
 
@@ -445,7 +479,7 @@ def stream_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the expired unmatched rows.
     drained = run_to_memory(
         lambda s: _click_purchase_pairs(s, sf_dir),
-        f"ssj_{uuid.uuid4().hex[:8]}", state_partitions=STATE_PARTITIONS,
+        f"ssj_{uuid.uuid4().hex[:8]}", input_rows=table_row_count(sf_dir, "events"),
         extra_conf={"spark.sql.streaming.noDataMicroBatches.enabled": "false"},
         spark=spark,
     )
@@ -531,7 +565,7 @@ def stream_tws_distinct_types(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda s: distinct_types_per_user(stream_events_table(s, sf_dir)),
         f"tws_{uuid.uuid4().hex[:8]}",
         output_mode="update",
-        state_partitions=STATE_PARTITIONS,
+        input_rows=table_row_count(sf_dir, "events"),
         extra_conf={
             "spark.sql.streaming.stateStore.providerClass":
                 "org.apache.spark.sql.execution.streaming.state."
@@ -633,7 +667,7 @@ def stream_stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame
     """
     drained = run_to_memory(
         lambda s: _click_purchase_pairs(s, sf_dir, "left_outer"),
-        f"sslo_{uuid.uuid4().hex[:8]}", state_partitions=STATE_PARTITIONS,
+        f"sslo_{uuid.uuid4().hex[:8]}", input_rows=table_row_count(sf_dir, "events"),
         spark=spark,
     )
     return (
@@ -711,7 +745,7 @@ def stream_join_then_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda s: _click_purchase_pairs(s, sf_dir)
         .groupBy(F.window("p_ts", "1 hour"))
         .agg(F.count(F.lit(1)).alias("n_pairs")),
-        f"jwa_{uuid.uuid4().hex[:8]}", state_partitions=STATE_PARTITIONS,
+        f"jwa_{uuid.uuid4().hex[:8]}", input_rows=table_row_count(sf_dir, "events"),
         spark=spark,
     )
     return drained.select(
@@ -760,8 +794,9 @@ def stream_state_introspection(spark: SparkSession, sf_dir: str) -> DataFrame:
     source reads only the checkpoint's store files (columnar snapshot +
     delta replay), never the input data."""
     ckpt = ephemeral_dir("lakeflow_statesrc_")
+    s = sized_session(spark, table_row_count(sf_dir, "events"))
     agg = (
-        stream_events_table(spark, sf_dir)
+        stream_events_table(s, sf_dir)
         .withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "1 hour"), "user_id")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -774,7 +809,7 @@ def stream_state_introspection(spark: SparkSession, sf_dir: str) -> DataFrame:
         .start()
     )
     q.awaitTermination()
-    state = spark.read.format("statestore").load(ckpt)
+    state = s.read.format("statestore").load(ckpt)
     return (
         state.select(
             F.col("key.window.start").alias("window_start"),

@@ -12,6 +12,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from databricks_end_to_end_lakeflow_project_spark.operators.cdc import ManagedParquetTable
+from databricks_end_to_end_lakeflow_project_spark.session import cloned_session
+from databricks_end_to_end_lakeflow_project_spark.sources.readers import read_table, table_row_count
 from databricks_end_to_end_lakeflow_project_spark.streaming import structured as st
 from databricks_end_to_end_lakeflow_project_spark.streaming.windows import tumbling_agg
 
@@ -463,13 +465,13 @@ def test_stream_stream_full_outer_join_subsumes_left_outer(spark):
     full = st.run_to_memory(
         joined("full_outer"),
         f"ssfo_{uuid.uuid4().hex[:8]}",
-        state_partitions=st.STATE_PARTITIONS,
+        input_rows=table_row_count(sf, "events"),
         spark=spark,
     ).collect()
     left = st.run_to_memory(
         joined("left_outer"),
         f"sslo2_{uuid.uuid4().hex[:8]}",
-        state_partitions=st.STATE_PARTITIONS,
+        input_rows=table_row_count(sf, "events"),
         spark=spark,
     ).collect()
 
@@ -495,7 +497,6 @@ def test_join_then_window_agg_boundary(spark, tmp_path):
 
     from databricks_end_to_end_lakeflow_project_spark.streaming.structured import (
         EVENT_SCHEMA,
-        STATE_PARTITIONS,
         run_to_memory,
     )
 
@@ -532,7 +533,7 @@ def test_join_then_window_agg_boundary(spark, tmp_path):
 
     out = run_to_memory(
         build, f"jwab_{uuid.uuid4().hex[:6]}",
-        state_partitions=STATE_PARTITIONS, spark=spark,
+        input_rows=len(rows), spark=spark,
     )
     emitted = sorted(r["window"]["end"] for r in out.collect())
     mc = max(r[1] for r in rows if r[3] == "click")
@@ -608,3 +609,125 @@ def test_file_stream_replays_in_mtime_order(spark, tmp_path):
     q.awaitTermination()
     flat = [v for batch in seen for v in batch]
     assert flat == [5, 4, 3, 2, 1, 0], f"replay must follow mtime order: {seen}"
+
+
+# -- state width: sized from input rows, pinned by the checkpoint ------------
+
+
+@pytest.fixture
+def started_queries(monkeypatch):
+    """Every stream query started during the test, in any session."""
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
+
+    queries, start = [], DataStreamWriter.start
+
+    def recording_start(writer, *args, **kwargs):
+        q = start(writer, *args, **kwargs)
+        queries.append(q)
+        return q
+
+    monkeypatch.setattr(DataStreamWriter, "start", recording_start)
+    return queries
+
+
+def _state_widths(queries) -> set[int]:
+    return {
+        op["numShufflePartitions"]
+        for q in queries
+        for p in q.recentProgress
+        for op in p["stateOperators"] or []
+    }
+
+
+def test_state_width_bounds(spark):
+    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert st.state_width(spark, 0) == 1
+    assert st.state_width(spark, 1) == 1
+    assert st.state_width(spark, st.ROWS_PER_STATE_PARTITION) == 1
+    assert st.state_width(spark, st.ROWS_PER_STATE_PARTITION + 1) == min(2, cap)
+    assert st.state_width(spark, 10**15) == cap
+    narrow = cloned_session(spark, {"spark.sql.shuffle.partitions": "3"})
+    assert st.state_width(narrow, 10**15) == 3
+    step = st.ROWS_PER_STATE_PARTITION // 4
+    widths = [st.state_width(spark, n) for n in range(0, (cap + 2) * 4 * step, step)]
+    assert widths == sorted(widths)
+    assert widths[-1] == cap
+    # the caller's session keeps its own width
+    assert st.sized_session(spark, 1).conf.get("spark.sql.shuffle.partitions") == "1"
+    assert int(spark.conf.get("spark.sql.shuffle.partitions")) == cap
+
+
+def test_drain_over_sf0001_runs_at_width_one(spark, sf_dir, started_queries):
+    assert st.state_width(spark, table_row_count(sf_dir, "events")) == 1
+    got = st.stream_watermark_dedup(spark, sf_dir).collect()
+    want = read_table(spark, sf_dir, "events").select("user_id", "event_type").distinct().collect()
+    assert sorted(map(tuple, got)) == sorted(map(tuple, want))
+    assert _state_widths(started_queries) == {1}
+
+
+def test_restart_keeps_checkpointed_state_width(spark, tmp_path, monkeypatch, started_queries):
+    """The width is chosen when the checkpoint is created: a restart over
+    enough new rows that ``state_width`` would now pick a wider count
+    still runs at the recorded one, and its output equals the batch."""
+    monkeypatch.setattr(st, "ROWS_PER_STATE_PARTITION", 100)
+    src, out = str(tmp_path / "src"), str(tmp_path / "out")
+    ckpt = str(tmp_path / "ckpt")
+    schema = "k long, v long"
+
+    def land(lo: int, hi: int) -> None:
+        spark.createDataFrame([(i % 300, i) for i in range(lo, hi)], schema).coalesce(
+            1
+        ).write.mode("append").parquet(src)
+
+    def drain(input_rows: int) -> None:
+        s = st.sized_session(spark, input_rows)
+        q = (
+            s.readStream.schema(schema).parquet(src)
+            .dropDuplicates(["k"])
+            .writeStream.format("parquet")
+            .option("path", out)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+
+    land(0, 50)
+    drain(50)
+    first = _state_widths(started_queries)
+    land(50, 400)
+    assert st.state_width(spark, 400) > st.state_width(spark, 50)
+    drain(400)
+    restarted = _state_widths(started_queries[1:])
+
+    assert first == {st.state_width(spark, 50)} == {1}
+    assert restarted == first
+    got = sorted(r["k"] for r in spark.read.parquet(out).collect())
+    assert got == sorted({i % 300 for i in range(400)})
+
+
+def test_stream_dirs_of_colliding_flat_names_stay_apart(spark, tmp_path):
+    """``x/a_b`` and ``x/a/b`` flatten to the same name under a
+    ``/``-to-``_`` key; each must still stream its own events."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    dirs = {str(tmp_path / "x" / "a_b"): [1, 2, 3], str(tmp_path / "x" / "a" / "b"): [7, 8]}
+    for d, ids in dirs.items():
+        os.makedirs(d)
+        pq.write_table(
+            pa.table({
+                "event_id": pa.array(ids, pa.int64()),
+                "ts": pa.array([dt.datetime(2024, 1, 1)] * len(ids), pa.timestamp("us")),
+                "user_id": pa.array(ids, pa.int64()),
+                "event_type": ["click"] * len(ids),
+                "value": [1.0] * len(ids),
+            }),
+            os.path.join(d, "events.parquet"),
+        )
+    for d, ids in dirs.items():
+        out = st.run_to_memory(
+            st.stream_events_table(spark, d).select("event_id"),
+            f"dirkey_{uuid.uuid4().hex[:6]}",
+        )
+        assert sorted(r["event_id"] for r in out.collect()) == ids
