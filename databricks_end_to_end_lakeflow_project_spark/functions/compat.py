@@ -141,7 +141,3 @@ SQL_DISC_PRICE = "CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount 
 SQL_CHARGE = (
     f"CAST({SQL_DISC_PRICE} AS DECIMAL(18,4)) * (1 + CAST(l_tax AS DECIMAL(18,2)))"
 )
-
-
-def sql_dsum(expr: str, alias: str, scale: int = 2) -> str:
-    return f"ROUND(SUM({expr}), {scale})::DOUBLE AS {alias}"

@@ -489,6 +489,23 @@ class ManagedParquetTable:
     def _stage_name(self) -> str:
         return f"{self.path}.__tmp_{os.getpid()}_{uuid.uuid4().hex[:8]}"
 
+    def _stage(self, df: DataFrame) -> str:
+        """Write ``df`` to a fresh stage dir (the expensive Spark job,
+        OUTSIDE the commit lock) and return its path. A write that raises
+        — e.g. a FAIL expectation aborting it — removes its stage dir
+        before re-raising: the litter sweep only reclaims stages of dead
+        writers, so a live process would otherwise keep it."""
+        tmp = self._stage_name()
+        writer = df.write.mode("overwrite")
+        if self.partition_by:
+            writer = writer.partitionBy(*self.partition_by)
+        try:
+            writer.parquet(tmp)
+        except BaseException:
+            shutil.rmtree(tmp, ignore_errors=True)
+            raise
+        return tmp
+
     @staticmethod
     def _break_lock(lock: str) -> None:
         """Atomically retire a lock dir judged stale: rename the WHOLE dir
@@ -606,12 +623,7 @@ class ManagedParquetTable:
         return len(doomed)
 
     def overwrite(self, df: DataFrame, expect_version: int | None = None) -> None:
-        tmp = self._stage_name()
-        writer = df.write.mode("overwrite")
-        if self.partition_by:
-            writer = writer.partitionBy(*self.partition_by)
-        writer.parquet(tmp)  # expensive stage: OUTSIDE the commit lock
-        self._swap_commit(tmp, expect_version)
+        self._swap_commit(self._stage(df), expect_version)
 
     def _swap_commit(self, tmp: str, expect_version: int | None) -> None:
         """Publish a fully-staged table dir atomically-with-recovery:
@@ -675,11 +687,7 @@ class ManagedParquetTable:
         skips the version bump), can observe a partial batch: the same
         reader caveat as the overwrite swap, and the part only a real
         commit LOG fixes."""
-        tmp = self._stage_name()
-        writer = df.write.mode("overwrite")
-        if self.partition_by:
-            writer = writer.partitionBy(*self.partition_by)
-        writer.parquet(tmp)
+        tmp = self._stage(df)
         try:
             with self._commit(expect_version):
                 tag = uuid.uuid4().hex[:8]
@@ -878,10 +886,7 @@ class ManagedParquetTable:
         merged = merge_upsert_plan(
             target_slice, updates, keys, sequence_by, delete_col=delete_col
         )
-        tmp = self._stage_name()
-        merged.write.mode("overwrite").partitionBy(*self.partition_by).parquet(
-            tmp
-        )  # expensive stage: OUTSIDE the commit lock
+        tmp = self._stage(merged)
         # new partition dirs present in the merge output (a touched
         # partition whose rows all got deleted simply has no dir here)
         new_rels = sorted(

@@ -108,18 +108,6 @@ def _bm25_scores(docs: DataFrame) -> DataFrame:
     return d.crossJoin(F.broadcast(g)).select("doc_id", F.round(score, 6).alias("score"))
 
 
-def _query_vector(sf_dir: str) -> F.Column:
-    """Query embedding (vec_id = 0) as a literal array — fetched
-    driver-side with pyarrow (row-group pruned), identical values to the
-    former .collect(), zero Spark jobs."""
-    from databricks_end_to_end_lakeflow_project_spark.sources.readers import (
-        read_seed_rows,
-    )
-
-    row = read_seed_rows(sf_dir, "embeddings", ["embedding"], "vec_id", eq=0)[0]
-    return F.array(*[F.lit(float(x)) for x in row["embedding"]])
-
-
 # DuckDB oracle: both legs recomputed in SQL, ranked on the same rounded
 # scores with the same doc_id tiebreaks, fused with 1/(60+rank).
 _RRF_ORACLE = f"""

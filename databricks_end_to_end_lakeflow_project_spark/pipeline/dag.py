@@ -13,9 +13,12 @@ and a joined view):
 
 Execution model: ``run()`` resolves the dataset graph by demand
 (memoized recursion over ``ctx.read`` calls — the same dependency
-discovery trick DLT does statically), applies expectations with metrics,
-executes CDC flows in registration order, and materializes any requested
-tables. Each ``run()`` is one incremental batch: re-running after new
+discovery trick DLT does statically), gates views with their
+expectations as pure plan transformations, executes CDC flows, and
+materializes any requested tables. Expectation counters ride the writes
+that consume the gated views (``df.observe``) and are collected when the
+run finalizes; a FAIL expectation aborts the consuming write before its
+commit point. Each ``run()`` is one incremental batch: re-running after new
 source data arrives upserts the delta (idempotent for unchanged input —
 the reference's `trigger(once=True)` job pattern, T1).
 
@@ -96,6 +99,7 @@ class Pipeline:
         self._cache: dict[str, DataFrame] = {}
         self._resolving: list[str] = []
         self.metrics: dict[str, ExpectationResult] = {}
+        self._pending_metrics: dict[str, Callable[[], ExpectationResult | None]] = {}
         self._pending_quarantine: dict[str, tuple[str, DataFrame]] = {}
         self._mviews: list[str] = []
         self._run_id = 0
@@ -369,12 +373,13 @@ class Pipeline:
         (`dlt.readStream("bookings_silver")`).
 
         Thread-safe: view resolution mutates the shared cache / lineage /
-        metrics / resolving-stack structures, so the whole call holds the
-        pipeline's re-entrant resolve lock (recursive ``pl.read`` calls
-        inside view bodies re-enter it on the same thread). Concurrent
+        pending-metrics / resolving-stack structures, so the whole call
+        holds the pipeline's re-entrant resolve lock (recursive
+        ``pl.read`` calls inside view bodies re-enter it on the same
+        thread). Concurrent
         callers — the per-entity ingest→silver chains and a deferred
         ``finalize_run`` overlapping downstream work — serialize on
-        resolution only; the Spark jobs they launch still interleave."""
+        resolution only, which launches no Spark job."""
         with self._resolve_lock:
             return self._read_locked(name)
 
@@ -394,12 +399,9 @@ class Pipeline:
                 if v.quarantine_to:
                     _, quarantined = split_expectations(df, v.expectations, dataset=name)
                     self._pending_quarantine[name] = (v.quarantine_to, quarantined)
-                df, metrics = apply_expectations(
-                    df, v.expectations, v.policy, dataset=name,
-                    collect_metrics=bool(v.expectations),
+                df, self._pending_metrics[name] = apply_expectations(
+                    df, v.expectations, v.policy, dataset=name
                 )
-                if metrics:
-                    self.metrics[name] = metrics
             finally:
                 self._resolving.pop()
             self._cache[name] = df
@@ -435,12 +437,12 @@ class Pipeline:
         `p.event_log()` to query it)."""
         # resolve every flow's source (view resolution serializes on the
         # resolve lock — it mutates the cache/lineage/metrics structures
-        # and collects expectation metrics eagerly), then run the table
-        # upserts CONCURRENTLY: each flow targets its own managed table
-        # with its own commit lock, so Spark's scheduler interleaves the
-        # independent write jobs exactly like DLT runs independent DAG
-        # nodes in parallel. Results are identical to the sequential
-        # order by target independence. begin/resolve/execute/finalize
+        # but runs no Spark job), then run the table upserts CONCURRENTLY:
+        # each flow targets its own managed table with its own commit
+        # lock, so Spark's scheduler interleaves the independent write
+        # jobs exactly like DLT runs independent DAG nodes in parallel.
+        # Results are identical to the sequential order by target
+        # independence. begin/resolve/execute/finalize
         # are public pieces so an orchestrator can overlap them with its
         # OWN work (per-entity ingest→silver chains, a deferred finalize
         # racing a downstream read of the finished tables).
@@ -462,13 +464,16 @@ class Pipeline:
         quarantine accumulators, bump the run id."""
         self._cache.clear()
         self.metrics.clear()
+        self._pending_metrics.clear()
         self._pending_quarantine.clear()
         self._run_id += 1
 
     def resolve_flow(self, flow: _CdcFlow) -> tuple[_CdcFlow, DataFrame]:
-        """Resolve one CDC flow's source view (expectations applied,
-        metrics collected) — safe to call from concurrent entity chains;
-        resolution itself serializes on the resolve lock."""
+        """Resolve one CDC flow's source view with its expectation gate in
+        the plan. Launches no Spark job: the gate's counters and a FAIL
+        abort ride the flow's write in ``execute_flow``. Safe to call from
+        concurrent entity chains; resolution serializes on the resolve
+        lock."""
         src = self.read(flow.source)
         if flow.except_columns:
             src = src.drop(*flow.except_columns)
@@ -489,7 +494,9 @@ class Pipeline:
 
     def finalize_run(self, materialize: Sequence[str] = ()) -> None:
         """Close the batch: append flows, snapshot flows, materialized
-        views, quarantine appends, event log. None of these outputs is
+        views, quarantine appends, then the expectation metrics of every
+        view the run resolved (from the actions that consumed them) into
+        ``metrics`` and the event log. None of these outputs is
         read by the CDC target tables themselves, so a caller whose
         downstream only reads those tables may run finalize CONCURRENTLY
         with that downstream work (it still serializes internally on the
@@ -507,6 +514,12 @@ class Pipeline:
                 qdf.withColumn("__batch_id", F.lit(self._run_id))
             )
         self._pending_quarantine.clear()
+        with self._resolve_lock:
+            pending, self._pending_metrics = self._pending_metrics, {}
+        for name, finish in pending.items():
+            result = finish()
+            if result is not None:
+                self.metrics[name] = result
         self._append_event_log()
 
     def full_refresh(self, materialize: Sequence[str] = ()) -> None:

@@ -5,31 +5,30 @@ Re-expression of DLT expectations (SURVEY.md §2.2 P9 / §2.8 T6; reference
 with four NOT-NULL rules, and `README.md:94` names the `expect`,
 `expect_or_drop`, `expect_all_or_fail` variants).
 
-Implementation: each rule is a SQL boolean expression. Violation counts
-are computed with conditional aggregation in ONE pass over the batch
-(no per-rule scans), then the gated DataFrame is returned according to
-the policy. At 100 TB the metrics pass and the filtered write share the
-scan when the caller materializes both from the same cached/exchanged
-stage; metrics are map-side combinable counters.
+Implementation: each rule is a SQL boolean expression. The gate is a
+pure plan transformation: violation counters ride whatever action
+consumes the gated frame (`df.observe`, Spark's Observation API), so a
+gated view costs no scan of its own. The gate sits above the observed
+node, so the counters still see the rows it drops, and a FAIL gate
+aborts that consuming action (a staged table write, before its commit
+point) with the dataset and the violated rule names in the message.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from dataclasses import dataclass, field
 from enum import Enum
 
-from pyspark.sql import DataFrame
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 
 class Policy(str, Enum):
     WARN = "warn"  # keep all rows, record violations (dlt.expect)
     DROP = "drop"  # drop violating rows (dlt.expect_or_drop / expect_all_or_drop)
-    FAIL = "fail"  # raise if any violation (dlt.expect_all_or_fail)
-
-
-class ExpectationFailed(Exception):
-    pass
+    FAIL = "fail"  # abort the consuming action on any violation (dlt.expect_all_or_fail)
 
 
 @dataclass
@@ -41,120 +40,87 @@ class ExpectationResult:
     per_rule_failures: dict[str, int] = field(default_factory=dict)
 
 
+# how long finish() lets Spark's listener bus catch up before it decides
+# that no action has run over the gated frame
+_LISTENER_DRAIN_MS = 10_000
+
+
+def _violates(cond: Column) -> Column:
+    """A row violates a rule unless the rule is TRUE (NULL violates)."""
+    return ~F.coalesce(cond, F.lit(False))
+
+
+def _failed_rules(rules: dict[str, str]) -> Column:
+    """Array of the names of the rules a row violates."""
+    return F.array_compact(
+        F.array(*[F.when(_violates(F.expr(e)), F.lit(name)) for name, e in rules.items()])
+    )
+
+
 def apply_expectations(
     df: DataFrame,
     rules: dict[str, str],
     policy: Policy = Policy.DROP,
     dataset: str = "<anonymous>",
-    collect_metrics: bool = True,
-) -> tuple[DataFrame, ExpectationResult | None]:
+) -> tuple[DataFrame, Callable[[], ExpectationResult | None]]:
     """Gate ``df`` with ``rules`` ({name: sql_bool_expr}); all rules must
-    hold for a row to pass. Returns (gated_df, metrics).
+    hold for a row to pass. Returns ``(gated, finish)``; no Spark job
+    runs here.
 
-    With ``collect_metrics=False`` no action is triggered here (pure plan
-    transformation) — streaming callers use this and account metrics per
-    micro-batch instead.
+    ``finish()``, called after an action has consumed ``gated``, returns
+    the counters that action observed as an :class:`ExpectationResult`,
+    or None when there are no rules or no action has run over the frame.
+    Only the first action's counts are kept. Under ``Policy.FAIL`` the
+    first violating row raises ``USER_RAISED_EXCEPTION`` inside the
+    action itself, naming ``dataset`` and the rules the row violates.
     """
     if not rules:
-        return df, None
-    preds = [F.expr(e) for e in rules.values()]
-    all_ok = preds[0]
-    for p in preds[1:]:
-        all_ok = all_ok & p
-
-    metrics = None
-    if collect_metrics:
-        aggs = [
-            F.sum(F.when(~F.coalesce(F.expr(e), F.lit(False)), 1).otherwise(0)).alias(name)
-            for name, e in rules.items()
-        ]
-        aggs.append(F.count(F.lit(1)).alias("__total"))
-        # any-rule-failed rides the same aggregate — a separate
-        # filter().count() action doubled the per-view fixed cost at
-        # micro-batch sizes (medallion replay profile)
-        aggs.append(
-            F.sum(
-                F.when(~F.coalesce(all_ok, F.lit(False)), 1).otherwise(0)
-            ).alias("__failed")
-        )
-        row = df.agg(*aggs).collect()[0]
-        total = row["__total"]
-        per_rule = {name: int(row[name] or 0) for name in rules}
-        failed = int(row["__failed"] or 0)
-        metrics = ExpectationResult(
-            dataset=dataset,
-            policy=policy,
-            passed_rows=total - failed,
-            failed_rows=failed,
-            per_rule_failures=per_rule,
-        )
-        if policy is Policy.FAIL and failed:
-            raise ExpectationFailed(f"{dataset}: {failed} rows violate expectations {per_rule}")
-
-    if policy is Policy.WARN:
-        return df, metrics
-    return df.filter(F.coalesce(all_ok, F.lit(False))), metrics
-
-
-def apply_expectations_observed(
-    df: DataFrame,
-    rules: dict[str, str],
-    policy: Policy = Policy.DROP,
-    dataset: str = "<anonymous>",
-):
-    """Zero-extra-pass variant of :func:`apply_expectations`: metrics
-    ride the SAME action that materializes the gated frame, via
-    `df.observe` (Spark's Observation API) — at 100 TB the difference is
-    one scan instead of two or three.
-
-    Returns (gated_df, observation, finish) where ``finish()`` — called
-    AFTER the caller has run an action on gated_df — converts the
-    observed row into an :class:`ExpectationResult` (and raises under
-    ``Policy.FAIL`` if anything violated). Note: with ``Policy.DROP``
-    the observation sits BELOW the filter so it still sees (and counts)
-    the dropped rows.
-    """
-    from pyspark.sql import Observation
-
-    if not rules:
-        return df, None, lambda: None
-    preds = [F.expr(e) for e in rules.values()]
-    all_ok = preds[0]
-    for p in preds[1:]:
-        all_ok = all_ok & p
-
+        return df, lambda: None
+    all_ok = F.expr(" AND ".join(f"({e})" for e in rules.values()))
     obs = Observation(f"expectations:{dataset}")
-    aggs = [
-        F.sum(F.when(~F.coalesce(F.expr(e), F.lit(False)), 1).otherwise(0)).alias(name)
-        for name, e in rules.items()
-    ]
-    aggs.append(F.count(F.lit(1)).alias("__total"))
-    aggs.append(
-        F.sum(F.when(~F.coalesce(all_ok, F.lit(False)), 1).otherwise(0)).alias("__failed")
+    observed = df.observe(
+        obs,
+        *[
+            F.sum(F.when(_violates(F.expr(e)), 1).otherwise(0)).alias(name)
+            for name, e in rules.items()
+        ],
+        F.count(F.lit(1)).alias("__total"),
+        F.sum(F.when(_violates(all_ok), 1).otherwise(0)).alias("__failed"),
     )
-    observed = df.observe(obs, *aggs)
-    gated = observed if policy is Policy.WARN else observed.filter(
-        F.coalesce(all_ok, F.lit(False))
-    )
+    if policy is Policy.WARN:
+        gated = observed
+    elif policy is Policy.DROP:
+        gated = observed.filter(F.coalesce(all_ok, F.lit(False)))
+    else:
+        message = F.concat(
+            F.lit(f"{dataset}: row violates expectations "),
+            F.array_join(_failed_rules(rules), ", "),
+        )
+        gated = observed.filter(F.when(all_ok, True).otherwise(F.raise_error(message)))
 
-    def finish() -> ExpectationResult:
-        row = obs.get  # blocks until the caller's action has completed
+    def finish() -> ExpectationResult | None:
+        # an action's metrics reach the Observation through the listener
+        # bus after the action returns: drain it, so a frame no action
+        # ran over reads as "no metrics" instead of blocking obs.get
+        try:
+            df.sparkSession.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(
+                _LISTENER_DRAIN_MS
+            )
+        except Py4JJavaError:
+            pass  # bus still busy: judge by what has arrived
+        if not obs._jo.future().isCompleted():
+            return None
+        row = obs.get
         failed = int(row["__failed"] or 0)
-        result = ExpectationResult(
+        return ExpectationResult(
             dataset=dataset,
             policy=policy,
             passed_rows=int(row["__total"]) - failed,
             failed_rows=failed,
             per_rule_failures={name: int(row[name] or 0) for name in rules},
         )
-        if policy is Policy.FAIL and failed:
-            raise ExpectationFailed(
-                f"{dataset}: {failed} rows violate expectations "
-                f"{result.per_rule_failures}"
-            )
-        return result
 
-    return gated, obs, finish
+    return gated, finish
 
 
 def split_expectations(
@@ -178,15 +144,7 @@ def split_expectations(
         return df, df.limit(0).withColumn(
             "__failed_rules", F.array().cast("array<string>")
         ).withColumn("__dataset", F.lit(dataset))
-    failed = F.array_compact(
-        F.array(
-            *[
-                F.when(~F.coalesce(F.expr(e), F.lit(False)), F.lit(name))
-                for name, e in rules.items()
-            ]
-        )
-    )
-    tagged = df.withColumn("__failed_rules", failed)
+    tagged = df.withColumn("__failed_rules", _failed_rules(rules))
     passed = tagged.filter(F.size("__failed_rules") == 0).drop("__failed_rules")
     quarantined = tagged.filter(F.size("__failed_rules") > 0).withColumn(
         "__dataset", F.lit(dataset)

@@ -73,58 +73,26 @@ class FlightLakehouse:
 
     # -- bronze -------------------------------------------------------------
 
-    def ingest_bronze(self, clock: dt.datetime | None = None) -> dict[str, int]:
-        """Drain new raw CSV files into bronze, one checkpointed stream per
-        entity (the reference's per-entity job fan-out, SourceParameters.py).
-        Rows are stamped with the drain's ingest time (or ``clock``), which
-        silver uses as the CDC sequence.
-        """
-        # start every entity's availableNow query FIRST, then await them
-        # together: the four drains execute concurrently in the shared
-        # session, so the per-query startup/commit latency (the dominant
-        # cost at micro-batch sizes) overlaps — replay wall for this
-        # phase is max(entity), not Σ(entity). Output is byte-identical
-        # to the sequential form: each entity has its own checkpoint,
-        # target dir and schema, nothing is shared across queries.
-        from concurrent.futures import ThreadPoolExecutor
-
-        live = [
-            e for e in ENTITIES if os.path.isdir(os.path.join(self.raw_root, e))
-        ]
-        if not live:
-            return {}
-        with ThreadPoolExecutor(max_workers=len(live)) as ex:
-            started = {
-                entity: ex.submit(
-                    start_ingest_csv_stream,
-                    self.spark,
-                    os.path.join(self.raw_root, entity),
-                    os.path.join(self.bronze_root, entity),
-                    os.path.join(self.storage_root, "_checkpoints", entity),
-                    os.path.join(self.storage_root, "_schemas", entity),
-                    clock,
-                )
-                for entity in live
-            }
-            return {e: drain_ingest_stream(f.result()) for e, f in started.items()}
-
     def _bronze(self, entity: str) -> DataFrame:
         return read_spark_parquet(self.spark, os.path.join(self.bronze_root, entity))
 
     def ingest_and_silver(self, clock: dt.datetime | None = None, then=None):
-        """Overlapped bronze→silver pass: one chain per entity that
-        drains the entity's bronze ingest stream and then immediately
-        resolves + upserts THAT entity's silver CDC flow (its only
-        upstream), all four chains concurrent. Versus the phase-barrier
-        form (``ingest_bronze()`` then ``run_silver()``) the wall clock
-        is max(chainₑ), not max(ingestₑ) + max(silverₑ) — the per-query
-        startup/commit fixed costs of one entity's drain overlap another
-        entity's upsert. Output is byte-identical: each chain touches
-        only its own checkpoint, bronze dir and silver target, and view
-        resolution serializes on the pipeline's resolve lock.
+        """One bronze→silver batch: one chain per entity that drains the
+        entity's bronze ingest stream (rows stamped with the drain's
+        ingest time, or ``clock``, which silver uses as the CDC sequence)
+        and then immediately resolves + upserts THAT entity's silver CDC
+        flow (its only upstream), all four chains concurrent. The wall
+        clock is max(chainₑ), not max(ingestₑ) + max(silverₑ) — the
+        per-query startup/commit fixed costs of one entity's drain
+        overlap another entity's upsert. Output is byte-identical to
+        draining every entity and then running ``self.silver.run()``:
+        each chain touches only its own checkpoint, bronze dir and silver
+        target, and view resolution serializes on the pipeline's resolve
+        lock.
 
-        Returns a ``finalize()`` callable (quarantine + event-log
-        appends — nothing the silver TABLES depend on) that the caller
+        Returns a ``finalize()`` callable (quarantine appends, the
+        expectation metrics the upserts observed, event-log append —
+        nothing the silver TABLES depend on) that the caller
         may run concurrently with downstream work that reads only those
         tables; it must be awaited before the next pipeline run.
 
@@ -141,14 +109,14 @@ class FlightLakehouse:
         # The chained path hand-schedules one CDC flow per entity; if the
         # silver DAG ever grows a flow this loop would silently skip (or an
         # entity's flow goes missing → bare KeyError mid-chain), fail loudly
-        # here instead so run_all/run_silver parity can't drift.
+        # here instead so the chains and ``Pipeline.run`` cannot drift.
         expected = {f"{e}_raw" for e in ENTITIES}
         if len(p.cdc_flows) != len(expected) or set(flows_by_source) != expected:
             raise RuntimeError(
                 "ingest_and_silver chains cover flows sourced from "
                 f"{sorted(expected)} but the silver pipeline registers "
                 f"{sorted(flows_by_source)}; update the chain builder to "
-                "match (or run via run_silver, which executes all flows)"
+                "match (or run via self.silver.run(), which executes all flows)"
             )
 
         def chain(entity: str) -> None:
@@ -241,11 +209,6 @@ class FlightLakehouse:
 
         return p
 
-    def run_silver(self) -> None:
-        """One silver batch: apply expectations and upsert all four SCD1
-        tables (modifiedDate comes from the bronze ingest stamp)."""
-        self.silver.run()
-
     # -- gold ---------------------------------------------------------------
 
     def _gold_table(self, name: str) -> ManagedParquetTable:
@@ -261,27 +224,6 @@ class FlightLakehouse:
         "DimCustomers": "customers_silver",
         "DimAirports": "airports_silver",
     }
-
-    def build_gold(self, clock: dt.datetime | None = None) -> None:
-        """Build the three dimensions then the fact (reference E3 order).
-
-        The dimensions are INDEPENDENT (separate silver sources, separate
-        target tables, separate commit locks), so they build concurrently
-        on the shared session — Spark's scheduler interleaves their jobs
-        and the per-build fixed costs (cursor collects, rank kernel,
-        staged parquet write, commit) overlap instead of summing. Results
-        are identical to the sequential order by independence; the fact
-        build stays AFTER the barrier because it joins every dim's
-        surrogate mapping."""
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=len(self.DIMS)) as ex:
-            futures = [
-                ex.submit(self.build_one_dim, name, clock) for name in self.DIMS
-            ]
-            for f in futures:
-                f.result()  # re-raise the first failure, if any
-        self.build_fact_table(clock)
 
     def build_one_dim(self, name: str, clock: dt.datetime | None = None) -> None:
         """Build a single gold dimension from its silver source — the
@@ -336,8 +278,8 @@ class FlightLakehouse:
         three dimension entities — build the GOLD DIM as soon as its own
         silver lands (`ingest_and_silver(then=...)`). After the chains,
         the fact build (which joins every dim — the one true barrier)
-        overlaps the silver finalize (quarantine + event-log appends,
-        which gold never reads); both are awaited before returning, so a
+        overlaps the silver finalize (quarantine appends, expectation
+        metrics and event log, which gold never reads); both are awaited before returning, so a
         following run observes a fully-closed batch."""
         from concurrent.futures import ThreadPoolExecutor
 

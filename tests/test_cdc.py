@@ -710,6 +710,33 @@ def test_lock_timeout_cleans_staged_tmp(spark, tmp_path, monkeypatch):
         os.rmdir(lock)
 
 
+@pytest.mark.parametrize("op", ["overwrite", "append", "pruned_upsert"])
+def test_failed_stage_write_cleans_staged_tmp(spark, tmp_path, op):
+    """A stage write that raises (a FAIL expectation aborting it, say)
+    removes its __tmp_ dir before re-raising: the litter sweep reclaims
+    only dead writers' stages, so a live process would keep one per
+    failed write. The table itself is untouched."""
+    import glob
+
+    from pyspark.errors import SparkRuntimeException
+
+    t = ManagedParquetTable(
+        spark, str(tmp_path / "t"), partition_by=["p"] if op == "pruned_upsert" else None
+    )
+    t.overwrite(spark.createDataFrame([(0, "x")], "k long, p string"))
+    version = t.version()
+    boom = F.when(F.col("id") < 2, F.col("id")).otherwise(F.raise_error(F.lit("boom")))
+    bad = spark.range(3).select(boom.cast("long").alias("k"), F.lit("x").alias("p"))
+    with pytest.raises(SparkRuntimeException, match="boom"):
+        if op == "pruned_upsert":
+            t.upsert(bad, keys=["k", "p"])
+        else:
+            getattr(t, op)(bad)
+    assert glob.glob(f"{t.path}.__tmp_*") == []
+    assert t.version() == version
+    assert [tuple(r) for r in t.read().collect()] == [(0, "x")]
+
+
 def test_append_publishes_atomic_batch_dir_unpartitioned(spark, tmp_path):
     """Unpartitioned appends land as ONE batch subdirectory per commit
     (a single rename — readers see all of a batch or none of it), and

@@ -157,8 +157,7 @@ def test_business_silver_stream_equals_batch(spark, tmp_path_factory):
     raw = str(root / "raw")
     fx.write_base(raw)
     lk = FlightLakehouse(spark, raw, str(root / "lake"))
-    lk.ingest_bronze(T1)
-    lk.run_silver()
+    lk.ingest_and_silver(T1)()
 
     streamed = business_silver_stream(lk)
     batch = lk.silver.read("business_silver")

@@ -1,10 +1,13 @@
 from __future__ import annotations
 
+import glob
+import os
+
 import pytest
+from pyspark.errors import SparkRuntimeException
 
 from databricks_end_to_end_lakeflow_project_spark.pipeline.dag import Pipeline
 from databricks_end_to_end_lakeflow_project_spark.pipeline.expectations import (
-    ExpectationFailed,
     Policy,
     apply_expectations,
 )
@@ -18,29 +21,32 @@ def df(spark):
 
 
 def test_expect_drop(df):
-    out, m = apply_expectations(
+    out, finish = apply_expectations(
         df, {"id_set": "id IS NOT NULL", "val_set": "val IS NOT NULL"}, Policy.DROP, "ds"
     )
     assert out.count() == 2
+    m = finish()
     assert m.failed_rows == 2 and m.passed_rows == 2
     assert m.per_rule_failures == {"id_set": 1, "val_set": 1}
 
 
 def test_expect_warn_keeps_rows(df):
-    out, m = apply_expectations(df, {"id_set": "id IS NOT NULL"}, Policy.WARN, "ds")
+    out, finish = apply_expectations(df, {"id_set": "id IS NOT NULL"}, Policy.WARN, "ds")
     assert out.count() == 4
-    assert m.failed_rows == 1
+    assert finish().failed_rows == 1
 
 
 def test_expect_fail_raises(df):
-    with pytest.raises(ExpectationFailed):
-        apply_expectations(df, {"id_set": "id IS NOT NULL"}, Policy.FAIL, "ds")
+    # gating is a plan transformation: the violation aborts the action
+    out, _ = apply_expectations(df, {"id_set": "id IS NOT NULL"}, Policy.FAIL, "ds")
+    with pytest.raises(SparkRuntimeException, match="ds: row violates expectations id_set"):
+        out.count()
 
 
 def test_expect_fail_passes_when_clean(df):
     clean = df.filter("id IS NOT NULL AND val IS NOT NULL")
-    out, m = apply_expectations(clean, {"id_set": "id IS NOT NULL"}, Policy.FAIL, "ds")
-    assert m.failed_rows == 0 and out.count() == 2
+    out, finish = apply_expectations(clean, {"id_set": "id IS NOT NULL"}, Policy.FAIL, "ds")
+    assert out.count() == 2 and finish().failed_rows == 0
 
 
 def test_pipeline_cycle_detection(spark, tmp_path):
@@ -82,28 +88,77 @@ def test_cdc_flow_requires_declared_table(spark, tmp_path):
 
 def test_observed_expectations_single_pass(spark):
     """Observation-based expectations: metrics come from the SAME action
-    that materializes the gated frame — counts must match the classic
-    two-pass variant, including rows dropped by the gate."""
-    from databricks_end_to_end_lakeflow_project_spark.pipeline.expectations import (
-        Policy,
-        apply_expectations,
-        apply_expectations_observed,
-    )
-
+    that materializes the gated frame, including rows dropped by the
+    gate."""
     df = spark.createDataFrame(
         [(1, "a"), (2, None), (None, "c"), (4, "d")], "id int, name string"
     )
     rules = {"id_set": "id IS NOT NULL", "name_set": "name IS NOT NULL"}
 
-    gated, _, finish = apply_expectations_observed(df, rules, Policy.DROP, "t")
+    gated, finish = apply_expectations(df, rules, Policy.DROP, "t")
     kept = gated.count()  # the one action; metrics piggyback on it
     got = finish()
 
-    _, want = apply_expectations(df, rules, Policy.DROP, "t")
     assert kept == 2
-    assert got.failed_rows == want.failed_rows == 2
-    assert got.passed_rows == want.passed_rows == 2
-    assert got.per_rule_failures == want.per_rule_failures
+    assert got.failed_rows == 2
+    assert got.passed_rows == 2
+    assert got.per_rule_failures == {"id_set": 1, "name_set": 1}
+
+
+@pytest.mark.parametrize("policy", list(Policy))
+def test_resolving_gated_view_launches_no_job(spark, tmp_path, policy):
+    """Resolving a view with expectations over a parquet dir is a pure
+    plan transformation: no Spark job, so the resolve lock never waits
+    on one. Finalizing a run whose action never touched the view
+    returns at once with no metrics for it."""
+    from databricks_end_to_end_lakeflow_project_spark.sources.readers import (
+        read_spark_parquet,
+    )
+
+    src = str(tmp_path / "src")
+    spark.createDataFrame([(1, "a"), (None, "b")], "id int, v string").write.parquet(src)
+    p = Pipeline(spark, str(tmp_path / "p"))
+
+    @p.view(name="gated", expectations={"id_set": "id IS NOT NULL"}, policy=policy)
+    def gated(pl):
+        return read_spark_parquet(spark, src)
+
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    p.begin_run()
+    before = scheduler.nextJobId()
+    p.read("gated")
+    assert scheduler.nextJobId() == before
+    p.finalize_run()
+    assert p.metrics == {}
+
+
+def test_fail_view_aborts_cdc_write_before_commit(spark, tmp_path):
+    """A FAIL expectation on a CDC flow's source aborts the staged write:
+    the target keeps its rows and version, no intent journal or stage dir
+    is left, and the failed run logs no expectation rows."""
+    rows = [(1, 1, "a"), (2, 1, "b")]
+    p = Pipeline(spark, str(tmp_path / "p"))
+
+    @p.view(name="src", expectations={"v_set": "v IS NOT NULL"}, policy=Policy.FAIL)
+    def src(pl):
+        return spark.createDataFrame(rows, "k int, seq int, v string")
+
+    p.create_streaming_table("tgt")
+    p.create_auto_cdc_flow(target="tgt", source="src", keys=["k"], sequence_by="seq")
+    p.run()
+    assert p.metrics["src"].failed_rows == 0 and p.metrics["src"].passed_rows == 2
+    t = p.table("tgt")
+    state = sorted(map(tuple, t.read().collect()))
+    version = t.version()
+
+    rows.extend([(1, 2, "a2"), (3, 2, None)])
+    with pytest.raises(SparkRuntimeException, match="src: row violates expectations v_set"):
+        p.run()
+    assert sorted(map(tuple, t.read().collect())) == state
+    assert t.version() == version
+    assert not os.path.exists(t._intent_path())
+    assert glob.glob(f"{t.path}.__tmp_*") == []
+    assert {r["run_id"] for r in p.event_log().collect()} == {1}
 
 
 def test_quarantine_routes_violations_to_side_table(spark, tmp_path):

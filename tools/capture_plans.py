@@ -1,10 +1,11 @@
-"""Capture `.explain("formatted")` for named queries into plans/r10/.
+"""Capture `.explain("formatted")` for named queries into plans/<round>/.
 
-Usage: python tools/capture_plans_r10.py <suffix> [name ...]
+Usage: python tools/capture_plans.py <round> <suffix> [name ...]
+  round:  output subdirectory under plans/, e.g. "r10"
   suffix: "before" or "after"
   with no names: the full bench HEADLINE set.
 
-The round-9 optimization deliverable: plans/r10/<query>_<suffix>.txt
+An optimization round's plan deliverable: plans/<round>/<query>_<suffix>.txt
 holds the formatted physical plan the optimization claims are judged
 against (Exchange count, join strategy, PushedFilters, BatchEvalPython
 nodes).
@@ -25,16 +26,18 @@ from databricks_end_to_end_lakeflow_project_spark.session import get_spark  # no
 
 
 def main() -> None:
-    suffix = sys.argv[1]
-    names = sys.argv[2:]
+    if len(sys.argv) < 3:
+        sys.exit(__doc__)
+    round_name, suffix = sys.argv[1], sys.argv[2]
+    names = sys.argv[3:]
     if not names:
         import bench
 
         names = list(bench.HEADLINE)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    out_dir = Path(_REPO) / "plans" / "r10"
+    out_dir = Path(_REPO) / "plans" / round_name
     out_dir.mkdir(parents=True, exist_ok=True)
-    spark = get_spark("plan-capture-r10")
+    spark = get_spark(f"plan-capture-{round_name}")
     qs = registry.all_queries()
     for name in names:
         try:
