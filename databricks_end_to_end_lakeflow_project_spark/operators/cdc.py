@@ -1362,41 +1362,27 @@ def delete_where(table: "ManagedParquetTable", condition) -> int:
 def publish_atomically(
     writes: Sequence[tuple["ManagedParquetTable", DataFrame]],
 ) -> None:
-    """Two-phase multi-table publish: PREPARE writes every DataFrame to
-    its table's temp directory first (the expensive, failure-prone
-    phase — any error here aborts with all tables untouched), then
-    COMMIT swaps all temp dirs in via directory renames. Readers can
-    observe a brief window where early tables show the new version and
-    later ones the old (rename-speed, not write-speed) — the practical
-    cross-table guarantee a lakehouse without a shared transaction log
-    can offer, and why Delta/Iceberg keep multi-table transactions out
-    of scope too."""
-    import uuid as _uuid
-
+    """Two-phase multi-table publish through each table's commit
+    protocol. PREPARE stages every DataFrame (`_stage`: the expensive,
+    failure-prone phase — any error removes the stages already written
+    and aborts with all tables untouched), then COMMIT publishes each
+    stage with `_swap_commit`: commit lock, intent journal, version bump,
+    and a snapshot of the replaced state under ``retain_versions``.
+    Readers can observe a brief window where early tables show the new
+    version and later ones the old (rename-speed, not write-speed) — the
+    practical cross-table guarantee a lakehouse without a shared
+    transaction log can offer, and why Delta/Iceberg keep multi-table
+    transactions out of scope too."""
     staged: list[tuple[ManagedParquetTable, str]] = []
     try:
         for table, df in writes:
-            tmp = f"{table.path}.__tmp_{_uuid.uuid4().hex[:8]}"
-            # register BEFORE writing so a mid-write failure's partial
-            # directory is cleaned up with the rest
-            staged.append((table, tmp))
-            writer = df.write.mode("overwrite")
-            if table.partition_by:
-                writer = writer.partitionBy(*table.partition_by)
-            writer.parquet(tmp)
-    except Exception:
+            staged.append((table, table._stage(df)))
+    except BaseException:
         for _, tmp in staged:
             shutil.rmtree(tmp, ignore_errors=True)
         raise
-    # commit phase: pure renames
     for table, tmp in staged:
-        old = None
-        if os.path.exists(table.path):
-            old = f"{table.path}.__old_{_uuid.uuid4().hex[:8]}"
-            os.rename(table.path, old)
-        os.rename(tmp, table.path)
-        if old:
-            shutil.rmtree(old, ignore_errors=True)
+        table._swap_commit(tmp, None)
 
 
 def snapshot_as_of(history: DataFrame, sequence_value) -> DataFrame:

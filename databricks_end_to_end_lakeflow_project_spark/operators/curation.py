@@ -25,9 +25,11 @@ Scale design (100 TB):
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from databricks_end_to_end_lakeflow_project_spark.operators.kernels import map_kernel
 from databricks_end_to_end_lakeflow_project_spark.registry import query
 from databricks_end_to_end_lakeflow_project_spark.sources.readers import read_table
 from databricks_end_to_end_lakeflow_project_spark.operators.sampling import hash_hex
@@ -66,33 +68,21 @@ def exploded_distinct_ngrams(docs: DataFrame, n: int) -> DataFrame:
     irrelevant to every consumer — the gram stream feeds joins and
     counts). Pinned by
     tests/test_curation.py::test_distinct_ngram_kernel_matches_expression.
-    ``docs`` must carry exactly (doc_id, text)."""
-    import pandas as pd
+    ``docs`` must carry (doc_id, text)."""
 
-    def gen(batches):
-        for pdf in batches:
-            ids: list[int] = []
-            gs: list[str] = []
-            for did, text in zip(pdf["doc_id"].to_numpy(), pdf["text"]):
-                parts = text.strip(" ").split(" ")
-                ln = len(parts)
-                if ln < n:
-                    continue
-                for g in dict.fromkeys(
-                    " ".join(parts[i : i + n]) for i in range(ln - n + 1)
-                ):
-                    ids.append(did)
-                    gs.append(g)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "g": pd.Series(gs, dtype="object"),
-                }
+    def gen(pdf):
+        rows: list[int] = []
+        gs: list[str] = []
+        for i, text in enumerate(pdf["text"]):
+            parts = text.strip(" ").split(" ")
+            distinct = dict.fromkeys(
+                " ".join(parts[j : j + n]) for j in range(len(parts) - n + 1)
             )
+            rows += [i] * len(distinct)
+            gs += distinct
+        return np.asarray(rows, dtype=np.int64), {"g": gs}
 
-    return docs.select("doc_id", "text").mapInPandas(
-        gen, schema="doc_id long, g string"
-    )
+    return map_kernel(docs.select("doc_id", "text"), ["doc_id"], {"g": "string"}, gen)
 
 
 @query(

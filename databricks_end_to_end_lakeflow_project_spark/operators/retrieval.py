@@ -29,7 +29,6 @@ from pyspark.sql.types import StructType
 from databricks_end_to_end_lakeflow_project_spark.registry import query
 from databricks_end_to_end_lakeflow_project_spark.session import persist_once
 from databricks_end_to_end_lakeflow_project_spark.sources.readers import read_table
-from databricks_end_to_end_lakeflow_project_spark.operators.similarity import cosine
 from databricks_end_to_end_lakeflow_project_spark.operators.textops import tokens
 
 _RRF_K = 60  # the standard reciprocal-rank-fusion damping constant

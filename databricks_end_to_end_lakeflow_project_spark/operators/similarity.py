@@ -1,11 +1,18 @@
 """Embedding similarity search: brute-force cosine top-k (baseline),
-random-hyperplane LSH bucketing (scale path), label centroids, and
-embedding near-dup pairs.
+random-hyperplane LSH bucketing (scale path), IVF cell assignment,
+product quantization, SemDeDup, and the recall/quality evaluations
+built on them.
 
-North-star additions (SURVEY.md §2.9). The dot products are JVM-side
-(`F.zip_with` + `F.aggregate` sequential folds — the same fold order as
-the DuckDB oracle's `list_reduce`, so doubles match bit-for-bit before
-rounding). No Python UDF in any hot path.
+Exactness: every cosine, band key and cell assignment matches the
+DuckDB oracle's ``list_reduce`` fold bit-for-bit before rounding. Two
+forms compute that fold: the JVM expressions `dot`/`norm`/`cosine`
+(``zip_with`` + ``aggregate``, interpreted — Spark never compiles HOF
+lambdas), and the numpy fold `kernels.fold_dot` run inside Arrow
+``mapInPandas`` stages (`with_fold_cosine`, `with_band_signatures`,
+`_assigned_cells`, the SemDeDup block kernel, PQ encoding). Which one a
+query uses follows the crossover rule in the `kernels` docstring: the
+kernel on pair-scale frames or inside an existing Python stage, the
+expression on small scored sets.
 
 Scale notes (100 TB of embeddings):
 - brute-force top-k is a single scan + TakeOrderedAndProject — the right
@@ -27,6 +34,11 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from databricks_end_to_end_lakeflow_project_spark.operators.kernels import (
+    dim_major,
+    fold_dot,
+    map_kernel,
+)
 from databricks_end_to_end_lakeflow_project_spark.registry import query
 from databricks_end_to_end_lakeflow_project_spark.session import persist_once
 from databricks_end_to_end_lakeflow_project_spark.sources.readers import (
@@ -65,47 +77,6 @@ def _hyperplanes(seed: int = 7, n: int = _BANDS * _PLANES_PER_BAND, dim: int = D
     return [[float(v) for v in rng.standard_normal(dim)] for _ in range(n)]
 
 
-def band_signatures(vec: Column) -> Column:
-    """Array of 16 band keys; band i packs the sign bits of its 3 planes.
-
-    Expression form (48 interpreted HOF dot folds per row — Spark never
-    compiles `aggregate` lambdas); query paths use the bit-identical
-    Arrow kernel `with_band_signatures` instead (guide §4.2). Kept as
-    the reference model for the kernel's exactness test."""
-    planes = _hyperplanes()
-    bands = []
-    for bi in range(_BANDS):
-        bits = F.lit(0)
-        for pi in range(_PLANES_PER_BAND):
-            p = planes[bi * _PLANES_PER_BAND + pi]
-            plane = F.array(*[F.lit(x) for x in p])
-            bits = bits + F.when(dot(vec, plane) > 0, F.lit(1 << pi)).otherwise(F.lit(0))
-        bands.append(bits)
-    return F.array(*bands)
-
-
-def _fold_dot_cols(et: "np.ndarray", bt: "np.ndarray") -> "np.ndarray":
-    """Exact sequential-fold dot of two (dim, n) float64 matrices along
-    dim: acc ← acc + a_d·b_d, one IEEE-rounded vectorized multiply and
-    add per dimension, in dimension order — bit-identical per element to
-    the JVM `dot` / DuckDB `list_reduce` folds (element-wise numpy ops
-    never reassociate a reduction, unlike np.dot/BLAS)."""
-    n = et.shape[1]
-    acc = np.zeros(n, dtype=np.float64)
-    tmp = np.empty(n, dtype=np.float64)
-    for d in range(et.shape[0]):
-        np.multiply(et[d], bt[d], out=tmp)
-        np.add(acc, tmp, out=acc)
-    return acc
-
-
-def _emb_tmat(col) -> "np.ndarray":
-    """pandas Series of float32 arrays → contiguous (dim, n) float64."""
-    return np.ascontiguousarray(
-        np.stack(col.map(np.asarray).values).astype(np.float64).T
-    )
-
-
 def with_fold_cosine(
     df: DataFrame,
     a: str,
@@ -117,89 +88,49 @@ def with_fold_cosine(
     kernel — the same doubles the interpreted `cosine` expression (and
     the DuckDB oracle's `list_reduce`) produce, at batch speed instead of
     three interpreted HOF folds per row (guide §4.2; measured ~25 µs per
-    row interpreted vs ~0.1 µs vectorized). ``keep`` names the columns to
-    emit besides ``out`` (default: all — pass a narrow list so the heavy
-    embedding arrays don't ride BACK through Arrow, guide §4.1's
-    only-the-columns-the-function-needs in both directions); callers keep
-    rounding/threshold logic in the JVM so engine-visible semantics
-    (F.round HALF_UP, filter on the unrounded value) are untouched.
-    Exactness is pinned by
-    tests/test_llmops.py::test_fold_cosine_kernel_matches_expression."""
-    keep = list(df.columns) if keep is None else list(keep)
-    by_name = {f.name: f for f in df.schema.fields}
-    schema = ", ".join(
-        f"{c} {by_name[c].dataType.simpleString()}" for c in keep
-    ) + f", {out} double"
-    # literal query vector: its fold norm is a constant — computed once
-    # driver-side with the same IEEE ops the norm() expression applies
-    bvec = None if isinstance(b, str) else np.asarray([float(x) for x in b])
-    bnorm = None if bvec is None else _py_seq_norm([float(x) for x in b])
+    row interpreted vs ~0.1 µs vectorized). ``b`` is a column name or a
+    literal query vector. ``keep`` names the columns to emit besides
+    ``out`` (default: all — pass a narrow list so the heavy embedding
+    arrays don't ride BACK through Arrow); callers keep rounding and
+    threshold logic in the JVM so engine-visible semantics (F.round
+    HALF_UP, filter on the unrounded value) are untouched. Exactness is
+    pinned by tests/test_llmops.py::test_fold_cosine_kernel_matches_expression."""
+    bvec = None if isinstance(b, str) else np.asarray(b, dtype=np.float64)
+    bnorm = None if bvec is None else np.sqrt(fold_dot(bvec, bvec))
 
-    def score(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            at = _emb_tmat(pdf[a])
-            n = at.shape[1]
-            if bvec is None:
-                bt = _emb_tmat(pdf[b])
-                dot_ab = _fold_dot_cols(at, bt)
-                nb = np.sqrt(_fold_dot_cols(bt, bt))
-            else:
-                acc = np.zeros(n, dtype=np.float64)
-                tmp = np.empty(n, dtype=np.float64)
-                for d in range(at.shape[0]):
-                    np.multiply(at[d], bvec[d], out=tmp)
-                    np.add(acc, tmp, out=acc)
-                dot_ab, nb = acc, bnorm
-            na = np.sqrt(_fold_dot_cols(at, at))
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = dot_ab / (na * nb)
-            res = pdf[keep].copy()
-            res[out] = cos
-            yield res
+    def score(pdf):
+        at = dim_major(pdf[a])
+        if bvec is None:
+            bt = dim_major(pdf[b])
+            dot_ab, nb = fold_dot(at, bt), np.sqrt(fold_dot(bt, bt))
+        else:
+            dot_ab, nb = fold_dot(at, bvec), bnorm
+        # 0-norm rows divide by zero (inf/nan), never raise
+        with np.errstate(divide="ignore", invalid="ignore"):
+            return None, {out: dot_ab / (np.sqrt(fold_dot(at, at)) * nb)}
 
-    return df.mapInPandas(score, schema=schema)
+    return map_kernel(df, keep, {out: "double"}, score)
 
 
 def with_band_signatures(
     em: DataFrame, out: str = "bands", keep: list[str] | None = None
 ) -> DataFrame:
-    """Append ``out = band_signatures(embedding)`` (array<int>[16]) via
-    the exact-fold kernel: 48 per-dim fold dots against the fixed
-    hyperplanes, sign bits packed per band — the same ints the
-    interpreted expression produces (the sign of a bit-identical double
-    is bit-identical), so the LSH candidate set reproduces exactly in
-    both engines. ``keep`` as in `with_fold_cosine`."""
-    planes = np.array(_hyperplanes(), dtype=np.float64)  # (48, dim)
-    keep = list(em.columns) if keep is None else list(keep)
-    by_name = {f.name: f for f in em.schema.fields}
-    schema = ", ".join(
-        f"{c} {by_name[c].dataType.simpleString()}" for c in keep
-    ) + f", {out} array<int>"
+    """Append ``out`` (array<int>[16]): band i packs the sign bits of the
+    fold dots against its 3 fixed hyperplanes. One `fold_dot` scores
+    every row against all 48 planes; the sign of a bit-identical double
+    is bit-identical, so the LSH candidate set reproduces exactly in the
+    DuckDB oracle (`_ann_cand_cte`). Pinned against the interpreted
+    expression in tests/fold_reference.py::band_signatures. ``keep`` as
+    in `with_fold_cosine`."""
+    planes_t = np.ascontiguousarray(np.array(_hyperplanes(), dtype=np.float64).T)
+    shifts = np.arange(_PLANES_PER_BAND, dtype=np.int32)
 
-    def bands_fn(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            et = _emb_tmat(pdf["embedding"])
-            n = et.shape[1]
-            acc = np.empty(n, dtype=np.float64)
-            tmp = np.empty(n, dtype=np.float64)
-            keys = np.zeros((n, _BANDS), dtype=np.int32)
-            for bi in range(_BANDS):
-                for pi in range(_PLANES_PER_BAND):
-                    pvec = planes[bi * _PLANES_PER_BAND + pi]
-                    acc.fill(0.0)
-                    for d in range(et.shape[0]):
-                        np.multiply(et[d], pvec[d], out=tmp)
-                        np.add(acc, tmp, out=acc)
-                    keys[:, bi] += (acc > 0).astype(np.int32) << pi
-            res = pdf[keep].copy()
-            res[out] = list(keys)
-            yield res
+    def bands(pdf):
+        dots = fold_dot(dim_major(pdf["embedding"])[:, :, None], planes_t[:, None, :])
+        bits = (dots > 0).astype(np.int32).reshape(len(pdf), _BANDS, _PLANES_PER_BAND)
+        return None, {out: list((bits << shifts).sum(axis=2, dtype=np.int32))}
 
-    return em.mapInPandas(bands_fn, schema=schema)
+    return map_kernel(em, keep, {out: "array<int>"}, bands)
 
 
 @query(
@@ -393,28 +324,6 @@ _IVF_CELLS = 8
 _IVF_NPROBE = 3
 
 
-def ivf_assign(em: DataFrame, centroids: list[tuple[int, list[float]]]) -> DataFrame:
-    """Assign every vector to its max-cosine cell (IVF coarse quantizer).
-
-    Centroids arrive as driver-side literals (they are tiny by design) so
-    assignment is a narrow map over the scan — no join, no shuffle. The
-    argmax runs in the exact-fold Arrow kernel (`_seq_fold_assign_fn`
-    with n_probe=1, r10): per-centroid cosines as per-dimension fold
-    loops, bit-identical to the old sorted (−score, cell) struct-array
-    expression (which ran INTERPRETED — Spark never compiles HOF
-    lambdas — and was the dominant cost of every IVF consumer), ties →
-    lowest cell, identical to ORDER BY score DESC, cell. All input
-    columns pass through."""
-    keep = list(em.columns)
-    by_name = {f.name: f for f in em.schema.fields}
-    schema = ", ".join(
-        f"{c} {by_name[c].dataType.simpleString()}" for c in keep
-    ) + ", cell int"
-    return em.mapInPandas(
-        _seq_fold_assign_fn(em, centroids, 1, keep=keep), schema=schema
-    )
-
-
 def _cos_sql(a: str, b: str) -> str:
     """DuckDB cosine of two embedding columns, same fold order as `cosine`."""
     return (
@@ -427,29 +336,29 @@ def _cos_sql(a: str, b: str) -> str:
     )
 
 
-def _seq_cosine(a, b) -> float:
-    """Driver-side cosine with the exact sequential fold order of
-    `cosine` / DuckDB's list_reduce — Python floats are IEEE doubles, so
-    the result is bit-identical to both engines' column expressions."""
-    import math
-
-    s = 0.0
-    for x, y in zip(a, b):
-        s = s + float(x) * float(y)
-    na = 0.0
-    for x in a:
-        na = na + float(x) * float(x)
-    nb = 0.0
-    for y in b:
-        nb = nb + float(y) * float(y)
-    return s / (math.sqrt(na) * math.sqrt(nb))
+def _probe_cells(
+    seeds: list[tuple[int, list[float]]], qvs: list[list[float]], n_probe: int
+) -> list[list[int]]:
+    """Driver-side twin of `_assigned_cells` for literal query vectors:
+    per query, the ``n_probe`` seed cells of highest fold cosine, ties →
+    lowest cell (ORDER BY score DESC, cell in the oracles). The seed
+    panel is tiny, so this is one `fold_dot` over (dim, queries, seeds)
+    and no Spark job."""
+    seeds = sorted(seeds)
+    st = np.asarray([v for _, v in seeds], dtype=np.float64).T
+    qt = np.asarray(qvs, dtype=np.float64).T
+    cos = fold_dot(qt[:, :, None], st[:, None, :]) / (
+        np.sqrt(fold_dot(qt, qt))[:, None] * np.sqrt(fold_dot(st, st))[None, :]
+    )
+    top = np.argsort(-cos, axis=1, kind="stable")[:, :n_probe]
+    return np.array([c for c, _ in seeds])[top].tolist()
 
 
 def _ivf_oracle() -> str:
     """Generated DuckDB replay of the whole IVF pipeline: the 8 seed
     centroids ARE table rows (vec_id < 8), cell assignment is argmax of
     the same sequential-fold cosine (ties → lowest cell, mirroring the
-    first-wins CASE chain in `ivf_assign`), probe selection reuses the
+    stable (−cosine, cell) ranking in `_assigned_cells`), probe selection reuses the
     fold — every double matches bit-for-bit, so cells, probes and the
     final top-10 are exact, not approximate."""
     return f"""
@@ -497,13 +406,9 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         for r in em.filter(F.col("vec_id") < _IVF_CELLS).select("vec_id", "embedding").collect()
     )
     qv_vals = [float(x) for x in next(e for i, e in seeds if i == 0)]
+    probe_ids = _probe_cells(seeds, [qv_vals], _IVF_NPROBE)[0]
 
-    # driver-side probe selection over the tiny centroid set — the same
-    # sequential fold as the column expression, tie → lowest cell
-    probed = sorted(seeds, key=lambda s: (-_seq_cosine(s[1], qv_vals), s[0]))[:_IVF_NPROBE]
-    probe_ids = [cell_id for cell_id, _ in probed]
-
-    assigned = ivf_assign(em, seeds)
+    assigned = _assigned_cells(em, seeds, 1)
     scored = with_fold_cosine(
         assigned.filter(F.col("cell").isin(probe_ids) & (F.col("vec_id") != 0)),
         "embedding",
@@ -949,7 +854,6 @@ _PQ_K = 16         # codewords per subspace → 4 bits/code, 8 B per vector
 _PQ_ITERS = 3      # Lloyd iterations (deterministic init ⇒ deterministic fit)
 _PQ_SUBDIM = DIM // _PQ_M
 _PQ_RERANK = 50  # ADC candidate depth fed to the exact re-rank stage
-_PQ_CODES_SCHEMA = "vec_id long, label int, codes array<int>"
 _PQ_PARTIAL_SCHEMA = "m int, code int, n long, s array<double>"
 
 
@@ -967,54 +871,42 @@ def _pq_assign(mat: "np.ndarray", sub_codebook: "np.ndarray") -> "np.ndarray":
 
 
 def _seq_normalize(mat: "np.ndarray") -> "np.ndarray":
-    """Unit-normalize rows with a SEQUENTIAL left-to-right sum of squares
-    — the exact fold order of DuckDB's list_reduce — so the normalized
-    doubles match the oracle bit-for-bit (np.linalg.norm's pairwise tree
-    sum differs in the last ulp)."""
-    s = np.zeros(mat.shape[0])
-    for d in range(mat.shape[1]):
-        s = s + mat[:, d] * mat[:, d]
-    return mat / np.sqrt(s)[:, None]
+    """Unit-normalize rows with the fold's sequential sum of squares —
+    the exact order of DuckDB's list_reduce — so the normalized doubles
+    match the oracle bit-for-bit (np.linalg.norm's pairwise tree sum
+    differs in the last ulp)."""
+    return mat / np.sqrt(fold_dot(mat.T, mat.T))[:, None]
 
 
 def _seq_assign(mat: "np.ndarray", sub_codebook: "np.ndarray") -> "np.ndarray":
-    """argmin codeword per row, squared-L2 accumulated sequentially over
-    the subdims (matches list_reduce), ties to the lowest index."""
-    diff = mat[:, None, :] - sub_codebook[None, :, :]
-    sq = diff * diff
-    d2 = sq[:, :, 0]
-    for d in range(1, mat.shape[1]):
-        d2 = d2 + sq[:, :, d]
-    return d2.argmin(axis=1)
+    """argmin codeword per row, squared-L2 folded sequentially over the
+    subdims (matches list_reduce), ties to the lowest index."""
+    diff = np.moveaxis(mat[:, None, :] - sub_codebook[None, :, :], -1, 0)
+    return fold_dot(diff, diff).argmin(axis=1)
 
 
 def pq_encode(em: DataFrame, codebook: list[list[list[float]]]) -> DataFrame:
     """Assign every vector its M nearest-codeword indexes (column
-    ``codes``: array<int> of length M). One `mapInPandas` pass: the
-    ~4 KB codebook ships in the UDF closure, distances are numpy
-    batch matmuls — row-local, shuffle-free at any corpus size.
-    Normalization and distance accumulation use the sequential fold
-    order so encoding is bit-reproducible by the DuckDB oracle."""
+    ``codes``: array<int> of length M). One Arrow kernel pass: the
+    ~4 KB codebook ships in the closure, distances are per-batch numpy
+    folds — row-local, shuffle-free at any corpus size. Normalization
+    and distance accumulation use the sequential fold order so encoding
+    is bit-reproducible by the DuckDB oracle."""
     cb = [np.asarray(sub, dtype=float) for sub in codebook]
 
-    def enc(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            V = _seq_normalize(np.stack(pdf["embedding"].map(
-                lambda v: np.asarray(v, dtype=float))))
-            codes = np.stack([
-                _seq_assign(V[:, m * _PQ_SUBDIM:(m + 1) * _PQ_SUBDIM], cb[m])
-                for m in range(_PQ_M)
-            ], axis=1)
-            yield pd.DataFrame({
-                "vec_id": pdf["vec_id"].to_numpy(),
-                "label": pdf["label"].to_numpy(),
-                "codes": [c.astype("int32").tolist() for c in codes],
-            })
+    def enc(pdf):
+        V = _seq_normalize(dim_major(pdf["embedding"]).T)
+        codes = np.stack([
+            _seq_assign(V[:, m * _PQ_SUBDIM:(m + 1) * _PQ_SUBDIM], cb[m])
+            for m in range(_PQ_M)
+        ], axis=1)
+        return None, {"codes": list(codes.astype(np.int32))}
 
-    return em.select("vec_id", "label", "embedding").mapInPandas(
-        enc, schema=_PQ_CODES_SCHEMA
+    return map_kernel(
+        em.select("vec_id", "label", "embedding"),
+        ["vec_id", "label"],
+        {"codes": "array<int>"},
+        enc,
     )
 
 
@@ -1427,194 +1319,64 @@ def _chunked_cell_assignment(assigned: DataFrame, max_cell: int) -> DataFrame:
 _GEMM_ASSIGN_MIN_SEEDS = 32
 
 
-def _py_seq_norm(vec: list[float]) -> float:
-    """norm(b) for a literal seed vector with the engine's exact fold
-    order: acc = 0.0; acc = acc + x·x per element; sqrt. Python floats
-    are IEEE doubles, so this matches the JVM/DuckDB fold bit-for-bit."""
-    import math
-
-    acc = 0.0
-    for x in vec:
-        x = float(x)
-        acc = acc + x * x
-    return math.sqrt(acc)
-
-
-def _seq_fold_assign_fn(em: DataFrame, seeds, n_probe: int, keep=None):
-    """mapInPandas kernel for the small-seed cell assignment: per-seed
-    cosines via an explicit per-dimension fold loop (bit-identical to the
-    `cosine` expression / DuckDB ``list_reduce``), ranked by (−cos, cell).
-
-    Fold-order proof: the expression computes
-    ``acc ← acc + (cast(a_d) · cast(b_d))`` left-to-right from 0.0, each
-    step individually IEEE-rounded. The loop below computes
-    ``tmp = ET[d] · b_d`` then ``acc += tmp`` — two element-wise numpy
-    float64 ops, each IEEE-rounded per element, never fused and never
-    reassociated (element-wise kernels have no cross-element reduction),
-    so every intermediate equals the JVM double exactly. Norms use the
-    same per-dim loop; the final ``dot / (norm_a · norm_b)`` is one
-    rounded multiply + one rounded divide in both engines."""
-    order = sorted(range(len(seeds)), key=lambda i: seeds[i][0])
-    cell_ids = np.array([seeds[i][0] for i in order], dtype=np.int64)
-    svecs = [
-        np.asarray(seeds[i][1], dtype=np.float64) for i in order
-    ]
-    snorms = np.array(
-        [_py_seq_norm(seeds[i][1]) for i in order], dtype=np.float64
-    )
-    k = len(seeds)
-    take = min(n_probe, k)
-    dim = len(svecs[0]) if svecs else 0
-    keep = ["vec_id", "embedding"] if keep is None else list(keep)
-
-    def assign(batches):
-        for pdf in batches:
-            n = len(pdf)
-            if not n:
-                continue
-            emat = np.stack(pdf["embedding"].map(np.asarray).values).astype(
-                np.float64
-            )
-            et = np.ascontiguousarray(emat.T)  # (dim, n): contiguous rows
-            # norm(a): sequential fold over dims (one vectorized step per dim)
-            acc = np.zeros(n, dtype=np.float64)
-            tmp = np.empty(n, dtype=np.float64)
-            for d in range(dim):
-                np.multiply(et[d], et[d], out=tmp)
-                np.add(acc, tmp, out=acc)
-            enorm = np.sqrt(acc)
-            ns = np.empty((n, k), dtype=np.float64)
-            for si in range(k):
-                sv = svecs[si]
-                acc.fill(0.0)
-                for d in range(dim):
-                    np.multiply(et[d], sv[d], out=tmp)
-                    np.add(acc, tmp, out=acc)
-                # cos = dot / (norm_a * norm_b), ns = -cos; 0-norm rows
-                # divide by zero exactly like the JVM expression (inf/nan)
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    ns[:, si] = -(acc / (enorm * snorms[si]))
-            # rank by (ns, cell): cells pre-sorted ascending, stable sort
-            top = np.argsort(ns, axis=1, kind="stable")[:, :take]
-            idx = np.repeat(np.arange(n), take)
-            res = pdf[keep].iloc[idx].reset_index(drop=True)
-            res["cell"] = cell_ids[top.reshape(-1)].astype(np.int32)
-            yield res
-
-    return assign
-
-
-def _assigned_cells_expression(
-    em: DataFrame, seeds: list[tuple[int, list[float]]], n_probe: int
-) -> DataFrame:
-    """The pre-r10 pure-JVM expression formulation of the small-seed
-    assignment (per-seed `cosine` structs + ``array_sort`` + slice).
-    Kept as the reference model for
-    test_assigned_cells_kernel_matches_expression — the exact-fold
-    kernel must reproduce it bit-for-bit; NOT used by any query path
-    (the HOF lambdas run interpreted, ~20× slower than the kernel)."""
-    ranked = F.array_sort(
-        F.array(*[
-            F.struct(
-                (-cosine(
-                    F.col("embedding"),
-                    F.array(*[F.lit(float(x)) for x in cvec]),
-                )).alias("ns"),
-                F.lit(cell_id).alias("cell"),
-            )
-            for cell_id, cvec in seeds
-        ])
-    )
-    return em.select(
-        "vec_id",
-        "embedding",
-        F.explode(
-            F.transform(F.slice(ranked, 1, n_probe), lambda s: s["cell"])
-        ).alias("cell"),
-    )
-
-
 def _assigned_cells(
     em: DataFrame, seeds: list[tuple[int, list[float]]], n_probe: int
 ) -> DataFrame:
     """Top-``n_probe`` max-cosine cell assignment over the seed
-    centroids, returning (vec_id, embedding, cell) with one row per
-    (vector, probed cell).
+    centroids (the IVF coarse quantizer; ``n_probe=1`` is plain IVF
+    assignment): every input column plus ``cell``, one row per (vector,
+    probed cell), in probe order. Centroids arrive as driver-side
+    literals (tiny by design), so assignment is a narrow map over the
+    scan — no join, no shuffle. Ranking is by (−cosine, cell): seeds
+    sorted by cell, stable argsort, ties → lowest cell, identical to the
+    oracles' ORDER BY score DESC, cell.
 
-    Two physically different plans for the same operator:
+    The seed count picks the scorer:
 
-    - SMALL seed sets (< ``_GEMM_ASSIGN_MIN_SEEDS``, e.g. the registry's
-      oracle-pinned k=8 corpus): an Arrow ``mapInPandas`` kernel whose
-      per-seed cosine is an EXPLICIT per-dimension fold loop — one
-      vectorized multiply+add per dimension, in dimension order — so
-      every score is bit-identical to the JVM/DuckDB sequential
-      ``aggregate``/``list_reduce`` fold (IEEE double ops round
-      identically; element-wise numpy ops never reassociate a
-      reduction, unlike ``np.dot``/BLAS). Until r10 this branch was a
-      JVM expression (per-seed `cosine` structs + ``array_sort``), but
-      Spark never compiles higher-order-function lambdas — the 8-seed
-      ranking map ran INTERPRETED and was the dominant slice of
-      `dedup_semdedup_keep` (1.86 s of 3.80 at sf0.1, r9 decomposition);
-      the fold-loop kernel produces the same doubles at ~20× the
-      throughput (guide §4.2/§4.5). Exactness is pinned by
-      tests/test_llmops.py::test_assigned_cells_kernel_matches_expression
-      against the old expression formulation on real corpora.
-    - LARGE seed sets (the k ∝ √n operating rule at scale): ONE numpy
-      GEMM per Arrow batch against the broadcast seed matrix. The
-      per-dim fold loop's cost is k·dim vectorized passes — at k in the
-      hundreds the O(k·dim) loop overhead loses to one BLAS call, and
-      scores may differ by summation-order ulps, which only matters on
-      exact ties between DIFFERENT scores — not a correctness surface
-      (the oracle corpus stays on the exact-fold path). Assignment ties
-      are broken identically ((−score, cell), seeds pre-sorted by cell
-      + stable argsort).
+    - fewer than ``_GEMM_ASSIGN_MIN_SEEDS`` (the registry's
+      oracle-pinned k=8 corpus): one `fold_dot` of every row against
+      every seed, so each cosine is bit-identical to the `cosine`
+      expression / DuckDB ``list_reduce``. The expression form ran
+      INTERPRETED (Spark never compiles HOF lambdas) and was the
+      dominant slice of `dedup_semdedup_keep` (1.86 s of 3.80 at sf0.1);
+      the kernel produces the same doubles at ~20× the throughput.
+      Pinned by tests/test_llmops.py::test_assigned_cells_kernel_matches_expression.
+    - LARGE seed sets (the k ∝ √n operating rule at scale): one numpy
+      GEMM per Arrow batch against the unit seed matrix — the fold's
+      k·dim vectorized passes lose to one BLAS call at k in the
+      hundreds. Scores may differ by summation-order ulps, which only
+      matters on exact ties between DIFFERENT scores — not a correctness
+      surface (the oracle corpus stays on the exact-fold path).
     """
+    seeds = sorted(seeds)
+    cell_ids = np.array([c for c, _ in seeds], dtype=np.int32)
+    smat = np.asarray([v for _, v in seeds], dtype=np.float64)  # (k, dim)
+    take = min(n_probe, len(seeds))
     if len(seeds) < _GEMM_ASSIGN_MIN_SEEDS:
-        return em.select("vec_id", "embedding").mapInPandas(
-            _seq_fold_assign_fn(em, seeds, n_probe),
-            schema=(
-                f"vec_id long, "
-                f"embedding {em.schema['embedding'].dataType.simpleString()}, "
-                "cell int"
-            ),
-        )
+        st = np.ascontiguousarray(smat.T)
+        snorm = np.sqrt(fold_dot(st, st))
 
-    seeds = sorted(seeds)  # stable argsort tie → smallest cell id first
-    cell_ids = np.array([c for c, _ in seeds], dtype=np.int64)
-    smat = np.stack([np.asarray(v, dtype=np.float64) for _, v in seeds])
-    snorm = np.linalg.norm(smat, axis=1)
-    snorm[snorm == 0] = 1.0
-    sunit = smat / snorm[:, None]
-    emb_field = em.schema["embedding"]
-    out_schema = (
-        f"vec_id long, embedding {emb_field.dataType.simpleString()}, "
-        "cell int"
-    )
+        def cosines(et):
+            dots = fold_dot(et[:, :, None], st[:, None, :])  # (n, k)
+            # 0-norm rows divide by zero (inf/nan), never raise
+            with np.errstate(divide="ignore", invalid="ignore"):
+                return dots / (np.sqrt(fold_dot(et, et))[:, None] * snorm[None, :])
+    else:
+        snrm = np.linalg.norm(smat, axis=1)
+        snrm[snrm == 0] = 1.0
+        sunit = smat / snrm[:, None]
 
-    def assign(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            emat = np.stack(pdf["embedding"].map(np.asarray).values).astype(
-                np.float64
-            )
-            nrm = np.linalg.norm(emat, axis=1)
+        def cosines(et):
+            nrm = np.linalg.norm(et, axis=0)
             nrm[nrm == 0] = 1.0
-            sims = (emat / nrm[:, None]) @ sunit.T  # (batch, k) GEMM
-            top = np.argsort(-sims, axis=1, kind="stable")[:, :n_probe]
-            n = len(pdf)
-            idx = np.repeat(np.arange(n), n_probe)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].to_numpy()[idx],
-                    "embedding": pdf["embedding"].iloc[idx].to_numpy(),
-                    "cell": cell_ids[top.reshape(-1)].astype(np.int32),
-                }
-            )
+            return (et / nrm).T @ sunit.T  # (n, k) GEMM
 
-    return em.select("vec_id", "embedding").mapInPandas(
-        assign, schema=out_schema
-    )
+    def assign(pdf):
+        top = np.argsort(-cosines(dim_major(pdf["embedding"])), axis=1, kind="stable")
+        rows = np.repeat(np.arange(len(pdf)), take)
+        return rows, {"cell": cell_ids[top[:, :take].reshape(-1)]}
+
+    return map_kernel(em, None, {"cell": "int"}, assign)
 
 
 def semdedup_edges(
@@ -1627,70 +1389,62 @@ def semdedup_edges(
     """Cell-bucketed near-dup edge generation (the SemDeDup kernel):
     top-``n_probe`` max-cosine cell assignment over the given seed
     centroids (narrow map), per-cell BLAS pair scoring, exact cosine
-    re-verify of the ε-band survivors. Returns verified (src, dst)
-    edges, lineage-truncated for iterative consumers.
+    re-verify of the ε-band survivors inside the same block kernel.
+    Returns verified (src, dst) edges, src < dst, lineage-truncated for
+    iterative consumers.
 
     ``max_cell`` bounds per-group worker memory: an oversized (skewed)
     cell is block-decomposed into chunk-pair gemms of ≤ ~2·max_cell rows
     each (see :func:`_chunked_cell_assignment`) instead of one giant
     pandas group — within-cell coverage stays exact."""
-    # top-2 cells per vector (expression or gemm path — _assigned_cells)
-    assigned = _assigned_cells(em, seeds, n_probe).persist()  # feeds the
-    # skew histogram AND the gemm stage — one
-    # evaluation of the |seeds|-term cosine ranking map, not two;
-    # released below once the edge frame has materialized
+    # persisted: feeds the skew histogram AND the block stage — one
+    # evaluation of the seed-cosine map, not two; released below once
+    # the edge frame has materialized
+    assigned = _assigned_cells(em.select("vec_id", "embedding"), seeds, n_probe).persist()
+
     # Per-block pairwise scoring as ONE BLAS matmul per (cell, c1, c2)
     # group (the sim_gemm_batch_topk pattern): a |block|×64 · 64×|block|
-    # gemm beats a JVM fold per pair by ~100× (no per-pair array
-    # allocation), and the block is exactly the applyInPandas group. The
-    # gemm filters with an ε-band BELOW the threshold; survivors (rare)
-    # are re-verified with the oracle's exact fold-order cosine, so
-    # summation-order ulps can never flip membership. max_cell bounds the
-    # worker matrix regardless of cell skew; k ∝ √n keeps TOTAL gemm work
+    # gemm beats a JVM fold per pair by ~100×, and the block is exactly
+    # the applyInPandas group. The gemm keeps an ε-band BELOW the
+    # threshold; its survivors (rare) are re-verified here with the
+    # oracle's fold-order cosine (`fold_dot` on the block's own float64
+    # rows), so summation-order ulps can never flip membership and no
+    # pair joins back to the embeddings. max_cell bounds the worker
+    # matrix regardless of cell skew; k ∝ √n keeps TOTAL gemm work
     # O(n^1.5·r²/k) at 100 TB.
-    def _block_pairs(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _block_pairs(key, pdf):
         empty = pd.DataFrame(
             {"src": pd.Series(dtype="int64"), "dst": pd.Series(dtype="int64")}
         )
         if len(pdf) < 2:
             return empty
         _, c1, c2 = key
-        mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-        nrm = np.linalg.norm(mat, axis=1)
+        et = dim_major(pdf["embedding"])  # (dim, n)
+        nrm = np.linalg.norm(et, axis=0)
         nrm[nrm == 0] = 1.0
-        unit = mat / nrm[:, None]
-        ids = pdf["vec_id"].to_numpy()
+        unit = (et / nrm).T
         if c1 == c2:
-            sim = unit @ unit.T
-            ii, jj = np.nonzero(np.triu(sim >= tau - 1e-6, k=1))
-            aa, bb = ids[ii], ids[jj]
+            ii, jj = np.nonzero(np.triu(unit @ unit.T >= tau - 1e-6, k=1))
         else:
             left = pdf["chunk"].to_numpy() == c1
             if not left.any() or left.all():
                 return empty
-            sim = unit[left] @ unit[~left].T
-            ii, jj = np.nonzero(sim >= tau - 1e-6)
-            aa, bb = ids[left][ii], ids[~left][jj]
+            ii, jj = np.nonzero(unit[left] @ unit[~left].T >= tau - 1e-6)
+            ii, jj = np.flatnonzero(left)[ii], np.flatnonzero(~left)[jj]
+        a, b = et[:, ii], et[:, jj]
+        with np.errstate(divide="ignore", invalid="ignore"):
+            ok = fold_dot(a, b) / (np.sqrt(fold_dot(a, a)) * np.sqrt(fold_dot(b, b))) >= tau
+        ids = pdf["vec_id"].to_numpy()
+        aa, bb = ids[ii[ok]], ids[jj[ok]]
         return pd.DataFrame({"src": np.minimum(aa, bb), "dst": np.maximum(aa, bb)})
 
-    cand = (
+    edges = (
         _chunked_cell_assignment(assigned, max_cell)
         .groupBy("cell", "c1", "c2")
         .applyInPandas(_block_pairs, schema="src long, dst long")
         .distinct()
-    )
-    ea = em.select(F.col("vec_id").alias("src"), F.col("embedding").alias("ea"))
-    eb = em.select(F.col("vec_id").alias("dst"), F.col("embedding").alias("eb"))
-    # no broadcast hint on cand: the candidate-pair frame scales with the
-    # corpus's duplicate mass (unbounded on a dup-heavy corpus) — AQE
-    # broadcasts at runtime while it is actually small
-    edges = (
-        ea.join(cand, "src")
-        .join(eb, "dst")
-        .filter(cosine(F.col("ea"), F.col("eb")) >= F.lit(tau))
-        .select("src", "dst")
-        .localCheckpoint()  # truncate the wide-expression lineage before
-        # the iterative component loop re-reads edges every round
+        .localCheckpoint()  # truncate the lineage before the iterative
+        # component loop re-reads edges every round
     )
     # localCheckpoint is eager — edges is materialized, so the cell
     # assignment cache can be released immediately
@@ -1709,7 +1463,7 @@ def semdedup_cell_stats(
     the O(n^1.5·r²/k) claim: cell-size distribution before and after the
     block decomposition, gemm work (Σ|group|²), and the verified edge
     count. Used by bench.py's dedup cost curve."""
-    assigned = _assigned_cells(em, seeds, n_probe)
+    assigned = _assigned_cells(em.select("vec_id", "embedding"), seeds, n_probe)
     cells = assigned.groupBy("cell").count()
     crow = cells.agg(
         F.count(F.lit(1)).alias("n_cells"),
@@ -1889,26 +1643,11 @@ def sim_recall_at_k_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         (r["vec_id"], r["embedding"])
         for r in em.filter(F.col("vec_id") < _IVF_CELLS).collect()
     )
-    queries = em.filter(
-        F.col("vec_id").between(_RECALL_Q_LO, _RECALL_Q_HI)
-    ).select(F.col("vec_id").alias("q_vec"), F.col("embedding").alias("qv"))
-
-    # probe selection per query: same linear sorted-struct argmax as
-    # ivf_assign, keeping the top-nprobe cells
-    ranked_cells = F.array_sort(
-        F.array(*[
-            F.struct(
-                (-cosine(F.col("qv"), F.array(*[F.lit(float(x)) for x in c]))).alias("ns"),
-                F.lit(cell_id).alias("cell"),
-            )
-            for cell_id, c in seeds
-        ])
-    )
-    probes = queries.select(
-        "q_vec",
-        F.explode(
-            F.transform(F.slice(ranked_cells, 1, _IVF_NPROBE), lambda s: s["cell"])
-        ).alias("cell"),
+    qrows = em.filter(F.col("vec_id").between(_RECALL_Q_LO, _RECALL_Q_HI))
+    queries = qrows.select(F.col("vec_id").alias("q_vec"), F.col("embedding").alias("qv"))
+    # probe selection per query: the assignment kernel's top-nprobe cells
+    probes = _assigned_cells(qrows, seeds, _IVF_NPROBE).select(
+        F.col("vec_id").alias("q_vec"), "cell"
     )
 
     w = Window.partitionBy("q_vec").orderBy(F.col("cos").desc(), "vec_id")
@@ -1928,7 +1667,7 @@ def sim_recall_at_k_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rn") <= _RECALL_K)
         .select("q_vec", "vec_id")
     )
-    assigned = ivf_assign(em, seeds).select("vec_id", "embedding", "cell")
+    assigned = _assigned_cells(em, seeds, 1)
     ivf = (
         with_fold_cosine(
             assigned.join(F.broadcast(probes), "cell")
@@ -2643,7 +2382,7 @@ def bitext_margin_pairs(
         # bounded by the cutoff (≤ 512×512/4 candidate pairs).
         cells = em.select("vec_id", "embedding", F.lit(0).alias("cell"))
     else:
-        cells = _assigned_cells(em, seeds, n_probe)
+        cells = _assigned_cells(em.select("vec_id", "embedding"), seeds, n_probe)
     a = cells.filter(F.col("vec_id") % 2 == 0).select(
         F.col("vec_id").alias("src"), F.col("embedding").alias("va"), "cell"
     )
@@ -3048,7 +2787,7 @@ def pipeline_ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     index ships.
 
     Scale shape: cell assignment is a narrow map over the scan (argmax
-    of broadcast centroids, `ivf_assign`); the query batch is a bounded
+    of broadcast centroids, `_assigned_cells`); the query batch is a bounded
     broadcast (the batch-scoring contract of `sim_gemm_batch_topk`);
     the brute ground-truth side is the expensive leg ON PURPOSE — at
     real scale you compute it on a sampled query set exactly like this
@@ -3074,13 +2813,13 @@ def pipeline_ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # per-query probe cells from the tiny centroid panel (driver-side,
     # same fold as the column expression — the sanctioned model collect)
-    probe_map = {}
-    for qid, qv in queries:
-        ranked = sorted(seeds, key=lambda s: (-_seq_cosine(s[1], qv), s[0]))
-        probe_map[qid] = [cell for cell, _ in ranked[:_IVF_NPROBE]]
+    probe_map = dict(zip(
+        [qid for qid, _ in queries],
+        _probe_cells(seeds, [qv for _, qv in queries], _IVF_NPROBE),
+    ))
     # the scored frame below is the persisted intermediate (it feeds both
     # the brute and the served legs); assignment has a single consumer
-    assigned = ivf_assign(em, seeds).select("vec_id", "embedding", "cell")
+    assigned = _assigned_cells(em.select("vec_id", "embedding"), seeds, 1)
     qframe = spark.createDataFrame(
         [(qid, qv) for qid, qv in queries], "qid long, qv array<double>"
     )
@@ -3273,18 +3012,19 @@ def sim_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", "embedding")
         .collect()
     )
-    probe_rows = []
-    for qid, qv in queries:
-        ranked = sorted(seeds, key=lambda s: (-_seq_cosine(s[1], qv), s[0]))
-        probe_rows += [
-            (qid, cell, rn + 1)
-            for rn, (cell, _v) in enumerate(ranked[: max(_SWEEP_NPROBES)])
-        ]
+    probe_rows = [
+        (qid, cell, rn + 1)
+        for (qid, _), cells in zip(
+            queries,
+            _probe_cells(seeds, [qv for _, qv in queries], max(_SWEEP_NPROBES)),
+        )
+        for rn, cell in enumerate(cells)
+    ]
     probes = spark.createDataFrame(probe_rows, "qid long, cell long, rn int")
     # scored is the persisted intermediate (feeds brute + served legs);
     # assignment has a single consumer. Batch scoring via the exact-fold
     # Arrow kernel (r10, guide §4.2).
-    assigned = ivf_assign(em, seeds).select("vec_id", "embedding", "cell")
+    assigned = _assigned_cells(em.select("vec_id", "embedding"), seeds, 1)
     qframe = spark.createDataFrame(
         [(qid, qv) for qid, qv in queries], "qid long, qv array<double>"
     )

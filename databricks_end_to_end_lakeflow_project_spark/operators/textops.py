@@ -19,6 +19,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from databricks_end_to_end_lakeflow_project_spark.functions.compat import asc_seq
+from databricks_end_to_end_lakeflow_project_spark.operators.kernels import map_kernel
 from databricks_end_to_end_lakeflow_project_spark.registry import query
 from databricks_end_to_end_lakeflow_project_spark.session import persist_once
 from databricks_end_to_end_lakeflow_project_spark.sources.readers import (
@@ -56,29 +57,22 @@ def doc_token_counts(docs: "DataFrame") -> "DataFrame":
     guide §4.2/§2.4."""
     import collections
 
-    import pandas as pd
+    def counts(pdf):
+        rows: list[int] = []
+        toks: list[str] = []
+        tfs: list[int] = []
+        for i, text in enumerate(pdf["text"]):
+            c = collections.Counter(text.strip(" ").split(" "))
+            rows += [i] * len(c)
+            toks += c.keys()
+            tfs += c.values()
+        return np.asarray(rows, dtype=np.int64), {
+            "token": toks,
+            "tf": np.asarray(tfs, dtype=np.int64),
+        }
 
-    def counts(batches):
-        for pdf in batches:
-            ids: list[int] = []
-            toks: list[str] = []
-            tfs: list[int] = []
-            for did, text in zip(pdf["doc_id"].to_numpy(), pdf["text"]):
-                c = collections.Counter(text.strip(" ").split(" "))
-                for t, k in c.items():
-                    ids.append(did)
-                    toks.append(t)
-                    tfs.append(k)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "token": pd.Series(toks, dtype="object"),
-                    "tf": pd.Series(tfs, dtype="int64"),
-                }
-            )
-
-    return docs.select("doc_id", "text").mapInPandas(
-        counts, schema="doc_id long, token string, tf long"
+    return map_kernel(
+        docs.select("doc_id", "text"), ["doc_id"], {"token": "string", "tf": "long"}, counts
     )
 
 

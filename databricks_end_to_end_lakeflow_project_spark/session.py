@@ -17,6 +17,21 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Driver heap when ``SPARK_GRAFT_DRIVER_MEM`` is unset:
+    ``min(24g, MemTotal/2)``. A local-mode JVM holds the whole engine, and
+    a heap larger than the host lets it grow until the kernel's OOM
+    killer ends it; half the host leaves room for the Python workers.
+    Falls back to 24g where ``meminfo`` cannot be read."""
+    try:
+        with open(meminfo) as fh:
+            kb = next(int(ln.split()[1]) for ln in fh if ln.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError, IndexError):
+        return "24g"
+    mb = kb // 2048
+    return "24g" if mb >= 24 * 1024 else f"{mb}m"
+
+
 def get_spark(
     app_name: str = "lakeflow-spark",
     *,
@@ -41,7 +56,10 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         # file-split size: at 100 TB this bounds scan-task size; 128m default
         # is right for parquet, keep explicit so it is a deliberate choice.

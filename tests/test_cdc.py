@@ -451,6 +451,36 @@ def test_publish_atomically_all_or_nothing_on_prepare_failure(spark, tmp_path):
     assert [r["x"] for r in t2.read().collect()] == [10]
 
 
+def test_publish_atomically_commits_through_protocol(spark, tmp_path):
+    """Each publish is a journaled commit: the version bumps, a table
+    with ``retain_versions`` keeps the replaced state in its history,
+    and no stage dir is left behind."""
+    import os
+
+    from databricks_end_to_end_lakeflow_project_spark.operators.cdc import (
+        ManagedParquetTable,
+        publish_atomically,
+    )
+
+    t = ManagedParquetTable(spark, str(tmp_path / "v"), retain_versions=2)
+    u = ManagedParquetTable(spark, str(tmp_path / "u"))
+    t.overwrite(spark.createDataFrame([(1,), (2,), (3,)], "x int"))
+    t.overwrite(spark.createDataFrame([(4,), (5,), (6,)], "x int"))
+    u.overwrite(spark.createDataFrame([(0,)], "x int"))
+    v0, h0, u0 = t.version(), t.history(), u.version()
+
+    publish_atomically([
+        (t, spark.range(10, 15).selectExpr("CAST(id AS INT) AS x")),
+        (u, spark.createDataFrame([(9,)], "x int")),
+    ])
+    assert t.version() == v0 + 1 and u.version() == u0 + 1
+    assert len(t.history()) == len(h0) + 1
+    assert sorted(r["x"] for r in t.read().collect()) == [10, 11, 12, 13, 14]
+    assert sorted(r["x"] for r in t.read(t.history()[-1]).collect()) == [4, 5, 6]
+    assert [r["x"] for r in u.read().collect()] == [9]
+    assert [d for d in os.listdir(tmp_path) if "__tmp" in d or "__intent" in d] == []
+
+
 def test_snapshot_as_of_boundaries(spark):
     """AS-OF semantics at interval edges: v == __START_AT selects the new
     version; v == __END_AT selects the successor, never both."""

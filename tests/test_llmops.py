@@ -1278,9 +1278,9 @@ def test_knn_label_eval_matches_pure_python(spark):
         _KNN_K,
         _KNN_Q_HI,
         _KNN_Q_LO,
-        _seq_cosine,
         sim_knn_label_eval,
     )
+    from tests.fold_reference import seq_cosine as _seq_cosine
 
     got = {r["q_vec"]: r for r in sim_knn_label_eval(spark, SF).collect()}
 
@@ -1427,6 +1427,7 @@ def test_assigned_cells_kernel_matches_expression(spark):
     from databricks_end_to_end_lakeflow_project_spark.sources.readers import (
         read_seed_rows,
     )
+    from tests.fold_reference import assigned_cells_expression
 
     for sf_dir in ("/root/testdata/sf0.001", "/root/testdata/sf0.01"):
         em = read_table(spark, sf_dir, "embeddings")
@@ -1447,9 +1448,7 @@ def test_assigned_cells_kernel_matches_expression(spark):
                 return out
 
             kern = ranked(similarity._assigned_cells(em, seeds, n_probe))
-            expr = ranked(
-                similarity._assigned_cells_expression(em, seeds, n_probe)
-            )
+            expr = ranked(assigned_cells_expression(em, seeds, n_probe))
             assert kern == expr, (sf_dir, n_probe)
 
 
@@ -1486,6 +1485,8 @@ def test_band_signatures_kernel_matches_expression(spark):
     """with_band_signatures must reproduce the interpreted
     band_signatures expression exactly (the sign of a bit-identical
     fold dot is bit-identical, so every packed band key matches)."""
+    from tests.fold_reference import band_signatures
+
     em = read_table(spark, SF, "embeddings")
     kern = {
         r["vec_id"]: r["bands"]
@@ -1497,7 +1498,7 @@ def test_band_signatures_kernel_matches_expression(spark):
         r["vec_id"]: r["bands"]
         for r in em.select(
             "vec_id",
-            similarity.band_signatures(F.col("embedding")).alias("bands"),
+            band_signatures(F.col("embedding")).alias("bands"),
         ).collect()
     }
     assert kern == expr

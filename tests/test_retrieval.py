@@ -100,9 +100,9 @@ def test_recall_at_k_eval_matches_pure_python(spark):
         _RECALL_K,
         _RECALL_Q_HI,
         _RECALL_Q_LO,
-        _seq_cosine,
         sim_recall_at_k_eval,
     )
+    from tests.fold_reference import seq_cosine as _seq_cosine
 
     got = {r["q_vec"]: r for r in sim_recall_at_k_eval(spark, SF_DIR).collect()}
 
