@@ -13,7 +13,7 @@ This is the engine's re-expression of the reference's two CDC primitives
   `ManagedParquetTable.upsert`.
 
 No delta-spark is available in this environment, so MERGE is emulated with
-a pure DataFrame plan: tag target rows and deduped updates, union, and keep
+a pure DataFrame plan: tag target rows and update rows, union, and keep
 one winner per key by (sequence DESC, is_update DESC) — which reproduces
 the reference's `src.seq >= trg.seq` tie-goes-to-update semantics exactly.
 The result is written to a temp dir and atomically swapped in.
@@ -134,12 +134,14 @@ def merge_upsert_plan(
             sequence_by, truncate_col, markers,
         )
         target = _apply_truncates(target, sequence_by, truncate_col, markers)
+    # ONE window over updates ∪ target picks each key's winner: the top
+    # row by (sequence DESC, is_update DESC) is the batch's latest change
+    # when that change's sequence is >= the target's, else the target
+    # row — the same winner as deduping the batch first and merging the
+    # survivor, without the dedup's own shuffle
+    order = [F.col(_SRC).desc()]
     if sequence_by:
-        updates = latest_by_key(updates, keys, [sequence_by])
-        order = [F.col(sequence_by).desc_nulls_last(), F.col(_SRC).desc()]
-    else:
-        updates = updates.dropDuplicates(list(keys))
-        order = [F.col(_SRC).desc()]
+        order.insert(0, F.col(sequence_by).desc_nulls_last())
     if delete_col:
         target = target.withColumn(delete_col, F.lit(False))
     tagged = updates.withColumn(_SRC, F.lit(1)).unionByName(
@@ -202,6 +204,14 @@ class ManagedParquetTable:
     partitioned table (partition-column types come from directory names),
     for a file without the stored schema, and for a directory with no
     data file.
+
+    Column statistics: sessions from `session.get_spark` write timestamps
+    as TIMESTAMP_MICROS (INT64) instead of Spark's default INT96, because
+    INT96 columns keep no min/max in the footer. With them a high-water
+    mark such as the gold builders' MAX(modifiedDate) is answered from
+    the footers of the data files (`sources.readers.spark_parquet_max`),
+    as Delta answers it from its log, with no Spark job. Tables written
+    as INT96 still read the same values; their maxima cost an aggregate.
     """
 
     def __init__(

@@ -34,8 +34,9 @@ import threading
 from collections.abc import Callable, Sequence
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from databricks_end_to_end_lakeflow_project_spark.operators.cdc import (
     ManagedParquetTable,
@@ -63,6 +64,16 @@ class _AppendFlow:
     target: str
     source: str
     sequence_by: str
+
+
+def _watermark_lit(saved: dict) -> Column:
+    """The literal of a saved append-flow watermark, of the type it was
+    saved from (see `Pipeline._run_append_flows`); a file without a type
+    holds a plain JSON value."""
+    wm, kind = saved["watermark"], saved.get("type")
+    if kind == "timestamp":
+        return F.timestamp_micros(F.lit(wm))
+    return F.lit(wm) if kind is None else F.lit(wm).cast(kind)
 
 
 @dataclass
@@ -348,23 +359,32 @@ class Pipeline:
         return os.path.join(d, f"{flow.target}__{flow.source}.json")
 
     def _run_append_flows(self) -> None:
+        """Append each flow's rows past its watermark, then replace the
+        watermark file atomically (tmp + ``os.replace``), so a crash
+        leaves the old watermark or the new one, never a torn file. The
+        watermark keeps its type: a timestamp is stored as microseconds
+        since the epoch (no timezone in the round trip), any other type
+        as Spark's string form of the value, cast back on the next run."""
         import json
 
         for flow in self._append_flows:
             src = self.read(flow.source)
             path = self._watermark_path(flow)
-            wm = None
             if os.path.exists(path):
                 with open(path) as fh:
-                    wm = json.load(fh)["watermark"]
-            if wm is not None:
-                src = src.filter(F.col(flow.sequence_by) > F.lit(wm))
-            new_max = src.agg(F.max(flow.sequence_by).alias("m")).collect()[0]["m"]
+                    saved = json.load(fh)
+                src = src.filter(F.col(flow.sequence_by) > _watermark_lit(saved))
+            seq = src.schema[flow.sequence_by].dataType
+            top = F.max(flow.sequence_by)
+            top = F.unix_micros(top) if isinstance(seq, T.TimestampType) else top.cast("string")
+            new_max = src.agg(top).collect()[0][0]
             if new_max is None:
                 continue  # nothing new from this source
             self._tables[flow.target].append(src)
-            with open(path, "w") as fh:
-                json.dump({"watermark": new_max}, fh)
+            tmp = f"{path}.tmp{os.getpid()}"
+            with open(tmp, "w") as fh:
+                json.dump({"watermark": new_max, "type": seq.simpleString()}, fh)
+            os.replace(tmp, path)
 
     # -- resolution ---------------------------------------------------------
 

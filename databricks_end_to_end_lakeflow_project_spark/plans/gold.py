@@ -10,9 +10,10 @@ Re-expression of the reference's two gold notebooks (SURVEY.md §3-E3):
   incremental slice, merge on the fact grain (`:174-192`).
 
 Deliberate deviations (documented in SURVEY §3/§4):
-- conventional cursor semantics — missing target loads from epoch, an
-  existing target loads from MAX(target.cdc_col); the reference's branch
-  is inverted (comments vs code disagree at `DIM_Gold_layer.py:121-134`);
+- conventional cursor semantics — a missing or empty target loads the
+  whole source, an existing target loads from MAX(target.cdc_col); the
+  reference's branch is inverted (comments vs code disagree at
+  `DIM_Gold_layer.py:121-134`);
 - deterministic surrogate keys — `max_key + row_number() over business-key
   order` instead of `monotonically_increasing_id` (`:238`), so rebuilds
   are reproducible (and oracle-testable);
@@ -20,6 +21,20 @@ Deliberate deviations (documented in SURVEY §3/§4):
   (`:239-240`) for the audit columns, same reason;
 - no string-SQL codegen — the same config dicts drive DataFrame plans
   directly (`FACT_Gold_Layer.py:84-123` builds the query as f-strings).
+
+High-water marks: the reference takes MAX(modifiedDate) and MAX(surrogate
+key) from Delta, which answers them from the statistics in its log. Here
+both come from the min/max statistics in the parquet footers of the
+target's data files (`_high_water` → `sources.readers.spark_parquet_max`):
+no Spark job per cursor. Timestamps carry those statistics because
+`session.get_spark` writes them as TIMESTAMP_MICROS; a table whose
+footers lack them (INT96, written by another session) costs one
+aggregate, as before.
+
+Each dimension batch is resolved once: the cursor slice, the latest row
+per key and the left join on the existing keys are persisted together,
+and the rank kernel's collects and both sides of the upsert read that
+cache, which is released in a ``finally`` even when the upsert fails.
 
 Scale notes: the fact builder's star joins broadcast the dim side
 (explicit `F.broadcast` — dims are a bounded-size class). The dim
@@ -38,8 +53,9 @@ from __future__ import annotations
 import datetime as dt
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from databricks_end_to_end_lakeflow_project_spark.operators.cdc import (
     ManagedParquetTable,
@@ -50,12 +66,38 @@ from databricks_end_to_end_lakeflow_project_spark.operators.scalerank import (
     monotone_bin_value,
     with_global_ranks,
 )
+from databricks_end_to_end_lakeflow_project_spark.sources.readers import (
+    spark_parquet_max,
+)
 
-EPOCH = "1900-01-01 00:00:00"
 
-
-def _clock_col(clock: dt.datetime | None) -> F.Column:
+def _clock_col(clock: dt.datetime | None) -> Column:
     return F.lit(clock).cast("timestamp") if clock is not None else F.current_timestamp()
+
+
+def _high_water(target: ManagedParquetTable, cols: list[str]) -> list[Column | None]:
+    """MAX of each column of ``target`` as a literal; None where the
+    column holds no non-null value. Read from the footer statistics of
+    the table's data files (`spark_parquet_max`), with no Spark job.
+    Timestamps travel as their INT64 microseconds and become literals
+    through ``timestamp_micros``, so no Python timezone conversion
+    touches them. Footers that cannot answer (INT96 timestamps written
+    before `get_spark` pinned TIMESTAMP_MICROS, or by another session)
+    fall back to one aggregate over the table."""
+    df = target.read()  # completes a dead writer's commit first
+    ts = [isinstance(df.schema[c].dataType, T.TimestampType) for c in cols]
+    try:
+        raw = [spark_parquet_max(target.path, c) for c in cols]
+    except LookupError:
+        raw = list(
+            df.agg(
+                *[F.unix_micros(F.max(c)) if t else F.max(c) for c, t in zip(cols, ts)]
+            ).collect()[0]
+        )
+    return [
+        None if v is None else F.timestamp_micros(F.lit(v)) if t else F.lit(v)
+        for v, t in zip(raw, ts)
+    ]
 
 
 @dataclass
@@ -69,14 +111,19 @@ class DimConfig:
     cdc_col: str = "modifiedDate"
 
 
-def assign_surrogate_keys(new: DataFrame, cfg: DimConfig, max_key: int) -> DataFrame:
+def assign_surrogate_keys(
+    new: DataFrame, cfg: DimConfig, max_key: int | Column
+) -> DataFrame:
     """``max_key + dense 1-based rank`` over the batch's business-key
     order (reference semantics: `DIM_Gold_layer.py:236-246`, made
     deterministic — SURVEY §3 deviation). The rank comes from
     `scalerank.with_global_ranks` (range-bin + partitioned window), so
     even an initial full-dimension load plans NO unpartitioned window;
     `monotone_bin_value` supplies the numeric bin image for string keys.
-    Business keys must be non-null (they are join keys by definition)."""
+    Business keys must be non-null (they are join keys by definition).
+    The kernel reads ``new`` three times (two collects and the returned
+    plan) and does not persist it: persist an expensive ``new`` first, as
+    `build_dim` does."""
     lead = cfg.business_keys[0]
     spec = RankSpec(
         out=cfg.surrogate_key,
@@ -84,7 +131,7 @@ def assign_surrogate_keys(new: DataFrame, cfg: DimConfig, max_key: int) -> DataF
         tiebreaks=cfg.business_keys[1:],
         bin_value=monotone_bin_value(F.col(lead), new.schema[lead].dataType),
     )
-    ranked, _total = with_global_ranks(new, [spec])
+    ranked, _total = with_global_ranks(new, [spec], persist_input=False)
     return ranked.withColumn(
         cfg.surrogate_key, (F.lit(max_key) + F.col(cfg.surrogate_key)).cast("long")
     )
@@ -99,74 +146,70 @@ def build_dim(
     """One incremental dimension build; returns the upserted batch.
 
     Pipeline: cursor slice → latest-per-key dedup → old/new split →
-    surrogate assignment + audit stamps → latest-wins upsert.
+    surrogate assignment + audit stamps → latest-wins upsert. The cursor
+    and the key high-water mark come from footers (`_high_water`); the
+    batch up to the split is computed once (module docstring).
     """
-    spark = target.spark
-
     # 1. cursor (conventional semantics; see module docstring) + key
-    # high-water mark: BOTH scalars come from one aggregate scan of the
-    # target — two separate collects here were ~15% of the medallion
-    # replay's per-dim fixed cost at micro-batch sizes
+    # high-water mark, both read from the target's footer statistics
     tbl_exists = target.exists()
     if tbl_exists:
-        cur = target.read().agg(
-            F.max(cfg.cdc_col).alias("__cdc"),
-            F.max(cfg.surrogate_key).alias("__key"),
-        ).collect()[0]
-        last_load, max_key = cur["__cdc"], cur["__key"] or 0
+        last_load, max_key = _high_water(target, [cfg.cdc_col, cfg.surrogate_key])
     else:
-        last_load, max_key = None, 0
-    src = source.filter(F.col(cfg.cdc_col) >= F.lit(last_load).cast("timestamp")) if last_load else source
+        last_load = max_key = None
+    src = source.filter(F.col(cfg.cdc_col) >= last_load) if last_load is not None else source
 
     # 2. one change per business key (W1 dedup)
     src = latest_by_key(src, cfg.business_keys, [cfg.cdc_col])
 
     # 3. old-vs-new split via left join on business keys (reference J2)
-    now = _clock_col(clock)
     if tbl_exists:
-        existing = target.read().select(
-            *cfg.business_keys, cfg.surrogate_key, "create_date"
-        )
-    else:
-        existing = None
-
-    if existing is not None:
         # no broadcast hint: `existing` is the FULL dimension key snapshot,
         # which scales with the dimension (a customer-scale dim is not a
         # bounded-size class under this repo's broadcast policy). AQE picks
         # broadcast at runtime while the dim is actually small and falls
         # back to a shuffle join when it is not.
-        joined = src.join(existing, cfg.business_keys, "left")
-        old = joined.filter(F.col(cfg.surrogate_key).isNotNull()).withColumn(
-            "update_date", now
+        existing = target.read().select(
+            *cfg.business_keys, cfg.surrogate_key, "create_date"
         )
-        new = joined.filter(F.col(cfg.surrogate_key).isNull()).drop(
-            cfg.surrogate_key, "create_date"
+        src = src.join(existing, cfg.business_keys, "left")
+    # the resolved batch is computed once: the rank kernel's two collects
+    # and both sides of the upsert read this cache
+    resolved = src.persist()
+    try:
+        now = _clock_col(clock)
+        if tbl_exists:
+            old = resolved.filter(F.col(cfg.surrogate_key).isNotNull()).withColumn(
+                "update_date", now
+            )
+            new = resolved.filter(F.col(cfg.surrogate_key).isNull()).drop(
+                cfg.surrogate_key, "create_date"
+            )
+        else:
+            old, new = None, resolved
+
+        # 4. deterministic surrogate keys for new business keys only —
+        # max_key + exact global rank over the business-key order. Routed
+        # through operators/scalerank.py rather than an unpartitioned
+        # row_number window: on an INITIAL load the "new" batch IS the
+        # whole dimension, and a single-partition WindowExec over it is
+        # the canonical scale killer. Keys stay dense and identical to
+        # the old window form (same total order, same tiebreaks).
+        new = (
+            assign_surrogate_keys(new, cfg, F.lit(0) if max_key is None else max_key)
+            .withColumn("create_date", now)
+            .withColumn("update_date", now)
         )
-    else:
-        old = None
-        new = src
+        batch = new if old is None else old.unionByName(new.select(*old.columns))
 
-    # 4. deterministic surrogate keys for new business keys only —
-    # max_key + exact global rank over the business-key order. Routed
-    # through operators/scalerank.py rather than an unpartitioned
-    # row_number window: on an INITIAL load the "new" batch IS the whole
-    # dimension, and a single-partition WindowExec over it is the
-    # canonical scale killer. Keys stay dense and identical to the old
-    # window form (same total order, same tiebreaks).
-    new_keys = new  # the rank kernel persists this handle
-    new = assign_surrogate_keys(new_keys, cfg, max_key).withColumn(
-        "create_date", now
-    ).withColumn("update_date", now)
-    batch = new if old is None else old.unionByName(new.select(*old.columns))
-
-    # 5. latest-wins upsert on the business key
-    target.keys = cfg.business_keys
-    target.sequence_by = cfg.cdc_col
-    target.upsert(batch)
-    # the upsert action is done — release the kernel's cache entry so a
-    # multi-dim pipeline replay doesn't accumulate one per build
-    new_keys.unpersist()
+        # 5. latest-wins upsert on the business key
+        target.keys = cfg.business_keys
+        target.sequence_by = cfg.cdc_col
+        target.upsert(batch)
+    finally:
+        # released whether or not the upsert committed, so a multi-dim
+        # pipeline replay or a failed build holds no cache entry
+        resolved.unpersist()
     return batch
 
 
@@ -203,13 +246,10 @@ def build_fact(
     LEFT JOIN semantics — FIXTURES.md notes bookings contain passenger ids
     beyond the dim on purpose).
     """
-    if target.exists():
-        last_load = target.read().agg(F.max(cfg.cdc_col)).collect()[0][0]
-    else:
-        last_load = None
+    last_load = _high_water(target, [cfg.cdc_col])[0] if target.exists() else None
     # an existing but EMPTY target has no cursor: slicing on `>= NULL`
     # would drop every later row and leave the fact empty forever
-    src = source.filter(F.col(cfg.cdc_col) >= F.lit(last_load).cast("timestamp")) if last_load else source
+    src = source.filter(F.col(cfg.cdc_col) >= last_load) if last_load is not None else source
     src = latest_by_key(src, cfg.grain_keys, [cfg.cdc_col])
 
     out = src

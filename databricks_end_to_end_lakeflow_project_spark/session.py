@@ -64,6 +64,10 @@ def get_spark(
         # file-split size: at 100 TB this bounds scan-task size; 128m default
         # is right for parquet, keep explicit so it is a deliberate choice.
         .config("spark.sql.files.maxPartitionBytes", "134217728")
+        # INT96, the default, keeps no min/max in the footer; INT64
+        # microseconds do, so high-water marks read with no job
+        # (`sources.readers.spark_parquet_max`)
+        .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -109,6 +109,58 @@ def spark_parquet_rows(path: str) -> int:
     return sum(pq.read_metadata(f).num_rows for f in _data_files(path, True))
 
 
+def _footer_max_type(col) -> bool:
+    """Whether a column's footer max is a value Spark's MAX equals: a
+    plain or signed integer, or a UTC-adjusted TIMESTAMP_MICROS (whose
+    physical INT64 is microseconds since the epoch)."""
+    lt = json.loads(col.logical_type.to_json())
+    if col.physical_type in ("INT32", "INT64") and lt["Type"] in ("None", "Int"):
+        return lt.get("isSigned", True)
+    return (
+        col.physical_type == "INT64"
+        and lt["Type"] == "Timestamp"
+        and lt["timeUnit"] == "microseconds"
+        and lt["isAdjustedToUTC"]
+    )
+
+
+def spark_parquet_max(path: str, column: str) -> int | None:
+    """MAX of a top-level integer or timestamp column over every data file
+    under a parquet directory Spark wrote, taken from the row-group
+    statistics in the footers (pyarrow metadata reads of the files
+    `spark_parquet_rows` counts, no Spark job). Delta answers the same
+    MAX from the statistics in its log.
+
+    Returns the physical value: the integer, or for a timestamp its
+    microseconds since the epoch (``F.timestamp_micros`` turns it into the
+    literal without a Python timezone conversion). None when the column
+    holds no non-null value: all null, an empty table, a missing directory.
+
+    Raises LookupError when the footers cannot answer: a file without the
+    column, another type (INT96 timestamps, which is how Spark writes them
+    unless ``spark.sql.parquet.outputTimestampType`` says otherwise), or a
+    non-empty row group with neither min/max nor an all-null count."""
+    import pyarrow.parquet as pq
+
+    best = None
+    for f in _data_files(path, True):
+        md = pq.read_metadata(f)
+        cols = [md.schema.column(i) for i in range(md.num_columns)]
+        i = next((i for i, c in enumerate(cols) if c.path == column), None)
+        if i is None or not _footer_max_type(cols[i]):
+            raise LookupError(f"{f}: no footer max for column {column!r}")
+        for g in range(md.num_row_groups):
+            rg = md.row_group(g)
+            if rg.num_rows == 0:
+                continue
+            st = rg.column(i).statistics
+            if st is not None and st.has_min_max:
+                best = st.max_raw if best is None else max(best, st.max_raw)
+            elif st is None or not st.has_null_count or st.null_count != rg.num_rows:
+                raise LookupError(f"{f}: row group {g} has no statistics for {column!r}")
+    return best
+
+
 def read_spark_parquet(
     spark: SparkSession, path: str, recursive: bool = False
 ) -> DataFrame:

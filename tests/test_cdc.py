@@ -1200,3 +1200,84 @@ def test_footer_schema_reads_launch_no_job(spark, tmp_path):
     # the inference the reads replaced is a job each
     spark.read.option("recursiveFileLookup", "true").parquet(t.path)
     assert _jobs(spark) - before == 1
+
+
+# ---------------------------------------------------------------------------
+# column maxima from the parquet footer (sources.readers.spark_parquet_max)
+# ---------------------------------------------------------------------------
+
+_MAX_SCHEMA = "k long, ts timestamp, none long"
+
+
+def _max_rows(lo: int, hi: int) -> list:
+    base = dt.datetime(2024, 3, 1, 12, 0, 0, 123457)
+    return [(i, base + dt.timedelta(hours=7 * i, microseconds=i), None) for i in range(lo, hi)]
+
+
+def test_footer_max_equals_aggregate_over_files_and_batches(spark, tmp_path):
+    import glob
+
+    from databricks_end_to_end_lakeflow_project_spark.sources.readers import (
+        spark_parquet_max,
+    )
+
+    t = ManagedParquetTable(spark, str(tmp_path / "t"))
+    t.overwrite(spark.createDataFrame(_max_rows(0, 40), _MAX_SCHEMA).repartition(3))
+    t.append(spark.createDataFrame(_max_rows(90, 95), _MAX_SCHEMA))  # batch subdir
+    t.append(spark.createDataFrame(_max_rows(40, 60), _MAX_SCHEMA).repartition(2))
+    assert len(glob.glob(f"{t.path}/**/*.parquet", recursive=True)) >= 4
+    df = t.read()
+    assert spark_parquet_max(t.path, "k") == df.agg(F.max("k")).collect()[0][0] == 94
+    assert spark_parquet_max(t.path, "ts") == df.agg(F.unix_micros(F.max("ts"))).collect()[0][0]
+
+
+def test_footer_max_none_for_all_null_and_empty(spark, tmp_path):
+    from databricks_end_to_end_lakeflow_project_spark.sources.readers import (
+        spark_parquet_max,
+    )
+
+    t = ManagedParquetTable(spark, str(tmp_path / "t"))
+    t.overwrite(spark.createDataFrame(_max_rows(0, 10), _MAX_SCHEMA).repartition(2))
+    assert spark_parquet_max(t.path, "none") is None
+    e = ManagedParquetTable(spark, str(tmp_path / "e"))
+    e.overwrite(spark.createDataFrame([], _MAX_SCHEMA))
+    assert spark_parquet_max(e.path, "k") is None
+    assert spark_parquet_max(e.path, "ts") is None
+    assert spark_parquet_max(str(tmp_path / "missing"), "k") is None
+
+
+def test_footer_max_int96_falls_back_to_aggregate(spark, tmp_path):
+    from databricks_end_to_end_lakeflow_project_spark.plans.gold import _high_water
+    from databricks_end_to_end_lakeflow_project_spark.session import cloned_session
+    from databricks_end_to_end_lakeflow_project_spark.sources.readers import (
+        spark_parquet_max,
+    )
+
+    legacy = cloned_session(spark, {"spark.sql.parquet.outputTimestampType": "INT96"})
+    t = ManagedParquetTable(legacy, str(tmp_path / "t"))
+    t.overwrite(legacy.createDataFrame(_max_rows(0, 30), _MAX_SCHEMA).repartition(2))
+    with pytest.raises(LookupError):
+        spark_parquet_max(t.path, "ts")
+    assert spark_parquet_max(t.path, "k") == 29  # the long column still answers
+
+    before = _jobs(spark)
+    ts, k = _high_water(t, ["ts", "k"])
+    assert _jobs(spark) - before > 0  # the aggregate ran
+    got = legacy.range(1).select(ts.alias("ts"), k.alias("k")).collect()[0]
+    want = t.read().agg(F.max("ts"), F.max("k")).collect()[0]
+    assert (got["ts"], got["k"]) == tuple(want)
+
+
+def test_footer_max_reads_launch_no_job(spark, tmp_path):
+    from databricks_end_to_end_lakeflow_project_spark.plans.gold import _high_water
+
+    t = ManagedParquetTable(spark, str(tmp_path / "t"))
+    t.overwrite(spark.createDataFrame(_max_rows(0, 30), _MAX_SCHEMA).repartition(2))
+    t.append(spark.createDataFrame(_max_rows(30, 35), _MAX_SCHEMA))
+    before = _jobs(spark)
+    ts, k, none = _high_water(t, ["ts", "k", "none"])
+    assert _jobs(spark) - before == 0
+    assert none is None
+    got = spark.range(1).select(ts.alias("ts"), k.alias("k")).collect()[0]
+    want = t.read().agg(F.max("ts"), F.max("k")).collect()[0]
+    assert (got["ts"], got["k"]) == tuple(want)

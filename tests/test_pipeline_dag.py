@@ -404,6 +404,47 @@ def test_append_flows_multiplex_without_duplicates(spark, tmp_path):
     assert p2.table("multiplexed").read().count() == 4  # nothing re-delivered
 
 
+def test_append_flow_timestamp_watermark_survives_runs(spark, tmp_path):
+    """A timestamp ``sequence_by`` keeps its type through the watermark
+    file: two runs and a fresh Pipeline over the same storage deliver
+    every row once, with sub-second sequences kept exact."""
+    import datetime as dt
+    import json
+
+    base = dt.datetime(2024, 3, 10, 1, 30, 0, 250001)
+    rows = [(base, "a"), (base + dt.timedelta(microseconds=1), "b")]
+
+    def pipeline() -> Pipeline:
+        p = Pipeline(spark, str(tmp_path / "ts"))
+
+        @p.view(name="events")
+        def events(pl):
+            return spark.createDataFrame(rows, "seq timestamp, v string")
+
+        p.create_streaming_table("log")
+        p.create_append_flow(target="log", source="events", sequence_by="seq")
+        return p
+
+    def delivered(p) -> list[str]:
+        return sorted(r["v"] for r in p.table("log").read().collect())
+
+    p = pipeline()
+    p.run()
+    assert delivered(p) == ["a", "b"]
+    (wm,) = glob.glob(str(tmp_path / "ts" / "__watermarks" / "*.json"))
+    with open(wm) as fh:
+        assert json.load(fh)["type"] == "timestamp"
+    rows.append((base + dt.timedelta(microseconds=2), "c"))
+    p.run()
+    assert delivered(p) == ["a", "b", "c"]
+
+    rows.append((base + dt.timedelta(seconds=1), "d"))
+    p2 = pipeline()
+    p2.run()
+    p2.run()
+    assert delivered(p2) == ["a", "b", "c", "d"]
+
+
 def test_snapshot_flow_scd2_incremental_equals_oneshot(spark, tmp_path):
     """create_auto_cdc_from_snapshot_flow: four pipeline runs, each
     seeing a new FULL snapshot, must reproduce the one-shot

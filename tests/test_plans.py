@@ -246,6 +246,38 @@ def test_dim_surrogate_assignment_plans_partitioned_window(spark, tmp_path):
     new2.unpersist()
 
 
+def test_dim_build_releases_its_cache_when_the_upsert_fails(spark, tmp_path, monkeypatch):
+    """A failed dimension upsert leaves no cache entry behind: the
+    resolved batch `build_dim` persists is released in a ``finally``."""
+    import datetime as dt
+
+    from databricks_end_to_end_lakeflow_project_spark.operators.cdc import (
+        ManagedParquetTable,
+    )
+    from databricks_end_to_end_lakeflow_project_spark.plans.gold import (
+        DimConfig,
+        build_dim,
+    )
+
+    schema = "bk long, attr string, modifiedDate timestamp"
+    target = ManagedParquetTable(spark, str(tmp_path / "dim"))
+    cfg = DimConfig(name="d", business_keys=["bk"], surrogate_key="sk")
+    clock = dt.datetime(2024, 1, 1)
+    build_dim(spark.createDataFrame([(1, "a", clock)], schema), target, cfg, clock=clock)
+    spark.catalog.clearCache()
+
+    def failing_upsert(self, *args, **kwargs):
+        raise RuntimeError("upsert failed")
+
+    monkeypatch.setattr(ManagedParquetTable, "upsert", failing_upsert)
+    src = spark.createDataFrame(
+        [(1, "a2", dt.datetime(2024, 2, 1)), (2, "b", dt.datetime(2024, 2, 1))], schema
+    )
+    with pytest.raises(RuntimeError, match="upsert failed"):
+        build_dim(src, target, cfg, clock=clock)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 _PKG = "databricks_end_to_end_lakeflow_project_spark"
 
 # The ONLY package functions reachable from query bodies that may touch a
