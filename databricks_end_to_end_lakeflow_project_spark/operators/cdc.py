@@ -16,25 +16,31 @@ No delta-spark is available in this environment, so MERGE is emulated with
 a pure DataFrame plan: tag target rows and update rows, union, and keep
 one winner per key by (sequence DESC, is_update DESC) — which reproduces
 the reference's `src.seq >= trg.seq` tie-goes-to-update semantics exactly.
-The result is written to a temp dir and atomically swapped in.
+The result is staged as new files and committed by one entry in the
+table's commit log (`ManagedParquetTable`), Delta's commit point.
 
 Scale notes (100 TB): the winner-per-key plan is ONE shuffle on the
 business key (same cost class as Delta MERGE's join). The rewrite cost is
 full-table here; a real deployment bounds it by partitioning the table
 (``partition_by``) so only partitions containing updated keys rewrite —
 `upsert` prunes untouched partitions when the table is partitioned by a
-column derivable from the keys. Updates are usually ≪ target, so the
-update side broadcasts under AQE automatically.
+column derivable from the keys, and the log carries the untouched files
+over. Updates are usually ≪ target, so the update side broadcasts under
+AQE automatically.
 """
 
 from __future__ import annotations
 
 import contextlib
+import glob
+import json
 import os
+import re
 import shutil
 import time
 import uuid
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -43,6 +49,7 @@ from databricks_end_to_end_lakeflow_project_spark.registry import query
 from databricks_end_to_end_lakeflow_project_spark.sources.readers import (
     read_spark_parquet,
     read_table,
+    spark_parquet_file_rows,
 )
 
 _SRC = "__is_update"
@@ -167,49 +174,52 @@ class ConcurrentWriteError(RuntimeError):
 
 
 class ManagedParquetTable:
-    """Parquet-backed managed table with atomic overwrite and MERGE-style
-    upsert (the engine's stand-in for a Delta table, SURVEY §4.1).
+    """Parquet-backed managed table with a commit log: atomic overwrite,
+    append and MERGE-style upsert (the engine's stand-in for a Delta
+    table, SURVEY §4.1).
 
-    Writes go to a sibling temp dir and are swapped in with directory
-    renames, so readers never observe a half-written table and a failed
-    job leaves the previous version intact.
+    COMMIT LOG: ``<table>/_log/<n>.json`` is entry n, the table's state
+    after its (n+1)-th commit. An entry lists every live data file as an
+    ``add`` action with the row count of that file's footer, and the
+    files the commit dropped as ``remove`` actions; a file's partition
+    values are its hive-style path. A writer stages its files in a
+    sibling dir OUTSIDE the lock (`_stage`, the expensive Spark job);
+    under the lock it moves them into the table dir and creates the next
+    entry exclusively: a temp file hard-linked to ``<n>.json``, which
+    fails if the name exists (Delta's putIfAbsent of its log entry).
+    That create is the COMMIT POINT, the same for every kind of commit
+    (`_publish`). A writer that dies before it leaves files no entry
+    names, and one that dies after it has committed; no file is renamed
+    or rewritten once named, so nothing ever rolls forward.
+    `tests/test_crash_recovery.py` holds the kill-point matrix.
 
-    Delta-style OPTIMISTIC CONCURRENCY on top of the swap: every commit
-    (overwrite / upsert / append / restore) increments a sidecar commit
-    version under a directory-lock mutex (``os.mkdir`` is atomic on
-    POSIX, so the lock works across processes sharing the filesystem —
-    the Delta-on-object-store analogue of the log's putIfAbsent).
-    Writers that based their batch on a snapshot pass
-    ``expect_version=table.version()``; if another writer committed in
-    between, the commit raises :class:`ConcurrentWriteError` instead of
-    silently clobbering — read-modify-write cycles (MERGE, SCD flows)
-    retry from a fresh read, exactly Delta's protocol. Unconditional
-    writes still serialize through the lock (last-wins, never torn).
-    The expensive Spark write stages OUTSIDE the lock; only the O(1)
-    rename-and-bump holds it.
+    Readers take an entry's file list and never list the directory,
+    which also holds the files of retained entries. The post-commit
+    vacuum keeps the files of the retained entries and of the entry the
+    commit replaced, so a scan planned before a commit still finds its
+    files after it, also at ``retain_versions == 0``.
 
-    Reader caveat (the part only a real commit LOG can fix): a read that
-    is mid-scan while a commit swaps the directory can fail on vanished
-    files when ``retain_versions == 0`` (the old dir is deleted after
-    the swap). ``retain_versions > 0`` keeps replaced states as
-    snapshots, so in-flight scans finish against inodes that still
-    exist. Single-process pipelines (this engine's DLT runtime) order
-    reads and commits and never hit it.
+    OPTIMISTIC CONCURRENCY: commits serialize through a directory-lock
+    mutex (``os.mkdir`` is atomic on POSIX, so the lock works across
+    processes sharing the filesystem). Writers that based their batch on
+    a snapshot pass ``expect_version=table.version()``; if another writer
+    committed in between, the commit raises :class:`ConcurrentWriteError`
+    instead of silently clobbering — read-modify-write cycles (MERGE, SCD
+    flows) retry from a fresh read, exactly Delta's protocol.
+    Unconditional writes still serialize through the lock (last-wins,
+    never torn). Only the moves and the entry create hold the lock.
 
     Read schema: Delta takes it from the log; here ``read`` takes the
-    schema Spark stored in the footer of the first data file by path (the
-    file Spark's own inference reads), by one pyarrow metadata read on
-    the driver (`sources.readers.read_spark_parquet`), so a read launches
-    no Spark job. It falls back to Spark's inference job for a
-    partitioned table (partition-column types come from directory names),
-    for a file without the stored schema, and for a directory with no
-    data file.
+    schema Spark stored in the footer of the entry's first data file by
+    path, by one pyarrow metadata read in this process
+    (`sources.readers.read_spark_parquet`); partition columns come from
+    the files' paths. A read launches no Spark job.
 
     Column statistics: sessions from `session.get_spark` write timestamps
     as TIMESTAMP_MICROS (INT64) instead of Spark's default INT96, because
     INT96 columns keep no min/max in the footer. With them a high-water
     mark such as the gold builders' MAX(modifiedDate) is answered from
-    the footers of the data files (`sources.readers.spark_parquet_max`),
+    the footers of the live files (`sources.readers.spark_parquet_max`),
     as Delta answers it from its log, with no Spark job. Tables written
     as INT96 still read the same values; their maxima cost an aggregate.
     """
@@ -228,94 +238,94 @@ class ManagedParquetTable:
         self.keys = list(keys or [])
         self.sequence_by = sequence_by
         self.partition_by = list(partition_by or [])
-        # >0 enables Delta-style time travel: each overwrite snapshots
-        # the replaced state under {path}.__versions/<n> (directory
-        # renames — O(1) regardless of table size) and keeps the newest
-        # `retain_versions` snapshots. 0 preserves pure swap-and-delete.
+        # >0 enables Delta-style time travel: the newest `retain_versions`
+        # replaced states stay readable by version (see `history`)
         self.retain_versions = retain_versions
 
-    def exists(self) -> bool:
-        return os.path.isdir(self.path) and any(
-            not f.startswith(("_", ".")) for f in os.listdir(self.path)
+    # -- the log -------------------------------------------------------------
+
+    def _log_dir(self) -> str:
+        return os.path.join(self.path, "_log")
+
+    def _entries(self) -> list[int]:
+        """Numbers of the log entries on disk, oldest first."""
+        try:
+            names = os.listdir(self._log_dir())
+        except FileNotFoundError:
+            return []
+        return sorted(
+            int(n[:-5]) for n in names if n.endswith(".json") and n[:-5].isdigit()
         )
+
+    def _named(self, n: int) -> dict[str, int]:
+        """Relative path → rows of the files entry ``n`` names."""
+        with open(os.path.join(self._log_dir(), f"{n}.json")) as fh:
+            return {a["path"]: a["rows"] for a in json.load(fh)["add"]}
+
+    def _live(self, version: int | None = None) -> dict[str, int]:
+        """The files of ``version`` (default: the newest entry; {} for a
+        table with none). Raises ValueError for a version not retained."""
+        if version is None:
+            while entries := self._entries():
+                with contextlib.suppress(FileNotFoundError):  # vacuumed meanwhile
+                    return self._named(entries[-1])
+            return {}
+        if version in (*self.history(), *self._entries()[-1:]):
+            with contextlib.suppress(FileNotFoundError):
+                return self._named(version)
+        raise ValueError(f"version {version} not retained; available: {self.history()}")
+
+    def files(self, version: int | None = None) -> list[str]:
+        """Paths of the data files of ``version`` (default: now), sorted."""
+        return sorted(os.path.join(self.path, f) for f in self._live(version))
+
+    def rows(self, version: int | None = None) -> int:
+        """Row count of ``version`` (default: now), summed from the log."""
+        return sum(self._live(version).values())
+
+    def exists(self) -> bool:
+        return bool(self._live())
 
     def read(self, version: int | None = None) -> DataFrame:
-        """Current state, or a retained snapshot by version number
-        (Delta time-travel analogue; see :meth:`history`).
+        """Current state, or a retained one by version number (Delta
+        time-travel analogue; see :meth:`history`)."""
+        return read_spark_parquet(self.spark, self.path, files=self.files(version))
 
-        If a DEAD writer's intent journal is present (crash mid-commit),
-        the read first completes that commit under the lock — so a
-        reader observes old-or-new at every kill point, never the torn
-        mid-swap window. A LIVE writer's journal is left alone (the
-        documented lock-less-reader caveat applies while it runs)."""
-        it = self._read_intent()
-        if it is not None:
-            from databricks_end_to_end_lakeflow_project_spark.sources.scratch import (
-                _alive,
-            )
-
-            if not _alive(int(it.get("pid", 0) or 0)):
-                self.recover()
-        if version is None:
-            return self._read_dir(self.path)
-        vpath = os.path.join(self._versions_dir(), str(version))
-        if not os.path.isdir(vpath):
-            raise ValueError(
-                f"version {version} not retained; available: {self.history()}"
-            )
-        return self._read_dir(vpath)
-
-    def _read_dir(self, path: str) -> DataFrame:
-        # unpartitioned tables publish appends as whole batch SUBDIRS
-        # (one atomic rename per commit — see `append`), so reads must
-        # descend into them; recursiveFileLookup is incompatible with
-        # partition discovery, which is exactly why partitioned tables
-        # keep the per-file append path instead
-        return read_spark_parquet(
-            self.spark, path, recursive=not self.partition_by
+    def read_stream(self, spark: SparkSession | None = None) -> DataFrame:
+        """Streaming scan of the current state of an unpartitioned table,
+        on ``spark`` (default: the table's session): the table dir with a
+        ``pathGlobFilter`` of the file names the newest entry lists, so
+        replaced files in the dir never feed it."""
+        names = ",".join(os.path.basename(f) for f in self.files())
+        return (
+            (spark or self.spark).readStream.schema(self.read().schema)
+            .option("pathGlobFilter", f"{{{names}}}")
+            .parquet(self.path)
         )
 
-    def _versions_dir(self) -> str:
-        return f"{self.path}.__versions"
+    def version(self) -> int:
+        """Number of commits so far (0 for a never-committed table). Pass
+        this as ``expect_version`` to a later write to make it
+        conditional on no intervening commit."""
+        entries = self._entries()
+        return entries[-1] + 1 if entries else 0
+
+    def history(self) -> list[int]:
+        """Retained older versions, oldest first: the entries before the
+        newest, at most ``retain_versions`` back (the CURRENT state is
+        one newer than the last of them)."""
+        entries = self._entries() or [0]
+        return [n for n in entries[:-1] if n >= entries[-1] - self.retain_versions]
 
     # -- optimistic-concurrency commit protocol -----------------------------
 
-    def version(self) -> int:
-        """Current commit version (0 for a never-committed table). Pass
-        this as ``expect_version`` to a later write to make it
-        conditional on no intervening commit."""
-        try:
-            with open(f"{self.path}.__version") as fh:
-                return int(fh.read().strip() or 0)
-        except FileNotFoundError:
-            return 0
-
-    def _bump_version(self) -> None:
-        vf = f"{self.path}.__version"
-        tmp = f"{vf}.tmp{os.getpid()}"
-        with open(tmp, "w") as fh:
-            fh.write(str(self.version() + 1))
-        os.replace(tmp, vf)
-
     @contextlib.contextmanager
     def _commit(self, expect_version: int | None, timeout: float = 30.0):
-        """Directory-lock mutex around the O(1) commit section; verifies
-        the expected version INSIDE the lock, bumps it on success.
-
-        WRITE-AHEAD INTENT (crash atomicity): every destructive commit
-        body first journals its remaining steps to ``{path}.__intent``
-        (atomic ``os.replace``) and only then starts renaming. The
-        intent write is the COMMIT POINT — Delta's log-entry analogue:
-        a writer that dies before it leaves only stage litter (swept by
-        pid liveness); a writer that dies after it leaves a journal the
-        NEXT lock holder (writer, or a reader that observes a dead
-        writer's intent) rolls FORWARD idempotently via the same
-        ``_redo_*`` step functions the live path runs, then bumps the
-        version exactly once and clears the journal. Readers therefore
-        see old-or-new state at every kill point — including the
-        previously torn mid-swap window where the table dir was absent
-        between the two renames. See `tests/test_crash_recovery.py` for
-        the kill-point matrix.
+        """Directory-lock mutex around the commit section; verifies the
+        expected version INSIDE the lock. The body creates the next log
+        entry (`_publish`); the post-commit vacuum then drops the entries
+        past ``retain_versions``, keeping the one just replaced, and the
+        files no remaining entry names.
 
         STALE-LOCK RECOVERY: the owner writes its pid into
         ``{lock}/pid`` right after acquiring; a writer SIGKILLed between
@@ -335,20 +345,14 @@ class ManagedParquetTable:
         entering the critical section; a pid-carrying live owner found
         inside the grave (stale decision made against a prior incarnation
         of the path) gets its lock renamed back untouched."""
-        from databricks_end_to_end_lakeflow_project_spark.sources.scratch import (
-            _alive,
-        )
-
         with self._locked(timeout):
-            self._recover_locked()
             if expect_version is not None and self.version() != expect_version:
                 raise ConcurrentWriteError(
                     f"{self.path}: version moved {expect_version} -> "
                     f"{self.version()}; re-read and retry"
                 )
             yield
-            self._bump_version()
-            self._clear_intent()
+            self._vacuum_locked(self.version() - 1 - max(self.retain_versions, 1))
 
     @contextlib.contextmanager
     def _locked(self, timeout: float = 30.0):
@@ -405,117 +409,6 @@ class ManagedParquetTable:
             with contextlib.suppress(OSError):
                 os.rmdir(lock)
 
-    # -- write-ahead intent journal (crash atomicity) ------------------------
-
-    def _intent_path(self) -> str:
-        return f"{self.path}.__intent"
-
-    def _write_intent(self, intent: dict) -> None:
-        """Journal the remaining commit steps — MUST be called inside the
-        lock, before the first destructive rename. Atomic publish via
-        ``os.replace``, so a crashed half-write is impossible."""
-        import json
-
-        intent = {**intent, "pid": os.getpid(), "bump_from": self.version()}
-        tmp = f"{self._intent_path()}.tmp{os.getpid()}"
-        with open(tmp, "w") as fh:
-            fh.write(json.dumps(intent))
-        os.replace(tmp, self._intent_path())
-
-    def _read_intent(self) -> dict | None:
-        import json
-
-        try:
-            with open(self._intent_path()) as fh:
-                return json.loads(fh.read())
-        except (FileNotFoundError, ValueError):
-            return None
-
-    def _clear_intent(self) -> None:
-        with contextlib.suppress(OSError):
-            os.remove(self._intent_path())
-
-    def recover(self, timeout: float = 30.0) -> None:
-        """Complete a crashed writer's journaled commit (roll forward)
-        and sweep dead writers' stage litter. Runs under the commit
-        lock; a no-op on a healthy table."""
-        with self._locked(timeout):
-            self._recover_locked()
-
-    def _recover_locked(self) -> None:
-        """Recovery, lock already held. An intent present while WE hold
-        the lock can only come from a crashed writer (the live path
-        clears it before releasing), so it is rolled forward
-        unconditionally: the `_redo_*` functions are idempotent against
-        every intermediate on-disk state, recovery that itself crashes
-        simply re-enters. The version is bumped exactly once
-        (``bump_from`` guards double-bump when the writer died between
-        its bump and its journal clear)."""
-        it = self._read_intent()
-        if it is not None:
-            op = it.get("op")
-            if op == "swap":
-                self._redo_swap(it["tmp"], it.get("nxt"), it.get("old"))
-            elif op == "append":
-                self._redo_append(it["tmp"], it["tag"])
-            elif op == "pruned":
-                self._redo_pruned(
-                    it["tmp"], it["old_rels"], it["new_rels"], it["graves"]
-                )
-            if self.version() == it.get("bump_from"):
-                self._bump_version()
-            self._clear_intent()
-        self._sweep_stage_litter()
-
-    def _sweep_stage_litter(self) -> None:
-        """Remove stage/grave dirs abandoned by DEAD writers (crash
-        before the intent write = abort, like a Delta write that never
-        reached the log). Dir names embed the owner pid
-        (``__tmp_<pid>_…``); a live writer staging concurrently is
-        never touched."""
-        import glob as _glob
-        import re as _re
-
-        from databricks_end_to_end_lakeflow_project_spark.sources.scratch import (
-            _alive,
-        )
-
-        for pattern in (f"{self.path}.__tmp_*", f"{self.path}.__old_*"):
-            for d in _glob.glob(pattern):
-                m = _re.match(r"\.__(?:tmp|old)_(\d+)_", d[len(self.path):])
-                if m and not _alive(int(m.group(1))):
-                    shutil.rmtree(d, ignore_errors=True)
-        vdir = self._versions_dir()
-        if os.path.isdir(vdir):
-            for d in os.listdir(vdir):
-                # partial snapshot staging from a crashed pruned MERGE
-                if d.startswith(".staging_"):
-                    parts = d.split("_")
-                    if len(parts) >= 2 and parts[1].isdigit() and not _alive(
-                        int(parts[1])
-                    ):
-                        shutil.rmtree(os.path.join(vdir, d), ignore_errors=True)
-
-    def _stage_name(self) -> str:
-        return f"{self.path}.__tmp_{os.getpid()}_{uuid.uuid4().hex[:8]}"
-
-    def _stage(self, df: DataFrame) -> str:
-        """Write ``df`` to a fresh stage dir (the expensive Spark job,
-        OUTSIDE the commit lock) and return its path. A write that raises
-        — e.g. a FAIL expectation aborting it — removes its stage dir
-        before re-raising: the litter sweep only reclaims stages of dead
-        writers, so a live process would otherwise keep it."""
-        tmp = self._stage_name()
-        writer = df.write.mode("overwrite")
-        if self.partition_by:
-            writer = writer.partitionBy(*self.partition_by)
-        try:
-            writer.parquet(tmp)
-        except BaseException:
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise
-        return tmp
-
     @staticmethod
     def _break_lock(lock: str) -> None:
         """Atomically retire a lock dir judged stale: rename the WHOLE dir
@@ -551,48 +444,140 @@ class ManagedParquetTable:
             return
         shutil.rmtree(grave, ignore_errors=True)
 
-    @staticmethod
-    def _link_tree(src: str, dst: str) -> None:
-        """Snapshot ``src`` into ``dst`` with hardlinks — O(#files)
-        metadata operations, ZERO data bytes copied. Safe because table
-        data files are immutable by construction: every writer creates
-        new names (append batch tags, tmp-dir swaps), nothing rewrites a
-        parquet file in place, so a hardlinked snapshot can never be
-        mutated through the live table. This is what makes
-        partition-pruned commits compatible with time travel at scale:
-        the snapshot cost tracks file COUNT, not table bytes."""
-        for root, _dirs, files in os.walk(src):
-            rel = os.path.relpath(root, src)
-            droot = dst if rel == "." else os.path.join(dst, rel)
-            os.makedirs(droot, exist_ok=True)
-            for f in files:
-                os.link(os.path.join(root, f), os.path.join(droot, f))
+    def _stage(self, df: DataFrame) -> str:
+        """Write ``df`` to a fresh stage dir (the expensive Spark job,
+        OUTSIDE the commit lock) and return its path. A write that raises
+        — e.g. a FAIL expectation aborting it — removes its stage dir
+        before re-raising: the vacuum only reclaims stages of dead
+        writers, so a live process would otherwise keep it."""
+        tmp = f"{self.path}.__tmp_{os.getpid()}_{uuid.uuid4().hex[:8]}"
+        writer = df.write.mode("overwrite")
+        if self.partition_by:
+            writer = writer.partitionBy(*self.partition_by)
+        try:
+            writer.parquet(tmp)
+        except BaseException:
+            shutil.rmtree(tmp, ignore_errors=True)
+            raise
+        return tmp
 
-    def history(self) -> list[int]:
-        """Retained snapshot versions, oldest first (the CURRENT state is
-        always one newer than the last entry)."""
-        vdir = self._versions_dir()
-        if not os.path.isdir(vdir):
-            return []
-        return sorted(int(d) for d in os.listdir(vdir) if d.isdigit())
+    def _publish(
+        self,
+        stage: str | None,
+        expect_version: int | None,
+        carry: Callable[[dict[str, int]], dict[str, int]] = lambda live: {},
+    ) -> None:
+        """The one publish path. ``stage`` (from `_stage`, or None) holds
+        the new files, whose row counts come from their footers before
+        the lock is taken; ``carry`` maps the current entry's files to
+        those that stay live. Under the lock the staged files move into
+        the table dir and the next entry is created — the commit point."""
+        added = spark_parquet_file_rows(stage) if stage else {}
+        try:
+            with self._commit(expect_version):
+                live = self._live()
+                files = {**carry(live), **added}
+                for rel in added:
+                    dst = os.path.join(self.path, rel)
+                    os.makedirs(os.path.dirname(dst), exist_ok=True)
+                    os.rename(os.path.join(stage, rel), dst)
+                self._create_entry(files, sorted(set(live) - set(files)))
+        except (ConcurrentWriteError, TimeoutError):
+            if stage:
+                shutil.rmtree(stage, ignore_errors=True)  # abandoned stage
+            raise
+        if stage:
+            shutil.rmtree(stage, ignore_errors=True)  # the writer's markers
+
+    def _create_entry(self, files: dict[str, int], removed: list[str]) -> None:
+        """Create the next log entry exclusively: write a hidden temp file,
+        then hard-link it to ``<n>.json``, which fails if the name exists."""
+        log = self._log_dir()
+        n = self.version()
+        os.makedirs(log, exist_ok=True)
+        tmp = os.path.join(log, f".{n}.{os.getpid()}.{uuid.uuid4().hex[:8]}")
+        with open(tmp, "w") as fh:
+            json.dump(
+                {
+                    "add": [{"path": f, "rows": r} for f, r in sorted(files.items())],
+                    "remove": removed,
+                },
+                fh,
+            )
+        try:
+            os.link(tmp, os.path.join(log, f"{n}.json"))
+        except FileExistsError:
+            raise ConcurrentWriteError(
+                f"{self.path}: entry {n} exists; re-read and retry"
+            ) from None
+        finally:
+            os.remove(tmp)
+
+    def _vacuum_locked(self, oldest: int) -> int:
+        """Drop the entries numbered below ``oldest`` (never the newest),
+        then delete every file in the table dir that no remaining entry
+        names and the stage dirs of dead writers (``__tmp_<pid>_…``; a
+        live writer staging concurrently is never touched). Entries go
+        first, so a crash part-way leaves only unnamed files, which the
+        next vacuum deletes. Lock held; returns the entries dropped."""
+        from databricks_end_to_end_lakeflow_project_spark.sources.scratch import (
+            _alive,
+        )
+
+        log = self._log_dir()
+        entries = self._entries()
+        doomed = [n for n in entries[:-1] if n < oldest]
+        for n in doomed:
+            os.remove(os.path.join(log, f"{n}.json"))
+        named = {f for n in entries if n not in doomed for f in self._named(n)}
+        for root, _dirs, names in os.walk(self.path, topdown=False):
+            rel = os.path.relpath(root, self.path)
+            for f in names:
+                if os.path.normpath(os.path.join(rel, f)) not in named and not (
+                    root == log and f.endswith(".json")
+                ):
+                    os.remove(os.path.join(root, f))
+            if root not in (self.path, log) and not os.listdir(root):
+                os.rmdir(root)  # a partition dir whose files all went
+        for d in glob.glob(f"{glob.escape(self.path)}.__tmp_*"):
+            m = re.match(r"\.__tmp_(\d+)_", d[len(self.path):])
+            if m and not _alive(int(m.group(1))):
+                shutil.rmtree(d, ignore_errors=True)
+        return len(doomed)
+
+    def recover(self, timeout: float = 30.0) -> None:
+        """Delete what crashed writers left: files no entry names and
+        dead writers' stage dirs. Runs under the commit lock; a no-op on
+        a healthy table."""
+        with self._locked(timeout):
+            self._vacuum_locked(0)
+
+    def vacuum(self, retain_last: int = 0) -> int:
+        """Drop all but the newest ``retain_last`` replaced versions and
+        the files only they named (Delta VACUUM analogue); returns the
+        number of entries dropped. Unlike the post-commit vacuum it keeps
+        no extra entry, so ``vacuum(0)`` leaves exactly the current files."""
+        with self._locked():
+            return self._vacuum_locked(self.version() - 1 - retain_last)
+
+    # -- commits -------------------------------------------------------------
+
+    def overwrite(self, df: DataFrame, expect_version: int | None = None) -> None:
+        self._publish(self._stage(df), expect_version)
+
+    def append(self, df: DataFrame, expect_version: int | None = None) -> None:
+        """Append commit: the new entry carries every live file over and
+        adds the batch's, so one entry create publishes the whole batch —
+        partitioned or not, a reader or a crash sees all of it or none."""
+        self._publish(self._stage(df), expect_version, carry=dict)
 
     def restore(self, version: int) -> None:
-        """Delta `RESTORE TABLE ... TO VERSION AS OF` analogue: make a
-        retained snapshot the CURRENT state again. The restore itself is
-        an overwrite, so the replaced (pre-restore) state is archived as
-        a new version first — a bad restore is itself restorable, exactly
-        like Delta's history-preserving RESTORE. Directory copy of the
-        snapshot (it must survive under version retention), then the
-        standard atomic swap."""
-        vpath = os.path.join(self._versions_dir(), str(version))
-        if not os.path.isdir(vpath):
-            raise ValueError(
-                f"version {version} not retained; available: {self.history()}"
-            )
-        tmp = self._stage_name()
-        shutil.copytree(vpath, tmp)
-        # same journaled swap as overwrite: restore survives kill points
-        self._swap_commit(tmp, None)
+        """Delta `RESTORE TABLE ... TO VERSION AS OF` analogue: commit a
+        retained version's files as the CURRENT state again. The replaced
+        state stays in the history like any overwrite's, so a bad restore
+        is itself restorable. No data is copied: files are immutable and
+        the retained entry already names them."""
+        self._publish(None, None, carry=lambda live: self._live(version))
 
     def optimize(
         self,
@@ -601,138 +586,22 @@ class ManagedParquetTable:
     ) -> int:
         """Delta ``OPTIMIZE`` analogue: rewrite the table's current
         content into ≈``target_rows_per_file``-row files, collapsing the
-        small files (and batch subdirectories) that accumulate under
-        append-heavy workloads. Pure compaction — ``coalesce``, never a
-        shuffle: bin-packing does not need co-location, and at 100 TB a
-        repartition would move every byte twice (use `cluster_zorder`
-        when data-skipping LAYOUT is the goal, not file count). The
-        rewrite is an ordinary optimistic-concurrency overwrite commit:
-        readers see old-or-new atomically, and a concurrent append
-        conflicts via ``expect_version`` instead of being silently
-        dropped. When the caller does not pass ``expect_version``, the
-        CURRENT version is captured up front — compaction reads the table
-        twice outside the lock (count for bin sizing, then the staging
-        scan), so an unconditional overwrite would silently discard any
-        append landing between those reads; pinning the version makes
-        every concurrent commit a loud ``ConcurrentWriteError`` instead
-        of a lost update. Returns the output file-bin count."""
+        small files that accumulate under append-heavy workloads. Pure
+        compaction — ``coalesce``, never a shuffle: bin-packing does not
+        need co-location, and at 100 TB a repartition would move every
+        byte twice (use `cluster_zorder` when data-skipping LAYOUT is the
+        goal, not file count). The bins are sized from the row counts the
+        log records, so the table is read once, by the staging scan. The
+        rewrite is an ordinary optimistic-concurrency overwrite commit,
+        conditional on ``expect_version`` or, when the caller passes
+        none, on the version current before that scan: an append landing
+        in between is a loud ``ConcurrentWriteError``, never a lost
+        update. Returns the output file-bin count."""
         if expect_version is None:
             expect_version = self.version()
-        n = self.read().count()
-        bins = max(1, -(-n // target_rows_per_file))
+        bins = max(1, -(-self.rows() // target_rows_per_file))
         self.overwrite(self.read().coalesce(bins), expect_version=expect_version)
         return bins
-
-    def vacuum(self, retain_last: int = 0) -> int:
-        """Drop all but the newest ``retain_last`` snapshots; returns the
-        number removed (Delta VACUUM analogue at directory granularity)."""
-        versions = self.history()
-        doomed = versions[: max(0, len(versions) - retain_last)]
-        for v in doomed:
-            shutil.rmtree(os.path.join(self._versions_dir(), str(v)), ignore_errors=True)
-        return len(doomed)
-
-    def overwrite(self, df: DataFrame, expect_version: int | None = None) -> None:
-        self._swap_commit(self._stage(df), expect_version)
-
-    def _swap_commit(self, tmp: str, expect_version: int | None) -> None:
-        """Publish a fully-staged table dir atomically-with-recovery:
-        journal the swap plan (intent = commit point), then run the
-        idempotent redo steps the recovery path would run."""
-        try:
-            with self._commit(expect_version):
-                nxt = old = None
-                if os.path.exists(self.path):
-                    if self.retain_versions > 0:
-                        nxt = (self.history() or [-1])[-1] + 1
-                    else:
-                        old = (
-                            f"{self.path}.__old_{os.getpid()}_"
-                            f"{uuid.uuid4().hex[:8]}"
-                        )
-                self._write_intent(
-                    {"op": "swap", "tmp": tmp, "nxt": nxt, "old": old}
-                )
-                self._redo_swap(tmp, nxt, old)
-        except (ConcurrentWriteError, TimeoutError):
-            shutil.rmtree(tmp, ignore_errors=True)  # abandoned stage
-            raise
-
-    def _redo_swap(self, tmp: str, nxt: int | None, old: str | None) -> None:
-        """Idempotent swap steps — safe to re-enter from recovery at any
-        intermediate state. State decode: (tmp ∧ path) ⇒ nothing moved;
-        (tmp ∧ ¬path) ⇒ old state archived, new not yet in place;
-        (¬tmp) ⇒ swap done, cleanup pending."""
-        if os.path.isdir(tmp):
-            if os.path.exists(self.path):
-                if nxt is not None:
-                    vdir = self._versions_dir()
-                    os.makedirs(vdir, exist_ok=True)
-                    os.rename(self.path, os.path.join(vdir, str(nxt)))
-                elif old:
-                    os.rename(self.path, old)
-            os.rename(tmp, self.path)
-        # only discard the previous state once the new one is in place
-        if old and os.path.isdir(old):
-            shutil.rmtree(old, ignore_errors=True)
-        if self.retain_versions > 0:
-            self.vacuum(retain_last=self.retain_versions)
-
-    def append(self, df: DataFrame, expect_version: int | None = None) -> None:
-        """Append commit: the batch stages to a sibling dir OUTSIDE the
-        lock, then publishes inside it.
-
-        UNPARTITIONED tables publish the whole staged batch as ONE
-        directory rename (``{table}/batch_<tag>/``) — atomic, so a
-        concurrent reader or a crash mid-commit observes either the
-        entire batch or none of it, matching the class guarantee; reads
-        descend into batch dirs via ``recursiveFileLookup`` (see
-        `_read_dir`).
-
-        PARTITIONED tables cannot nest batch dirs (recursive lookup is
-        incompatible with partition discovery), so their batch files
-        move with O(#files-per-touched-partition) renames — concurrent
-        appends still serialize through the lock, but a lock-less
-        READER racing the rename loop, or a crash mid-loop (which also
-        skips the version bump), can observe a partial batch: the same
-        reader caveat as the overwrite swap, and the part only a real
-        commit LOG fixes."""
-        tmp = self._stage(df)
-        try:
-            with self._commit(expect_version):
-                tag = uuid.uuid4().hex[:8]
-                self._write_intent({"op": "append", "tmp": tmp, "tag": tag})
-                self._redo_append(tmp, tag)
-        except (ConcurrentWriteError, TimeoutError):
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise
-
-    def _redo_append(self, tmp: str, tag: str) -> None:
-        """Idempotent append-publish steps. Unpartitioned: one atomic
-        batch-dir rename (already done ⇒ tmp is gone ⇒ no-op).
-        Partitioned: the per-file rename loop resumes where a crash
-        stopped it — destination names are deterministic per (tag, file),
-        so already-moved files are skipped, and the batch completes
-        exactly once."""
-        if not os.path.isdir(tmp):
-            return  # publish finished before the crash; cleanup-only
-        if not self.partition_by:
-            os.makedirs(self.path, exist_ok=True)
-            os.rename(tmp, os.path.join(self.path, f"batch_{tag}"))
-            return
-        for root, _dirs, files in os.walk(tmp):
-            rel = os.path.relpath(root, tmp)
-            dest_dir = (
-                self.path if rel == "." else os.path.join(self.path, rel)
-            )
-            os.makedirs(dest_dir, exist_ok=True)
-            for f in files:
-                if f.startswith(("_", ".")):
-                    continue  # markers/CRCs: not data
-                dst = os.path.join(dest_dir, f"app_{tag}_{f}")
-                if not os.path.exists(dst):
-                    os.rename(os.path.join(root, f), dst)
-        shutil.rmtree(tmp, ignore_errors=True)
 
     def upsert(self, updates: DataFrame, keys: Sequence[str] | None = None,
                sequence_by: str | None = None, delete_col: str | None = None,
@@ -756,9 +625,9 @@ class ManagedParquetTable:
         PARTITION PRUNING: when the table is partitioned and every
         partition column is part of the merge key (so a row can never
         move between partitions — Delta's documented pruned-MERGE
-        precondition), the merge reads ONLY the partitions the updates
-        batch touches and the commit swaps only those directories; see
-        `_upsert_pruned`. Otherwise (partition column not in the key,
+        precondition), the merge reads ONLY the files of the partitions
+        the updates batch touches and the commit replaces only those;
+        see `_upsert_pruned`. Otherwise (partition column not in the key,
         ``merge_schema``, or ``truncate_col`` — a truncate is a
         whole-table directive) the merge falls back to the full-table
         rewrite, trading cost for unconditional correctness."""
@@ -818,7 +687,7 @@ class ManagedParquetTable:
             truncate_col=truncate_col,
         )
         # conditional on the version the merge READ (optimistic MERGE):
-        # a concurrent commit between read and swap raises instead of
+        # a concurrent commit between read and publish raises instead of
         # clobbering, matching Delta's conflict detection
         self.overwrite(merged, expect_version=expect_version)
 
@@ -838,155 +707,51 @@ class ManagedParquetTable:
         never move between partitions and a partition the updates batch
         does not name is provably unaffected.
 
-        Cost shape (the point at 100 TB): the touched partition VALUES
-        come off the updates batch (bounded — a micro-batch touches a
-        handful of dates); the target scan filters on them, so Catalyst
-        prunes every other partition directory (zero read); the merge
-        plan runs over that slice only (one shuffle on the grain key,
-        sized by the slice, not the table); and the commit swaps ONLY
-        the touched partition dirs (zero write, zero rename elsewhere).
-        With version retention on, the pre-state snapshot is hardlinked
-        (`_link_tree`) — metadata-only, so time travel stays O(#files)
-        instead of O(table bytes).
-
-        Reader caveat: per-directory swaps are not one atomic rename, so
-        a lock-less reader racing the commit can observe some partitions
-        new and others old — the same caveat as the partitioned `append`
-        path, and the part only a real commit LOG fixes."""
-        import functools
-        import operator
-        from urllib.parse import unquote, urlparse
-
-        touched = [
-            tuple(r[p] for p in self.partition_by)
-            for r in updates.select(*self.partition_by).distinct().collect()
-        ]
+        Cost shape (the point at 100 TB): the touched partition values
+        come off the updates batch in one job (bounded — a micro-batch
+        touches a handful of dates), cast to strings as the writer casts
+        them into directory names. The log already knows which files sit
+        in those partitions (a file's partition values are its unescaped
+        hive path), so the merge scans only them (zero read elsewhere),
+        the merge plan runs over that slice only (one shuffle on the
+        grain key, sized by the slice, not the table), and the commit
+        replaces only them: every other file carries over to the new
+        entry untouched, and the old files stay named by the retained
+        entries, so time travel costs no copy."""
+        touched = {
+            tuple(None if v in (None, "") else v for v in r)
+            for r in updates.select(
+                *[F.col(p).cast("string") for p in self.partition_by]
+            ).distinct().collect()
+        }
         if not touched:
             return  # empty batch: nothing to merge, no commit
-        pred = functools.reduce(
-            operator.or_,
-            [
-                functools.reduce(
-                    operator.and_,
-                    [
-                        # eqNullSafe: a NULL partition value must select the
-                        # __HIVE_DEFAULT_PARTITION__ directory, not nothing
-                        F.col(p).eqNullSafe(F.lit(v))
-                        for p, v in zip(self.partition_by, vals)
-                    ],
-                )
-                for vals in touched
-            ],
-        )
-        target_slice = self.read().filter(pred)
-        # the OLD touched partition dirs, engine-encoded: parents of the
-        # files the pruned scan actually reads. Asking Spark (instead of
-        # hand-rolling hive path escaping) keeps value encoding — dates,
-        # specials, __HIVE_DEFAULT_PARTITION__ — exactly consistent with
-        # what the writer produced. The scan is partition-pruned and
-        # column-empty, so it costs one pass over the touched slice only.
-        old_dirs = sorted(
-            {
-                os.path.dirname(unquote(urlparse(r["__f"]).path))
-                for r in target_slice.select(F.input_file_name().alias("__f"))
-                .distinct()
-                .collect()
-            }
+
+        def in_touched(rel: str) -> bool:
+            # Spark writes a NULL or empty value as the default partition
+            vals = [
+                None if v == "__HIVE_DEFAULT_PARTITION__" else unquote(v)
+                for v in (d.split("=", 1)[1] for d in rel.split("/")[:-1])
+            ]
+            return tuple(vals) in touched
+
+        table = self.read()
+        hit = [os.path.join(self.path, f) for f in self._live() if in_touched(f)]
+        target_slice = (
+            self.spark.read.schema(table.schema)
+            .option("basePath", self.path)
+            .parquet(*hit)
+            if hit
+            else table.limit(0)
         )
         merged = merge_upsert_plan(
             target_slice, updates, keys, sequence_by, delete_col=delete_col
         )
-        tmp = self._stage(merged)
-        # new partition dirs present in the merge output (a touched
-        # partition whose rows all got deleted simply has no dir here)
-        new_rels = sorted(
-            {
-                os.path.relpath(root, tmp)
-                for root, _dirs, files in os.walk(tmp)
-                if any(not f.startswith(("_", ".")) for f in files)
-            }
+        self._publish(
+            self._stage(merged),
+            expect_version,
+            carry=lambda live: {f: n for f, n in live.items() if not in_touched(f)},
         )
-        try:
-            with self._commit(expect_version):
-                if self.retain_versions > 0 and os.path.exists(self.path):
-                    # snapshot BEFORE the intent (it must capture the
-                    # pre-state, never a torn mid-swap state) and publish
-                    # it atomically: link into a dot-staging dir, one
-                    # rename to the version number. A crash mid-link
-                    # leaves only dead-pid staging litter (swept), never
-                    # a half snapshot masquerading as a version.
-                    vdir = self._versions_dir()
-                    os.makedirs(vdir, exist_ok=True)
-                    nxt = (self.history() or [-1])[-1] + 1
-                    staging = os.path.join(
-                        vdir, f".staging_{os.getpid()}_{uuid.uuid4().hex[:8]}"
-                    )
-                    self._link_tree(self.path, staging)
-                    os.rename(staging, os.path.join(vdir, str(nxt)))
-                old_rels = [os.path.relpath(d, self.path) for d in old_dirs]
-                graves = (
-                    f"{self.path}.__old_{os.getpid()}_{uuid.uuid4().hex[:8]}"
-                )
-                self._write_intent(
-                    {
-                        "op": "pruned",
-                        "tmp": tmp,
-                        "old_rels": old_rels,
-                        "new_rels": new_rels,
-                        "graves": graves,
-                    }
-                )
-                self._redo_pruned(tmp, old_rels, new_rels, graves)
-        except (ConcurrentWriteError, TimeoutError):
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise
-
-    def _redo_pruned(
-        self,
-        tmp: str,
-        old_rels: list[str],
-        new_rels: list[str],
-        graves: str,
-    ) -> None:
-        """Idempotent pruned-MERGE publish in four re-enterable phases.
-        Old touched partition dirs are ARCHIVED by rename into a grave
-        root (never rmtree'd in place: after a crash, the same path may
-        already hold the republished NEW partition — an in-place delete
-        on re-entry would destroy committed data, which is exactly what
-        the kill-point matrix caught). Graves are pruned only once the
-        stage dir is gone, which doubles as the phase marker:
-
-        A (tmp exists): path/rel → graves/rel for each old rel whose
-          grave is absent (grave present ⇒ archived; path/rel then holds
-          NEW data and must not be touched).
-        B (tmp exists): tmp/rel → path/rel for each staged rel still in
-          tmp (gone ⇒ already published).
-        C: rmtree(tmp) — marks all publishes durable.
-        D: rmtree(graves), vacuum — pure cleanup, safe last.
-        """
-        if os.path.isdir(tmp):
-            for rel in old_rels:
-                cur = os.path.join(self.path, rel)
-                grave = os.path.join(graves, rel)
-                if os.path.isdir(cur) and not os.path.isdir(grave):
-                    os.makedirs(os.path.dirname(grave), exist_ok=True)
-                    os.rename(cur, grave)
-            for rel in new_rels:
-                src = os.path.join(tmp, rel)
-                if not os.path.isdir(src):
-                    continue  # this partition already published
-                dest = os.path.join(self.path, rel)
-                os.makedirs(os.path.dirname(dest), exist_ok=True)
-                if os.path.isdir(dest):
-                    # touched partition dir that held no readable data
-                    # (it is not among old_rels): clear it pre-swap
-                    shutil.rmtree(dest)
-                os.rename(src, dest)
-            shutil.rmtree(tmp, ignore_errors=True)
-        if os.path.isdir(graves):
-            shutil.rmtree(graves, ignore_errors=True)
-        if self.retain_versions > 0:
-            self.vacuum(retain_last=self.retain_versions)
 
 
 def scd2_from_history(
@@ -1353,19 +1118,18 @@ def cdc_changes_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def delete_where(table: "ManagedParquetTable", condition) -> int:
     """DELETE FROM emulation: atomically rewrite the table without rows
-    matching ``condition`` (SQL string or Column); returns rows deleted.
-    The right-to-be-forgotten/GDPR primitive — combine with
-    ``retain_versions=0`` and ``vacuum()`` so purged rows leave no
-    recoverable snapshot. On a partitioned table Catalyst prunes the
-    scan, but the rewrite here is whole-table; a production variant
-    rewrites only affected partitions (same swap mechanics per
-    partition directory)."""
+    matching ``condition`` (SQL string or Column); returns rows deleted,
+    counted by one aggregate. The right-to-be-forgotten/GDPR primitive —
+    follow it with ``vacuum(0)`` so purged rows leave no recoverable
+    version. On a partitioned table Catalyst prunes the scan, but the
+    rewrite here is whole-table; a production variant rewrites only the
+    affected partitions' files (the pruned MERGE's carry-over)."""
     cond = F.expr(condition) if isinstance(condition, str) else condition
+    hit = F.coalesce(cond, F.lit(False))
     df = table.read()
-    kept = df.filter(~F.coalesce(cond, F.lit(False)))
-    n_deleted = df.count() - kept.count()
+    n_deleted = df.agg(F.count_if(hit)).collect()[0][0]
     if n_deleted:
-        table.overwrite(kept)
+        table.overwrite(df.filter(~hit))
     return n_deleted
 
 
@@ -1376,13 +1140,12 @@ def publish_atomically(
     protocol. PREPARE stages every DataFrame (`_stage`: the expensive,
     failure-prone phase — any error removes the stages already written
     and aborts with all tables untouched), then COMMIT publishes each
-    stage with `_swap_commit`: commit lock, intent journal, version bump,
-    and a snapshot of the replaced state under ``retain_versions``.
-    Readers can observe a brief window where early tables show the new
-    version and later ones the old (rename-speed, not write-speed) — the
-    practical cross-table guarantee a lakehouse without a shared
-    transaction log can offer, and why Delta/Iceberg keep multi-table
-    transactions out of scope too."""
+    stage through the table's one publish path (`_publish`: commit lock,
+    file moves, log-entry create, post-commit vacuum). Readers can
+    observe a brief window where early tables show the new version and
+    later ones the old (commit-speed, not write-speed) — each table has
+    its own log, so this is the practical cross-table guarantee, and why
+    Delta/Iceberg keep multi-table transactions out of scope too."""
     staged: list[tuple[ManagedParquetTable, str]] = []
     try:
         for table, df in writes:
@@ -1392,7 +1155,7 @@ def publish_atomically(
             shutil.rmtree(tmp, ignore_errors=True)
         raise
     for table, tmp in staged:
-        table._swap_commit(tmp, None)
+        table._publish(tmp, None)
 
 
 def snapshot_as_of(history: DataFrame, sequence_value) -> DataFrame:
@@ -1553,15 +1316,15 @@ def cdc_scd2_from_snapshots(spark: SparkSession, sf_dir: str) -> DataFrame:
 def cdc_table_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Delta ``OPTIMIZE`` end-to-end through the managed table: create
     from one quarter of ``orders``, append the other three quarters as
-    separate commits (accumulating small files / batch dirs — the
-    append-heavy degradation OPTIMIZE exists for), then compact with
+    separate commits (accumulating small files — the append-heavy
+    degradation OPTIMIZE exists for), then compact with
     :meth:`ManagedParquetTable.optimize` under an OCC-conditional
     commit.
 
     Contract oracle (the sketch-query pattern): the exact row count and
     orderkey checksum AFTER compaction must equal the source table's —
     DuckDB computes both from the parquet directly — and two invariant
-    flags must hold: ``files_reduced`` (data file count strictly
+    flags must hold: ``files_reduced`` (live data file count strictly
     dropped) and ``content_preserved`` (pre- vs post-compaction count
     and checksum identical). File counts themselves are
     environment-dependent, so they assert as a flag, not a value.
@@ -1587,12 +1350,6 @@ def cdc_table_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
         else:
             t.append(part)
 
-    def n_data_files() -> int:
-        total = 0
-        for root, _dirs, files in _os.walk(t.path):
-            total += sum(1 for f in files if not f.startswith(("_", ".")))
-        return total
-
     def checksum():
         row = t.read().agg(
             F.count(F.lit(1)).cast("long").alias("n"),
@@ -1600,10 +1357,10 @@ def cdc_table_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).collect()[0]
         return row["n"], row["s"]
 
-    files_before = n_data_files()
+    files_before = len(t.files())
     pre = checksum()
     t.optimize(target_rows_per_file=1_000_000, expect_version=t.version())
-    files_after = n_data_files()
+    files_after = len(t.files())
     post = checksum()
     return spark.createDataFrame(
         [(post[0], post[1], files_after < files_before, pre == post)],
@@ -1628,15 +1385,16 @@ def cdc_table_ttl_purge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Retention-policy purge end-to-end (`DELETE FROM ... WHERE age >
     ttl` — the GDPR/TTL primitive): a managed table is built from
     ``orders``, rows older than the 1996-01-01 cutoff are deleted via
-    :func:`delete_where`, and the snapshot history is vacuumed so the
-    purged rows leave NO recoverable version (the compliance
-    requirement that distinguishes purge from ordinary delete).
+    :func:`delete_where`, and the history is vacuumed so the purged
+    rows leave NO recoverable version (the compliance requirement that
+    distinguishes purge from ordinary delete).
 
     Contract oracle: the retained count/checksum must equal what DuckDB
     computes from the cutoff directly; ``n_purged`` is the operator's
     own deletion report; ``purged_unrecoverable`` asserts the table has
-    zero retained snapshots AND the live directory equals the retained
-    set exactly. Scale: delete_where is one filtered rewrite commit —
+    zero retained versions, no purged row, AND no data file on disk
+    beyond the current version's (a replaced file would still hold the
+    purged rows). Scale: delete_where is one filtered rewrite commit —
     on a date-partitioned table the scan prunes to affected partitions."""
     import os as _os
 
@@ -1660,7 +1418,13 @@ def cdc_table_ttl_purge(spark: SparkSession, sf_dir: str) -> DataFrame:
             "any_old"
         ),
     ).collect()[0]
-    unrecoverable = (t.history() == []) and (not row["any_old"])
+    on_disk = []
+    for root, dirs, names in _os.walk(t.path):
+        dirs[:] = [d for d in dirs if d != "_log"]
+        on_disk += [_os.path.join(root, f) for f in names]
+    unrecoverable = (
+        t.history() == [] and not row["any_old"] and sorted(on_disk) == t.files()
+    )
     return spark.createDataFrame(
         [(row["n"], n_purged, row["s"], unrecoverable)],
         "n_retained long, n_purged long, retained_checksum long, "
@@ -1956,8 +1720,8 @@ def cdc_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage→audit→publish→read path is value-verified).
 
     Scale notes: the audit is one predicate pass over the staged batch
-    (no corpus rescan); publish is the table's staged-rename commit —
-    the same journaled protocol the crash matrix pins
+    (no corpus rescan); publish is the table's log-entry commit — the
+    same protocol the crash matrix pins
     (tests/test_crash_recovery.py), which is exactly what makes
     audit-then-publish safe: a crash between audit and publish leaves
     the target untouched.

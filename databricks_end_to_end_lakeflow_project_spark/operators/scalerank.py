@@ -138,6 +138,16 @@ def _bin_col(bv: Column, bounds: list) -> Column:
     return F.size(F.filter(arr, lambda b: bv >= b))
 
 
+def _probabilities(nbins: int) -> Column:
+    """The boundary sketch's probabilities ``j / nbins`` for j in
+    1..nbins-1 as ONE SQL array of double literals: one py4j call, where
+    an ``F.array`` of ``F.lit`` pays one per probability (127 at 128
+    bins). ``repr`` round-trips a float, so each literal parses back to
+    the same double."""
+    probs = ", ".join(f"{j / nbins!r}D".upper() for j in range(1, nbins))
+    return F.expr(f"array({probs})")
+
+
 def with_global_ranks(
     df: DataFrame,
     specs: list[RankSpec],
@@ -183,8 +193,7 @@ def with_global_ranks(
     for i, s in enumerate(specs):
         nb = min(s.nbins or default_bins, max_bins)
         bv = s.bin_value if s.bin_value is not None else F.col(s.value)
-        probs = F.array(*[F.lit(j / nb) for j in range(1, nb)])
-        aggs.append(F.percentile_approx(bv, probs, 10_000).alias(f"__b{i}"))
+        aggs.append(F.percentile_approx(bv, _probabilities(nb), 10_000).alias(f"__b{i}"))
     brow = df.agg(*aggs).collect()[0]
     bounds = [sorted(set(brow[f"__b{i}"] or [])) for i in range(len(specs))]
 
@@ -262,7 +271,7 @@ def with_global_cumsums(
         # a fresh (is_cached == False) object over an already-cached plan
         df = persist_once(df)
     bv = bin_value if bin_value is not None else F.col(value)
-    probs = F.array(*[F.lit(j / nbins) for j in range(1, nbins)])
+    probs = _probabilities(nbins)
     bounds = sorted(
         set(df.agg(F.percentile_approx(bv, probs, 10_000).alias("b")).collect()[0]["b"] or [])
     )
@@ -330,7 +339,7 @@ def with_global_running_max(
         # a fresh (is_cached == False) object over an already-cached plan
         df = persist_once(df)
     bv = bin_value if bin_value is not None else F.col(order_value)
-    probs = F.array(*[F.lit(j / nbins) for j in range(1, nbins)])
+    probs = _probabilities(nbins)
     bounds = sorted(
         set(df.agg(F.percentile_approx(bv, probs, 10_000).alias("b")).collect()[0]["b"] or [])
     )

@@ -40,7 +40,6 @@ from databricks_end_to_end_lakeflow_project_spark.plans.gold import (
 )
 from databricks_end_to_end_lakeflow_project_spark.sources.readers import (
     read_spark_parquet,
-    spark_parquet_rows,
 )
 from databricks_end_to_end_lakeflow_project_spark.streaming.ingest import (
     INGEST_FILE_COL,
@@ -388,11 +387,8 @@ def business_silver_stream(lake: FlightLakehouse) -> DataFrame:
 
     from databricks_end_to_end_lakeflow_project_spark.streaming.structured import run_to_memory
 
-    # capture only paths + schemas so the join plan can be rebuilt on the
-    # run_to_memory builder session (conf overrides bind to a cloned
-    # session; lake.spark's conf is never mutated)
     sides = {
-        t: (lake.silver._tables[t].path, lake.silver._tables[t].read().schema)
+        t: lake.silver._tables[t]
         for t in (
             "bookings_silver",
             "flights_silver",
@@ -402,11 +398,13 @@ def business_silver_stream(lake: FlightLakehouse) -> DataFrame:
     }
 
     def build(s: SparkSession) -> DataFrame:
+        # each side streams the table's current files on the session
+        # run_to_memory hands in (conf overrides bind to a cloned
+        # session; lake.spark's conf is never mutated)
         def side(table: str, md: str) -> DataFrame:
-            path, schema = sides[table]
             return (
-                s.readStream.schema(schema)
-                .parquet(path)
+                sides[table]
+                .read_stream(s)
                 .withColumnRenamed("modifiedDate", md)
                 .withWatermark(md, "1 hour")
             )
@@ -442,7 +440,7 @@ def business_silver_stream(lake: FlightLakehouse) -> DataFrame:
     return run_to_memory(
         build,
         f"bizsilver_{_uuid.uuid4().hex[:8]}",
-        input_rows=sum(spark_parquet_rows(path) for path, _ in sides.values()),
+        input_rows=sum(t.rows() for t in sides.values()),
         extra_conf={"spark.sql.streaming.noDataMicroBatches.enabled": "false"},
         spark=lake.spark,
     )

@@ -25,7 +25,7 @@ Deliberate deviations (documented in SURVEY §3/§4):
 High-water marks: the reference takes MAX(modifiedDate) and MAX(surrogate
 key) from Delta, which answers them from the statistics in its log. Here
 both come from the min/max statistics in the parquet footers of the
-target's data files (`_high_water` → `sources.readers.spark_parquet_max`):
+files the target's log lists (`_high_water` → `spark_parquet_max`):
 no Spark job per cursor. Timestamps carry those statistics because
 `session.get_spark` writes them as TIMESTAMP_MICROS; a table whose
 footers lack them (INT96, written by another session) costs one
@@ -78,16 +78,17 @@ def _clock_col(clock: dt.datetime | None) -> Column:
 def _high_water(target: ManagedParquetTable, cols: list[str]) -> list[Column | None]:
     """MAX of each column of ``target`` as a literal; None where the
     column holds no non-null value. Read from the footer statistics of
-    the table's data files (`spark_parquet_max`), with no Spark job.
+    the files the table's log lists (`spark_parquet_max`), with no Spark
+    job; the directory also holds replaced files, so it is not listed.
     Timestamps travel as their INT64 microseconds and become literals
     through ``timestamp_micros``, so no Python timezone conversion
     touches them. Footers that cannot answer (INT96 timestamps written
     before `get_spark` pinned TIMESTAMP_MICROS, or by another session)
     fall back to one aggregate over the table."""
-    df = target.read()  # completes a dead writer's commit first
+    df = target.read()
     ts = [isinstance(df.schema[c].dataType, T.TimestampType) for c in cols]
     try:
-        raw = [spark_parquet_max(target.path, c) for c in cols]
+        raw = [spark_parquet_max(target.files(), c) for c in cols]
     except LookupError:
         raw = list(
             df.agg(

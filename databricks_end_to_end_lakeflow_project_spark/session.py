@@ -68,6 +68,9 @@ def get_spark(
         # microseconds do, so high-water marks read with no job
         # (`sources.readers.spark_parquet_max`)
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+        # a managed table is read as the explicit file list of its log
+        # entry, and Spark lists more paths than this with a Spark job
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

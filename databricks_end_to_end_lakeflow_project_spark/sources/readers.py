@@ -11,6 +11,7 @@ from __future__ import annotations
 import json
 import os
 import tempfile
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -100,13 +101,16 @@ def _data_files(path: str, recursive: bool) -> list[str] | None:
     return files
 
 
-def spark_parquet_rows(path: str) -> int:
-    """Row count of a parquet directory Spark wrote, summed from the
-    footers of every data file under it (pyarrow metadata reads, no
-    Spark job); 0 for a missing or empty directory."""
+def spark_parquet_file_rows(path: str) -> dict[str, int]:
+    """Row count of every data file under a parquet directory Spark
+    wrote, by path relative to it, from the footers (pyarrow metadata
+    reads, no Spark job); {} for a missing or empty directory."""
     import pyarrow.parquet as pq
 
-    return sum(pq.read_metadata(f).num_rows for f in _data_files(path, True))
+    return {
+        os.path.relpath(f, path): pq.read_metadata(f).num_rows
+        for f in _data_files(path, True)
+    }
 
 
 def _footer_max_type(col) -> bool:
@@ -124,12 +128,12 @@ def _footer_max_type(col) -> bool:
     )
 
 
-def spark_parquet_max(path: str, column: str) -> int | None:
-    """MAX of a top-level integer or timestamp column over every data file
-    under a parquet directory Spark wrote, taken from the row-group
-    statistics in the footers (pyarrow metadata reads of the files
-    `spark_parquet_rows` counts, no Spark job). Delta answers the same
-    MAX from the statistics in its log.
+def spark_parquet_max(path: str | Sequence[str], column: str) -> int | None:
+    """MAX of a top-level integer or timestamp column over the data files
+    Spark wrote — every one under a directory ``path``, or the files
+    listed (a managed table's `files`) — taken from the row-group
+    statistics in the footers (pyarrow metadata reads, no Spark job).
+    Delta answers the same MAX from the statistics in its log.
 
     Returns the physical value: the integer, or for a timestamp its
     microseconds since the epoch (``F.timestamp_micros`` turns it into the
@@ -143,7 +147,7 @@ def spark_parquet_max(path: str, column: str) -> int | None:
     import pyarrow.parquet as pq
 
     best = None
-    for f in _data_files(path, True):
+    for f in _data_files(path, True) if isinstance(path, str) else path:
         md = pq.read_metadata(f)
         cols = [md.schema.column(i) for i in range(md.num_columns)]
         i = next((i for i, c in enumerate(cols) if c.path == column), None)
@@ -162,7 +166,10 @@ def spark_parquet_max(path: str, column: str) -> int | None:
 
 
 def read_spark_parquet(
-    spark: SparkSession, path: str, recursive: bool = False
+    spark: SparkSession,
+    path: str,
+    recursive: bool = False,
+    files: Sequence[str] | None = None,
 ) -> DataFrame:
     """Read a parquet directory Spark wrote, with the schema Spark stored
     in its footer (the ``org.apache.spark.sql.parquet.row.metadata`` key),
@@ -178,22 +185,32 @@ def read_spark_parquet(
     file (Spark raises as before), the file lacks the key (pyarrow-written
     inputs), or, without ``recursive``, the directory has a visible
     subdir (a partitioned table, whose partition-column types only
-    inference derives from the directory names)."""
+    inference derives from the directory names).
+
+    ``files`` reads exactly those files under ``path`` instead of listing
+    it (a managed table's log names them): partition columns come from
+    their hive-style paths below ``path``, and the footer schema holds
+    for a partitioned table too. Spark lists explicit paths with a job
+    above ``spark.sql.sources.parallelPartitionDiscovery.threshold``,
+    which `session.get_spark` raises."""
     import pyarrow.parquet as pq
 
     reader = spark.read
-    if recursive:
-        reader = reader.option("recursiveFileLookup", "true")
-    files = _data_files(path, recursive)
+    if files is not None:
+        reader, paths = reader.option("basePath", path), sorted(files)
+    else:
+        if recursive:
+            reader = reader.option("recursiveFileLookup", "true")
+        paths, files = [path], _data_files(path, recursive)
     if not files:
-        return reader.parquet(path)
+        return reader.parquet(*paths)
     try:
         stored = (pq.read_metadata(min(files)).metadata or {}).get(_SPARK_ROW_METADATA)
     except (OSError, ValueError):
-        return reader.parquet(path)
+        return reader.parquet(*paths)
     if stored is None:
-        return reader.parquet(path)
-    return reader.schema(T.StructType.fromJson(json.loads(stored))).parquet(path)
+        return reader.parquet(*paths)
+    return reader.schema(T.StructType.fromJson(json.loads(stored))).parquet(*paths)
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

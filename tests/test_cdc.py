@@ -768,12 +768,10 @@ def test_failed_stage_write_cleans_staged_tmp(spark, tmp_path, op):
 
 
 def test_append_publishes_atomic_batch_dir_unpartitioned(spark, tmp_path):
-    """Unpartitioned appends land as ONE batch subdirectory per commit
-    (a single rename — readers see all of a batch or none of it), and
-    reads/overwrites over the nested layout behave identically to the
-    flat one."""
-    import os
-
+    """Unpartitioned appends land as ONE log entry per commit (a single
+    create — readers see all of a batch or none of it) that carries the
+    live files over and adds the batch's; an overwrite's entry names
+    only its own files and still reads fine."""
     from databricks_end_to_end_lakeflow_project_spark.operators.cdc import (
         ManagedParquetTable,
     )
@@ -781,12 +779,14 @@ def test_append_publishes_atomic_batch_dir_unpartitioned(spark, tmp_path):
     t = ManagedParquetTable(spark, str(tmp_path / "t"))
     df = lambda lo, n: spark.range(lo, lo + n).selectExpr("id AS k")
     t.append(df(0, 3))
+    first = t.files()
     t.append(df(10, 2))
-    batch_dirs = [d for d in os.listdir(t.path) if d.startswith("batch_")]
-    assert len(batch_dirs) == 2, "one dir rename per append commit"
+    assert t.version() == 2, "one entry per append commit"
+    assert set(first) < set(t.files()) and t.rows() == 5
     assert sorted(r["k"] for r in t.read().collect()) == [0, 1, 2, 10, 11]
     # an overwrite collapses back to a fresh state and still reads fine
     t.overwrite(df(100, 1))
+    assert not set(first) & set(t.files())
     assert [r["k"] for r in t.read().collect()] == [100]
 
 
@@ -807,12 +807,10 @@ def test_append_partitioned_still_per_file(spark, tmp_path):
 
 
 def test_optimize_compacts_files_and_preserves_content(spark, tmp_path):
-    """OPTIMIZE analogue: appends accumulate small files / batch dirs;
-    optimize() collapses them into ≈target-row bins via an ordinary OCC
-    overwrite commit — content identical, file count strictly down, and
+    """OPTIMIZE analogue: appends accumulate small files; optimize()
+    collapses them into ≈target-row bins via an ordinary OCC overwrite
+    commit — content identical, live file count strictly down, and
     history/time-travel still works across the compaction."""
-    import os
-
     from databricks_end_to_end_lakeflow_project_spark.operators.cdc import (
         ConcurrentWriteError,
         ManagedParquetTable,
@@ -824,12 +822,7 @@ def test_optimize_compacts_files_and_preserves_content(spark, tmp_path):
         t.append(spark.range(lo, lo + 100).selectExpr("id AS k").repartition(4))
 
     def n_files():
-        return sum(
-            1
-            for _root, _dirs, files in os.walk(t.path)
-            for f in files
-            if not f.startswith(("_", "."))
-        )
+        return len(t.files())
 
     before = n_files()
     v = t.version()
@@ -855,21 +848,16 @@ def test_optimize_compacts_files_and_preserves_content(spark, tmp_path):
 # ---------------------------------------------------------------------------
 
 
-def _file_inventory(table_path):
-    """{partition_rel_dir: {(filename, inode, size)}} for data files."""
+def _file_inventory(table):
+    """{partition_rel_dir: {(filename, inode, size)}} for the table's live
+    data files (its log's; the dir also holds replaced files)."""
     import os
 
     inv = {}
-    for root, _dirs, files in os.walk(table_path):
-        rel = os.path.relpath(root, table_path)
-        data = {
-            (f, os.stat(os.path.join(root, f)).st_ino,
-             os.stat(os.path.join(root, f)).st_size)
-            for f in files
-            if not f.startswith(("_", "."))
-        }
-        if data:
-            inv[rel] = data
+    for f in table.files():
+        rel = os.path.relpath(os.path.dirname(f), table.path)
+        st = os.stat(f)
+        inv.setdefault(rel, set()).add((os.path.basename(f), st.st_ino, st.st_size))
     return inv
 
 
@@ -902,7 +890,7 @@ def test_upsert_prunes_untouched_partitions(spark, tmp_path):
     untouched partitions keep the exact same files (same inodes, so not
     even rewritten-in-place), and the merged values are right."""
     t = _mk_partitioned(spark, tmp_path)
-    before = _file_inventory(t.path)
+    before = _file_inventory(t)
     assert set(before) == {"month=2024-01", "month=2024-02", "month=2024-03"}
     v0 = t.version()
 
@@ -912,7 +900,7 @@ def test_upsert_prunes_untouched_partitions(spark, tmp_path):
     )
     t.upsert(updates)
 
-    after = _file_inventory(t.path)
+    after = _file_inventory(t)
     assert after["month=2024-01"] == before["month=2024-01"], "untouched rewritten"
     assert after["month=2024-03"] == before["month=2024-03"], "untouched rewritten"
     assert after["month=2024-02"] != before["month=2024-02"], "touched unchanged"
@@ -936,14 +924,14 @@ def test_pruned_upsert_new_partition_and_partition_delete(spark, tmp_path):
     import pyspark.sql.functions as F  # noqa: N812
 
     t = _mk_partitioned(spark, tmp_path)
-    before = _file_inventory(t.path)
+    before = _file_inventory(t)
 
     new_month = spark.createDataFrame(
         [(k, "2024-04", f"n{k}") for k in range(3)],
         "k long, month string, attr string",
     )
     t.upsert(new_month)
-    inv = _file_inventory(t.path)
+    inv = _file_inventory(t)
     assert set(inv) == set(before) | {"month=2024-04"}
     for rel in before:
         assert inv[rel] == before[rel], f"{rel} disturbed by new-partition insert"
@@ -953,8 +941,8 @@ def test_pruned_upsert_new_partition_and_partition_delete(spark, tmp_path):
         "k long, month string, attr string, is_del boolean",
     )
     t.upsert(wipe, delete_col="is_del")
-    inv2 = _file_inventory(t.path)
-    assert "month=2024-01" not in inv2, "emptied partition dir must go"
+    inv2 = _file_inventory(t)
+    assert "month=2024-01" not in inv2, "emptied partition must keep no file"
     assert inv2["month=2024-02"] == inv["month=2024-02"]
     assert inv2["month=2024-03"] == inv["month=2024-03"]
     assert inv2["month=2024-04"] == inv["month=2024-04"]
@@ -962,9 +950,10 @@ def test_pruned_upsert_new_partition_and_partition_delete(spark, tmp_path):
 
 
 def test_pruned_upsert_time_travel_hardlink_snapshot(spark, tmp_path):
-    """With retention on, a pruned upsert snapshots the FULL pre-state via
-    hardlinks (metadata-only): time travel reads the old values, restore
-    round-trips, and the snapshot survives the touched-dir removal."""
+    """With retention on, a pruned upsert keeps the FULL pre-state as a
+    retained version whose files are never copied or moved: time travel
+    reads the old values, restore round-trips, and the retained version
+    survives the replacement of the touched partition's files."""
     t = _mk_partitioned(spark, tmp_path, retain_versions=2)
     pre = {(r["k"], r["month"]): r["attr"] for r in t.read().collect()}
 
@@ -1029,7 +1018,7 @@ def test_pruned_upsert_occ_conflict_cleans_tmp(spark, tmp_path):
             [(100, "2024-03", "later")], "k long, month string, attr string"
         )
     )
-    before = _file_inventory(t.path)
+    before = _file_inventory(t)
     with pytest.raises(ConcurrentWriteError):
         t.upsert(
             spark.createDataFrame(
@@ -1037,7 +1026,7 @@ def test_pruned_upsert_occ_conflict_cleans_tmp(spark, tmp_path):
             ),
             expect_version=v0,
         )
-    assert _file_inventory(t.path) == before
+    assert _file_inventory(t) == before
     parent = os.path.dirname(t.path)
     assert [d for d in os.listdir(parent) if "__tmp_" in d] == []
 
@@ -1058,11 +1047,15 @@ def _rows(df) -> list[str]:
 
 def _assert_reads_as_inferred(spark, got, path, recursive=True):
     """``got`` has the schema and rows of Spark's own inference over
-    ``path`` (the read that ``ManagedParquetTable.read`` made before)."""
-    reader = spark.read
-    if recursive:
-        reader = reader.option("recursiveFileLookup", "true")
-    inferred = reader.parquet(path)
+    ``path``, or over a managed table's live files when ``path`` is the
+    table (its dir also holds the files of replaced versions)."""
+    if isinstance(path, ManagedParquetTable):
+        inferred = spark.read.option("basePath", path.path).parquet(*path.files())
+    else:
+        reader = spark.read
+        if recursive:
+            reader = reader.option("recursiveFileLookup", "true")
+        inferred = reader.parquet(path)
     assert got.schema == inferred.schema
     assert _rows(got) == _rows(inferred)
 
@@ -1071,17 +1064,17 @@ def test_footer_schema_overwrite_then_append(spark, tmp_path):
     t = ManagedParquetTable(spark, str(tmp_path / "t"))
     t.overwrite(spark.createDataFrame([("a", 1)], "k string, v long"))
     t.append(spark.createDataFrame([("b", 2), ("c", None)], "k string, v long"))
-    _assert_reads_as_inferred(spark, t.read(), t.path)
+    _assert_reads_as_inferred(spark, t.read(), t)
     assert len(_rows(t.read())) == 3
 
 
 def test_footer_schema_empty_upsert(spark, tmp_path, base_rows):
     t = ManagedParquetTable(spark, str(tmp_path / "t"), keys=["key"], sequence_by="seq")
     t.upsert(_df(spark, []))  # first write of an empty batch
-    _assert_reads_as_inferred(spark, t.read(), t.path)
+    _assert_reads_as_inferred(spark, t.read(), t)
     t.upsert(_df(spark, base_rows))
     t.upsert(_df(spark, []))
-    _assert_reads_as_inferred(spark, t.read(), t.path)
+    _assert_reads_as_inferred(spark, t.read(), t)
     assert len(_rows(t.read())) == 3
 
 
@@ -1095,16 +1088,16 @@ def test_footer_schema_merge_schema_widening(spark, tmp_path):
         ),
         merge_schema=True,
     )
-    _assert_reads_as_inferred(spark, t.read(), t.path)
+    _assert_reads_as_inferred(spark, t.read(), t)
     assert "score" in t.read().columns
 
 
 def test_footer_schema_partitioned_table_falls_back(spark, tmp_path):
     t = _mk_partitioned(spark, tmp_path)
     got = t.read()
-    # partition discovery types `month` from the directory names, which
-    # only Spark's inference does; recursive lookup would drop it
-    _assert_reads_as_inferred(spark, got, t.path, recursive=False)
+    # the footer schema lacks `month`: partition discovery types it from
+    # the files' directory names, as Spark's inference does
+    _assert_reads_as_inferred(spark, got, t)
     assert "month" in got.columns
 
 
@@ -1153,7 +1146,7 @@ def test_footer_schema_column_types(spark, tmp_path):
     t = ManagedParquetTable(spark, str(tmp_path / "t"))
     t.overwrite(df)
     got = t.read()
-    _assert_reads_as_inferred(spark, got, t.path)
+    _assert_reads_as_inferred(spark, got, t)
     assert dict(got.dtypes)["ntz"] == "timestamp_ntz"
 
 
@@ -1281,3 +1274,71 @@ def test_footer_max_reads_launch_no_job(spark, tmp_path):
     got = spark.range(1).select(ts.alias("ts"), k.alias("k")).collect()[0]
     want = t.read().agg(F.max("ts"), F.max("k")).collect()[0]
     assert (got["ts"], got["k"]) == tuple(want)
+
+
+# ---------------------------------------------------------------------------
+# the commit log: readers take an entry's files, never the directory
+# ---------------------------------------------------------------------------
+
+
+def test_scan_planned_before_commit_reads_pre_commit_rows(spark, tmp_path):
+    """At retain_versions=0 a scan planned before a commit and collected
+    after it still reads the pre-commit rows: the post-commit vacuum
+    keeps the files of the entry it replaced. An explicit vacuum(0)
+    removes them, leaving only the current files on disk."""
+    import os
+
+    t = ManagedParquetTable(spark, str(tmp_path / "t"))
+    t.overwrite(spark.createDataFrame([(1,), (2,)], "k long"))
+    t.overwrite(spark.createDataFrame([(3,)], "k long"))
+    planned = t.read()
+    t.overwrite(spark.createDataFrame([(4,), (5,)], "k long"))
+    assert sorted(r["k"] for r in planned.collect()) == [3]
+    assert sorted(r["k"] for r in t.read().collect()) == [4, 5]
+    assert t.history() == []
+
+    assert t.vacuum(0) == 1
+    on_disk = {
+        os.path.join(root, f)
+        for root, _dirs, names in os.walk(t.path)
+        if not root.endswith(os.sep + "_log")
+        for f in names
+    }
+    assert on_disk == set(t.files())
+
+
+def test_read_of_many_live_files_launches_no_job(spark, tmp_path):
+    """A read takes the newest entry's file list and the footer schema:
+    no listing job even for more files than Spark lists serially by
+    default (32 paths)."""
+    t = ManagedParquetTable(spark, str(tmp_path / "t"))
+    t.overwrite(spark.range(0, 70, numPartitions=7))
+    for i in range(33):
+        t.append(spark.range(100 + i, 101 + i, numPartitions=1))
+    assert len(t.files()) >= 40
+    before = _jobs(spark)
+    df = t.read()
+    assert _jobs(spark) - before == 0
+    assert df.count() == t.rows() == 103
+
+
+def test_pruned_upsert_takes_touched_files_from_the_log(spark, tmp_path):
+    """A partition-pruned upsert finds the touched partitions' files in
+    the log and reads them with the footer schema: two jobs for the
+    touched values (the distinct's shuffle and its collect), two for
+    the staged merge — no schema-inference job for the partitioned
+    read and no ``input_file_name`` collect asking Spark which files
+    the pruned scan reads (7 jobs before the commit log)."""
+    t = _mk_partitioned(spark, tmp_path)
+    updates = spark.createDataFrame(
+        [(k, "2024-02", f"u{k}") for k in range(10)],
+        "k long, month string, attr string",
+    )
+    before = _jobs(spark)
+    t.upsert(updates)
+    assert _jobs(spark) - before == 4
+    state = {(r["k"], r["month"]): r["attr"] for r in t.read().collect()}
+    assert {v for (k, m), v in state.items() if m == "2024-02"} == {
+        f"u{k}" for k in range(10)
+    }
+    assert len(state) == 2 * 6 + 10

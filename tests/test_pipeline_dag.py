@@ -133,9 +133,10 @@ def test_resolving_gated_view_launches_no_job(spark, tmp_path, policy):
 
 
 def test_fail_view_aborts_cdc_write_before_commit(spark, tmp_path):
-    """A FAIL expectation on a CDC flow's source aborts the staged write:
-    the target keeps its rows and version, no intent journal or stage dir
-    is left, and the failed run logs no expectation rows."""
+    """A FAIL expectation on a CDC flow's source aborts the staged write
+    before the log-entry create: the target keeps its rows and version,
+    no stage dir or file outside the log is left, and the failed run
+    logs no expectation rows."""
     rows = [(1, 1, "a"), (2, 1, "b")]
     p = Pipeline(spark, str(tmp_path / "p"))
 
@@ -156,7 +157,13 @@ def test_fail_view_aborts_cdc_write_before_commit(spark, tmp_path):
         p.run()
     assert sorted(map(tuple, t.read().collect())) == state
     assert t.version() == version
-    assert not os.path.exists(t._intent_path())
+    on_disk = {
+        os.path.join(root, f)
+        for root, _dirs, names in os.walk(t.path)
+        if not root.endswith(os.sep + "_log")
+        for f in names
+    }
+    assert on_disk == set(t.files())
     assert glob.glob(f"{t.path}.__tmp_*") == []
     assert {r["run_id"] for r in p.event_log().collect()} == {1}
 

@@ -1,12 +1,20 @@
-"""Regenerate PLANS.md: formatted physical plans for representative
-queries, with a note on what each plan must show. Run from the repo root:
+"""Formatted physical plans (`.explain("formatted")`). Run from the repo
+root, in one of two modes:
 
     python tools/dump_plans.py [--sf-dir DIR]
+    python tools/dump_plans.py --round ROUND --suffix SUFFIX [NAME ...]
 
-These are the `.explain("formatted")` artifacts backing the claims in
-OPERATORS.md §Performance invariants — the plan-guard tests in
-tests/test_plans.py assert the same properties mechanically; this file
-is the human-readable version.
+The first regenerates PLANS.md: the showcase queries below, each with a
+note on what its plan must show. These back the claims in OPERATORS.md
+§Performance invariants — the plan-guard tests in tests/test_plans.py
+assert the same properties mechanically; PLANS.md is the human-readable
+version.
+
+The second writes the full plan of each named query (default: the bench
+HEADLINE set) to plans/<ROUND>/<NAME>_<SUFFIX>.txt, e.g. ``--round r10
+--suffix before``: the plans an optimization's claims are judged against
+(Exchange count, join strategy, PushedFilters, BatchEvalPython nodes).
+Both modes read ``--sf-dir``; pass the bench's scale for the second.
 """
 
 from __future__ import annotations
@@ -269,7 +277,15 @@ SHOWCASE = [
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.001")
+    ap.add_argument("--round", help="capture into plans/ROUND/ instead of PLANS.md")
+    ap.add_argument("--suffix", help="file-name suffix for --round, e.g. before")
+    ap.add_argument("names", nargs="*", help="queries for --round")
     args = ap.parse_args()
+    if bool(args.round) != bool(args.suffix) or (args.names and not args.round):
+        ap.error("--round and --suffix go together, and names need them")
+    if args.round:
+        _capture(args.sf_dir, args.round, args.suffix, args.names)
+        return
     spark = get_spark("plan-dump", cpus=8, shuffle_partitions=8)
     qs = registry.all_queries()
 
@@ -282,12 +298,7 @@ def main() -> None:
         "mechanically.\n",
     ]
     for name, claim in SHOWCASE:
-        df = qs[name](spark, args.sf_dir)
-        plan = df._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"
-            )
-        )
+        plan = _formatted(spark, qs[name](spark, args.sf_dir))
         # keep the operator tree + the first details; drop the long tail of
         # per-operator field dumps beyond what the claims reference
         tree, _, details = plan.partition("\n\n")
@@ -296,6 +307,33 @@ def main() -> None:
         out.append("```\n" + tree.strip() + "\n\n" + detail_head + "\n```\n")
     Path(_REPO, "PLANS.md").write_text("\n".join(out))
     print(f"wrote PLANS.md ({len(SHOWCASE)} plans)")
+    spark.stop()
+
+
+def _formatted(spark, df) -> str:
+    return df._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    )
+
+
+def _capture(sf_dir: str, round_name: str, suffix: str, names: list[str]) -> None:
+    """Full plans of ``names`` (default: the bench HEADLINE set) into
+    plans/<round_name>/, on a session of the bench's width."""
+    if not names:
+        import bench
+
+        names = list(bench.HEADLINE)
+    out_dir = Path(_REPO) / "plans" / round_name
+    out_dir.mkdir(parents=True, exist_ok=True)
+    spark = get_spark(f"plan-capture-{round_name}")
+    qs = registry.all_queries()
+    for name in names:
+        try:
+            plan = _formatted(spark, qs[name](spark, sf_dir))
+        except Exception as exc:  # noqa: BLE001
+            plan = f"PLAN CAPTURE FAILED: {exc!r}\n"
+        (out_dir / f"{name}_{suffix}.txt").write_text(plan)
+        print(f"captured {name}_{suffix} ({len(plan)} chars)")
     spark.stop()
 
 
