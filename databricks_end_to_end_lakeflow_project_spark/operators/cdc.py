@@ -20,13 +20,13 @@ The result is staged as new files and committed by one entry in the
 table's commit log (`ManagedParquetTable`), Delta's commit point.
 
 Scale notes (100 TB): the winner-per-key plan is ONE shuffle on the
-business key (same cost class as Delta MERGE's join). The rewrite cost is
-full-table here; a real deployment bounds it by partitioning the table
-(``partition_by``) so only partitions containing updated keys rewrite —
-`upsert` prunes untouched partitions when the table is partitioned by a
-column derivable from the keys, and the log carries the untouched files
-over. Updates are usually ≪ target, so the update side broadcasts under
-AQE automatically.
+business key (same cost class as Delta MERGE's join); it is a union and a
+window, so nothing is broadcast. It runs over the batch and the files
+`upsert` picks from the log: every live file, or — when the table is
+partitioned by columns that are all in the key — only the files of the
+partitions the batch touches, and the commit carries every other file
+over. Partitioning the table (``partition_by``) so is what bounds the
+rewrite below the whole table.
 """
 
 from __future__ import annotations
@@ -205,9 +205,15 @@ class ManagedParquetTable:
     a snapshot pass ``expect_version=table.version()``; if another writer
     committed in between, the commit raises :class:`ConcurrentWriteError`
     instead of silently clobbering — read-modify-write cycles (MERGE, SCD
-    flows) retry from a fresh read, exactly Delta's protocol.
-    Unconditional writes still serialize through the lock (last-wins,
-    never torn). Only the moves and the entry create hold the lock.
+    flows) retry from a fresh read, exactly Delta's protocol. Blind
+    writes (``overwrite``, ``append`` and ``restore`` with no
+    ``expect_version``), whose content does not come from the table,
+    serialize through the lock and are never torn. Read-modify-write
+    commits (`upsert`, `optimize`, `delete_where`, `scd2_apply`) are
+    conditional on the entry they read even when the caller passes no
+    version: a commit landing between their read and theirs makes them
+    raise instead of dropping its rows. Only the moves and the entry
+    create hold the lock.
 
     Read schema: Delta takes it from the log; here ``read`` takes the
     schema Spark stored in the footer of the entry's first data file by
@@ -262,14 +268,19 @@ class ManagedParquetTable:
         with open(os.path.join(self._log_dir(), f"{n}.json")) as fh:
             return {a["path"]: a["rows"] for a in json.load(fh)["add"]}
 
+    def _head(self) -> tuple[int, dict[str, int]]:
+        """The newest entry, read once: the table's version (commits so
+        far) and the files it names; ``(0, {})`` for a table with none."""
+        while entries := self._entries():
+            with contextlib.suppress(FileNotFoundError):  # vacuumed meanwhile
+                return entries[-1] + 1, self._named(entries[-1])
+        return 0, {}
+
     def _live(self, version: int | None = None) -> dict[str, int]:
         """The files of ``version`` (default: the newest entry; {} for a
         table with none). Raises ValueError for a version not retained."""
         if version is None:
-            while entries := self._entries():
-                with contextlib.suppress(FileNotFoundError):  # vacuumed meanwhile
-                    return self._named(entries[-1])
-            return {}
+            return self._head()[1]
         if version in (*self.history(), *self._entries()[-1:]):
             with contextlib.suppress(FileNotFoundError):
                 return self._named(version)
@@ -608,11 +619,28 @@ class ManagedParquetTable:
                truncate_col: str | None = None,
                merge_schema: bool = False,
                expect_version: int | None = None) -> None:
-        """Latest-wins keyed upsert (reference S8). First write degrades to
-        a plain create (deduped to one row per key; flagged deletes, if
-        ``delete_col`` is given, simply never materialize; truncate
-        markers, if ``truncate_col`` is given, discard same-batch changes
-        older than the truncate's sequence).
+        """Latest-wins keyed upsert (reference S8), one path: read the
+        newest log entry, pick the files the merge must read, merge them
+        with the batch (`merge_upsert_plan`), and commit the result plus
+        every file not picked, conditional on the entry read — or on
+        ``expect_version`` when the caller passes one. Another writer's
+        commit in between raises :class:`ConcurrentWriteError` instead
+        of losing that writer's rows.
+
+        The pick:
+        - no file when the table has none: the first write is the merge
+          over an empty target, so the batch dedups to one row per key,
+          flagged deletes (``delete_col``) never materialize, and
+          truncate markers (``truncate_col``) discard the batch's changes
+          older than them;
+        - the files of the partitions the batch touches when every
+          partition column is in the key (so a row can never move
+          between partitions — Delta's pruned-MERGE precondition), with
+          neither ``merge_schema`` nor ``truncate_col`` (a truncate is a
+          whole-table directive). The touched values come off the batch
+          by one distinct collect; a batch that touches none commits
+          nothing;
+        - otherwise every file.
 
         ``merge_schema=True`` is Delta's ``mergeSchema`` analogue (the
         schema-drift companion to the bronze layer's ``_rescued_data``,
@@ -620,138 +648,73 @@ class ManagedParquetTable:
         table, null-filled for untouched rows. Without it, unknown
         update columns are dropped (Delta's default strictness). Column
         removals never propagate — existing columns are null-filled on
-        the update side either way.
-
-        PARTITION PRUNING: when the table is partitioned and every
-        partition column is part of the merge key (so a row can never
-        move between partitions — Delta's documented pruned-MERGE
-        precondition), the merge reads ONLY the files of the partitions
-        the updates batch touches and the commit replaces only those;
-        see `_upsert_pruned`. Otherwise (partition column not in the key,
-        ``merge_schema``, or ``truncate_col`` — a truncate is a
-        whole-table directive) the merge falls back to the full-table
-        rewrite, trading cost for unconditional correctness."""
+        the update side either way."""
         keys = list(keys or self.keys)
         sequence_by = sequence_by or self.sequence_by
         if not keys:
             raise ValueError("upsert requires business keys")
-        if not self.exists():
-            if truncate_col:
-                if not sequence_by:
-                    raise ValueError("truncate_col requires sequence_by")
-                markers = updates.filter(
-                    F.coalesce(F.col(truncate_col), F.lit(False))
-                )
-                updates = _apply_truncates(
-                    updates.filter(
-                        ~F.coalesce(F.col(truncate_col), F.lit(False))
-                    ).drop(truncate_col),
-                    sequence_by, truncate_col, markers,
-                )
-            first = (
-                latest_by_key(updates, keys, [sequence_by])
-                if sequence_by
-                else updates.dropDuplicates(keys)
-            )
-            if delete_col:
-                first = first.filter(
-                    ~F.coalesce(F.col(delete_col), F.lit(False))
-                ).drop(delete_col)
-            self.overwrite(first, expect_version=expect_version)
-            return
+        version, live = self._head()
+        picked = set(live)
         if (
-            self.partition_by
+            live
+            and self.partition_by
             and not merge_schema
             and not truncate_col
             and set(self.partition_by) <= set(keys)
-            and all(p in updates.columns for p in self.partition_by)
         ):
-            self._upsert_pruned(
-                updates,
-                keys,
-                sequence_by,
-                delete_col=delete_col,
-                expect_version=expect_version,
+            # cast to strings as the writer casts them into directory names
+            touched = {
+                tuple(None if v in (None, "") else v for v in r)
+                for r in updates.select(
+                    *[F.col(p).cast("string") for p in self.partition_by]
+                ).distinct().collect()
+            }
+            if not touched:
+                return  # empty batch: nothing to merge, no commit
+            picked = {f for f in live if _partition_values(f) in touched}
+        extra = [c for c in (delete_col, truncate_col) if c]
+        table = (
+            read_spark_parquet(
+                self.spark, self.path, files=[os.path.join(self.path, f) for f in live]
             )
-            return
-        target = self.read()
+            if live
+            else updates.drop(*extra)
+        )
+        if not picked:
+            target = table.limit(0)
+        elif len(picked) == len(live):
+            target = table
+        else:  # the table's schema: partition types inferred over every file
+            target = (
+                self.spark.read.schema(table.schema)
+                .option("basePath", self.path)
+                .parquet(*sorted(os.path.join(self.path, f) for f in picked))
+            )
         if merge_schema:
-            extra = [c for c in (delete_col, truncate_col) if c]
             utypes = dict(updates.dtypes)
             for c in updates.columns:
                 if c not in target.columns and c not in extra:
-                    # widen lazily; the single merge overwrite persists it
+                    # widen lazily; the merge's commit persists it
                     target = target.withColumn(c, F.lit(None).cast(utypes[c]))
         merged = merge_upsert_plan(
             target, updates, keys, sequence_by, delete_col=delete_col,
             truncate_col=truncate_col,
         )
-        # conditional on the version the merge READ (optimistic MERGE):
-        # a concurrent commit between read and publish raises instead of
-        # clobbering, matching Delta's conflict detection
-        self.overwrite(merged, expect_version=expect_version)
-
-    def _upsert_pruned(
-        self,
-        updates: DataFrame,
-        keys: Sequence[str],
-        sequence_by: str | None,
-        *,
-        delete_col: str | None = None,
-        expect_version: int | None = None,
-    ) -> None:
-        """Partition-pruned MERGE — the `plans/gold.py` fact-builder
-        contract ("partition the fact target by a date column for pruned
-        rewrites"), valid because `upsert` routes here only when the
-        partition columns are part of the merge key, so a key's rows can
-        never move between partitions and a partition the updates batch
-        does not name is provably unaffected.
-
-        Cost shape (the point at 100 TB): the touched partition values
-        come off the updates batch in one job (bounded — a micro-batch
-        touches a handful of dates), cast to strings as the writer casts
-        them into directory names. The log already knows which files sit
-        in those partitions (a file's partition values are its unescaped
-        hive path), so the merge scans only them (zero read elsewhere),
-        the merge plan runs over that slice only (one shuffle on the
-        grain key, sized by the slice, not the table), and the commit
-        replaces only them: every other file carries over to the new
-        entry untouched, and the old files stay named by the retained
-        entries, so time travel costs no copy."""
-        touched = {
-            tuple(None if v in (None, "") else v for v in r)
-            for r in updates.select(
-                *[F.col(p).cast("string") for p in self.partition_by]
-            ).distinct().collect()
-        }
-        if not touched:
-            return  # empty batch: nothing to merge, no commit
-
-        def in_touched(rel: str) -> bool:
-            # Spark writes a NULL or empty value as the default partition
-            vals = [
-                None if v == "__HIVE_DEFAULT_PARTITION__" else unquote(v)
-                for v in (d.split("=", 1)[1] for d in rel.split("/")[:-1])
-            ]
-            return tuple(vals) in touched
-
-        table = self.read()
-        hit = [os.path.join(self.path, f) for f in self._live() if in_touched(f)]
-        target_slice = (
-            self.spark.read.schema(table.schema)
-            .option("basePath", self.path)
-            .parquet(*hit)
-            if hit
-            else table.limit(0)
-        )
-        merged = merge_upsert_plan(
-            target_slice, updates, keys, sequence_by, delete_col=delete_col
-        )
         self._publish(
             self._stage(merged),
-            expect_version,
-            carry=lambda live: {f: n for f, n in live.items() if not in_touched(f)},
+            version if expect_version is None else expect_version,
+            carry=lambda now: {f: n for f, n in now.items() if f not in picked},
         )
+
+
+def _partition_values(rel: str) -> tuple[str | None, ...]:
+    """A table file's partition values, from its hive-style path relative
+    to the table dir; Spark writes a NULL or empty value as the default
+    partition."""
+    return tuple(
+        None if v == "__HIVE_DEFAULT_PARTITION__" else unquote(v)
+        for v in (d.split("=", 1)[1] for d in rel.split("/")[:-1])
+    )
 
 
 def scd2_from_history(
@@ -849,6 +812,11 @@ def scd2_apply(
     (tests/test_streaming.py); under arbitrary shuffling of history it
     is the documented divergence.
 
+    The batch's sequence ties resolve by ``tiebreakers`` before the
+    union, as in the one-shot build; the replayed versions carry none.
+    The commit is conditional on the version read, so a commit landing
+    in between raises :class:`ConcurrentWriteError`.
+
     Scale notes: rewrite cost is one shuffle over (current table +
     batch), the same cost class as Delta MERGE on an unpartitioned
     table; partition the table on a key-derived column to bound it.
@@ -856,7 +824,10 @@ def scd2_apply(
     updates = updates.select(*keys, sequence_by,
                              *[c for c in updates.columns
                                if c not in {*keys, sequence_by}])
+    version = table.version()
     if table.exists():
+        if tiebreakers:
+            updates = latest_by_key(updates, [*keys, sequence_by], [], tiebreakers)
         existing = table.read()
         attrs = [c for c in existing.columns
                  if c not in {*keys, "__START_AT", "__END_AT"}]
@@ -869,7 +840,7 @@ def scd2_apply(
         history = scd2_from_history(updates, keys, sequence_by)
     else:
         history = scd2_from_history(updates, keys, sequence_by, tiebreakers)
-    table.overwrite(history)
+    table.overwrite(history, expect_version=version)
 
 
 def table_changes(
@@ -1123,13 +1094,16 @@ def delete_where(table: "ManagedParquetTable", condition) -> int:
     follow it with ``vacuum(0)`` so purged rows leave no recoverable
     version. On a partitioned table Catalyst prunes the scan, but the
     rewrite here is whole-table; a production variant rewrites only the
-    affected partitions' files (the pruned MERGE's carry-over)."""
+    affected partitions' files (the pruned MERGE's carry-over). The
+    commit is conditional on the version read, so a commit landing in
+    between raises :class:`ConcurrentWriteError`."""
     cond = F.expr(condition) if isinstance(condition, str) else condition
     hit = F.coalesce(cond, F.lit(False))
+    version = table.version()
     df = table.read()
     n_deleted = df.agg(F.count_if(hit)).collect()[0][0]
     if n_deleted:
-        table.overwrite(df.filter(~hit))
+        table.overwrite(df.filter(~hit), expect_version=version)
     return n_deleted
 
 

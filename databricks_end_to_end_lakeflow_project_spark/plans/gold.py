@@ -204,9 +204,7 @@ def build_dim(
         batch = new if old is None else old.unionByName(new.select(*old.columns))
 
         # 5. latest-wins upsert on the business key
-        target.keys = cfg.business_keys
-        target.sequence_by = cfg.cdc_col
-        target.upsert(batch)
+        target.upsert(batch, cfg.business_keys, cfg.cdc_col)
     finally:
         # released whether or not the upsert committed, so a multi-dim
         # pipeline replay or a failed build holds no cache entry
@@ -278,7 +276,5 @@ def build_fact(
     keep = [*cfg.grain_keys, *cfg.measures, cfg.cdc_col, *surrogate_cols]
     batch = out.select(*keep).withColumn("update_date", _clock_col(clock))
 
-    target.keys = cfg.grain_keys
-    target.sequence_by = cfg.cdc_col
-    target.upsert(batch)
+    target.upsert(batch, cfg.grain_keys, cfg.cdc_col)
     return batch

@@ -15,6 +15,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from databricks_end_to_end_lakeflow_project_spark.session import PINNED_CONF
+
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 _QUERIES: dict[str, QueryFn] = {}
@@ -81,14 +83,14 @@ def _collect() -> None:
 
 
 def _pin_session(fn: QueryFn) -> QueryFn:
-    """Pin the runtime confs correctness depends on, whatever session the
-    caller (driver, test, bench) hands us: UTC so timestamp values match
-    the UTC-naive DuckDB oracle, and ANSI on (the semantics every oracle
-    was written against)."""
+    """Pin `session.PINNED_CONF` on whatever session the caller (driver,
+    test, bench) hands us: the UTC timezone and ANSI correctness depends
+    on, and the partition-discovery threshold that keeps a managed-table
+    read free of a listing job."""
 
     def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-        spark.conf.set("spark.sql.ansi.enabled", "true")
+        for k, v in PINNED_CONF:
+            spark.conf.set(k, v)
         return fn(spark, sf_dir)
 
     wrapped.__name__ = getattr(fn, "__name__", "query")
@@ -99,8 +101,9 @@ def _pin_session(fn: QueryFn) -> QueryFn:
 def all_queries() -> dict[str, QueryFn]:
     """All registered queries, each wrapped by :func:`_pin_session`.
 
-    NOTE: invoking any returned callable SETS ``spark.sql.session.timeZone
-    = UTC`` and ``spark.sql.ansi.enabled = true`` on the caller's session
+    NOTE: invoking any returned callable SETS `session.PINNED_CONF`
+    (``spark.sql.session.timeZone = UTC``, ``spark.sql.ansi.enabled =
+    true``, the partition-discovery threshold) on the caller's session
     and deliberately does NOT restore them — the returned DataFrame is
     lazy, so restoring before the caller's action would evaluate the plan
     under the wrong confs. Embedders running these queries inside a

@@ -16,6 +16,19 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
+# The runtime confs every registry query pins on whatever session it is
+# handed (`registry._pin_session`) and every cloned session copies from
+# its caller: UTC, so timestamp values match the UTC-naive DuckDB oracle;
+# ANSI, the semantics every oracle was written against; and the
+# partition-discovery threshold `get_spark` sets, because a managed table
+# is read as the explicit file list of its log entry and Spark lists
+# more paths than the threshold (default 32) with a Spark job.
+PINNED_CONF = (
+    ("spark.sql.session.timeZone", "UTC"),
+    ("spark.sql.ansi.enabled", "true"),
+    ("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024"),
+)
+
 
 def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
     """Driver heap when ``SPARK_GRAFT_DRIVER_MEM`` is unset:
@@ -114,12 +127,12 @@ def cloned_session(spark: SparkSession, conf: dict[str, str]) -> SparkSession:
     never observe each other's conf; ``spark.conf.set`` inside a query body
     is banned (tests/test_plans.py guard) and this is the replacement.
 
-    The correctness-pinned confs (UTC timezone, ANSI) are copied from the
-    caller so plans built on the clone hash-match the oracle exactly like
-    plans built on the original.
+    The pinned confs (`PINNED_CONF`) are copied from the caller so plans
+    built on the clone hash-match the oracle exactly like plans built on
+    the original.
     """
     s = spark.newSession()
-    for k in ("spark.sql.session.timeZone", "spark.sql.ansi.enabled"):
+    for k, _ in PINNED_CONF:
         s.conf.set(k, spark.conf.get(k))
     # the events-table reader pins this on whatever session reads it, but
     # carrying the caller's value over avoids a re-probe on the clone

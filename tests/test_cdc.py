@@ -322,6 +322,37 @@ def test_scd2_incremental_equals_one_shot(spark, tmp_path):
     assert ("A", "w", 5, 6) in got and ("A", "y", 4, 5) in got
 
 
+@pytest.mark.parametrize("order", ["as_written", "reversed"])
+def test_scd2_apply_resolves_batch_ties_by_tiebreakers(spark, tmp_path, order):
+    """Once the version table exists, a batch whose rows tie on the
+    sequence still resolves by the tiebreakers, as the one-shot build
+    does, whatever the batch's row order."""
+    from databricks_end_to_end_lakeflow_project_spark.operators.cdc import (
+        ManagedParquetTable,
+        scd2_apply,
+        scd2_from_history,
+    )
+
+    schema = "k string, seq int, tb int, attr string"
+    first = [("A", 1, 0, "x")]
+    batch = [("A", 2, 2, "new"), ("A", 2, 1, "old")]
+    if order == "reversed":
+        batch.reverse()
+    t = ManagedParquetTable(spark, str(tmp_path / "scd2"))
+    scd2_apply(t, spark.createDataFrame(first, schema), ["k"], "seq", ["tb"])
+    scd2_apply(t, spark.createDataFrame(batch, schema), ["k"], "seq", ["tb"])
+
+    def versions(df):
+        return {(r["k"], r["attr"], r["__START_AT"], r["__END_AT"]) for r in df.collect()}
+
+    one_shot = scd2_from_history(
+        spark.createDataFrame(first + batch, schema), ["k"], "seq", ["tb"]
+    )
+    assert versions(t.read()) == versions(one_shot) == {
+        ("A", "x", 1, 2), ("A", "new", 2, None)
+    }
+
+
 def test_scd2_pipeline_flow(spark, tmp_path):
     """stored_as_scd_type=2 in the DAG runtime maintains a version table."""
     from databricks_end_to_end_lakeflow_project_spark.pipeline.dag import Pipeline
@@ -657,6 +688,113 @@ def test_occ_concurrent_threads_one_wins(spark, tmp_path):
     rows = {r["k"]: r["v"] for r in t.read().collect()}
     assert rows[1] == "base" and rows[2] in ("A", "B")
     assert t.version() == v0 + 1
+
+
+def _commit_when_staging(monkeypatch, other_commit):
+    """Run ``other_commit`` (another writer's) when the next stage write
+    starts: after the caller read the table, before it commits."""
+    stage = ManagedParquetTable._stage
+    pending = [other_commit]
+
+    def staged(self, df):
+        if pending:
+            pending.pop()()
+        return stage(self, df)
+
+    monkeypatch.setattr(ManagedParquetTable, "_stage", staged)
+
+
+def _stage_dirs(t) -> list[str]:
+    import os
+
+    return [d for d in os.listdir(os.path.dirname(t.path)) if "__tmp_" in d]
+
+
+@pytest.mark.parametrize("layout", ["unpartitioned", "partitioned"])
+def test_upsert_conflicts_with_commit_between_read_and_commit(
+    spark, tmp_path, monkeypatch, layout
+):
+    """An upsert commits conditional on the log entry it read, with no
+    ``expect_version`` from the caller: another writer's commit landing
+    between its read and its commit makes it raise, and that writer's
+    rows stay. The key-partitioned table takes the pruned pick: the
+    other writer adds a key to the partition the upsert touches."""
+    from databricks_end_to_end_lakeflow_project_spark.operators.cdc import (
+        ConcurrentWriteError,
+    )
+
+    schema = "k long, month string, attr string"
+    if layout == "partitioned":
+        t = _mk_partitioned(spark, tmp_path)
+    else:
+        t = ManagedParquetTable(spark, str(tmp_path / "t"), keys=["month", "k"])
+        t.upsert(spark.createDataFrame([(1, "2024-02", "p1")], schema))
+    before = {(r["k"], r["month"]): r["attr"] for r in t.read().collect()}
+    v0 = t.version()
+
+    _commit_when_staging(
+        monkeypatch,
+        lambda: t.upsert(spark.createDataFrame([(99, "2024-02", "other")], schema)),
+    )
+    with pytest.raises(ConcurrentWriteError):
+        t.upsert(spark.createDataFrame([(1, "2024-02", "mine")], schema))
+    monkeypatch.undo()
+
+    state = {(r["k"], r["month"]): r["attr"] for r in t.read().collect()}
+    assert state == {**before, (99, "2024-02"): "other"}
+    assert t.version() == v0 + 1
+    assert _stage_dirs(t) == []
+
+
+def test_delete_where_conflicts_with_commit_between_read_and_commit(
+    spark, tmp_path, monkeypatch
+):
+    """delete_where commits conditional on the version it read: a commit
+    landing before its rewrite makes it raise and keeps that commit's
+    rows."""
+    from databricks_end_to_end_lakeflow_project_spark.operators.cdc import (
+        ConcurrentWriteError,
+        delete_where,
+    )
+
+    schema = "k string, seq int, v string"
+    t = ManagedParquetTable(spark, str(tmp_path / "dw"), keys=["k"], sequence_by="seq")
+    t.upsert(spark.createDataFrame([("u1", 1, "a"), ("u2", 1, "b")], schema))
+    _commit_when_staging(
+        monkeypatch, lambda: t.append(spark.createDataFrame([("u3", 1, "c")], schema))
+    )
+    with pytest.raises(ConcurrentWriteError):
+        delete_where(t, "k = 'u2'")
+    monkeypatch.undo()
+
+    assert {r["k"] for r in t.read().collect()} == {"u1", "u2", "u3"}
+    assert _stage_dirs(t) == []
+
+
+def test_scd2_apply_conflicts_with_commit_between_read_and_commit(
+    spark, tmp_path, monkeypatch
+):
+    """scd2_apply commits conditional on the version it read: a commit
+    landing before its rewrite makes it raise and keeps that commit's
+    versions."""
+    from databricks_end_to_end_lakeflow_project_spark.operators.cdc import (
+        ConcurrentWriteError,
+        scd2_apply,
+    )
+
+    t = ManagedParquetTable(spark, str(tmp_path / "scd2"))
+    scd2_apply(t, _scd2_df(spark, [("A", 1, "x")]), ["k"], "seq")
+    _commit_when_staging(
+        monkeypatch,
+        lambda: scd2_apply(t, _scd2_df(spark, [("B", 1, "z")]), ["k"], "seq"),
+    )
+    with pytest.raises(ConcurrentWriteError):
+        scd2_apply(t, _scd2_df(spark, [("A", 2, "y")]), ["k"], "seq")
+    monkeypatch.undo()
+
+    got = {(r["k"], r["attr"], r["__START_AT"], r["__END_AT"]) for r in t.read().collect()}
+    assert got == {("A", "x", 1, None), ("B", "z", 1, None)}
+    assert _stage_dirs(t) == []
 
 
 def test_stale_lock_of_dead_owner_is_broken(spark, tmp_path):
@@ -1320,6 +1458,25 @@ def test_read_of_many_live_files_launches_no_job(spark, tmp_path):
     df = t.read()
     assert _jobs(spark) - before == 0
     assert df.count() == t.rows() == 103
+
+
+def test_registry_read_in_a_default_threshold_session_launches_no_job(spark, tmp_path):
+    """A registry query pins the partition-discovery threshold on the
+    session it is handed (`session.PINNED_CONF`), so in a session left
+    at Spark's default of 32 paths its read of a 40-file table launches
+    no listing job."""
+    from databricks_end_to_end_lakeflow_project_spark.registry import _pin_session
+
+    session = spark.newSession()
+    session.conf.set("spark.sql.sources.parallelPartitionDiscovery.threshold", "32")
+    t = ManagedParquetTable(session, str(tmp_path / "t"))
+    t.overwrite(session.range(0, 40, numPartitions=40))
+    assert len(t.files()) == 40
+    query = _pin_session(lambda s, sf_dir: ManagedParquetTable(s, t.path).read())
+    before = _jobs(spark)
+    df = query(session, "")
+    assert _jobs(spark) - before == 0
+    assert df.count() == 40
 
 
 def test_pruned_upsert_takes_touched_files_from_the_log(spark, tmp_path):

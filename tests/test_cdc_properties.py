@@ -136,18 +136,16 @@ def test_latest_by_key_is_model_argmax(spark, rows):
     assert got == _model_merge({}, rows)
 
 
-@settings(max_examples=6, deadline=None, suppress_health_check=list(HealthCheck))
-@given(data=_rows_and_cuts)
-def test_managed_table_upsert_matches_model(spark, data):
-    """Disk-backed path: ManagedParquetTable.upsert through create + merge +
-    atomic swap reaches the model state and stays there on re-upsert."""
+def _managed_upserts_match_model(spark, data, partition_by=None) -> None:
     rows, cuts = data
     batches = _split(rows, cuts)
     path = os.path.join(
         tempfile.gettempdir(), "lakeflow_prop", f"t_{uuid.uuid4().hex[:8]}"
     )
     try:
-        tbl = ManagedParquetTable(spark, path, keys=["key"], sequence_by="seq")
+        tbl = ManagedParquetTable(
+            spark, path, keys=["key"], sequence_by="seq", partition_by=partition_by
+        )
         model = {}
         for batch in batches:
             tbl.upsert(arrow_frame(spark, batch, SCHEMA))
@@ -159,6 +157,23 @@ def test_managed_table_upsert_matches_model(spark, data):
         import shutil
 
         shutil.rmtree(os.path.dirname(path), ignore_errors=True)
+
+
+@settings(max_examples=6, deadline=None, suppress_health_check=list(HealthCheck))
+@given(data=_rows_and_cuts)
+def test_managed_table_upsert_matches_model(spark, data):
+    """Disk-backed path: ManagedParquetTable.upsert through create + merge +
+    commit reaches the model state and stays there on re-upsert."""
+    _managed_upserts_match_model(spark, data)
+
+
+@settings(max_examples=6, deadline=None, suppress_health_check=list(HealthCheck))
+@given(data=_rows_and_cuts)
+def test_partitioned_upsert_matches_model(spark, data):
+    """The same fold on a table partitioned by its key, so every upsert
+    after the first picks only the touched partitions' files from the
+    log and carries the rest: it reaches the same model state."""
+    _managed_upserts_match_model(spark, data, partition_by=["key"])
 
 
 # -- deletes -----------------------------------------------------------------

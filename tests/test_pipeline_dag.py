@@ -242,6 +242,26 @@ def test_apply_as_truncates_full_snapshot_reload(spark, tmp_path):
     assert got == {("a", 6, "v2"), ("d", 6, "v1")}  # b and stale c are gone
 
 
+def test_first_upsert_applies_truncate_marker(spark, tmp_path):
+    """A first write whose batch carries a truncate marker keeps only the
+    batch's changes at or after the marker's sequence, and stores no
+    marker column."""
+    from databricks_end_to_end_lakeflow_project_spark.operators.cdc import (
+        ManagedParquetTable,
+    )
+
+    t = ManagedParquetTable(spark, str(tmp_path / "tr0"), keys=["k"], sequence_by="seq")
+    t.upsert(spark.createDataFrame(
+        [("a", 1, "v1", False), ("b", 2, "v1", False), (None, 3, None, True),
+         ("c", 3, "v1", False), ("a", 4, "v2", False)],
+        "k string, seq int, v string, trunc boolean"), truncate_col="trunc")
+    got = t.read()
+    assert "trunc" not in got.columns
+    assert {(r["k"], r["seq"], r["v"]) for r in got.collect()} == {
+        ("a", 4, "v2"), ("c", 3, "v1")
+    }
+
+
 def test_truncates_noop_without_markers(spark, tmp_path):
     from databricks_end_to_end_lakeflow_project_spark.operators.cdc import (
         ManagedParquetTable,
