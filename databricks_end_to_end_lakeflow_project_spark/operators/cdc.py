@@ -193,6 +193,12 @@ class ManagedParquetTable:
     or rewritten once named, so nothing ever rolls forward.
     `tests/test_crash_recovery.py` holds the kill-point matrix.
 
+    PROGRESS: an entry also holds a ``txn`` map of {progress id: JSON
+    value}, Delta's ``SetTransaction``. Every commit copies the newest
+    entry's map forward and applies its caller's updates (``append``/
+    ``overwrite`` ``txn=``), so progress commits with the rows it covers;
+    `txn` reads it. An entry written without a map reads as ``{}``.
+
     Readers take an entry's file list and never list the directory,
     which also holds the files of retained entries. The post-commit
     vacuum keeps the files of the retained entries and of the entry the
@@ -263,27 +269,31 @@ class ManagedParquetTable:
             int(n[:-5]) for n in names if n.endswith(".json") and n[:-5].isdigit()
         )
 
-    def _named(self, n: int) -> dict[str, int]:
-        """Relative path → rows of the files entry ``n`` names."""
+    def _entry(self, n: int) -> dict:
+        """Entry ``n`` as written: its ``add``, ``remove`` and ``txn``."""
         with open(os.path.join(self._log_dir(), f"{n}.json")) as fh:
-            return {a["path"]: a["rows"] for a in json.load(fh)["add"]}
+            return json.load(fh)
 
-    def _head(self) -> tuple[int, dict[str, int]]:
-        """The newest entry, read once: the table's version (commits so
-        far) and the files it names; ``(0, {})`` for a table with none."""
+    def _newest(self) -> tuple[int, dict]:
+        """The table's version (commits so far) and its newest entry, read
+        once; ``(0, {})`` for a table with none."""
         while entries := self._entries():
             with contextlib.suppress(FileNotFoundError):  # vacuumed meanwhile
-                return entries[-1] + 1, self._named(entries[-1])
+                return entries[-1] + 1, self._entry(entries[-1])
         return 0, {}
+
+    def txn(self) -> dict:
+        """The newest entry's progress map; ``{}`` for a table with none."""
+        return self._newest()[1].get("txn", {})
 
     def _live(self, version: int | None = None) -> dict[str, int]:
         """The files of ``version`` (default: the newest entry; {} for a
         table with none). Raises ValueError for a version not retained."""
         if version is None:
-            return self._head()[1]
+            return _adds(self._newest()[1])
         if version in (*self.history(), *self._entries()[-1:]):
             with contextlib.suppress(FileNotFoundError):
-                return self._named(version)
+                return _adds(self._entry(version))
         raise ValueError(f"version {version} not retained; available: {self.history()}")
 
     def files(self, version: int | None = None) -> list[str]:
@@ -477,22 +487,26 @@ class ManagedParquetTable:
         stage: str | None,
         expect_version: int | None,
         carry: Callable[[dict[str, int]], dict[str, int]] = lambda live: {},
+        txn: dict | None = None,
     ) -> None:
         """The one publish path. ``stage`` (from `_stage`, or None) holds
         the new files, whose row counts come from their footers before
         the lock is taken; ``carry`` maps the current entry's files to
-        those that stay live. Under the lock the staged files move into
-        the table dir and the next entry is created — the commit point."""
+        those that stay live; ``txn`` updates the copied progress map.
+        Under the lock the staged files move into the table dir and the
+        next entry is created — the commit point."""
         added = spark_parquet_file_rows(stage) if stage else {}
         try:
             with self._commit(expect_version):
-                live = self._live()
+                _, entry = self._newest()
+                live = _adds(entry)
                 files = {**carry(live), **added}
                 for rel in added:
                     dst = os.path.join(self.path, rel)
                     os.makedirs(os.path.dirname(dst), exist_ok=True)
                     os.rename(os.path.join(stage, rel), dst)
-                self._create_entry(files, sorted(set(live) - set(files)))
+                txn = {**entry.get("txn", {}), **(txn or {})}
+                self._create_entry(files, sorted(set(live) - set(files)), txn)
         except (ConcurrentWriteError, TimeoutError):
             if stage:
                 shutil.rmtree(stage, ignore_errors=True)  # abandoned stage
@@ -500,7 +514,7 @@ class ManagedParquetTable:
         if stage:
             shutil.rmtree(stage, ignore_errors=True)  # the writer's markers
 
-    def _create_entry(self, files: dict[str, int], removed: list[str]) -> None:
+    def _create_entry(self, files: dict[str, int], removed: list[str], txn: dict) -> None:
         """Create the next log entry exclusively: write a hidden temp file,
         then hard-link it to ``<n>.json``, which fails if the name exists."""
         log = self._log_dir()
@@ -512,6 +526,7 @@ class ManagedParquetTable:
                 {
                     "add": [{"path": f, "rows": r} for f, r in sorted(files.items())],
                     "remove": removed,
+                    "txn": txn,
                 },
                 fh,
             )
@@ -540,7 +555,7 @@ class ManagedParquetTable:
         doomed = [n for n in entries[:-1] if n < oldest]
         for n in doomed:
             os.remove(os.path.join(log, f"{n}.json"))
-        named = {f for n in entries if n not in doomed for f in self._named(n)}
+        named = {f for n in entries if n not in doomed for f in _adds(self._entry(n))}
         for root, _dirs, names in os.walk(self.path, topdown=False):
             rel = os.path.relpath(root, self.path)
             for f in names:
@@ -573,14 +588,16 @@ class ManagedParquetTable:
 
     # -- commits -------------------------------------------------------------
 
-    def overwrite(self, df: DataFrame, expect_version: int | None = None) -> None:
-        self._publish(self._stage(df), expect_version)
+    def overwrite(self, df: DataFrame, expect_version: int | None = None,
+                  txn: dict | None = None) -> None:
+        self._publish(self._stage(df), expect_version, txn=txn)
 
-    def append(self, df: DataFrame, expect_version: int | None = None) -> None:
+    def append(self, df: DataFrame, expect_version: int | None = None,
+               txn: dict | None = None) -> None:
         """Append commit: the new entry carries every live file over and
         adds the batch's, so one entry create publishes the whole batch —
         partitioned or not, a reader or a crash sees all of it or none."""
-        self._publish(self._stage(df), expect_version, carry=dict)
+        self._publish(self._stage(df), expect_version, carry=dict, txn=txn)
 
     def restore(self, version: int) -> None:
         """Delta `RESTORE TABLE ... TO VERSION AS OF` analogue: commit a
@@ -653,7 +670,8 @@ class ManagedParquetTable:
         sequence_by = sequence_by or self.sequence_by
         if not keys:
             raise ValueError("upsert requires business keys")
-        version, live = self._head()
+        version, entry = self._newest()
+        live = _adds(entry)
         picked = set(live)
         if (
             live
@@ -705,6 +723,11 @@ class ManagedParquetTable:
             version if expect_version is None else expect_version,
             carry=lambda now: {f: n for f, n in now.items() if f not in picked},
         )
+
+
+def _adds(entry: dict) -> dict[str, int]:
+    """Relative path → rows of the files a log entry names."""
+    return {a["path"]: a["rows"] for a in entry.get("add", [])}
 
 
 def _partition_values(rel: str) -> tuple[str | None, ...]:
@@ -812,34 +835,35 @@ def scd2_apply(
     (tests/test_streaming.py); under arbitrary shuffling of history it
     is the documented divergence.
 
-    The batch's sequence ties resolve by ``tiebreakers`` before the
-    union, as in the one-shot build; the replayed versions carry none.
-    The commit is conditional on the version read, so a commit landing
-    in between raises :class:`ConcurrentWriteError`.
+    A batch row beats a replayed version at the same sequence (tag 1
+    over 0, as an update wins a tie in `merge_upsert_plan`); the batch's
+    own ties resolve by ``tiebreakers``, as in the one-shot build. The
+    versions keep no tiebreaker, so one more arrival order diverges: a
+    tie whose LATER row has the SMALLER tiebreaker keeps the later row
+    here and the stored one in the one-shot build. The commit is
+    conditional on the version read, so a commit landing in between
+    raises :class:`ConcurrentWriteError`.
 
     Scale notes: rewrite cost is one shuffle over (current table +
     batch), the same cost class as Delta MERGE on an unpartitioned
     table; partition the table on a key-derived column to bound it.
     """
-    updates = updates.select(*keys, sequence_by,
-                             *[c for c in updates.columns
-                               if c not in {*keys, sequence_by}])
     version = table.version()
     if table.exists():
-        if tiebreakers:
-            updates = latest_by_key(updates, [*keys, sequence_by], [], tiebreakers)
         existing = table.read()
         attrs = [c for c in existing.columns
-                 if c not in {*keys, "__START_AT", "__END_AT"}]
+                 if c not in {*keys, "__START_AT", "__END_AT", *tiebreakers}]
         replay = existing.select(
-            *keys, F.col("__START_AT").alias(sequence_by), *attrs
+            *keys, F.col("__START_AT").alias(sequence_by), *attrs,
+            F.lit(0).alias(_SRC),
+            *[F.lit(None).cast(updates.schema[t].dataType).alias(t)
+              for t in tiebreakers],
         )
-        updates = replay.unionByName(
-            updates.select(*keys, sequence_by, *attrs), allowMissingColumns=False
-        )
-        history = scd2_from_history(updates, keys, sequence_by)
-    else:
-        history = scd2_from_history(updates, keys, sequence_by, tiebreakers)
+        updates = replay.unionByName(updates.select(
+            *keys, sequence_by, *attrs, F.lit(1).alias(_SRC), *tiebreakers
+        ))
+        tiebreakers = [_SRC, *tiebreakers]
+    history = scd2_from_history(updates, keys, sequence_by, tiebreakers)
     table.overwrite(history, expect_version=version)
 
 

@@ -22,6 +22,10 @@ commit point. Each ``run()`` is one incremental batch: re-running after new
 source data arrives upserts the delta (idempotent for unchanged input —
 the reference's `trigger(once=True)` job pattern, T1).
 
+Progress (append watermarks, snapshot counters, run ids) lives in the
+``txn`` map of the commit that writes the rows it covers
+(`ManagedParquetTable.txn`), so a crash keeps both or neither.
+
 Scale notes: views are lazy DataFrames — nothing materializes twice; CDC
 flows shuffle once on the business key; targets are ManagedParquetTables
 which can be partitioned for pruned rewrites.
@@ -41,6 +45,7 @@ from pyspark.sql import types as T
 from databricks_end_to_end_lakeflow_project_spark.operators.cdc import (
     ManagedParquetTable,
     scd2_apply,
+    table_changes,
 )
 from databricks_end_to_end_lakeflow_project_spark.pipeline.expectations import (
     ExpectationResult,
@@ -68,8 +73,8 @@ class _AppendFlow:
 
 def _watermark_lit(saved: dict) -> Column:
     """The literal of a saved append-flow watermark, of the type it was
-    saved from (see `Pipeline._run_append_flows`); a file without a type
-    holds a plain JSON value."""
+    saved from (see `Pipeline._run_append_flows`); a value saved without
+    a type is a plain JSON value."""
     wm, kind = saved["watermark"], saved.get("type")
     if kind == "timestamp":
         return F.timestamp_micros(F.lit(wm))
@@ -116,6 +121,7 @@ class Pipeline:
         self._run_id = 0
         self._lineage: set[tuple[str, str]] = set()
         self._resolve_lock = threading.RLock()
+        self.create_streaming_table(self._EVENT_LOG)
 
     @property
     def cdc_flows(self):
@@ -138,11 +144,11 @@ class Pipeline:
         pipeline and returns a DataFrame (use ``p.read`` inside for
         dependencies — that's how the DAG edges are discovered).
 
-        ``quarantine_to`` names a managed side table: instead of silently
-        dropping expectation violations, each ``run()`` appends them
-        there with ``__failed_rules``/``__dataset``/``__batch_id``
-        audit columns (the DLT quarantine pattern). Requires
-        expectations and a DROP policy."""
+        ``quarantine_to`` names a managed table, declared with the view:
+        instead of silently dropping expectation violations, each
+        ``run()`` appends them there with ``__failed_rules``/
+        ``__dataset``/``__batch_id`` audit columns (the DLT quarantine
+        pattern). Requires expectations and a DROP policy."""
         if quarantine_to and policy is not Policy.DROP:
             raise ValueError("quarantine_to requires Policy.DROP")
 
@@ -153,6 +159,8 @@ class Pipeline:
             self._views[vname] = _View(
                 vname, fn, dict(expectations or {}), policy, quarantine_to
             )
+            if quarantine_to and quarantine_to not in self._tables:
+                self.create_streaming_table(quarantine_to)
             return fn
 
         return deco
@@ -247,15 +255,16 @@ class Pipeline:
         ``create_auto_cdc_from_snapshot_flow`` / apply_changes_from_
         snapshot): the source is a FULL table snapshot each run, with no
         change feed — changes are inferred by diffing against the
-        previous run's snapshot (persisted as a side table).
+        previous run's snapshot, which the target itself holds.
 
-        Type 1 keeps the target equal to the latest snapshot (an atomic
-        swap — the diff only matters for engines with file-level MERGE).
+        Type 1 overwrites the target with each snapshot, with no diff.
         Type 2 maintains ``__START_AT``/``__END_AT`` validity intervals
-        versioned by a persisted per-flow snapshot counter: updates and
-        deletes close the open version; inserts (including re-inserts
-        after a delete) open a new one. Incremental runs reproduce the
-        one-shot `scd2_from_snapshots` fold exactly."""
+        versioned by a per-flow snapshot counter, which each rewrite
+        commits (``snapshot:<source>`` in the target's ``txn`` map):
+        updates and deletes close the open version; inserts (including
+        re-inserts after a delete) open a new one. Incremental runs
+        reproduce the one-shot `scd2_from_snapshots` fold over the
+        committed runs' snapshots exactly."""
         if stored_as_scd_type not in (1, 2):
             raise ValueError("stored_as_scd_type must be 1 or 2")
         if target not in self._tables:
@@ -264,75 +273,48 @@ class Pipeline:
             _SnapshotFlow(target, source, list(keys), stored_as_scd_type)
         )
 
-    def _snapshot_ver_path(self, flow: _SnapshotFlow) -> str:
-        d = os.path.join(self.storage_root, "__snapshot_versions")
-        os.makedirs(d, exist_ok=True)
-        return os.path.join(d, f"{flow.target}__{flow.source}.json")
-
     def _run_snapshot_flows(self) -> None:
-        import json
-
-        from databricks_end_to_end_lakeflow_project_spark.operators.cdc import (
-            table_changes,
-        )
-
         for flow in self._snapshot_flows:
             cur = self.read(flow.source)
-            self._lineage.add((flow.source, flow.target))
-            prev_tbl = ManagedParquetTable(
-                self.spark,
-                os.path.join(self.storage_root, f"{flow.target}__prev_snapshot"),
-            )
-            vpath = self._snapshot_ver_path(flow)
-            ver = 0
-            if os.path.exists(vpath):
-                with open(vpath) as fh:
-                    ver = json.load(fh)["version"]
-            ver += 1
-            prev = prev_tbl.read() if prev_tbl.exists() else cur.limit(0)
-            changes = table_changes(prev, cur, flow.keys).filter(
-                F.col("_change_type") != "update_preimage"
-            )
             target = self._tables[flow.target]
             if flow.stored_as_scd_type == 1:
                 target.overwrite(cur)
-            else:
-                attrs = [
-                    c for c in changes.columns
-                    if c not in (*flow.keys, "_change_type")
-                ]
-                opens = changes.filter(F.col("_change_type") != "delete").select(
-                    *flow.keys,
-                    *attrs,
-                    F.lit(ver).alias("__START_AT"),
-                    F.lit(None).cast("int").alias("__END_AT"),
+                continue
+            progress = f"snapshot:{flow.source}"
+            version = target.version()
+            ver = target.txn().get(progress, 0) + 1
+            validity = [F.lit(None).cast("int").alias(c) for c in ("__START_AT", "__END_AT")]
+            hist = target.read() if target.exists() else cur.limit(0).select("*", *validity)
+            prev = hist.filter(F.col("__END_AT").isNull()).drop("__START_AT", "__END_AT")
+            changes = table_changes(prev, cur, flow.keys).filter(
+                F.col("_change_type") != "update_preimage"
+            )
+            attrs = [c for c in changes.columns if c not in (*flow.keys, "_change_type")]
+            opens = changes.filter(F.col("_change_type") != "delete").select(
+                *flow.keys,
+                *attrs,
+                F.lit(ver).alias("__START_AT"),
+                F.lit(None).cast("int").alias("__END_AT"),
+            )
+            closers = (
+                changes.select(*flow.keys)
+                .distinct()
+                .withColumn("__close", F.lit(True))
+            )
+            closed = (
+                hist.join(closers, flow.keys, "left")
+                .withColumn(
+                    "__END_AT",
+                    F.when(
+                        F.col("__END_AT").isNull() & F.col("__close"),
+                        F.lit(ver),
+                    ).otherwise(F.col("__END_AT")),
                 )
-                closers = (
-                    changes.select(*flow.keys)
-                    .distinct()
-                    .withColumn("__close", F.lit(True))
-                )
-                if target.exists():
-                    hist = target.read()
-                    closed = (
-                        hist.join(closers, flow.keys, "left")
-                        .withColumn(
-                            "__END_AT",
-                            F.when(
-                                F.col("__END_AT").isNull() & F.col("__close"),
-                                F.lit(ver),
-                            ).otherwise(F.col("__END_AT")),
-                        )
-                        .drop("__close")
-                        .select(*opens.columns)
-                    )
-                else:
-                    closed = opens.limit(0)
-                new_hist = closed.unionByName(opens).localCheckpoint()
-                target.overwrite(new_hist)
-            prev_tbl.overwrite(cur)
-            with open(vpath, "w") as fh:
-                json.dump({"version": ver}, fh)
+                .select(*opens.columns)
+            )
+            target.overwrite(
+                closed.unionByName(opens), expect_version=version, txn={progress: ver}
+            )
 
     def create_append_flow(
         self,
@@ -344,35 +326,29 @@ class Pipeline:
         """Register an append flow (DLT ``@dlt.append_flow``): several
         sources multiplex into ONE streaming table, each appending only
         rows it has not delivered yet. Incrementality is tracked with a
-        per-flow high-watermark on ``sequence_by`` persisted next to the
-        tables, so flows survive process restarts — the batch analogue
-        of the streaming checkpoint append_flow relies on. Requires a
+        per-flow high-watermark on ``sequence_by`` committed with each
+        append (``append:<source>`` in the target's ``txn`` map), so
+        flows survive restarts and crashes — the batch analogue of the
+        streaming checkpoint append_flow relies on. Requires a
         monotonically growing sequence per source (event-time or ingest
         id), the same contract as the streaming original."""
         if target not in self._tables:
             raise KeyError(f"unknown streaming table {target!r}; declare it first")
         self._append_flows.append(_AppendFlow(target, source, sequence_by))
 
-    def _watermark_path(self, flow: _AppendFlow) -> str:
-        d = os.path.join(self.storage_root, "__watermarks")
-        os.makedirs(d, exist_ok=True)
-        return os.path.join(d, f"{flow.target}__{flow.source}.json")
-
     def _run_append_flows(self) -> None:
-        """Append each flow's rows past its watermark, then replace the
-        watermark file atomically (tmp + ``os.replace``), so a crash
-        leaves the old watermark or the new one, never a torn file. The
-        watermark keeps its type: a timestamp is stored as microseconds
-        since the epoch (no timezone in the round trip), any other type
-        as Spark's string form of the value, cast back on the next run."""
-        import json
-
+        """Append each flow's rows past its watermark, committing the new
+        watermark in the same entry. The watermark keeps its type: a
+        timestamp is stored as microseconds since the epoch (no timezone
+        in the round trip), any other type as Spark's string form of the
+        value, cast back on the next run."""
         for flow in self._append_flows:
             src = self.read(flow.source)
-            path = self._watermark_path(flow)
-            if os.path.exists(path):
-                with open(path) as fh:
-                    saved = json.load(fh)
+            target = self._tables[flow.target]
+            progress = f"append:{flow.source}"
+            version = target.version()
+            saved = target.txn().get(progress)
+            if saved is not None:
                 src = src.filter(F.col(flow.sequence_by) > _watermark_lit(saved))
             seq = src.schema[flow.sequence_by].dataType
             top = F.max(flow.sequence_by)
@@ -380,11 +356,9 @@ class Pipeline:
             new_max = src.agg(top).collect()[0][0]
             if new_max is None:
                 continue  # nothing new from this source
-            self._tables[flow.target].append(src)
-            tmp = f"{path}.tmp{os.getpid()}"
-            with open(tmp, "w") as fh:
-                json.dump({"watermark": new_max, "type": seq.simpleString()}, fh)
-            os.replace(tmp, path)
+            target.append(src, expect_version=version, txn={
+                progress: {"watermark": new_max, "type": seq.simpleString()}
+            })
 
     # -- resolution ---------------------------------------------------------
 
@@ -434,14 +408,15 @@ class Pipeline:
         return self._tables[name]
 
     def lineage(self) -> set[tuple[str, str]]:
-        """(upstream, downstream) dataset edges discovered so far — the
-        DLT pipeline-graph surface. View→view edges are recorded during
-        demand-driven resolution; CDC flow edges are declared, so both
-        appear after a run()."""
-        edges = set(self._lineage)
-        for f in self._flows:
-            edges.add((f.source, f.target))
-        return edges
+        """(upstream, downstream) dataset edges — the DLT pipeline-graph
+        surface. View→view edges are recorded during demand-driven
+        resolution, so they appear once a run resolved the views; every
+        flow's edge (CDC, append, snapshot) is declared, so it appears
+        from the start."""
+        return self._lineage | {
+            (f.source, f.target)
+            for f in (*self._flows, *self._append_flows, *self._snapshot_flows)
+        }
 
     # -- execution ----------------------------------------------------------
 
@@ -481,12 +456,17 @@ class Pipeline:
     def begin_run(self) -> None:
         """Open a new incremental batch: drop cached view resolutions so
         the run observes new source data, reset per-run metric and
-        quarantine accumulators, bump the run id."""
+        quarantine accumulators, and take the run id one past the largest
+        the event log and quarantine tables committed (their appends
+        record it in ``txn``); a run that records nothing needs none."""
         self._cache.clear()
         self.metrics.clear()
         self._pending_metrics.clear()
         self._pending_quarantine.clear()
-        self._run_id += 1
+        recorders = {self._EVENT_LOG} | {
+            v.quarantine_to for v in self._views.values() if v.quarantine_to
+        }
+        self._run_id = 1 + max(self._tables[t].txn().get("run", 0) for t in recorders)
 
     def resolve_flow(self, flow: _CdcFlow) -> tuple[_CdcFlow, DataFrame]:
         """Resolve one CDC flow's source view with its expectation gate in
@@ -528,10 +508,9 @@ class Pipeline:
         for name in materialize:
             self.read(name).count()
         for _vname, (qtable, qdf) in self._pending_quarantine.items():
-            if qtable not in self._tables:
-                self.create_streaming_table(qtable)
             self._tables[qtable].append(
-                qdf.withColumn("__batch_id", F.lit(self._run_id))
+                qdf.withColumn("__batch_id", F.lit(self._run_id)),
+                txn={"run": self._run_id},
             )
         self._pending_quarantine.clear()
         with self._resolve_lock:
@@ -543,23 +522,20 @@ class Pipeline:
         self._append_event_log()
 
     def full_refresh(self, materialize: Sequence[str] = ()) -> None:
-        """DLT "full refresh": drop every managed target plus ALL
-        incremental side state (append-flow watermarks, snapshot-diff
-        previous snapshots and version counters), then run once from
-        scratch. The guarantee — and the test's assertion — is that a
-        refreshed pipeline's tables are indistinguishable from a brand
-        new pipeline's.
+        """DLT "full refresh": drop every managed table, and with them
+        the progress their commit logs hold (append-flow watermarks,
+        snapshot counters, run ids), then run once from scratch. The
+        guarantee — and the test's assertion — is that a refreshed
+        pipeline's tables are indistinguishable from a brand new
+        pipeline's.
 
         The whole ``storage_root`` is cleared — not just the tables
-        registered on THIS instance — so lazily-created state from a
-        prior process (``__event_log``, quarantine tables never
-        re-declared this session) cannot survive the reset ``_run_id``
-        and collide with post-refresh ``__batch_id`` values."""
+        registered on THIS instance — so no table a prior process wrote
+        there survives to mix its rows or run ids with the rebuild's."""
         import shutil as _sh
 
         _sh.rmtree(self.storage_root, ignore_errors=True)
         os.makedirs(self.storage_root, exist_ok=True)
-        self._run_id = 0
         self.run(materialize=materialize)
 
     _EVENT_LOG = "__event_log"
@@ -579,14 +555,13 @@ class Pipeline:
             for m in self.metrics.values()
             for rule, n_failed in m.per_rule_failures.items()
         ]
-        if self._EVENT_LOG not in self._tables:
-            self.create_streaming_table(self._EVENT_LOG)
         self._tables[self._EVENT_LOG].append(
             self.spark.createDataFrame(
                 rows,
                 "run_id int, dataset string, policy string, rule string, "
                 "n_rows long, n_failed long",
-            )
+            ),
+            txn={"run": self._run_id},
         )
 
     def event_log(self) -> DataFrame:

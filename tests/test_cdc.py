@@ -353,6 +353,65 @@ def test_scd2_apply_resolves_batch_ties_by_tiebreakers(spark, tmp_path, order):
     }
 
 
+def test_scd2_apply_tie_with_stored_version_goes_to_batch(spark, tmp_path):
+    """A batch row at the sequence of a stored version wins the tie, as
+    an update wins a tie in the MERGE: applying [(A, 2, tb 1, 'y')] and
+    then [(A, 1, tb 0, 'w'), (A, 2, tb 5, 'x')] equals the one-shot build
+    ('x' current from seq 2), and replaying the second batch is a no-op."""
+    from databricks_end_to_end_lakeflow_project_spark.operators.cdc import (
+        scd2_apply,
+        scd2_from_history,
+    )
+
+    schema = "k string, seq int, tb int, attr string"
+    first, later = [("A", 2, 1, "y")], [("A", 1, 0, "w"), ("A", 2, 5, "x")]
+    t = ManagedParquetTable(spark, str(tmp_path / "scd2"))
+    scd2_apply(t, spark.createDataFrame(first, schema), ["k"], "seq", ["tb"])
+    scd2_apply(t, spark.createDataFrame(later, schema), ["k"], "seq", ["tb"])
+
+    def versions(df):
+        return {(r["k"], r["attr"], r["__START_AT"], r["__END_AT"]) for r in df.collect()}
+
+    one_shot = scd2_from_history(
+        spark.createDataFrame(first + later, schema), ["k"], "seq", ["tb"]
+    )
+    assert versions(t.read()) == versions(one_shot) == {
+        ("A", "w", 1, 2), ("A", "x", 2, None)
+    }
+    scd2_apply(t, spark.createDataFrame(later, schema), ["k"], "seq", ["tb"])
+    assert versions(t.read()) == versions(one_shot)
+    assert "tb" not in t.read().columns
+
+
+def test_txn_map_commits_with_rows_and_carries_forward(spark, tmp_path):
+    """Each entry holds the progress map: a commit copies the newest
+    entry's map and applies its own updates, whatever kind of commit it
+    is; an entry written without a map reads as {}."""
+    import json
+    import os
+
+    t = ManagedParquetTable(spark, str(tmp_path / "t"), keys=["key"], sequence_by="seq")
+    assert t.txn() == {}
+    t.append(_df(spark, [("A", "v1", _ts("2024-01-01T00:00:00"))]), txn={"a": 1})
+    t.append(_df(spark, [("B", "v1", _ts("2024-01-01T00:00:00"))]),
+             txn={"b": {"watermark": "x", "type": "string"}})
+    t.upsert(_df(spark, [("A", "v2", _ts("2024-01-02T00:00:00"))]))
+    assert t.txn() == {"a": 1, "b": {"watermark": "x", "type": "string"}}
+    t.overwrite(_df(spark, [("C", "v1", _ts("2024-01-01T00:00:00"))]), txn={"a": 2})
+    assert t.txn() == {"a": 2, "b": {"watermark": "x", "type": "string"}}
+    assert sorted(r["key"] for r in t.read().collect()) == ["C"]
+
+    newest = os.path.join(t.path, "_log", f"{t.version() - 1}.json")
+    with open(newest) as fh:
+        entry = json.load(fh)
+    del entry["txn"]
+    with open(newest, "w") as fh:
+        json.dump(entry, fh)
+    assert t.txn() == {}
+    t.append(_df(spark, [("D", "v1", _ts("2024-01-01T00:00:00"))]), txn={"c": 3})
+    assert t.txn() == {"c": 3}
+
+
 def test_scd2_pipeline_flow(spark, tmp_path):
     """stored_as_scd_type=2 in the DAG runtime maintains a version table."""
     from databricks_end_to_end_lakeflow_project_spark.pipeline.dag import Pipeline

@@ -36,7 +36,9 @@ import pytest
 
 from databricks_end_to_end_lakeflow_project_spark.operators.cdc import (
     ManagedParquetTable,
+    scd2_from_snapshots,
 )
+from databricks_end_to_end_lakeflow_project_spark.pipeline.dag import Pipeline
 
 
 class _Kill(BaseException):
@@ -774,3 +776,98 @@ def test_cdc_flow_killed_mid_merge(spark, tmp_path, monkeypatch, kill_point):
     assert len(keys) == len(set(keys))
     assert _unlogged(t) == []
     assert os.path.exists(os.path.join(ckpt, "commits", "0"))
+
+
+# ------------------------------------------- pipeline progress kill points
+#
+# A pipeline flow's progress commits in the entry that writes its rows
+# (the entry's ``txn`` map), so a kill at that commit loses or keeps
+# both together.
+
+
+def _append_pipeline(spark, root: str, rows: list) -> Pipeline:
+    p = Pipeline(spark, root)
+
+    @p.view(name="src")
+    def src(pl):
+        return spark.createDataFrame(rows, "seq int, origin string")
+
+    p.create_streaming_table("log")
+    p.create_append_flow(target="log", source="src", sequence_by="seq")
+    return p
+
+
+@pytest.mark.parametrize("kill_point", [_BEFORE, _AFTER])
+def test_append_flow_killed_at_commit(spark, tmp_path, monkeypatch, kill_point):
+    """An append flow killed at the commit that delivers its new rows:
+    before it, neither the rows nor the watermark landed; after it, both
+    did. A restarted pipeline delivers every row exactly once."""
+    root, rows = str(tmp_path / "p"), [(1, "a")]
+    _append_pipeline(spark, root, rows).run()
+    rows.append((2, "a"))
+    p = _append_pipeline(spark, root, rows)
+    t = p.table("log")
+
+    _kill_at(monkeypatch, t.path, kill_point)
+    with pytest.raises(_Kill):
+        p.run()
+    monkeypatch.undo()
+    assert t.version() == (1, 2)[kill_point == _AFTER]
+    _assert_clean_after_recover(t)
+
+    _append_pipeline(spark, root, rows).run()
+    got = sorted(tuple(r) for r in t.read().select("seq", "origin").collect())
+    assert got == [(1, "a"), (2, "a")]
+    assert t.txn()["append:src"]["watermark"] == "2"
+
+
+_SNAPSHOTS = [[("A", 1), ("B", 9)], [("A", 2), ("B", 9)], [("B", 9)]]
+
+
+@pytest.mark.parametrize("kill_point", [_BEFORE, _AFTER])
+def test_snapshot_flow_scd2_killed_at_commit(spark, tmp_path, monkeypatch, kill_point):
+    """A type-2 snapshot flow killed at its second run's commit: before
+    it, the run left nothing; after it, the rewrite and the snapshot
+    counter landed together. The rerun over the same snapshot and one
+    more run equal the one-shot fold over the snapshots of the committed
+    runs — the killed run is one of them when it committed, and no
+    version is zero-length."""
+    holder = {"rows": _SNAPSHOTS[0]}
+    p = Pipeline(spark, str(tmp_path / "p"))
+
+    @p.view(name="snap")
+    def _snap(pl):
+        return spark.createDataFrame(holder["rows"], "k string, val int")
+
+    p.create_streaming_table("dim")
+    p.create_auto_cdc_from_snapshot_flow(
+        target="dim", source="snap", keys=["k"], stored_as_scd_type=2
+    )
+    t = p.table("dim")
+    p.run()
+    holder["rows"] = _SNAPSHOTS[1]
+    _kill_at(monkeypatch, t.path, kill_point)
+    with pytest.raises(_Kill):
+        p.run()
+    monkeypatch.undo()
+    committed = kill_point == _AFTER
+    assert t.version() == 1 + committed
+    assert t.txn() == {"snapshot:snap": 1 + committed}
+    _assert_clean_after_recover(t)
+
+    p.run()  # the rerun over the same snapshot
+    holder["rows"] = _SNAPSHOTS[2]
+    p.run()
+
+    seen = [_SNAPSHOTS[0], *[_SNAPSHOTS[1]] * (1 + committed), _SNAPSHOTS[2]]
+    oneshot = scd2_from_snapshots(
+        [(i + 1, spark.createDataFrame(s, "k string, val int")) for i, s in enumerate(seen)],
+        ["k"],
+    )
+
+    def versions(df):
+        return {(r["k"], r["val"], r["__START_AT"], r["__END_AT"]) for r in df.collect()}
+
+    got = versions(t.read())
+    assert got == versions(oneshot)
+    assert all(end is None or start < end for _k, _v, start, end in got)

@@ -433,10 +433,10 @@ def test_append_flows_multiplex_without_duplicates(spark, tmp_path):
 
 def test_append_flow_timestamp_watermark_survives_runs(spark, tmp_path):
     """A timestamp ``sequence_by`` keeps its type through the watermark
-    file: two runs and a fresh Pipeline over the same storage deliver
-    every row once, with sub-second sequences kept exact."""
+    the target's log holds: two runs and a fresh Pipeline over the same
+    storage deliver every row once, with sub-second sequences kept
+    exact."""
     import datetime as dt
-    import json
 
     base = dt.datetime(2024, 3, 10, 1, 30, 0, 250001)
     rows = [(base, "a"), (base + dt.timedelta(microseconds=1), "b")]
@@ -458,9 +458,7 @@ def test_append_flow_timestamp_watermark_survives_runs(spark, tmp_path):
     p = pipeline()
     p.run()
     assert delivered(p) == ["a", "b"]
-    (wm,) = glob.glob(str(tmp_path / "ts" / "__watermarks" / "*.json"))
-    with open(wm) as fh:
-        assert json.load(fh)["type"] == "timestamp"
+    assert p.table("log").txn()["append:events"]["type"] == "timestamp"
     rows.append((base + dt.timedelta(microseconds=2), "c"))
     p.run()
     assert delivered(p) == ["a", "b", "c"]
@@ -595,3 +593,97 @@ def test_full_refresh_equals_fresh_pipeline(spark, tmp_path):
     p2.run()
     assert refreshed_tgt == sorted(map(tuple, p2.table("tgt").read().collect()))
     assert refreshed_log == sorted(map(tuple, p2.table("log").read().collect()))
+
+
+def _quarantining_pipeline(spark, root: str, src: list) -> Pipeline:
+    p = Pipeline(spark, root)
+
+    @p.view(
+        name="clean",
+        expectations={"not_null": "v IS NOT NULL"},
+        quarantine_to="bad_rows",
+    )
+    def clean(pl):
+        return spark.createDataFrame(src, "id int, v string")
+
+    return p
+
+
+def test_second_instance_reads_event_log_and_quarantine(spark, tmp_path):
+    """The event log and the quarantine tables are declared with the
+    pipeline and its views, so a new instance over the same storage
+    reads what an earlier one wrote before it runs itself."""
+    root, src = str(tmp_path / "p"), [(1, "ok"), (2, None)]
+    _quarantining_pipeline(spark, root, src).run(materialize=["clean"])
+
+    p2 = _quarantining_pipeline(spark, root, src)
+    log = {(r["run_id"], r["rule"], r["n_rows"], r["n_failed"])
+           for r in p2.event_log().collect()}
+    assert log == {(1, "not_null", 2, 1)}
+    bad = p2.table("bad_rows").read().collect()
+    assert {(r["id"], r["__batch_id"]) for r in bad} == {(2, 1)}
+
+
+def test_run_ids_continue_across_instances(spark, tmp_path):
+    """Run ids come from the logs of the tables that record them: two
+    instances run one after the other over one root record runs 1 and
+    2, in the event log and as quarantine batch ids."""
+    root, src = str(tmp_path / "p"), [(1, "ok"), (2, None)]
+    _quarantining_pipeline(spark, root, src).run(materialize=["clean"])
+    p2 = _quarantining_pipeline(spark, root, src)
+    p2.run(materialize=["clean"])
+
+    assert {r["run_id"] for r in p2.event_log().collect()} == {1, 2}
+    bad = p2.table("bad_rows").read().collect()
+    assert {r["__batch_id"] for r in bad} == {1, 2}
+    assert p2.table("__event_log").txn() == p2.table("bad_rows").txn() == {"run": 2}
+
+
+def test_lineage_holds_declared_flow_edges_before_a_run(spark, tmp_path):
+    """Every declared flow's (source, target) edge is in the lineage
+    from the start: append and snapshot flows as well as CDC flows."""
+    p = Pipeline(spark, str(tmp_path / "lin"))
+    for t in ("silver", "log", "dim"):
+        p.create_streaming_table(t)
+    p.create_auto_cdc_flow(target="silver", source="changes", keys=["k"], sequence_by="seq")
+    p.create_append_flow(target="log", source="events", sequence_by="seq")
+    p.create_auto_cdc_from_snapshot_flow(target="dim", source="snap", keys=["k"])
+    assert p.lineage() == {("changes", "silver"), ("events", "log"), ("snap", "dim")}
+
+
+def test_snapshot_flow_writes_one_table_per_run(spark, tmp_path, monkeypatch):
+    """A snapshot flow's previous snapshot is its target, so each run
+    commits to the target alone and the storage root holds nothing but
+    the targets."""
+    from databricks_end_to_end_lakeflow_project_spark.operators.cdc import (
+        ManagedParquetTable,
+    )
+
+    committed = []
+    publish = ManagedParquetTable._publish
+
+    def recording(self, *args, **kwargs):
+        committed.append(os.path.basename(self.path))
+        return publish(self, *args, **kwargs)
+
+    monkeypatch.setattr(ManagedParquetTable, "_publish", recording)
+    root = str(tmp_path / "pipe")
+    holder = {"rows": [("A", 1), ("B", 9)]}
+    p = Pipeline(spark, root)
+
+    @p.view(name="snap")
+    def _snap(pl):
+        return spark.createDataFrame(holder["rows"], "k string, val int")
+
+    for target, scd_type in (("dim_hist", 2), ("dim_latest", 1)):
+        p.create_streaming_table(target)
+        p.create_auto_cdc_from_snapshot_flow(
+            target=target, source="snap", keys=["k"], stored_as_scd_type=scd_type
+        )
+    p.run()
+    holder["rows"] = [("A", 2), ("B", 9)]
+    p.run()
+
+    assert committed == ["dim_hist", "dim_latest"] * 2
+    assert sorted(os.listdir(root)) == ["dim_hist", "dim_latest"]
+    assert p.table("dim_hist").txn() == {"snapshot:snap": 2}
