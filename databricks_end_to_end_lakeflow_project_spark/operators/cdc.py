@@ -309,8 +309,12 @@ class ManagedParquetTable:
 
     def read(self, version: int | None = None) -> DataFrame:
         """Current state, or a retained one by version number (Delta
-        time-travel analogue; see :meth:`history`)."""
-        return read_spark_parquet(self.spark, self.path, files=self.files(version))
+        time-travel analogue; see :meth:`history`). Raises
+        FileNotFoundError for a table with no commit."""
+        files = self.files(version)
+        if not files and not self._entries():
+            raise FileNotFoundError(f"managed table {self.path} has no commit")
+        return read_spark_parquet(self.spark, self.path, files=files)
 
     def read_stream(self, spark: SparkSession | None = None) -> DataFrame:
         """Streaming scan of the current state of an unpartitioned table,

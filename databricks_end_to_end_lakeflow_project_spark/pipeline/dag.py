@@ -11,16 +11,20 @@ and a joined view):
   stored_as_scd_type=1)`` — per-run: dedup source to latest-per-key and
   MERGE into the target (operators/cdc.py kernel).
 
-Execution model: ``run()`` resolves the dataset graph by demand
-(memoized recursion over ``ctx.read`` calls — the same dependency
-discovery trick DLT does statically), gates views with their
-expectations as pure plan transformations, executes CDC flows, and
-materializes any requested tables. Expectation counters ride the writes
-that consume the gated views (``df.observe``) and are collected when the
-run finalizes; a FAIL expectation aborts the consuming write before its
-commit point. Each ``run()`` is one incremental batch: re-running after new
-source data arrives upserts the delta (idempotent for unchanged input —
-the reference's `trigger(once=True)` job pattern, T1).
+Execution model: ``run()`` is one `run_graph` over the tasks of
+``graph()``. Its first task opens the batch, runs the append flows and
+then the snapshot flows in declaration order, and resolves every CDC
+flow's source by demand (memoized recursion over ``ctx.read`` calls —
+the same dependency discovery trick DLT does statically), gating views
+with their expectations as pure plan transformations. Each CDC flow is
+then a task of its own, all running at once, and a last task recomputes
+the materialized views and records the run. Expectation counters ride
+the writes that consume the gated views (``df.observe``) and are
+collected when the run finalizes; a FAIL expectation aborts the
+consuming write before its commit point. Each ``run()`` is one
+incremental batch: re-running after new source data arrives upserts the
+delta (idempotent for unchanged input — the reference's
+`trigger(once=True)` job pattern, T1).
 
 Progress (append watermarks, snapshot counters, run ids) lives in the
 ``txn`` map of the commit that writes the rows it covers
@@ -35,7 +39,8 @@ from __future__ import annotations
 
 import os
 import threading
-from collections.abc import Callable, Sequence
+from collections.abc import Callable, Mapping, Sequence
+from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -53,6 +58,44 @@ from databricks_end_to_end_lakeflow_project_spark.pipeline.expectations import (
     apply_expectations,
     split_expectations,
 )
+
+
+Task = tuple[Callable[[], object], Sequence[str]]
+
+
+def run_graph(tasks: Mapping[str, Task]) -> dict[str, object]:
+    """Run ``{name: (fn, deps)}``: each ``fn()`` starts on its own thread
+    once every task named in its ``deps`` has returned, and the results
+    come back by name. The first failure is re-raised once the tasks
+    already running have returned; no task starts after it, so none that
+    depends on the failed one does. An unknown dependency or a cycle
+    raises before any task starts.
+
+    The one scheduler of a medallion run: `Pipeline.graph` gives a
+    pipeline run as tasks, and `FlightLakehouse.run_all` adds the bronze
+    drains and gold builds around them."""
+    pending = {name: set(deps) for name, (_, deps) in tasks.items()}
+    for name, deps in pending.items():
+        if unknown := deps - pending.keys():
+            raise KeyError(f"task {name!r} depends on unknown {sorted(unknown)}")
+    left = dict(pending)
+    while ready := [n for n, deps in left.items() if deps.isdisjoint(left)]:
+        for name in ready:
+            del left[name]
+    if left:
+        raise ValueError(f"cycle among tasks {sorted(left)}")
+
+    results: dict[str, object] = {}
+    with ThreadPoolExecutor(max_workers=max(len(tasks), 1)) as pool:
+        running = {}
+        while pending or running:
+            for name in [n for n, deps in pending.items() if deps.issubset(results)]:
+                del pending[name]
+                running[pool.submit(tasks[name][0])] = name
+            done, _ = wait(running, return_when=FIRST_COMPLETED)
+            for future in done:
+                results[running.pop(future)] = future.result()
+    return results
 
 
 @dataclass
@@ -122,14 +165,6 @@ class Pipeline:
         self._lineage: set[tuple[str, str]] = set()
         self._resolve_lock = threading.RLock()
         self.create_streaming_table(self._EVENT_LOG)
-
-    @property
-    def cdc_flows(self):
-        """Read-only view of the registered CDC flows, for callers that
-        schedule flows themselves (e.g. the flight lake's overlapped
-        bronze→silver chains) instead of calling ``run()``. Public so
-        such callers never reach into ``_flows``."""
-        return tuple(self._flows)
 
     # -- registration -------------------------------------------------------
 
@@ -238,6 +273,8 @@ class Pipeline:
             )
         if target not in self._tables:
             raise KeyError(f"unknown streaming table {target!r}; declare it first")
+        if any(f.target == target for f in self._flows):
+            raise ValueError(f"streaming table {target!r} already has a CDC flow")
         self._flows.append(
             _CdcFlow(target, source, list(keys), sequence_by, stored_as_scd_type,
                      list(except_column_list), apply_as_deletes, apply_as_truncates)
@@ -370,9 +407,8 @@ class Pipeline:
         pending-metrics / resolving-stack structures, so the whole call
         holds the pipeline's re-entrant resolve lock (recursive
         ``pl.read`` calls inside view bodies re-enter it on the same
-        thread). Concurrent
-        callers — the per-entity ingest→silver chains and a deferred
-        ``finalize_run`` overlapping downstream work — serialize on
+        thread). Concurrent callers — ``finalize_run`` and the gold
+        builds that overlap it in one `run_graph` — serialize on
         resolution only, which launches no Spark job."""
         with self._resolve_lock:
             return self._read_locked(name)
@@ -421,37 +457,47 @@ class Pipeline:
     # -- execution ----------------------------------------------------------
 
     def run(self, materialize: Sequence[str] = ()) -> None:
-        """One incremental batch: execute all CDC flows (dedup + upsert),
-        recompute materialized views, then force any ``materialize``
-        views (for side-effect-only runs). View cache is cleared first so
-        a second ``run()`` observes new source data. Quarantined rows
-        from every view resolved during the run are appended to their
-        quarantine tables at the end, stamped with this run's
-        ``__batch_id``; expectation metrics for the run are appended to
-        the ``__event_log`` table (the DLT event-log analogue —
-        `p.event_log()` to query it)."""
-        # resolve every flow's source (view resolution serializes on the
-        # resolve lock — it mutates the cache/lineage/metrics structures
-        # but runs no Spark job), then run the table upserts CONCURRENTLY:
-        # each flow targets its own managed table with its own commit
-        # lock, so Spark's scheduler interleaves the independent write
-        # jobs exactly like DLT runs independent DAG nodes in parallel.
-        # Results are identical to the sequential order by target
-        # independence. begin/resolve/execute/finalize
-        # are public pieces so an orchestrator can overlap them with its
-        # OWN work (per-entity ingest→silver chains, a deferred finalize
-        # racing a downstream read of the finished tables).
-        from concurrent.futures import ThreadPoolExecutor
+        """One incremental batch: append and snapshot flows, all CDC flows
+        (dedup + upsert) at once, then the materialized views and any
+        ``materialize`` views (for side-effect-only runs). View cache is
+        cleared first so a second ``run()`` observes new source data.
+        Quarantined rows from every view resolved during the run are
+        appended to their quarantine tables at the end, stamped with this
+        run's ``__batch_id``; expectation metrics for the run are
+        appended to the ``__event_log`` table (the DLT event-log
+        analogue — `p.event_log()` to query it)."""
+        run_graph(self.graph(materialize=materialize))
 
-        self.begin_run()
-        resolved = [self.resolve_flow(flow) for flow in self._flows]
-        if len(resolved) > 1:
-            with ThreadPoolExecutor(max_workers=len(resolved)) as ex:
-                for f in [ex.submit(self.execute_flow, fl, s) for fl, s in resolved]:
-                    f.result()  # re-raise the first failure, if any
-        elif resolved:
-            self.execute_flow(*resolved[0])
-        self.finalize_run(materialize)
+    def graph(self, after: Sequence[str] = (), materialize: Sequence[str] = ()) -> dict[str, Task]:
+        """One run as `run_graph` tasks, for a caller that schedules its
+        own work around the run:
+
+        - ``begin``, after the tasks named in ``after``: `begin_run`, the
+          append flows and then the snapshot flows in declaration order,
+          and every CDC flow's source resolved (`resolve_flow`, no job);
+        - one task per CDC flow, named by its target, after ``begin``:
+          `execute_flow`, each on its own target table;
+        - ``finalize``, after every CDC flow: `finalize_run`.
+
+        A CDC flow therefore sees this run's appends and snapshots, and
+        every flow that reads a CDC target sees it as of the start of
+        the run."""
+        resolved: dict[str, tuple[_CdcFlow, DataFrame]] = {}
+
+        def begin() -> None:
+            self.begin_run()
+            self._run_append_flows()
+            self._run_snapshot_flows()
+            for flow in self._flows:
+                resolved[flow.target] = self.resolve_flow(flow)
+
+        tasks: dict[str, Task] = {"begin": (begin, after)}
+        for flow in self._flows:
+            tasks[flow.target] = (lambda t=flow.target: self.execute_flow(*resolved[t]), ["begin"])
+        tasks["finalize"] = (
+            lambda: self.finalize_run(materialize), [f.target for f in self._flows]
+        )
+        return tasks
 
     def begin_run(self) -> None:
         """Open a new incremental batch: drop cached view resolutions so
@@ -471,9 +517,7 @@ class Pipeline:
     def resolve_flow(self, flow: _CdcFlow) -> tuple[_CdcFlow, DataFrame]:
         """Resolve one CDC flow's source view with its expectation gate in
         the plan. Launches no Spark job: the gate's counters and a FAIL
-        abort ride the flow's write in ``execute_flow``. Safe to call from
-        concurrent entity chains; resolution serializes on the resolve
-        lock."""
+        abort ride the flow's write in ``execute_flow``."""
         src = self.read(flow.source)
         if flow.except_columns:
             src = src.drop(*flow.except_columns)
@@ -493,16 +537,11 @@ class Pipeline:
             )
 
     def finalize_run(self, materialize: Sequence[str] = ()) -> None:
-        """Close the batch: append flows, snapshot flows, materialized
-        views, quarantine appends, then the expectation metrics of every
-        view the run resolved (from the actions that consumed them) into
-        ``metrics`` and the event log. None of these outputs is
-        read by the CDC target tables themselves, so a caller whose
-        downstream only reads those tables may run finalize CONCURRENTLY
-        with that downstream work (it still serializes internally on the
-        resolve lock for any view reads it performs)."""
-        self._run_append_flows()
-        self._run_snapshot_flows()
+        """Close the batch: materialized views, quarantine appends, then
+        the expectation metrics of every view the run resolved (from the
+        actions that consumed them) into ``metrics`` and the event log.
+        No flow reads these outputs, so work that reads only the flows'
+        targets may run at the same time (``graph`` lets it)."""
         for name in self._mviews:
             self._tables[name].overwrite(self.read(name))
         for name in materialize:

@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from databricks_end_to_end_lakeflow_project_spark.operators.cdc import ManagedParquetTable
-from databricks_end_to_end_lakeflow_project_spark.pipeline.dag import Pipeline
+from databricks_end_to_end_lakeflow_project_spark.pipeline.dag import Pipeline, Task, run_graph
 from databricks_end_to_end_lakeflow_project_spark.plans.gold import (
     DimConfig,
     FactConfig,
@@ -50,6 +50,7 @@ from databricks_end_to_end_lakeflow_project_spark.streaming.ingest import (
 )
 
 ENTITIES = ["bookings", "flights", "customers", "airports"]
+SILVER_TABLES = [f"{e}_silver" for e in ENTITIES]
 
 BOOKING_RULES = {
     "valid_booking_id": "booking_id IS NOT NULL",
@@ -75,70 +76,30 @@ class FlightLakehouse:
     def _bronze(self, entity: str) -> DataFrame:
         return read_spark_parquet(self.spark, os.path.join(self.bronze_root, entity))
 
-    def ingest_and_silver(self, clock: dt.datetime | None = None, then=None):
-        """One bronze→silver batch: one chain per entity that drains the
-        entity's bronze ingest stream (rows stamped with the drain's
-        ingest time, or ``clock``, which silver uses as the CDC sequence)
-        and then immediately resolves + upserts THAT entity's silver CDC
-        flow (its only upstream), all four chains concurrent. The wall
-        clock is max(chainₑ), not max(ingestₑ) + max(silverₑ) — the
-        per-query startup/commit fixed costs of one entity's drain
-        overlap another entity's upsert. Output is byte-identical to
-        draining every entity and then running ``self.silver.run()``:
-        each chain touches only its own checkpoint, bronze dir and silver
-        target, and view resolution serializes on the pipeline's resolve
-        lock.
-
-        Returns a ``finalize()`` callable (quarantine appends, the
-        expectation metrics the upserts observed, event-log append —
-        nothing the silver TABLES depend on) that the caller
-        may run concurrently with downstream work that reads only those
-        tables; it must be awaited before the next pipeline run.
-
-        ``then``, if given, extends each chain past the silver upsert —
-        e.g. ``run_all`` hangs the entity's GOLD DIMENSION build on it,
-        since a dim depends only on its own silver table (DLT-DAG
-        semantics: a node runs as soon as its parents are done, not when
-        the whole previous layer is)."""
-        from concurrent.futures import ThreadPoolExecutor
-
-        p = self.silver
-        p.begin_run()
-        flows_by_source = {f.source: f for f in p.cdc_flows}
-        # The chained path hand-schedules one CDC flow per entity; if the
-        # silver DAG ever grows a flow this loop would silently skip (or an
-        # entity's flow goes missing → bare KeyError mid-chain), fail loudly
-        # here instead so the chains and ``Pipeline.run`` cannot drift.
-        expected = {f"{e}_raw" for e in ENTITIES}
-        if len(p.cdc_flows) != len(expected) or set(flows_by_source) != expected:
-            raise RuntimeError(
-                "ingest_and_silver chains cover flows sourced from "
-                f"{sorted(expected)} but the silver pipeline registers "
-                f"{sorted(flows_by_source)}; update the chain builder to "
-                "match (or run via self.silver.run(), which executes all flows)"
+    def _drain(self, entity: str, clock: dt.datetime | None) -> None:
+        """Drain the entity's bronze ingest stream, stamping its rows with
+        the drain's ingest time, or ``clock``, which silver uses as the
+        CDC sequence."""
+        if os.path.isdir(os.path.join(self.raw_root, entity)):
+            drain_ingest_stream(
+                start_ingest_csv_stream(
+                    self.spark,
+                    os.path.join(self.raw_root, entity),
+                    os.path.join(self.bronze_root, entity),
+                    os.path.join(self.storage_root, "_checkpoints", entity),
+                    os.path.join(self.storage_root, "_schemas", entity),
+                    clock,
+                )
             )
 
-        def chain(entity: str) -> None:
-            if os.path.isdir(os.path.join(self.raw_root, entity)):
-                drain_ingest_stream(
-                    start_ingest_csv_stream(
-                        self.spark,
-                        os.path.join(self.raw_root, entity),
-                        os.path.join(self.bronze_root, entity),
-                        os.path.join(self.storage_root, "_checkpoints", entity),
-                        os.path.join(self.storage_root, "_schemas", entity),
-                        clock,
-                    )
-                )
-            flow = flows_by_source[f"{entity}_raw"]
-            p.execute_flow(*p.resolve_flow(flow))
-            if then is not None:
-                then(entity)
-
-        with ThreadPoolExecutor(max_workers=len(ENTITIES)) as ex:
-            for f in [ex.submit(chain, e) for e in ENTITIES]:
-                f.result()  # re-raise the first failure, if any
-        return p.finalize_run
+    def silver_graph(self, clock: dt.datetime | None = None) -> dict[str, Task]:
+        """Raw → bronze → silver as `run_graph` tasks: one bronze drain
+        per entity (``bronze:<entity>``), all at once, and the silver
+        pipeline's run (`Pipeline.graph`), which begins when every drain
+        has returned. Each silver table's CDC flow is the task named by
+        the table."""
+        drains = {f"bronze:{e}": (lambda e=e: self._drain(e, clock), ()) for e in ENTITIES}
+        return drains | self.silver.graph(after=list(drains))
 
     # -- silver -------------------------------------------------------------
 
@@ -226,20 +187,14 @@ class FlightLakehouse:
 
     def build_one_dim(self, name: str, clock: dt.datetime | None = None) -> None:
         """Build a single gold dimension from its silver source — the
-        unit the per-entity chains schedule as soon as THAT silver table
-        is upserted (a dim's only upstream)."""
+        unit `run_all` schedules as soon as THAT silver table is upserted
+        (a dim's only upstream)."""
         build_dim(
             self.silver.read(self.DIM_SOURCES[name]),
             self._gold_table(name),
             self.DIMS[name],
             clock,
         )
-
-    DIM_BY_ENTITY = {
-        "flights": "DimFlights",
-        "customers": "DimCustomers",
-        "airports": "DimAirports",
-    }
 
     def build_fact_table(self, clock: dt.datetime | None = None) -> None:
         """Build the fact AFTER every dim exists (it joins all three
@@ -270,28 +225,23 @@ class FlightLakehouse:
         )
 
     def run_all(self, clock: dt.datetime | None = None) -> None:
-        """Raw → bronze → silver → gold in one call (one 'job run').
-
-        The whole job runs as a dependency DAG, not layer barriers:
-        per-entity chains drain bronze, upsert silver, and — for the
-        three dimension entities — build the GOLD DIM as soon as its own
-        silver lands (`ingest_and_silver(then=...)`). After the chains,
-        the fact build (which joins every dim — the one true barrier)
-        overlaps the silver finalize (quarantine appends, expectation
-        metrics and event log, which gold never reads); both are awaited before returning, so a
-        following run observes a fully-closed batch."""
-        from concurrent.futures import ThreadPoolExecutor
-
-        def then(entity: str) -> None:
-            dim = self.DIM_BY_ENTITY.get(entity)
-            if dim:
-                self.build_one_dim(dim, clock)
-
-        finalize = self.ingest_and_silver(clock, then=then)
-        with ThreadPoolExecutor(max_workers=1) as ex:
-            fin = ex.submit(finalize)
-            self.build_fact_table(clock)
-            fin.result()  # re-raise a finalize failure, if any
+        """Raw → bronze → silver → gold in one call (one 'job run'), as
+        one `run_graph`: the bronze drains and silver run of
+        `silver_graph`, each gold dimension as soon as its own silver
+        table is upserted, and the fact once every dimension and
+        ``bookings_silver`` are. The silver finalize (quarantine appends,
+        expectation metrics and event log, which gold never reads) waits
+        only on the silver flows, so it overlaps the gold builds. Returns
+        once every task has, so a following run observes a fully closed
+        batch."""
+        tasks = self.silver_graph(clock)
+        for dim, source in self.DIM_SOURCES.items():
+            tasks[f"gold:{dim}"] = (lambda d=dim: self.build_one_dim(d, clock), [source])
+        tasks["gold:Fact_Bookings"] = (
+            lambda: self.build_fact_table(clock),
+            [*(f"gold:{d}" for d in self.DIMS), "bookings_silver"],
+        )
+        run_graph(tasks)
 
 
 # ---------------------------------------------------------------------------
@@ -387,15 +337,7 @@ def business_silver_stream(lake: FlightLakehouse) -> DataFrame:
 
     from databricks_end_to_end_lakeflow_project_spark.streaming.structured import run_to_memory
 
-    sides = {
-        t: lake.silver._tables[t]
-        for t in (
-            "bookings_silver",
-            "flights_silver",
-            "customers_silver",
-            "airports_silver",
-        )
-    }
+    sides = {t: lake.silver.table(t) for t in SILVER_TABLES}
 
     def build(s: SparkSession) -> DataFrame:
         # each side streams the table's current files on the session
@@ -492,24 +434,18 @@ def stream_business_silver(spark: SparkSession, sf_dir: str) -> DataFrame:
     exercise."""
     root = ephemeral_dir("flight_stream_")
     raw = os.path.join(root, "raw")
-    # Fixed-cost shape (the registry's slowest entry before this form):
-    # per-entity ingest→silver chains instead of two phase barriers, the
-    # whole eager section on an isolated clone sized from the rows it
-    # ingests (the caller's conf is never mutated), and the silver
-    # finalize (quarantine/event-log — the join reads only the silver
-    # TABLES) overlapped with the stream drain. Identical rows by
-    # construction; the golden VALUES oracle pins it.
-    from concurrent.futures import ThreadPoolExecutor
-
+    # The whole eager section runs on an isolated clone sized from the
+    # rows it ingests (the caller's conf is never mutated), and the join
+    # waits only on the silver flows, so the silver finalize
+    # (quarantine/event log, which the join never reads) overlaps the
+    # stream drain. The golden VALUES oracle pins the rows.
     from databricks_end_to_end_lakeflow_project_spark.streaming.structured import sized_session
 
     eager = sized_session(spark, flight_fixtures.write_base(raw))
     lake = FlightLakehouse(eager, raw, os.path.join(root, "lake"))
-    finalize = lake.ingest_and_silver(clock=_T1)
-    with ThreadPoolExecutor(max_workers=1) as ex:
-        fin = ex.submit(finalize)
-        rows = business_silver_stream(lake)
-        fin.result()
+    tasks = lake.silver_graph(clock=_T1)
+    tasks["stream"] = (lambda: business_silver_stream(lake), SILVER_TABLES)
+    rows = run_graph(tasks)["stream"]
     return (
         rows.groupBy("airport_id")
         .agg(

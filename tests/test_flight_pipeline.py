@@ -149,6 +149,7 @@ def test_business_silver_stream_equals_batch(spark, tmp_path_factory):
     row-identical to the batch business_silver view on the co-arriving
     replay fixture (fresh lake: the module fixture may have already
     absorbed increments/scd)."""
+    from databricks_end_to_end_lakeflow_project_spark.pipeline.dag import run_graph
     from databricks_end_to_end_lakeflow_project_spark.plans.flight_pipeline import (
         business_silver_stream,
     )
@@ -157,7 +158,7 @@ def test_business_silver_stream_equals_batch(spark, tmp_path_factory):
     raw = str(root / "raw")
     fx.write_base(raw)
     lk = FlightLakehouse(spark, raw, str(root / "lake"))
-    lk.ingest_and_silver(T1)()
+    run_graph(lk.silver_graph(T1))
 
     streamed = business_silver_stream(lk)
     batch = lk.silver.read("business_silver")

@@ -687,3 +687,114 @@ def test_snapshot_flow_writes_one_table_per_run(spark, tmp_path, monkeypatch):
     assert committed == ["dim_hist", "dim_latest"] * 2
     assert sorted(os.listdir(root)) == ["dim_hist", "dim_latest"]
     assert p.table("dim_hist").txn() == {"snapshot:snap": 2}
+
+
+# ------------------------------------------------------------ run graph
+
+
+def test_run_graph_starts_a_task_after_its_dependencies():
+    """A task starts only once every task it names has returned; tasks
+    with no path between them run at the same time."""
+    import threading
+
+    from databricks_end_to_end_lakeflow_project_spark.pipeline.dag import run_graph
+
+    events, both = [], threading.Barrier(2, timeout=10)
+
+    def task(name, meet=False):
+        def fn():
+            events.append(("start", name))
+            if meet:
+                both.wait()  # a and b must overlap, or this times out
+            events.append(("end", name))
+        return fn
+
+    run_graph({
+        "c": (task("c"), ["a", "b"]),
+        "a": (task("a", meet=True), []),
+        "b": (task("b", meet=True), []),
+        "d": (task("d"), ["c"]),
+    })
+    at = {e: i for i, e in enumerate(events)}
+    assert at[("start", "c")] > max(at[("end", "a")], at[("end", "b")])
+    assert at[("start", "d")] > at[("end", "c")]
+
+
+def test_run_graph_reraises_the_first_failure_and_starts_no_dependent():
+    from databricks_end_to_end_lakeflow_project_spark.pipeline.dag import run_graph
+
+    started = []
+
+    def boom():
+        raise LookupError("boom")
+
+    with pytest.raises(LookupError, match="boom"):
+        run_graph({
+            "fails": (boom, []),
+            "child": (lambda: started.append("child"), ["fails"]),
+            "grandchild": (lambda: started.append("grandchild"), ["child"]),
+        })
+    assert started == []
+
+
+@pytest.mark.parametrize("deps, error", [
+    ({"a": [], "b": ["a", "nope"]}, KeyError),
+    ({"a": ["c"], "b": ["a"], "c": ["b"], "d": []}, ValueError),
+])
+def test_run_graph_rejects_a_bad_graph_before_any_task_starts(deps, error):
+    from databricks_end_to_end_lakeflow_project_spark.pipeline.dag import run_graph
+
+    started = []
+    with pytest.raises(error):
+        run_graph({n: (lambda n=n: started.append(n), d) for n, d in deps.items()})
+    assert started == []
+
+
+def test_run_graph_returns_results_by_name():
+    from databricks_end_to_end_lakeflow_project_spark.pipeline.dag import run_graph
+
+    assert run_graph({"x": (lambda: 1, []), "y": (lambda: "two", ["x"])}) == {
+        "x": 1, "y": "two",
+    }
+
+
+def test_cdc_flow_over_an_append_target_is_filled_by_the_first_run(spark, tmp_path):
+    """A CDC flow whose source reads an append flow's target sees the
+    rows this run appended: the append flows run before any CDC source
+    is resolved."""
+    rows = [(1, 1, "a"), (2, 1, "b"), (1, 2, "a2")]
+    p = Pipeline(spark, str(tmp_path / "p"))
+
+    @p.view(name="events")
+    def events(pl):
+        return spark.createDataFrame(rows, "k int, seq int, v string")
+
+    @p.view(name="logged")
+    def logged(pl):
+        return pl.read("log")
+
+    p.create_streaming_table("log")
+    p.create_append_flow(target="log", source="events", sequence_by="seq")
+    p.create_streaming_table("latest")
+    p.create_auto_cdc_flow(target="latest", source="logged", keys=["k"], sequence_by="seq")
+    p.run()
+    assert p.table("log").rows() == 3
+    got = sorted(tuple(r) for r in p.table("latest").read().select("k", "v").collect())
+    assert got == [(1, "a2"), (2, "b")]
+
+
+def test_read_of_a_table_with_no_commit_names_it(spark, tmp_path):
+    import re
+
+    root = str(tmp_path / "empty")
+    with pytest.raises(FileNotFoundError, match=re.escape(f"{root}/__event_log has no commit")):
+        Pipeline(spark, root).event_log()
+
+
+def test_a_table_takes_one_cdc_flow(spark, tmp_path):
+    """The run graph names each CDC flow's task by its target."""
+    p = Pipeline(spark, str(tmp_path / "p"))
+    p.create_streaming_table("t")
+    p.create_auto_cdc_flow(target="t", source="a", keys=["k"], sequence_by="s")
+    with pytest.raises(ValueError, match="already has a CDC flow"):
+        p.create_auto_cdc_flow(target="t", source="b", keys=["k"], sequence_by="s")

@@ -128,25 +128,36 @@ def test_asc_seq_matches_duckdb_range_semantics(spark):
     assert row["emptyneg"] == []
 
 
-def test_pipeline_flow_coverage_guard(spark, tmp_path):
-    """ingest_and_silver must refuse to run if the silver DAG registers a
-    CDC flow its chain builder would silently skip."""
+def test_run_all_fills_a_fifth_cdc_flow(spark, tmp_path):
+    """A CDC flow declared on the lake's silver pipeline beside the four
+    entity flows runs in ``run_all`` like them: its target is filled
+    from its source view over bronze."""
     from databricks_end_to_end_lakeflow_project_spark.plans.flight_pipeline import (
         FlightLakehouse,
     )
+    from databricks_end_to_end_lakeflow_project_spark.sources import flight_fixtures as fx
 
-    lake = FlightLakehouse(spark, str(tmp_path / "raw"), str(tmp_path / "lake"))
+    raw = str(tmp_path / "raw")
+    fx.write_base(raw)
+    lake = FlightLakehouse(spark, raw, str(tmp_path / "lake"))
     p = lake.silver
-    # register an extra streaming table + flow the chains don't know about
-    p.create_streaming_table("rogue_tbl")
+
+    @p.view(name="big_bookings_raw")
+    def big_bookings_raw(pl):
+        return pl.read("bookings_raw").filter(F.col("amount") >= 500)
+
+    p.create_streaming_table("big_bookings_silver")
     p.create_auto_cdc_flow(
-        target="rogue_tbl",
-        source="rogue_src_raw",  # NOT one of the {entity}_raw sources the chains cover
+        target="big_bookings_silver",
+        source="big_bookings_raw",
         keys=["booking_id"],
         sequence_by="modifiedDate",
     )
-    with pytest.raises(RuntimeError, match="ingest_and_silver chains"):
-        lake.ingest_and_silver()
+    lake.run_all(clock=dt.datetime(2025, 8, 1))
+    big = p.table("big_bookings_silver").read()
+    want = lake.silver.read("bookings_silver").filter(F.col("amount") >= 500)
+    assert big.count() > 0
+    assert big.exceptAll(want).count() == 0 and want.exceptAll(big).count() == 0
 
 
 # ------------------------------------------------- off-model ER blocking
