@@ -17,8 +17,9 @@ then the snapshot flows in declaration order, and resolves every CDC
 flow's source by demand (memoized recursion over ``ctx.read`` calls —
 the same dependency discovery trick DLT does statically), gating views
 with their expectations as pure plan transformations. Each CDC flow is
-then a task of its own, all running at once, and a last task recomputes
-the materialized views and records the run. Expectation counters ride
+then a task of its own, all running at once, and a last task, once the
+first and every CDC flow have returned, recomputes the materialized
+views and records the run. Expectation counters ride
 the writes that consume the gated views (``df.observe``) and are
 collected when the run finalizes; a FAIL expectation aborts the
 consuming write before its commit point. Each ``run()`` is one
@@ -475,9 +476,11 @@ class Pipeline:
         - ``begin``, after the tasks named in ``after``: `begin_run`, the
           append flows and then the snapshot flows in declaration order,
           and every CDC flow's source resolved (`resolve_flow`, no job);
-        - one task per CDC flow, named by its target, after ``begin``:
+        - one task per CDC flow, ``flow:<target>``, after ``begin``:
           `execute_flow`, each on its own target table;
-        - ``finalize``, after every CDC flow: `finalize_run`.
+        - ``finalize``, after ``begin`` and every CDC flow:
+          `finalize_run`, so the materialized views read every flow's
+          commit and the run's metrics and quarantine are complete.
 
         A CDC flow therefore sees this run's appends and snapshots, and
         every flow that reads a CDC target sees it as of the start of
@@ -493,9 +496,12 @@ class Pipeline:
 
         tasks: dict[str, Task] = {"begin": (begin, after)}
         for flow in self._flows:
-            tasks[flow.target] = (lambda t=flow.target: self.execute_flow(*resolved[t]), ["begin"])
+            tasks[f"flow:{flow.target}"] = (
+                lambda t=flow.target: self.execute_flow(*resolved[t]), ["begin"]
+            )
         tasks["finalize"] = (
-            lambda: self.finalize_run(materialize), [f.target for f in self._flows]
+            lambda: self.finalize_run(materialize),
+            ["begin", *(f"flow:{f.target}" for f in self._flows)],
         )
         return tasks
 

@@ -96,8 +96,8 @@ class FlightLakehouse:
         """Raw → bronze → silver as `run_graph` tasks: one bronze drain
         per entity (``bronze:<entity>``), all at once, and the silver
         pipeline's run (`Pipeline.graph`), which begins when every drain
-        has returned. Each silver table's CDC flow is the task named by
-        the table."""
+        has returned. Each silver table's CDC flow is the task
+        ``flow:<table>``."""
         drains = {f"bronze:{e}": (lambda e=e: self._drain(e, clock), ()) for e in ENTITIES}
         return drains | self.silver.graph(after=list(drains))
 
@@ -236,10 +236,12 @@ class FlightLakehouse:
         batch."""
         tasks = self.silver_graph(clock)
         for dim, source in self.DIM_SOURCES.items():
-            tasks[f"gold:{dim}"] = (lambda d=dim: self.build_one_dim(d, clock), [source])
+            tasks[f"gold:{dim}"] = (
+                lambda d=dim: self.build_one_dim(d, clock), [f"flow:{source}"]
+            )
         tasks["gold:Fact_Bookings"] = (
             lambda: self.build_fact_table(clock),
-            [*(f"gold:{d}" for d in self.DIMS), "bookings_silver"],
+            [*(f"gold:{d}" for d in self.DIMS), "flow:bookings_silver"],
         )
         run_graph(tasks)
 
@@ -444,7 +446,7 @@ def stream_business_silver(spark: SparkSession, sf_dir: str) -> DataFrame:
     eager = sized_session(spark, flight_fixtures.write_base(raw))
     lake = FlightLakehouse(eager, raw, os.path.join(root, "lake"))
     tasks = lake.silver_graph(clock=_T1)
-    tasks["stream"] = (lambda: business_silver_stream(lake), SILVER_TABLES)
+    tasks["stream"] = (lambda: business_silver_stream(lake), [f"flow:{t}" for t in SILVER_TABLES])
     rows = run_graph(tasks)["stream"]
     return (
         rows.groupBy("airport_id")

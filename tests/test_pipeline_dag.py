@@ -783,6 +783,48 @@ def test_cdc_flow_over_an_append_target_is_filled_by_the_first_run(spark, tmp_pa
     assert got == [(1, "a2"), (2, "b")]
 
 
+def test_materialized_view_over_an_append_target_sees_the_run(spark, tmp_path):
+    """With no CDC flow, the run still finalizes after its append flows:
+    a materialized view over the append target holds this run's rows,
+    and the expectation counters of the gated source reach the event
+    log as run 1."""
+    rows = [(1, "a"), (2, None), (3, "c")]
+    p = Pipeline(spark, str(tmp_path / "p"))
+
+    @p.view(name="events", expectations={"v_set": "v IS NOT NULL"}, policy=Policy.DROP)
+    def events(pl):
+        return spark.createDataFrame(rows, "seq int, v string")
+
+    @p.materialized_view(name="summary")
+    def summary(pl):
+        return pl.read("log")
+
+    p.create_streaming_table("log")
+    p.create_append_flow(target="log", source="events", sequence_by="seq")
+    p.run()
+    assert sorted(tuple(r) for r in p.table("summary").read().collect()) == [(1, "a"), (3, "c")]
+    got = {(r["run_id"], r["dataset"], r["rule"], r["n_rows"], r["n_failed"])
+           for r in p.event_log().collect()}
+    assert got == {(1, "events", "v_set", 3, 1)}
+
+
+def test_cdc_flow_tasks_do_not_clash_with_the_run_tasks(spark, tmp_path):
+    """A CDC target may take the name of a run task: flow tasks are
+    ``flow:<target>``, apart from ``begin`` and ``finalize``."""
+    p = Pipeline(spark, str(tmp_path / "p"))
+
+    @p.view(name="src")
+    def src(pl):
+        return spark.createDataFrame([(1, 1, "a")], "k int, seq int, v string")
+
+    for target in ("begin", "finalize"):
+        p.create_streaming_table(target)
+        p.create_auto_cdc_flow(target=target, source="src", keys=["k"], sequence_by="seq")
+    assert set(p.graph()) == {"begin", "flow:begin", "flow:finalize", "finalize"}
+    p.run()
+    assert p.table("begin").rows() == p.table("finalize").rows() == 1
+
+
 def test_read_of_a_table_with_no_commit_names_it(spark, tmp_path):
     import re
 
@@ -792,7 +834,7 @@ def test_read_of_a_table_with_no_commit_names_it(spark, tmp_path):
 
 
 def test_a_table_takes_one_cdc_flow(spark, tmp_path):
-    """The run graph names each CDC flow's task by its target."""
+    """Two CDC flows on one target would race on its commits."""
     p = Pipeline(spark, str(tmp_path / "p"))
     p.create_streaming_table("t")
     p.create_auto_cdc_flow(target="t", source="a", keys=["k"], sequence_by="s")
