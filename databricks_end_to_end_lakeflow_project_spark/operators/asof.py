@@ -28,6 +28,37 @@ from databricks_end_to_end_lakeflow_project_spark.sources.readers import read_ta
 _SIDE = "__asof_side"  # 0 = right (visible to later lefts), 1 = left
 
 
+def _asof_union(
+    left: DataFrame,
+    right: DataFrame,
+    on: list[str],
+    left_ts: str,
+    right_ts: str,
+    right_cols: list[str],
+) -> DataFrame:
+    """Both sides of an as-of join in one frame: the keys, ``__ts``, the
+    side flag (1 = left), every left column and then ``right_cols`` +
+    ``right_ts``, each side NULL in the other's columns. ``right_cols``
+    excludes the keys and ``right_ts``."""
+    lhs = left.select(
+        *on,
+        F.col(left_ts).alias("__ts"),
+        F.lit(1).alias(_SIDE),
+        *[F.col(c) for c in left.columns if c not in on],
+        *[F.lit(None).cast(right.schema[c].dataType).alias(c) for c in right_cols],
+        F.lit(None).cast(right.schema[right_ts].dataType).alias(right_ts),
+    )
+    rhs = right.select(
+        *on,
+        F.col(right_ts).alias("__ts"),
+        F.lit(0).alias(_SIDE),
+        *[F.lit(None).cast(left.schema[c].dataType).alias(c) for c in left.columns if c not in on],
+        *[F.col(c) for c in right_cols],
+        F.col(right_ts),
+    )
+    return lhs.unionByName(rhs)
+
+
 def asof_join(
     left: DataFrame,
     right: DataFrame,
@@ -52,22 +83,7 @@ def asof_join(
     on = list(on)
     right_cols = [c for c in right_cols if c not in on and c != right_ts]
 
-    lhs = left.select(
-        *on,
-        F.col(left_ts).alias("__ts"),
-        F.lit(1).alias(_SIDE),
-        *[F.col(c) for c in left.columns if c not in on],
-        *[F.lit(None).cast(right.schema[c].dataType).alias(c) for c in right_cols],
-        F.lit(None).cast(right.schema[right_ts].dataType).alias(right_ts),
-    )
-    rhs = right.select(
-        *on,
-        F.col(right_ts).alias("__ts"),
-        F.lit(0).alias(_SIDE),
-        *[F.lit(None).cast(left.schema[c].dataType).alias(c) for c in left.columns if c not in on],
-        *[F.col(c) for c in right_cols],
-        F.col(right_ts),
-    )
+    union = _asof_union(left, right, on, left_ts, right_ts, right_cols)
 
     # strict: right rows at ts == left ts must NOT be visible → order
     # them after the left row instead of before. forward scans time
@@ -79,7 +95,7 @@ def asof_join(
         .orderBy(ts_order, side_order)
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    resolved = lhs.unionByName(rhs).select(
+    resolved = union.select(
         "*",
         *[F.last(c, ignorenulls=True).over(w).alias(f"__m_{c}") for c in [*right_cols, right_ts]],
     )
@@ -235,22 +251,7 @@ def asof_join_nearest(
     on = list(on)
     right_cols = [c for c in right_cols if c not in on and c != right_ts]
 
-    lhs = left.select(
-        *on,
-        F.col(left_ts).alias("__ts"),
-        F.lit(1).alias(_SIDE),
-        *[F.col(c) for c in left.columns if c not in on],
-        *[F.lit(None).cast(right.schema[c].dataType).alias(c) for c in right_cols],
-        F.lit(None).cast(right.schema[right_ts].dataType).alias(right_ts),
-    )
-    rhs = right.select(
-        *on,
-        F.col(right_ts).alias("__ts"),
-        F.lit(0).alias(_SIDE),
-        *[F.lit(None).cast(left.schema[c].dataType).alias(c) for c in left.columns if c not in on],
-        *[F.col(c) for c in right_cols],
-        F.col(right_ts),
-    )
+    union = _asof_union(left, right, on, left_ts, right_ts, right_cols)
     payload = [*right_cols, right_ts]
 
     # backward: right rows sort BEFORE a left row at equal ts → running
@@ -266,7 +267,7 @@ def asof_join_nearest(
         .orderBy(F.col("__ts").asc(), F.col(_SIDE).desc())
         .rowsBetween(0, Window.unboundedFollowing)
     )
-    resolved = lhs.unionByName(rhs).select(
+    resolved = union.select(
         "*",
         *[F.last(c, ignorenulls=True).over(w_b).alias(f"__b_{c}") for c in payload],
         *[F.first(c, ignorenulls=True).over(w_f).alias(f"__f_{c}") for c in payload],

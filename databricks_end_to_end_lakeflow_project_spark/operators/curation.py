@@ -502,21 +502,17 @@ def pipeline_pretraining_export(spark: SparkSession, sf_dir: str) -> DataFrame:
         split_assign,
     )
     from databricks_end_to_end_lakeflow_project_spark.operators.textops import (
-        STOPWORDS,
-        stopword_hits,
+        quality_score,
         tokens,
     )
 
     docs = _t(spark, sf_dir, "documents")
     w = tokens(F.col("text"))
-    n = F.size(w).cast("double")
-    score = (
-        0.4 * F.least(n / 100.0, F.lit(1.0))
-        + 0.4 * (F.size(F.array_distinct(w)).cast("double") / n)
-        + 0.2 * (F.lit(1.0) - stopword_hits(w, STOPWORDS).cast("double") / n)
-    )
     gated = docs.select(
-        "doc_id", "text", score.alias("score"), F.size(w).cast("long").alias("n_tokens")
+        "doc_id",
+        "text",
+        quality_score(w).alias("score"),
+        F.size(w).cast("long").alias("n_tokens"),
     ).filter(F.col("score") >= 0.55)
 
     pairs = minhash_lsh_pairs(gated).select(
@@ -765,7 +761,7 @@ def pretraining_run(docs: DataFrame) -> DataFrame:
     )
     from databricks_end_to_end_lakeflow_project_spark.operators.textops import (
         LEXICONS,
-        STOPWORDS,
+        quality_score,
         stopword_hits,
         tokens,
     )
@@ -779,14 +775,7 @@ def pretraining_run(docs: DataFrame) -> DataFrame:
     known = ~(
         (hits["en"] == 0) & (hits["fr"] == 0) & (hits["es"] == 0) & (hits["de"] == 0)
     )
-    # n matches the old two-step derivation exactly: ntok was
-    # size(w)::long and the score read ntok::double
-    n = F.size(w).cast("long").cast("double")
-    score = (
-        0.4 * F.least(n / 100.0, F.lit(1.0))
-        + 0.4 * (F.size(F.array_distinct(w)).cast("double") / n)
-        + 0.2 * (F.lit(1.0) - stopword_hits(w, STOPWORDS).cast("double") / n)
-    )
+    score = quality_score(w)
     # ONE persisted narrow feature pass (ids + counts + gate flags, no
     # text — the stage-funnel policy): until r10 the tokenize + 6
     # interpreted stopword/distinct HOF folds re-ran for every consumer
@@ -1107,19 +1096,12 @@ def curation_source_reputation_gate(spark: SparkSession, sf_dir: str) -> DataFra
     per-doc keep filter. Two scans, two tiny shuffles — no corpus-scale
     exchange, no window."""
     from databricks_end_to_end_lakeflow_project_spark.operators.textops import (
-        STOPWORDS,
-        stopword_hits,
+        quality_score,
         tokens,
     )
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "source", "text")
-    w = tokens(F.col("text"))
-    n = F.size(w).cast("double")
-    score = (
-        0.4 * F.least(n / 100.0, F.lit(1.0))
-        + 0.4 * F.size(F.array_distinct(w)).cast("double") / n
-        + 0.2 * (1.0 - stopword_hits(w, STOPWORDS).cast("double") / n)
-    )
+    score = quality_score(tokens(F.col("text")))
     scored = docs.select(
         "source", F.round(score * 10000.0).cast("long").alias("q")
     )
@@ -1281,8 +1263,7 @@ def pipeline_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     the final row. At 100 TB the card costs ~two scans of the projected
     columns."""
     from databricks_end_to_end_lakeflow_project_spark.operators.textops import (
-        STOPWORDS,
-        stopword_hits,
+        quality_score,
         tokens,
     )
 
@@ -1290,12 +1271,7 @@ def pipeline_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "lang", "source", "n_chars", "text"
     )
     w = tokens(F.col("text"))
-    n = F.size(w).cast("double")
-    score = (
-        0.4 * F.least(n / 100.0, F.lit(1.0))
-        + 0.4 * F.size(F.array_distinct(w)).cast("double") / n
-        + 0.2 * (1.0 - stopword_hits(w, STOPWORDS).cast("double") / n)
-    )
+    score = quality_score(w)
     fp = F.md5(F.concat_ws(" ", F.slice(w, 1, 10)).cast("binary"))
     t = docs.select(
         "lang",

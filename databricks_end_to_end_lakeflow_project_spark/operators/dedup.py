@@ -687,26 +687,30 @@ def dedup_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return minhash_lsh_pairs(read_table(spark, sf_dir, "documents"))
 
 
+def sign_vote64(grams) -> int:
+    """Signed 64-bit sign-vote sketch of an iterable of byte strings: each
+    gram's MD5 (first 8 bytes, big-endian) casts a ±1 vote per bit, and
+    bit b is set where its votes sum above zero — the SimHash and pHash
+    signature."""
+    votes = [0] * 64
+    for g in grams:
+        h = int.from_bytes(hashlib.md5(g).digest()[:8], "big")
+        for b in range(64):
+            votes[b] += 1 if (h >> b) & 1 else -1
+    out = 0
+    for b, v in enumerate(votes):
+        if v > 0:
+            out |= 1 << b
+    # to signed 64-bit
+    return out - (1 << 64) if out >= (1 << 63) else out
+
+
 @pandas_udf(T.LongType())
 def _simhash64(texts: pd.Series) -> pd.Series:
     """Vectorized 64-bit SimHash: per-token MD5 → ±1 bit votes → sign.
     Pandas UDF (Arrow batches) because per-bit voting is genuinely awkward
     as a columnar expression; everything around it stays JVM-side."""
-
-    def one(text: str) -> int:
-        votes = [0] * 64
-        for tok in text.strip().split(" "):
-            h = int.from_bytes(hashlib.md5(tok.encode()).digest()[:8], "big")
-            for b in range(64):
-                votes[b] += 1 if (h >> b) & 1 else -1
-        out = 0
-        for b in range(64):
-            if votes[b] > 0:
-                out |= 1 << b
-        # to signed 64-bit
-        return out - (1 << 64) if out >= (1 << 63) else out
-
-    return texts.map(one)
+    return texts.map(lambda text: sign_vote64(t.encode() for t in text.strip().split(" ")))
 
 
 def banded_hamming_pairs(
@@ -1125,9 +1129,8 @@ def dedup_survivor_by_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     score is a pure scan projection; survivor choice is one window on the
     cluster key."""
     from databricks_end_to_end_lakeflow_project_spark.operators.textops import (
-        stopword_hits,
+        quality_score,
         tokens,
-        STOPWORDS,
     )
 
     docs = read_table(spark, sf_dir, "documents")
@@ -1137,14 +1140,7 @@ def dedup_survivor_by_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     comp = connected_components(
         docs.select(F.col("doc_id").alias("node")), pairs
     )
-    w = tokens(F.col("text"))
-    n = F.size(w).cast("double")
-    score = (
-        0.4 * F.least(n / 100.0, F.lit(1.0))
-        + 0.4 * (F.size(F.array_distinct(w)).cast("double") / n)
-        + 0.2 * (F.lit(1.0) - stopword_hits(w, STOPWORDS).cast("double") / n)
-    )
-    q = docs.select("doc_id", score.alias("score"))
+    q = docs.select("doc_id", quality_score(tokens(F.col("text"))).alias("score"))
     joined = comp.join(q, comp["node"] == q["doc_id"]).select(
         F.col("component").alias("cluster_id"), "doc_id", "score"
     )
@@ -1471,22 +1467,15 @@ def dedup_rate_by_quality_decile(spark: SparkSession, sf_dir: str) -> DataFrame:
         with_ntile,
     )
     from databricks_end_to_end_lakeflow_project_spark.operators.textops import (
-        STOPWORDS,
-        stopword_hits,
+        quality_score,
         tokens,
     )
 
     docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
     w = tokens(F.col("text"))
-    n = F.size(w).cast("double")
-    score = (
-        0.4 * F.least(n / 100.0, F.lit(1.0))
-        + 0.4 * F.size(F.array_distinct(w)).cast("double") / n
-        + 0.2 * (1.0 - stopword_hits(w, STOPWORDS).cast("double") / n)
-    )
     s = docs.select(
         "doc_id",
-        F.round(score * 10000.0).cast("long").alias("q"),
+        F.round(quality_score(w) * 10000.0).cast("long").alias("q"),
         F.md5(F.concat_ws(" ", F.slice(w, 1, 10)).cast("binary")).alias("fp"),
     )
     g = with_ntile(s, 10, value="q", tiebreaks=["doc_id"], out="decile").select(

@@ -2404,6 +2404,27 @@ def ts_peak_prominence(spark: SparkSession, sf_dir: str) -> DataFrame:
 _CONC_GAP_MIN = 30  # session gap (minutes), same convention as sessionize
 
 
+def _gap_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(user_id, ts, is_start, sid): every event marked with its
+    per-user session id — a new session starts at a user's first event
+    or after a gap of more than ``_CONC_GAP_MIN`` minutes. Two per-user
+    windows (the lag, then the running start count), both partitioned
+    on user_id."""
+    ev = read_table(spark, sf_dir, "events").select("user_id", "ts", "event_id")
+    wu = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    gap = F.col("ts").cast("long") - F.lag(F.col("ts")).over(wu).cast("long")
+    marked = ev.select(
+        "user_id", "ts",
+        F.when(
+            F.lag("ts").over(wu).isNull() | (gap > _CONC_GAP_MIN * 60), 1
+        ).otherwise(0).alias("is_start"),
+    )
+    wcum = Window.partitionBy("user_id").orderBy("ts").rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    return marked.withColumn("sid", F.sum("is_start").over(wcum))
+
+
 @query(
     "events_concurrency_peak",
     f"""
@@ -2463,20 +2484,8 @@ def events_concurrency_peak(spark: SparkSession, sf_dir: str) -> DataFrame:
     would single-thread a 100-TB boundary stream; this form shuffles on
     the day key and scales with days × within-day volume.
     """
-    ev = read_table(spark, sf_dir, "events").select("user_id", "ts", "event_id")
-    wu = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap = F.col("ts").cast("long") - F.lag(F.col("ts")).over(wu).cast("long")
-    marked = ev.select(
-        "user_id", "ts",
-        F.when(
-            F.lag("ts").over(wu).isNull() | (gap > _CONC_GAP_MIN * 60), 1
-        ).otherwise(0).alias("is_start"),
-    )
-    wcum = Window.partitionBy("user_id").orderBy("ts").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
     sessions = (
-        marked.withColumn("sid", F.sum("is_start").over(wcum))
+        _gap_sessions(spark, sf_dir)
         .groupBy("user_id", "sid")
         .agg(
             F.min("ts").alias("s_start"),
@@ -2950,20 +2959,8 @@ def events_midnight_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer second diff (AVG of integers, one division rounded 2).
     Plan: the [[events_sessionize]] per-user windows + ONE aggregate.
     """
-    ev = read_table(spark, sf_dir, "events").select("user_id", "ts", "event_id")
-    wu = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap = F.col("ts").cast("long") - F.lag(F.col("ts")).over(wu).cast("long")
-    marked = ev.select(
-        "user_id", "ts",
-        F.when(
-            F.lag("ts").over(wu).isNull() | (gap > _CONC_GAP_MIN * 60), 1
-        ).otherwise(0).alias("is_start"),
-    )
-    wcum = Window.partitionBy("user_id").orderBy("ts").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
     sessions = (
-        marked.withColumn("sid", F.sum("is_start").over(wcum))
+        _gap_sessions(spark, sf_dir)
         .groupBy("user_id", "sid")
         .agg(F.min("ts").alias("s_start"), F.max("ts").alias("s_end"))
     )

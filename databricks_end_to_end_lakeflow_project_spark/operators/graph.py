@@ -54,6 +54,21 @@ def cooccurrence_edges(lineitem: DataFrame) -> DataFrame:
     )
 
 
+def cooccurrence_weights(lineitem: DataFrame) -> DataFrame:
+    """(src, dst, w): directed part pairs that share an order, weighted by
+    the number of (order, line, line) co-occurrences — the same self-equi-
+    join on the order key as `cooccurrence_edges`, grouped instead of
+    deduplicated."""
+    a = lineitem.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("src"))
+    b = lineitem.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("dst"))
+    return (
+        a.join(b, "k")
+        .filter(F.col("src") != F.col("dst"))
+        .groupBy("src", "dst")
+        .agg(F.count(F.lit(1)).alias("w"))
+    )
+
+
 def pagerank(edges: DataFrame, n_iter: int = N_ITER, damping: float = DAMPING) -> DataFrame:
     """PageRank with uniform init 1.0 over the nodes of ``edges``.
 
@@ -289,6 +304,37 @@ _LINKPRED_ANCHORS = 10  # bounded anchor batch: per-item serving shape
 _LINKPRED_PER_ANCHOR = 2
 
 
+def _anchor_wedges(edges: DataFrame) -> DataFrame:
+    """(nbr, part_a, part_b): every wedge part_a – nbr – part_b whose
+    apex part_a is an anchor (src ≤ ``_LINKPRED_ANCHORS``), part_a ≠
+    part_b. Wedges expand only from the anchors' adjacency, so the work
+    is linear in the anchor count and the mean degree."""
+    e1 = edges.filter(F.col("src") <= _LINKPRED_ANCHORS).select(
+        F.col("src").alias("part_a"), F.col("dst").alias("nbr")
+    )
+    e2 = edges.select(F.col("src").alias("part_b"), F.col("dst").alias("nbr"))
+    return e1.join(e2, "nbr").filter(F.col("part_a") != F.col("part_b"))
+
+
+def _unlinked_topk(scored: DataFrame, edges: DataFrame, score: str) -> DataFrame:
+    """The top-``_LINKPRED_PER_ANCHOR`` (part_a, part_b) pairs per anchor
+    by ``score`` DESC, part_b, after dropping pairs already linked in
+    ``edges`` (one left-anti join); the window is partitioned on the
+    anchor key."""
+    unlinked = scored.join(
+        edges,
+        (scored["part_a"] == edges["src"]) & (scored["part_b"] == edges["dst"]),
+        "left_anti",
+    )
+    w = Window.partitionBy("part_a").orderBy(F.col(score).desc(), "part_b")
+    return (
+        unlinked.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= _LINKPRED_PER_ANCHOR)
+        .drop("rn")
+        .orderBy("part_a", F.col(score).desc(), "part_b")
+    )
+
+
 @query(
     "graph_common_neighbors_topk",
     f"""
@@ -338,31 +384,12 @@ def graph_common_neighbors_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     anchor key. All counts are integers."""
     li = read_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     edges = cooccurrence_edges(li)
-    e1 = (
-        edges.filter(F.col("src") <= _LINKPRED_ANCHORS)
-        .select(F.col("src").alias("part_a"), F.col("dst").alias("nbr"))
-    )
-    e2 = edges.select(F.col("src").alias("part_b"), F.col("dst").alias("nbr"))
     cn = (
-        e1.join(e2, "nbr")
-        .filter(F.col("part_a") != F.col("part_b"))
+        _anchor_wedges(edges)
         .groupBy("part_a", "part_b")
         .agg(F.count(F.lit(1)).cast("long").alias("common_neighbors"))
     )
-    unlinked = cn.join(
-        edges,
-        (cn["part_a"] == edges["src"]) & (cn["part_b"] == edges["dst"]),
-        "left_anti",
-    )
-    w = Window.partitionBy("part_a").orderBy(
-        F.col("common_neighbors").desc(), "part_b"
-    )
-    return (
-        unlinked.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= _LINKPRED_PER_ANCHOR)
-        .drop("rn")
-        .orderBy("part_a", F.col("common_neighbors").desc(), "part_b")
-    )
+    return _unlinked_topk(cn, edges, "common_neighbors")
 
 
 @query(
@@ -424,30 +451,13 @@ def graph_adamic_adar_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("aa_q"),
         )
     )
-    e1 = (
-        edges.filter(F.col("src") <= _LINKPRED_ANCHORS)
-        .select(F.col("src").alias("part_a"), F.col("dst").alias("nbr"))
-    )
-    e2 = edges.select(F.col("src").alias("part_b"), F.col("dst").alias("nbr"))
     aa = (
-        e1.join(e2, "nbr")
-        .filter(F.col("part_a") != F.col("part_b"))
+        _anchor_wedges(edges)
         .join(deg, "nbr")
         .groupBy("part_a", "part_b")
         .agg(F.sum("aa_q").cast("long").alias("aa_score_q"))
     )
-    unlinked = aa.join(
-        edges,
-        (aa["part_a"] == edges["src"]) & (aa["part_b"] == edges["dst"]),
-        "left_anti",
-    )
-    w = Window.partitionBy("part_a").orderBy(F.col("aa_score_q").desc(), "part_b")
-    return (
-        unlinked.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= _LINKPRED_PER_ANCHOR)
-        .drop("rn")
-        .orderBy("part_a", F.col("aa_score_q").desc(), "part_b")
-    )
+    return _unlinked_topk(aa, edges, "aa_score_q")
 
 
 _LPA_ITER = 3
@@ -515,17 +525,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     contraction), which shrinks tree heights logarithmically instead of
     one hop per round.
     """
-    li = read_table(spark, sf_dir, "lineitem")
-    cooc = (
-        li.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("src"))
-        .join(
-            li.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("dst")),
-            "k",
-        )
-        .filter(F.col("src") != F.col("dst"))
-        .groupBy("src", "dst")
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
+    cooc = cooccurrence_weights(read_table(spark, sf_dir, "lineitem"))
     wnd = Window.partitionBy("src").orderBy(F.desc("w"), "dst")
     knn = (
         cooc.withColumn("rn", F.row_number().over(wnd))
@@ -624,13 +624,8 @@ def graph_jaccard_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame
     deg = edges.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).alias("d")
     )
-    e1 = edges.filter(F.col("src") <= _LINKPRED_ANCHORS).select(
-        F.col("src").alias("part_a"), F.col("dst").alias("nbr")
-    )
-    e2 = edges.select(F.col("src").alias("part_b"), F.col("dst").alias("nbr"))
     cn = (
-        e1.join(e2, "nbr")
-        .filter(F.col("part_a") != F.col("part_b"))
+        _anchor_wedges(edges)
         .groupBy("part_a", "part_b")
         .agg(F.count(F.lit(1)).alias("common_n"))
     )
@@ -649,18 +644,7 @@ def graph_jaccard_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame
             .alias("jaccard_q"),
         )
     )
-    unlinked = scored.join(
-        edges,
-        (scored["part_a"] == edges["src"]) & (scored["part_b"] == edges["dst"]),
-        "left_anti",
-    )
-    w = Window.partitionBy("part_a").orderBy(F.col("jaccard_q").desc(), "part_b")
-    return (
-        unlinked.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= _LINKPRED_PER_ANCHOR)
-        .drop("rn")
-        .orderBy("part_a", F.col("jaccard_q").desc(), "part_b")
-    )
+    return _unlinked_topk(scored, edges, "jaccard_q")
 
 
 # ---------------------------------------------------------------------------
@@ -818,17 +802,7 @@ def graph_cc_star_contraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     measures it on a 1M-node PATH graph, the adversarial case for the
     O(diameter) min-label kernel.
     """
-    li = read_table(spark, sf_dir, "lineitem")
-    cooc = (
-        li.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("src"))
-        .join(
-            li.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("dst")),
-            "k",
-        )
-        .filter(F.col("src") != F.col("dst"))
-        .groupBy("src", "dst")
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
+    cooc = cooccurrence_weights(read_table(spark, sf_dir, "lineitem"))
     strong = cooc.filter(F.col("w") >= 3).select("src", "dst")
     edges = strong.unionByName(
         strong.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
@@ -971,17 +945,7 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph is symmetric and stays symmetric under peeling, so out-degree
     on src counts all neighbors.
     """
-    li = read_table(spark, sf_dir, "lineitem")
-    cooc = (
-        li.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("src"))
-        .join(
-            li.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("dst")),
-            "k",
-        )
-        .filter(F.col("src") != F.col("dst"))
-        .groupBy("src", "dst")
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
+    cooc = cooccurrence_weights(read_table(spark, sf_dir, "lineitem"))
     edges = cooc.filter(F.col("w") >= 2).select("src", "dst").localCheckpoint()
     for _ in range(_KCORE_ROUNDS):
         keep = (
@@ -1272,17 +1236,7 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket split), then one equi-join closes each wedge against the
     edge set. All joins are equi; counts are map-side combinable.
     """
-    li = read_table(spark, sf_dir, "lineitem")
-    cooc = (
-        li.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("src"))
-        .join(
-            li.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("dst")),
-            "k",
-        )
-        .filter(F.col("src") != F.col("dst"))
-        .groupBy("src", "dst")
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
+    cooc = cooccurrence_weights(read_table(spark, sf_dir, "lineitem"))
     edges = persist_once(cooc.filter(F.col("w") >= 3).select("src", "dst"))
     deg = edges.groupBy(F.col("src").alias("node")).agg(F.count(F.lit(1)).alias("d"))
     e1 = edges.select(F.col("src").alias("v"), F.col("dst").alias("a"))

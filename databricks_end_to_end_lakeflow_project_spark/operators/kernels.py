@@ -10,10 +10,30 @@ dimension order. Element-wise ufuncs never fuse or reassociate, so every
 intermediate equals the engine's double exactly (``np.dot``/BLAS sum in
 a different order and differ in the last ulp).
 
-`map_kernel` is the one ``mapInPandas`` site: keep columns, output DDL
-derived from the input schema plus the declared outputs, empty batches
-skipped. Moving the kernels to ``mapInArrow`` is a change to this one
-function.
+`map_kernel` is the ``mapInPandas`` wrapper of the exact-fold kernels:
+keep columns, output DDL derived from the input schema plus the declared
+outputs, empty batches skipped. Moving the kernels to ``mapInArrow`` is
+a change to this one function. Eleven stages still call ``mapInPandas``
+directly, each for a reason:
+
+- Rows that are not rows of the input, so ``keep`` has nothing to keep:
+  ``stats.misra_gries_partial`` emits one summary per partition and
+  carries its counters across batches; ``similarity.pq_train`` emits
+  per-(subspace, code) partial sums that the driver collects.
+- The multimodal decode plumbing (``multimodal.extract_image_features``,
+  ``sample_frames``, ``resize_images``, ``audio_frame_energy``,
+  ``extract_patches``): a codec per payload whose outputs are decoded
+  features and frames, not folds; the module documents this decode
+  contract as its own API.
+- Float GEMM stages that are not exact folds: ``similarity.sim_gemm_batch_topk``
+  (per-batch top-k per query) and ``similarity.jl_project`` (one row per
+  output dimension). Both could state their rows as a ``map_kernel``
+  index; they move with the ``mapInArrow`` change (ROADMAP item 8).
+- ``dedup.minhash_signatures``: slices the flat shingle-hash vector across
+  rows and yields an empty frame for an empty batch; it moves when
+  shingling is fused into it (ROADMAP item 8).
+- ``functions/udfs.udf_map_in_pandas``: the demonstration of the raw
+  ``mapInPandas`` iterator API, which a wrapper would hide.
 
 When a kernel pays for its stage. A ``mapInPandas`` stage costs about
 0.2–0.4 s of fixed time per query (4 vCPU, ``local[4]``), so the

@@ -28,6 +28,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql import types as T
 
+from databricks_end_to_end_lakeflow_project_spark.operators.dedup import (
+    banded_hamming_pairs,
+    sign_vote64,
+)
 from databricks_end_to_end_lakeflow_project_spark.registry import query
 from databricks_end_to_end_lakeflow_project_spark.sources.readers import read_table
 
@@ -337,16 +341,7 @@ def _phash64(payloads: pd.Series) -> pd.Series:
 
     def one(payload) -> int:
         b = bytes(payload)
-        votes = [0] * 64
-        for i in range(len(b) - 3):
-            h = int.from_bytes(hashlib.md5(b[i : i + 4]).digest()[:8], "big")
-            for k in range(64):
-                votes[k] += 1 if (h >> k) & 1 else -1
-        out = 0
-        for k, v in enumerate(votes):
-            if v > 0:
-                out |= 1 << k
-        return out - (1 << 64) if out >= (1 << 63) else out
+        return sign_vote64(b[i : i + 4] for i in range(len(b) - 3))
 
     return payloads.map(one)
 
@@ -407,10 +402,6 @@ def multimodal_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     pure integer arithmetic over byte 4-grams, reproduced by a
     generated 64-term SQL (`_phash_oracle`); tests additionally assert
     the planted text near-dups surface as payload near-dups."""
-    from databricks_end_to_end_lakeflow_project_spark.operators.dedup import (
-        banded_hamming_pairs,
-    )
-
     media = documents_as_media(read_table(spark, sf_dir, "documents"))
     sigs = media.select("doc_id", _phash64(F.col("payload")).alias("ph"))
     return banded_hamming_pairs(sigs, "doc_id", "ph", max_hamming=6)

@@ -27,16 +27,15 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from databricks_end_to_end_lakeflow_project_spark.registry import query
-from databricks_end_to_end_lakeflow_project_spark.session import persist_once
 from databricks_end_to_end_lakeflow_project_spark.sources.readers import read_table
-from databricks_end_to_end_lakeflow_project_spark.operators.textops import tokens
+from databricks_end_to_end_lakeflow_project_spark.operators.textops import (
+    bm25_scores,
+    tokens,
+)
 
 _RRF_K = 60  # the standard reciprocal-rank-fusion damping constant
 _LEG_DEPTH = 20  # candidates taken from each leg before fusion
 _FUSED_TOPK = 10
-_LEX_TERMS = ["spark", "join", "window"]  # same fixed query as text_bm25_topk
-_BM25_K1 = 1.2
-_BM25_B = 0.75
 
 
 def _ranked_topk(scored: DataFrame, score_col: str, k: int, rank_name: str) -> DataFrame:
@@ -57,54 +56,6 @@ def _ranked_topk(scored: DataFrame, score_col: str, k: int, rank_name: str) -> D
         F.col("s.doc_id").alias("doc_id"),
         (F.col("pos") + 1).cast("int").alias(rank_name),
     )
-
-
-def _bm25_scores(docs: DataFrame) -> DataFrame:
-    """(doc_id, score) Okapi BM25 for the fixed query terms — same
-    shuffle-free known-query plan as ``text_bm25_topk`` (per-term tf via
-    size(filter(tokens)), corpus constants via one scalar agg; an Arrow
-    counts kernel was measured SLOWER here — see text_bm25_topk's note)."""
-    w = tokens(F.col("text"))
-
-    def _eq(term: str):
-        return lambda x: x == term
-
-    d = docs.select(
-        "doc_id",
-        F.size(w).cast("double").alias("dl"),
-        *[
-            F.size(F.filter(w, _eq(t))).cast("double").alias(f"tf{i}")
-            for i, t in enumerate(_LEX_TERMS, 1)
-        ],
-    )
-    # corpus constants ride the plan as a broadcast 1-row frame instead of
-    # a driver collect: d (narrow numeric projection) is persisted so the
-    # corpus is tokenized ONCE — the stats aggregate fills the cache and
-    # the scoring select reads it — and the builder schedules zero jobs.
-    # Column refs carry the exact doubles the former F.lit()s carried, so
-    # the score expression (and its 6-dp round) is bit-identical.
-    d = persist_once(d)
-    g = d.agg(
-        F.count("*").cast("double").alias("n"),
-        F.avg("dl").alias("avgdl"),
-        *[
-            F.sum((F.col(f"tf{i}") > 0).cast("int")).cast("double").alias(f"df{i}")
-            for i in range(1, len(_LEX_TERMS) + 1)
-        ],
-    )
-    norm = F.lit(_BM25_K1) * (
-        F.lit(1 - _BM25_B) + F.lit(_BM25_B) * F.col("dl") / F.col("avgdl")
-    )
-    score = None
-    for i in range(1, len(_LEX_TERMS) + 1):
-        idf = F.log(
-            F.lit(1.0)
-            + (F.col("n") - F.col(f"df{i}") + F.lit(0.5))
-            / (F.col(f"df{i}") + F.lit(0.5))
-        )
-        part = idf * F.col(f"tf{i}") * F.lit(_BM25_K1 + 1) / (F.col(f"tf{i}") + norm)
-        score = part if score is None else score + part
-    return d.crossJoin(F.broadcast(g)).select("doc_id", F.round(score, 6).alias("score"))
 
 
 # DuckDB oracle: both legs recomputed in SQL, ranked on the same rounded
@@ -183,7 +134,12 @@ def retrieval_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_table(spark, sf_dir, "documents")
     em = read_table(spark, sf_dir, "embeddings")
 
-    lex = _ranked_topk(_bm25_scores(docs), "score", _LEG_DEPTH, "lex_rank")
+    lex = _ranked_topk(
+        bm25_scores(docs).select("doc_id", F.round("score", 6).alias("score")),
+        "score",
+        _LEG_DEPTH,
+        "lex_rank",
+    )
     # dense leg scored by the exact-fold Arrow kernel (r10, guide §4.2 —
     # the interpreted HOF cosine was the leg's whole cost); round + ranking
     # stay in the JVM

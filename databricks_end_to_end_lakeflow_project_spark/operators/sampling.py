@@ -722,8 +722,6 @@ def sample_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly the sharded-write plan per epoch, quartile filters pushed to
     the persisted frame."""
     docs = _t(spark, sf_dir, "documents").select("doc_id", "n_chars")
-    from databricks_end_to_end_lakeflow_project_spark.session import persist_once
-
     tiled = persist_once(
         with_ntile(
             docs,
@@ -897,15 +895,11 @@ def sample_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     subsample candidates per round (streaming k-center) with the same
     per-round plan.
     """
-    em = read_table(spark, sf_dir, "embeddings")
-    vals = em.select(
-        "vec_id", F.posexplode("embedding").alias("dim0", "x")
-    ).select(
-        "vec_id",
-        (F.col("dim0") + 1).cast("int").alias("dim"),
-        F.round(F.col("x").cast("double") * 1000000).cast("long").alias("x_q"),
+    from databricks_end_to_end_lakeflow_project_spark.operators.similarity import (
+        fixed_point_dims,
     )
-    vals = persist_once(vals)
+
+    vals = fixed_point_dims(read_table(spark, sf_dir, "embeddings"))
     selected: list[tuple[int, int, int]] = [(0, 0, 0)]  # (round, vec_id, mind)
     for r in range(1, _KC_ROUNDS + 1):
         ids = [v for _, v, _ in selected]

@@ -2035,6 +2035,58 @@ def _kmeans_oracle() -> str:
     """
 
 
+def fixed_point_dims(em: DataFrame) -> DataFrame:
+    """(vec_id, dim 1-based, x_q) of every embedding value quantized to a
+    1e-6 long, persisted: the fixed-point protocol behind the exact
+    k-means, PCA and k-center operators — values quantize BEFORE any
+    arithmetic, so every distance is a reduction-order-independent
+    integer sum."""
+    vals = em.select(
+        "vec_id", F.posexplode("embedding").alias("dim0", "x")
+    ).select(
+        "vec_id",
+        (F.col("dim0") + 1).cast("int").alias("dim"),
+        F.round(F.col("x").cast("double") * 1000000).cast("long").alias("x_q"),
+    )
+    return persist_once(vals)
+
+
+def _kmeans_dists(vals: DataFrame, cents: DataFrame) -> DataFrame:
+    """(vec_id, cluster, d2): integer squared distance of every vector to
+    every centroid of ``cents`` (cluster, dim, c_q) — broadcast centroids,
+    a per-dim partial aggregate on (vec_id, cluster)."""
+    diff = F.col("x_q") - F.col("c_q")
+    return (
+        vals.join(F.broadcast(cents), "dim")
+        .groupBy("vec_id", "cluster")
+        .agg(F.sum(diff * diff).alias("d2"))
+    )
+
+
+def _kmeans_assign(d: DataFrame) -> DataFrame:
+    """(vec_id, cluster, d2) of each vector's nearest centroid; distance
+    ties break to the lowest cluster id."""
+    best = d.groupBy("vec_id").agg(F.min(F.struct("d2", "cluster")).alias("b"))
+    return best.select(
+        "vec_id", F.col("b.cluster").alias("cluster"), F.col("b.d2").alias("d2")
+    )
+
+
+def _kmeans_round1_centroids(vals: DataFrame) -> DataFrame:
+    """Centroids after one Lloyd step from the first four vectors: assign,
+    then the exact mean rounded back to the integer grid."""
+    c0 = vals.filter(F.col("vec_id") < 4).select(
+        F.col("vec_id").alias("cluster"), "dim", F.col("x_q").alias("c_q")
+    )
+    a0 = _kmeans_assign(_kmeans_dists(vals, c0))
+    return (
+        a0.select("vec_id", "cluster")
+        .join(vals, "vec_id")
+        .groupBy("cluster", "dim")
+        .agg(F.round(F.sum("x_q") * 1.0 / F.count(F.lit(1))).cast("long").alias("c_q"))
+    )
+
+
 @query("sim_kmeans_lloyd", _kmeans_oracle())
 def sim_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two exact Lloyd iterations of k-means (k=4, squared-L2) over the
@@ -2059,46 +2111,8 @@ def sim_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     first-4-rows seeding at real scale). SSE sums route through
     DECIMAL(38,0) so corpus-scale totals cannot overflow BIGINT.
     """
-    em = read_table(spark, sf_dir, "embeddings")
-    vals = em.select(
-        "vec_id", F.posexplode("embedding").alias("dim0", "x")
-    ).select(
-        "vec_id",
-        (F.col("dim0") + 1).cast("int").alias("dim"),
-        F.round(F.col("x").cast("double") * 1000000).cast("long").alias("x_q"),
-    )
-    vals = persist_once(vals)
-
-    def dists(cents: DataFrame) -> DataFrame:
-        diff = F.col("x_q") - F.col("c_q")
-        return (
-            vals.join(F.broadcast(cents), "dim")
-            .groupBy("vec_id", "cluster")
-            .agg(F.sum(diff * diff).alias("d2"))
-        )
-
-    def assign(d: DataFrame) -> DataFrame:
-        best = d.groupBy("vec_id").agg(
-            F.min(F.struct("d2", "cluster")).alias("b")
-        )
-        return best.select("vec_id", F.col("b.cluster").alias("cluster"),
-                           F.col("b.d2").alias("d2"))
-
-    c0 = vals.filter(F.col("vec_id") < 4).select(
-        F.col("vec_id").alias("cluster"), "dim", F.col("x_q").alias("c_q")
-    )
-    a0 = assign(dists(c0))
-    c1 = (
-        a0.select("vec_id", "cluster")
-        .join(vals, "vec_id")
-        .groupBy("cluster", "dim")
-        .agg(
-            F.round(F.sum("x_q") * 1.0 / F.count(F.lit(1)))
-            .cast("long")
-            .alias("c_q")
-        )
-    )
-    a1 = assign(dists(c1))
+    vals = fixed_point_dims(read_table(spark, sf_dir, "embeddings"))
+    a1 = _kmeans_assign(_kmeans_dists(vals, _kmeans_round1_centroids(vals)))
     out = (
         a1.groupBy("cluster")
         .agg(
@@ -2194,15 +2208,7 @@ def sim_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     distributed matrix-free power iteration: O(nnz) per round, direction
     state = dim, no driver linear algebra.
     """
-    em = read_table(spark, sf_dir, "embeddings")
-    vals = em.select(
-        "vec_id", F.posexplode("embedding").alias("dim0", "x")
-    ).select(
-        "vec_id",
-        (F.col("dim0") + 1).cast("int").alias("dim"),
-        F.round(F.col("x").cast("double") * 1000000).cast("long").alias("x_q"),
-    )
-    vals = persist_once(vals)
+    vals = fixed_point_dims(read_table(spark, sf_dir, "embeddings"))
     v = spark.range(1, 65).select(
         F.col("id").cast("int").alias("dim"),
         F.when(F.col("id") == 1, F.lit(1000000))
@@ -2641,42 +2647,9 @@ def sim_kmeans_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBy over the (vec, cluster) distance frame — no new
     corpus-scale shuffle.
     """
-    em = read_table(spark, sf_dir, "embeddings")
-    vals = em.select(
-        "vec_id", F.posexplode("embedding").alias("dim0", "x")
-    ).select(
-        "vec_id",
-        (F.col("dim0") + 1).cast("int").alias("dim"),
-        F.round(F.col("x").cast("double") * 1000000).cast("long").alias("x_q"),
-    )
-    vals = persist_once(vals)
-
-    def dists(cents: DataFrame) -> DataFrame:
-        diff = F.col("x_q") - F.col("c_q")
-        return (
-            vals.join(F.broadcast(cents), "dim")
-            .groupBy("vec_id", "cluster")
-            .agg(F.sum(diff * diff).alias("d2"))
-        )
-
-    def assign(d: DataFrame) -> DataFrame:
-        best = d.groupBy("vec_id").agg(F.min(F.struct("d2", "cluster")).alias("b"))
-        return best.select(
-            "vec_id", F.col("b.cluster").alias("cluster"), F.col("b.d2").alias("d2")
-        )
-
-    c0 = vals.filter(F.col("vec_id") < 4).select(
-        F.col("vec_id").alias("cluster"), "dim", F.col("x_q").alias("c_q")
-    )
-    a0 = assign(dists(c0))
-    c1 = (
-        a0.select("vec_id", "cluster")
-        .join(vals, "vec_id")
-        .groupBy("cluster", "dim")
-        .agg(F.round(F.sum("x_q") * 1.0 / F.count(F.lit(1))).cast("long").alias("c_q"))
-    )
-    d1 = persist_once(dists(c1))
-    a1 = assign(d1)
+    vals = fixed_point_dims(read_table(spark, sf_dir, "embeddings"))
+    d1 = persist_once(_kmeans_dists(vals, _kmeans_round1_centroids(vals)))
+    a1 = _kmeans_assign(d1)
     nearest_other = (
         d1.join(a1.select("vec_id", F.col("cluster").alias("own")), "vec_id")
         .filter(F.col("cluster") != F.col("own"))

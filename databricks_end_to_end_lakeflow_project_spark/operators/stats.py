@@ -3337,6 +3337,30 @@ def stats_wilson_lower_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+def _click_view_cents_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """One row (n1, n2, a1, b1, a2, b2): count, Σ cents and Σ cents² of
+    event value for 'click' (1 / a) and 'view' (2 / b). Values quantize to
+    integer cents, so every moment is an exact 64-bit sum in both
+    engines; one map-side-combinable groupBy, then a 2-row pivot."""
+    ev = read_table(spark, sf_dir, "events").filter(
+        F.col("event_type").isin("click", "view")
+    )
+    cents = F.round(F.col("value") * 100).cast("long")
+    g = ev.groupBy("event_type").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(cents).alias("s1"),
+        F.sum(cents * cents).alias("s2"),
+    )
+    return g.agg(
+        F.max(F.when(F.col("event_type") == "click", F.col("n"))).alias("n1"),
+        F.max(F.when(F.col("event_type") == "view", F.col("n"))).alias("n2"),
+        F.max(F.when(F.col("event_type") == "click", F.col("s1"))).alias("a1"),
+        F.max(F.when(F.col("event_type") == "view", F.col("s1"))).alias("b1"),
+        F.max(F.when(F.col("event_type") == "click", F.col("s2"))).alias("a2"),
+        F.max(F.when(F.col("event_type") == "view", F.col("s2"))).alias("b2"),
+    )
+
+
 @query(
     "stats_welch_ttest",
     """
@@ -3390,23 +3414,7 @@ def stats_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     4/2. Plan: ONE map-side-combinable groupBy over the filtered scan,
     then a 2-row pivot — nothing else touches the corpus.
     """
-    ev = read_table(spark, sf_dir, "events").filter(
-        F.col("event_type").isin("click", "view")
-    )
-    cents = F.round(F.col("value") * 100).cast("long")
-    g = ev.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(cents).alias("s1"),
-        F.sum(cents * cents).alias("s2"),
-    )
-    w = g.agg(
-        F.max(F.when(F.col("event_type") == "click", F.col("n"))).alias("n1"),
-        F.max(F.when(F.col("event_type") == "view", F.col("n"))).alias("n2"),
-        F.max(F.when(F.col("event_type") == "click", F.col("s1"))).alias("a1"),
-        F.max(F.when(F.col("event_type") == "view", F.col("s1"))).alias("b1"),
-        F.max(F.when(F.col("event_type") == "click", F.col("s2"))).alias("a2"),
-        F.max(F.when(F.col("event_type") == "view", F.col("s2"))).alias("b2"),
-    )
+    w = _click_view_cents_moments(spark, sf_dir)
     n1, n2 = F.col("n1"), F.col("n2")
     m1 = (F.col("a1") / 100.0) / n1
     m2 = (F.col("b1") / 100.0) / n2
@@ -3659,6 +3667,24 @@ def stats_hhi_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _nation_fulfilled_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(nation, n, pos): orders per customer nation and how many of them
+    are fulfilled (status 'F') — exact integer counts from one join +
+    groupBy over the corpus."""
+    od = read_table(spark, sf_dir, "orders").select("o_custkey", "o_orderstatus")
+    cu = read_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    na = read_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    return (
+        od.join(cu, od["o_custkey"] == cu["c_custkey"])
+        .join(F.broadcast(na), cu["c_nationkey"] == na["n_nationkey"])
+        .groupBy(F.col("n_name").alias("nation"))
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.when(F.col("o_orderstatus") == "F", 1).otherwise(0)).alias("pos"),
+        )
+    )
+
+
 @query(
     "stats_eb_shrinkage",
     """
@@ -3706,20 +3732,7 @@ def stats_eb_shrinkage(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: one join + groupBy over the corpus; everything after is the
     25-row nation frame against a broadcast 1-row prior.
     """
-    od = read_table(spark, sf_dir, "orders").select("o_custkey", "o_orderstatus")
-    cu = read_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    na = read_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    g = (
-        od.join(cu, od["o_custkey"] == cu["c_custkey"])
-        .join(F.broadcast(na), cu["c_nationkey"] == na["n_nationkey"])
-        .groupBy(F.col("n_name").alias("nation"))
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.when(F.col("o_orderstatus") == "F", 1).otherwise(0)).alias(
-                "pos"
-            ),
-        )
-    )
+    g = _nation_fulfilled_counts(spark, sf_dir)
     tot = g.agg(
         (F.sum("pos") / (1.0 * F.sum("n"))).alias("m"),
         F.count(F.lit(1)).alias("n_groups"),
@@ -3811,18 +3824,7 @@ def stats_jackknife_loo_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     pinned nation order on both engines, rounded 6. Plan: join + groupBy,
     then pure algebra on the 25-row frame (never G re-aggregations).
     """
-    od = read_table(spark, sf_dir, "orders").select("o_custkey", "o_orderstatus")
-    cu = read_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    na = read_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    g = (
-        od.join(cu, od["o_custkey"] == cu["c_custkey"])
-        .join(F.broadcast(na), cu["c_nationkey"] == na["n_nationkey"])
-        .groupBy(F.col("n_name").alias("nation"))
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.when(F.col("o_orderstatus") == "F", 1).otherwise(0)).alias("pos"),
-        )
-    )
+    g = _nation_fulfilled_counts(spark, sf_dir)
     tot = g.agg(
         F.sum("n").alias("nn"), F.sum("pos").alias("pp"), F.count(F.lit(1)).alias("gg")
     )
@@ -4092,23 +4094,7 @@ def stats_tost_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed expression trees, rounded 4. Plan: one map-side-combinable
     groupBy + a 2-row pivot.
     """
-    ev = read_table(spark, sf_dir, "events").filter(
-        F.col("event_type").isin("click", "view")
-    )
-    cents = F.round(F.col("value") * 100).cast("long")
-    g = ev.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(cents).alias("s1"),
-        F.sum(cents * cents).alias("s2"),
-    )
-    w = g.agg(
-        F.max(F.when(F.col("event_type") == "click", F.col("n"))).alias("n1"),
-        F.max(F.when(F.col("event_type") == "view", F.col("n"))).alias("n2"),
-        F.max(F.when(F.col("event_type") == "click", F.col("s1"))).alias("a1"),
-        F.max(F.when(F.col("event_type") == "view", F.col("s1"))).alias("b1"),
-        F.max(F.when(F.col("event_type") == "click", F.col("s2"))).alias("a2"),
-        F.max(F.when(F.col("event_type") == "view", F.col("s2"))).alias("b2"),
-    )
+    w = _click_view_cents_moments(spark, sf_dir)
     n1, n2 = F.col("n1"), F.col("n2")
     diff = (F.col("a1") / 100.0) / n1 - (F.col("b1") / 100.0) / n2
     se = F.sqrt(

@@ -46,6 +46,19 @@ def stopword_hits(toks: Column, words: list[str]) -> Column:
     return F.size(F.filter(toks, lambda x: x.isin(*words)))
 
 
+def quality_score(toks: Column) -> Column:
+    """Unrounded composite quality score of a token array: length
+    saturation + lexical diversity + low stopword density (the standard
+    pretraining-filter shape) — ``0.4·min(n/100, 1) + 0.4·(distinct/n) +
+    0.2·(1 − stopwords/n)``."""
+    n = F.size(toks).cast("double")
+    return (
+        0.4 * F.least(n / 100.0, F.lit(1.0))
+        + 0.4 * (F.size(F.array_distinct(toks)).cast("double") / n)
+        + 0.2 * (1.0 - stopword_hits(toks, STOPWORDS).cast("double") / n)
+    )
+
+
 def doc_token_counts(docs: "DataFrame") -> "DataFrame":
     """(doc_id, token, tf): per-document token frequencies as an Arrow
     kernel — the batch equivalent of ``explode(tokens)`` followed by a
@@ -133,13 +146,7 @@ def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Composite quality score: length saturation + lexical diversity +
     low stopword density (the standard pretraining-filter shape)."""
     docs = read_table(spark, sf_dir, "documents")
-    w = tokens(F.col("text"))
-    n = F.size(w).cast("double")
-    uniq_ratio = F.size(F.array_distinct(w)).cast("double") / n
-    stop_ratio = stopword_hits(w, STOPWORDS).cast("double") / n
-    score = (
-        0.4 * F.least(n / 100.0, F.lit(1.0)) + 0.4 * uniq_ratio + 0.2 * (1.0 - stop_ratio)
-    )
+    score = quality_score(tokens(F.col("text")))
     return docs.select("doc_id", F.round(score, 4).alias("quality_score"))
 
 
@@ -393,55 +400,17 @@ _BM25_B = 0.75
 _QUERY_TERMS = ["spark", "join", "window"]
 
 
-@query(
-    "text_bm25_topk",
-    """
-    WITH d AS (
-      SELECT doc_id, string_split(trim(text), ' ') AS w,
-             LENGTH(string_split(trim(text), ' '))::DOUBLE AS dl
-      FROM documents
-    ), tf AS (
-      SELECT doc_id, dl,
-             LENGTH(list_filter(w, x -> x = 'spark'))::DOUBLE AS tf1,
-             LENGTH(list_filter(w, x -> x = 'join'))::DOUBLE AS tf2,
-             LENGTH(list_filter(w, x -> x = 'window'))::DOUBLE AS tf3
-      FROM d
-    ), g AS (
-      SELECT COUNT(*)::DOUBLE AS n, AVG(dl) AS avgdl,
-             SUM((tf1 > 0)::INT)::DOUBLE AS df1,
-             SUM((tf2 > 0)::INT)::DOUBLE AS df2,
-             SUM((tf3 > 0)::INT)::DOUBLE AS df3
-      FROM tf
-    ), s AS (
-      SELECT doc_id,
-             ln(1 + (n - df1 + 0.5) / (df1 + 0.5))
-               * tf1 * 2.2 / (tf1 + 1.2 * (1 - 0.75 + 0.75 * dl / avgdl))
-           + ln(1 + (n - df2 + 0.5) / (df2 + 0.5))
-               * tf2 * 2.2 / (tf2 + 1.2 * (1 - 0.75 + 0.75 * dl / avgdl))
-           + ln(1 + (n - df3 + 0.5) / (df3 + 0.5))
-               * tf3 * 2.2 / (tf3 + 1.2 * (1 - 0.75 + 0.75 * dl / avgdl))
-             AS score
-      FROM tf, g
-    )
-    SELECT doc_id, ROUND(score, 4) AS bm25
-    FROM s
-    ORDER BY score DESC, doc_id
-    LIMIT 10
-    """,
-)
-def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BM25 top-10 for the fixed query {spark, join, window} (Okapi
-    BM25+, k1=1.2, b=0.75).
+def bm25_scores(docs: DataFrame) -> DataFrame:
+    """(doc_id, score): unrounded Okapi BM25 of every document for the
+    fixed query ``_QUERY_TERMS``.
 
     North-star retrieval op (SURVEY.md §2.9). Scale design: for a KNOWN
     query, per-term tf comes from ``size(filter(tokens, = term))`` —
     pure codegen inside the scan, NO token explode and NO shuffle. The
     corpus-level constants (N, avgdl, per-term document frequency) are
-    one tiny scalar aggregate collected to the driver, so the whole
-    plan is two scans and a take-ordered top-k — at 100 TB the postings
-    shuffle a full inverted index would need simply never happens.
+    one tiny scalar aggregate — at 100 TB the postings shuffle a full
+    inverted index would need simply never happens.
     """
-    docs = read_table(spark, sf_dir, "documents")
     w = tokens(F.col("text"))
 
     def _eq(term: str):
@@ -488,8 +457,51 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         part = idf * F.col(f"tf{i}") * F.lit(_BM25_K1 + 1) / (F.col(f"tf{i}") + norm)
         score = part if score is None else score + part
+    return d.crossJoin(F.broadcast(g)).select("doc_id", score.alias("score"))
+
+
+@query(
+    "text_bm25_topk",
+    """
+    WITH d AS (
+      SELECT doc_id, string_split(trim(text), ' ') AS w,
+             LENGTH(string_split(trim(text), ' '))::DOUBLE AS dl
+      FROM documents
+    ), tf AS (
+      SELECT doc_id, dl,
+             LENGTH(list_filter(w, x -> x = 'spark'))::DOUBLE AS tf1,
+             LENGTH(list_filter(w, x -> x = 'join'))::DOUBLE AS tf2,
+             LENGTH(list_filter(w, x -> x = 'window'))::DOUBLE AS tf3
+      FROM d
+    ), g AS (
+      SELECT COUNT(*)::DOUBLE AS n, AVG(dl) AS avgdl,
+             SUM((tf1 > 0)::INT)::DOUBLE AS df1,
+             SUM((tf2 > 0)::INT)::DOUBLE AS df2,
+             SUM((tf3 > 0)::INT)::DOUBLE AS df3
+      FROM tf
+    ), s AS (
+      SELECT doc_id,
+             ln(1 + (n - df1 + 0.5) / (df1 + 0.5))
+               * tf1 * 2.2 / (tf1 + 1.2 * (1 - 0.75 + 0.75 * dl / avgdl))
+           + ln(1 + (n - df2 + 0.5) / (df2 + 0.5))
+               * tf2 * 2.2 / (tf2 + 1.2 * (1 - 0.75 + 0.75 * dl / avgdl))
+           + ln(1 + (n - df3 + 0.5) / (df3 + 0.5))
+               * tf3 * 2.2 / (tf3 + 1.2 * (1 - 0.75 + 0.75 * dl / avgdl))
+             AS score
+      FROM tf, g
+    )
+    SELECT doc_id, ROUND(score, 4) AS bm25
+    FROM s
+    ORDER BY score DESC, doc_id
+    LIMIT 10
+    """,
+)
+def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """BM25 top-10 for the fixed query {spark, join, window} (Okapi
+    BM25+, k1=1.2, b=0.75), scored by `bm25_scores`; the plan is two
+    scans and a take-ordered top-k."""
     return (
-        d.crossJoin(F.broadcast(g)).select("doc_id", score.alias("score"))
+        bm25_scores(read_table(spark, sf_dir, "documents"))
         .orderBy(F.col("score").desc(), "doc_id")
         .limit(10)
         .select("doc_id", F.round("score", 4).alias("bm25"))
@@ -785,6 +797,19 @@ def text_fuzzy_token_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _unigram_token_probs(docs: DataFrame) -> DataFrame:
+    """(token, doc_id, p): every token of ``docs`` with its probability
+    under the corpus-trained unigram model p(token) = count/total. The LM
+    is a vocabulary-sized aggregate broadcast back onto the exploded
+    token stream; the corpus total is one driver count."""
+    tok = docs.select("doc_id", F.explode(tokens(F.col("text"))).alias("token"))
+    total = tok.count()
+    lm = tok.groupBy("token").agg(
+        (F.count("*").cast("double") / F.lit(float(total))).alias("p")
+    )
+    return tok.join(F.broadcast(lm), "token")
+
+
 @query(
     "text_unigram_nll",
     """
@@ -816,13 +841,7 @@ def text_unigram_nll(spark: SparkSession, sf_dir: str) -> DataFrame:
     on doc_id. Two scans of the token stream, shuffles bounded by
     vocabulary + documents, never corpus tokens.
     """
-    docs = read_table(spark, sf_dir, "documents")
-    tok = docs.select("doc_id", F.explode(tokens(F.col("text"))).alias("token"))
-    total = tok.count()
-    lm = tok.groupBy("token").agg(
-        (F.count("*").cast("double") / F.lit(float(total))).alias("p")
-    )
-    scored = tok.join(F.broadcast(lm), "token")
+    scored = _unigram_token_probs(read_table(spark, sf_dir, "documents"))
     return scored.groupBy("doc_id").agg(
         F.count("*").alias("n_tokens"),
         F.round(-F.avg(F.log("p")), 4).alias("nll"),
@@ -993,13 +1012,8 @@ def text_head_middle_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     per document on the language key — skew-free since scoring already
     collapsed the corpus to per-doc rows."""
     docs = read_table(spark, sf_dir, "documents")
-    tok = docs.select("doc_id", F.explode(tokens(F.col("text"))).alias("token"))
-    total = tok.count()
-    lm = tok.groupBy("token").agg(
-        (F.count("*").cast("double") / F.lit(float(total))).alias("p")
-    )
     nll = (
-        tok.join(F.broadcast(lm), "token")
+        _unigram_token_probs(docs)
         .groupBy("doc_id")
         .agg((-F.avg(F.log("p"))).alias("nll"))
     )
@@ -1107,6 +1121,64 @@ def text_source_mix_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _c4_spans(docs: DataFrame) -> DataFrame:
+    """(doc_id, source, idx, span): every document cut into consecutive
+    10-word spans — pure codegen array work inside the scan."""
+    W = 10
+    words = F.split(F.trim(F.col("text")), " ")
+    n_chunks = F.ceil(F.size(words) / F.lit(float(W))).cast("int")
+    spans = F.transform(
+        F.sequence(F.lit(0), n_chunks - 1),
+        lambda i: F.array_join(F.slice(words, i * W + 1, W), " "),
+    )
+    return docs.select("doc_id", "source", F.posexplode(spans).alias("idx", "span"))
+
+
+def _c4_span_accounting(ex: DataFrame, base_index: DataFrame | None) -> DataFrame:
+    """Per-source C4 first-occurrence-wins accounting of the spans ``ex``:
+    (source, n_docs, n_spans, n_removed, retained_words). A span is kept
+    where it is the first (doc_id, idx) occurrence within ``ex`` — a
+    partial-aggregatable min-struct per span — and, given a
+    ``base_index`` of earlier spans (None for a one-shot run), absent
+    from it (one left-anti join). Kept volume is attributed to the first
+    occurrence's source."""
+    totals = ex.groupBy("source").agg(
+        F.countDistinct("doc_id").alias("n_docs"),
+        F.count(F.lit(1)).alias("n_spans"),
+    )
+    firsts = ex.groupBy("span").agg(
+        F.min(F.struct("doc_id", "idx", "source")).alias("f")
+    )
+    if base_index is not None:
+        firsts = firsts.join(base_index, "span", "left_anti")
+    kept = (
+        firsts.select(
+            F.col("f.source").alias("source"),
+            F.size(F.split(F.col("span"), " ")).alias("w"),
+        )
+        .groupBy("source")
+        .agg(
+            F.count(F.lit(1)).alias("n_kept"),
+            F.sum("w").alias("retained_words"),
+        )
+    )
+    return (
+        totals.join(kept, "source", "left")
+        .select(
+            "source",
+            "n_docs",
+            "n_spans",
+            (F.col("n_spans") - F.coalesce(F.col("n_kept"), F.lit(0))).alias(
+                "n_removed"
+            ),
+            F.coalesce(F.col("retained_words"), F.lit(0)).cast("long").alias(
+                "retained_words"
+            ),
+        )
+        .orderBy("source")
+    )
+
+
 @query(
     "text_dedup_span_c4",
     """
@@ -1164,50 +1236,7 @@ def text_dedup_span_c4(spark: SparkSession, sf_dir: str) -> DataFrame:
     span widths swap the raw span text for `xxhash64(span)` as the
     grouping key (here spans are ≤ ~80 bytes, so the text itself is the
     key and keeps the oracle exact)."""
-    W = 10
-    docs = read_table(spark, sf_dir, "documents")
-    words = F.split(F.trim(F.col("text")), " ")
-    n_chunks = F.ceil(F.size(words) / F.lit(float(W))).cast("int")
-    spans = F.transform(
-        F.sequence(F.lit(0), n_chunks - 1),
-        lambda i: F.array_join(F.slice(words, i * W + 1, W), " "),
-    )
-    ex = docs.select(
-        "doc_id", "source", F.posexplode(spans).alias("idx", "span")
-    )
-    per_source = ex.groupBy("source").agg(
-        F.countDistinct("doc_id").alias("n_docs"),
-        F.count(F.lit(1)).alias("n_spans"),
-    )
-    firsts = ex.groupBy("span").agg(
-        F.min(F.struct("doc_id", "idx", "source")).alias("f")
-    )
-    kept = (
-        firsts.select(
-            F.col("f.source").alias("source"),
-            F.size(F.split(F.col("span"), " ")).alias("w"),
-        )
-        .groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n_kept"),
-            F.sum("w").alias("retained_words"),
-        )
-    )
-    return (
-        per_source.join(kept, "source", "left")
-        .select(
-            "source",
-            "n_docs",
-            "n_spans",
-            (F.col("n_spans") - F.coalesce(F.col("n_kept"), F.lit(0))).alias(
-                "n_removed"
-            ),
-            F.coalesce(F.col("retained_words"), F.lit(0)).cast("long").alias(
-                "retained_words"
-            ),
-        )
-        .orderBy("source")
-    )
+    return _c4_span_accounting(_c4_spans(read_table(spark, sf_dir, "documents")), None)
 
 
 @query(
@@ -1270,52 +1299,10 @@ def text_dedup_span_c4_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     text. Incremental cost is O(delta + index), independent of total
     corpus history — the property that lets a 100 TB corpus absorb daily
     batches."""
-    W = 10
     cut = 400
-    docs = read_table(spark, sf_dir, "documents")
-    words = F.split(F.trim(F.col("text")), " ")
-    n_chunks = F.ceil(F.size(words) / F.lit(float(W))).cast("int")
-    spans = F.transform(
-        F.sequence(F.lit(0), n_chunks - 1),
-        lambda i: F.array_join(F.slice(words, i * W + 1, W), " "),
-    )
-    ex = docs.select("doc_id", "source", F.posexplode(spans).alias("idx", "span"))
+    ex = _c4_spans(read_table(spark, sf_dir, "documents"))
     base_index = ex.filter(F.col("doc_id") < cut).select("span").distinct()
-    delta = ex.filter(F.col("doc_id") >= cut)
-    totals = delta.groupBy("source").agg(
-        F.countDistinct("doc_id").alias("n_docs"),
-        F.count(F.lit(1)).alias("n_spans"),
-    )
-    delta_firsts = delta.groupBy("span").agg(
-        F.min(F.struct("doc_id", "idx", "source")).alias("f")
-    )
-    kept = (
-        delta_firsts.join(base_index, "span", "left_anti")
-        .select(
-            F.col("f.source").alias("source"),
-            F.size(F.split(F.col("span"), " ")).alias("w"),
-        )
-        .groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n_kept"),
-            F.sum("w").alias("retained_words"),
-        )
-    )
-    return (
-        totals.join(kept, "source", "left")
-        .select(
-            "source",
-            "n_docs",
-            "n_spans",
-            (F.col("n_spans") - F.coalesce(F.col("n_kept"), F.lit(0))).alias(
-                "n_removed"
-            ),
-            F.coalesce(F.col("retained_words"), F.lit(0)).cast("long").alias(
-                "retained_words"
-            ),
-        )
-        .orderBy("source")
-    )
+    return _c4_span_accounting(ex.filter(F.col("doc_id") >= cut), base_index)
 
 
 @query(

@@ -20,9 +20,10 @@ DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 # handed (`registry._pin_session`) and every cloned session copies from
 # its caller: UTC, so timestamp values match the UTC-naive DuckDB oracle;
 # ANSI, the semantics every oracle was written against; and the
-# partition-discovery threshold `get_spark` sets, because a managed table
-# is read as the explicit file list of its log entry and Spark lists
-# more paths than the threshold (default 32) with a Spark job.
+# partition-discovery threshold, because a managed table is read as the
+# explicit file list of its log entry and Spark lists more paths than the
+# threshold (default 32) with a Spark job. `get_spark` builds its
+# sessions with them.
 PINNED_CONF = (
     ("spark.sql.session.timeZone", "UTC"),
     ("spark.sql.ansi.enabled", "true"),
@@ -67,7 +68,6 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config(
             "spark.driver.memory",
@@ -81,11 +81,8 @@ def get_spark(
         # microseconds do, so high-water marks read with no job
         # (`sources.readers.spark_parquet_max`)
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-        # a managed table is read as the explicit file list of its log
-        # entry, and Spark lists more paths than this with a Spark job
-        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in (*PINNED_CONF, *(extra_conf or {}).items()):
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -130,6 +130,9 @@ def run_to_memory(
     the duration of the drain; a concurrently-running query could observe
     the overridden values — the exact hazard tests/test_plans.py's conf
     guard bans.)
+
+    The sink's temp view ``name`` is dropped before returning: the
+    returned frame is the only handle on the drained rows.
     """
     if callable(stream) and not isinstance(stream, DataFrame):
         if spark is None:
@@ -156,7 +159,12 @@ def run_to_memory(
         .start()
     )
     q.awaitTermination()
-    return session.table(name)
+    out = session.table(name)
+    # the analyzed frame holds the sink itself, so the drained rows stay
+    # readable through it; the view would keep them registered (and
+    # alive) in the session for as long as the session lives
+    session.catalog.dropTempView(name)
+    return out
 
 
 def watermarked_tumbling(stream_events: DataFrame, delay: str = "10 minutes") -> DataFrame:

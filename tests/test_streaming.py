@@ -63,6 +63,21 @@ def test_dedup_within_watermark(spark, tmp_path):
     assert sorted(r["event_id"] for r in out.collect()) == [1, 2]
 
 
+@pytest.mark.parametrize("form", ["builder", "dataframe"])
+def test_run_to_memory_drops_its_sink_view(spark, events_dir, form):
+    name = f"drained_{form}_{uuid.uuid4().hex[:6]}"
+    if form == "builder":
+        # input_rows routes the build through a cloned session
+        out = st.run_to_memory(
+            lambda s: st.stream_from_dir(s, events_dir), name, input_rows=5, spark=spark
+        )
+    else:
+        out = st.run_to_memory(st.stream_from_dir(spark, events_dir), name)
+    assert name not in {t.name for t in out.sparkSession.catalog.listTables()}
+    assert sorted(r["event_id"] for r in out.collect()) == [1, 2, 3, 4, 5]
+    assert out.agg(F.sum("value")).first()[0] == 15.0
+
+
 def test_stateful_running_totals_across_batches(spark, events_dir):
     # force 2 micro-batches so state must carry across them
     stream = st.stream_from_dir(spark, events_dir, max_files_per_trigger=1)
