@@ -32,6 +32,7 @@ rewrite below the whole table.
 from __future__ import annotations
 
 import contextlib
+import fcntl
 import glob
 import json
 import os
@@ -54,6 +55,7 @@ from databricks_end_to_end_lakeflow_project_spark.sources.readers import (
 
 _SRC = "__is_update"
 _RN = "__cdc_rn"
+_LOCK = ".lock"  # the commit lock, in the table's _log dir
 
 
 def latest_by_key(
@@ -205,13 +207,15 @@ class ManagedParquetTable:
     commit replaced, so a scan planned before a commit still finds its
     files after it, also at ``retain_versions == 0``.
 
-    OPTIMISTIC CONCURRENCY: commits serialize through a directory-lock
-    mutex (``os.mkdir`` is atomic on POSIX, so the lock works across
-    processes sharing the filesystem). Writers that based their batch on
-    a snapshot pass ``expect_version=table.version()``; if another writer
-    committed in between, the commit raises :class:`ConcurrentWriteError`
-    instead of silently clobbering — read-modify-write cycles (MERGE, SCD
-    flows) retry from a fresh read, exactly Delta's protocol. Blind
+    OPTIMISTIC CONCURRENCY: commits serialize through an exclusive
+    ``flock`` on ``_log/.lock`` (`_locked`), which excludes threads and
+    processes alike and which the kernel drops when its holder dies, so
+    a crashed writer never leaves the table locked. Writers that based
+    their batch on a snapshot pass ``expect_version=table.version()``; if
+    another writer committed in between, the commit raises
+    :class:`ConcurrentWriteError` instead of silently clobbering —
+    read-modify-write cycles (MERGE, SCD flows) retry from a fresh read,
+    exactly Delta's protocol. Blind
     writes (``overwrite``, ``append`` and ``restore`` with no
     ``expect_version``), whose content does not come from the table,
     serialize through the lock and are never torn. Read-modify-write
@@ -346,30 +350,11 @@ class ManagedParquetTable:
 
     @contextlib.contextmanager
     def _commit(self, expect_version: int | None, timeout: float = 30.0):
-        """Directory-lock mutex around the commit section; verifies the
-        expected version INSIDE the lock. The body creates the next log
-        entry (`_publish`); the post-commit vacuum then drops the entries
-        past ``retain_versions``, keeping the one just replaced, and the
-        files no remaining entry names.
-
-        STALE-LOCK RECOVERY: the owner writes its pid into
-        ``{lock}/pid`` right after acquiring; a writer SIGKILLed between
-        mkdir and rmdir would otherwise brick the table (every later
-        commit timing out with no remediation path). Contenders that find
-        the pid belonging to a dead process (scratch.py's liveness probe)
-        break the lock and re-contend; a lock dir that never grew a pid
-        file (owner died inside the two-syscall acquire window) is broken
-        once its mtime is older than a grace period. Breaking is ATOMIC:
-        the whole lock dir is renamed aside to a unique grave first
-        (``_break_lock``), so rename wins for exactly one breaker and a
-        lock that was meanwhile released-and-re-acquired can never be
-        torn apart piecemeal (the old remove-pid-then-rmdir sequence
-        could delete a NEW live owner's pid). A live owner whose lock is
-        renamed aside before its pid write FAILS LOUDLY — the pid write
-        targets a path inside the now-gone dir — instead of silently
-        entering the critical section; a pid-carrying live owner found
-        inside the grave (stale decision made against a prior incarnation
-        of the path) gets its lock renamed back untouched."""
+        """The commit section: takes the table's lock (`_locked`) and
+        verifies the expected version inside it. The body creates the
+        next log entry (`_publish`); the post-commit vacuum then drops the
+        entries past ``retain_versions``, keeping the one just replaced,
+        and the files no remaining entry names."""
         with self._locked(timeout):
             if expect_version is not None and self.version() != expect_version:
                 raise ConcurrentWriteError(
@@ -381,93 +366,25 @@ class ManagedParquetTable:
 
     @contextlib.contextmanager
     def _locked(self, timeout: float = 30.0):
-        """Bare directory-lock mutex (acquire → pid stamp → release);
-        the stale-lock breaking documented on `_commit` lives here."""
-        from databricks_end_to_end_lakeflow_project_spark.sources.scratch import (
-            _alive,
-        )
-
-        lock = f"{self.path}.__lock"
-        pid_file = os.path.join(lock, "pid")
-        os.makedirs(os.path.dirname(self.path) or ".", exist_ok=True)
-        deadline = time.monotonic() + timeout
-        while True:
-            try:
-                os.mkdir(lock)
-                break
-            except FileExistsError:
-                owner: int | None = None
+        """Exclusive ``flock`` on ``_log/.lock``, polled until ``timeout``
+        (then TimeoutError). Each acquisition opens its own descriptor, so
+        threads of one process exclude each other as processes do, and
+        the kernel releases the lock when the descriptor closes, also when
+        its process is killed: no lock outlives its owner. The file is
+        never removed; a waiter could otherwise lock a fresh inode while
+        the old one is held."""
+        os.makedirs(self._log_dir(), exist_ok=True)
+        with open(os.path.join(self._log_dir(), _LOCK), "a") as fh:
+            deadline = time.monotonic() + timeout
+            while True:
                 try:
-                    with open(pid_file) as fh:
-                        owner = int(fh.read().strip() or 0)
-                except (FileNotFoundError, ValueError, OSError):
-                    owner = None
-                stale = False
-                if owner is not None:
-                    stale = not _alive(owner)
-                else:
-                    # no pid yet: give a live owner time to write it; a dir
-                    # whose mtime stopped advancing past the grace window
-                    # has a dead owner (pid write bumps the dir mtime).
-                    # Generous grace: a live owner suspended here (SIGSTOP,
-                    # swap, GC pause) that outlives it STILL cannot commit
-                    # unlocked — its pid write lands inside the renamed-away
-                    # dir and raises, so a too-eager break aborts the owner
-                    # rather than admitting two writers.
-                    try:
-                        stale = time.time() - os.stat(lock).st_mtime > 30.0
-                    except FileNotFoundError:
-                        continue  # released between mkdir and stat — retry
-                if stale:
-                    self._break_lock(lock)
-                    continue
-                if time.monotonic() > deadline:
-                    raise TimeoutError(f"commit lock busy: {lock}")
-                time.sleep(0.02)
-        try:
-            with open(pid_file, "w") as fh:
-                fh.write(str(os.getpid()))
+                    fcntl.flock(fh, fcntl.LOCK_EX | fcntl.LOCK_NB)
+                    break
+                except BlockingIOError:
+                    if time.monotonic() > deadline:
+                        raise TimeoutError(f"commit lock busy: {fh.name}") from None
+                    time.sleep(0.02)
             yield
-        finally:
-            with contextlib.suppress(OSError):
-                os.remove(pid_file)
-            with contextlib.suppress(OSError):
-                os.rmdir(lock)
-
-    @staticmethod
-    def _break_lock(lock: str) -> None:
-        """Atomically retire a lock dir judged stale: rename the WHOLE dir
-        aside to a unique grave, then rmtree the grave. ``os.rename`` of a
-        directory is atomic and succeeds for at most one breaker, so two
-        contenders that both observed a dead owner cannot interleave their
-        removals, and a released-then-re-acquired lock is never half
-        deleted. Safety re-check: if the grave turns out to contain a LIVE
-        pid (the stale decision was made against a previous incarnation of
-        the path and the rename grabbed a fresh owner's lock), rename it
-        straight back — the owner never notices. A live owner broken
-        BEFORE its pid write fails loudly instead (its ``open`` targets a
-        path inside the gone dir), so no path admits two writers."""
-        from databricks_end_to_end_lakeflow_project_spark.sources.scratch import (
-            _alive,
-        )
-
-        grave = f"{lock}.broken.{os.getpid()}.{uuid.uuid4().hex}"
-        try:
-            os.rename(lock, grave)
-        except OSError:
-            return  # another breaker won, or the owner released — re-contend
-        owner = 0
-        try:
-            with open(os.path.join(grave, "pid")) as fh:
-                owner = int(fh.read().strip() or 0)
-        except (FileNotFoundError, ValueError, OSError):
-            owner = 0
-        if owner and _alive(owner):
-            # we grabbed a live writer's freshly re-acquired lock: undo.
-            with contextlib.suppress(OSError):
-                os.rename(grave, lock)
-            return
-        shutil.rmtree(grave, ignore_errors=True)
 
     def _stage(self, df: DataFrame) -> str:
         """Write ``df`` to a fresh stage dir (the expensive Spark job,
@@ -564,7 +481,7 @@ class ManagedParquetTable:
             rel = os.path.relpath(root, self.path)
             for f in names:
                 if os.path.normpath(os.path.join(rel, f)) not in named and not (
-                    root == log and f.endswith(".json")
+                    root == log and (f.endswith(".json") or f == _LOCK)
                 ):
                     os.remove(os.path.join(root, f))
             if root not in (self.path, log) and not os.listdir(root):
@@ -577,8 +494,8 @@ class ManagedParquetTable:
 
     def recover(self, timeout: float = 30.0) -> None:
         """Delete what crashed writers left: files no entry names and
-        dead writers' stage dirs. Runs under the commit lock; a no-op on
-        a healthy table."""
+        dead writers' stage dirs (their lock died with them). Runs under
+        the commit lock; a no-op on a healthy table."""
         with self._locked(timeout):
             self._vacuum_locked(0)
 
@@ -1236,10 +1153,20 @@ def scd2_from_snapshots(
         all_events = ev if all_events is None else all_events.unionByName(ev)
         prev = snap
     assert all_events is not None, "need at least one snapshot"
+    return scd2_intervals(all_events, keys)
+
+
+def scd2_intervals(events: DataFrame, keys: Sequence[str]) -> DataFrame:
+    """Fold change events (``table_changes`` rows without preimages,
+    stamped with their snapshot id ``__v``) into SCD2 validity intervals:
+    per key, each event opens a version at ``__v`` that the next event
+    closes (``lead``), and delete events, which only close, are dropped.
+    One window shuffle over the events."""
+    keys = list(keys)
     w = Window.partitionBy(*keys).orderBy("__v")
-    attrs = [c for c in all_events.columns if c not in (*keys, "_change_type", "__v")]
+    attrs = [c for c in events.columns if c not in (*keys, "_change_type", "__v")]
     return (
-        all_events.withColumn("__END_AT", F.lead("__v").over(w))
+        events.withColumn("__END_AT", F.lead("__v").over(w))
         .filter(F.col("_change_type") != "delete")
         .select(
             *keys,

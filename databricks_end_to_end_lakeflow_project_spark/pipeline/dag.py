@@ -51,6 +51,7 @@ from pyspark.sql import types as T
 from databricks_end_to_end_lakeflow_project_spark.operators.cdc import (
     ManagedParquetTable,
     scd2_apply,
+    scd2_intervals,
     table_changes,
 )
 from databricks_end_to_end_lakeflow_project_spark.pipeline.expectations import (
@@ -323,35 +324,24 @@ class Pipeline:
             ver = target.txn().get(progress, 0) + 1
             validity = [F.lit(None).cast("int").alias(c) for c in ("__START_AT", "__END_AT")]
             hist = target.read() if target.exists() else cur.limit(0).select("*", *validity)
-            prev = hist.filter(F.col("__END_AT").isNull()).drop("__START_AT", "__END_AT")
-            changes = table_changes(prev, cur, flow.keys).filter(
-                F.col("_change_type") != "update_preimage"
+            is_open = F.col("__END_AT").isNull()
+            opened = hist.filter(is_open)
+            prev = opened.drop("__START_AT", "__END_AT")
+            # the open versions re-enter as inserts at their start; the
+            # run's changes close them and open the new ones at `ver`
+            events = opened.select(
+                *prev.columns,
+                F.lit("insert").alias("_change_type"),
+                F.col("__START_AT").alias("__v"),
+            ).unionByName(
+                table_changes(prev, cur, flow.keys)
+                .filter(F.col("_change_type") != "update_preimage")
+                .withColumn("__v", F.lit(ver))
             )
-            attrs = [c for c in changes.columns if c not in (*flow.keys, "_change_type")]
-            opens = changes.filter(F.col("_change_type") != "delete").select(
-                *flow.keys,
-                *attrs,
-                F.lit(ver).alias("__START_AT"),
-                F.lit(None).cast("int").alias("__END_AT"),
-            )
-            closers = (
-                changes.select(*flow.keys)
-                .distinct()
-                .withColumn("__close", F.lit(True))
-            )
-            closed = (
-                hist.join(closers, flow.keys, "left")
-                .withColumn(
-                    "__END_AT",
-                    F.when(
-                        F.col("__END_AT").isNull() & F.col("__close"),
-                        F.lit(ver),
-                    ).otherwise(F.col("__END_AT")),
-                )
-                .select(*opens.columns)
-            )
+            fold = scd2_intervals(events, flow.keys)
+            closed = hist.filter(~is_open).select(*fold.columns)
             target.overwrite(
-                closed.unionByName(opens), expect_version=version, txn={progress: ver}
+                closed.unionByName(fold), expect_version=version, txn={progress: ver}
             )
 
     def create_append_flow(

@@ -334,9 +334,9 @@ def business_silver_stream(lake: FlightLakehouse) -> DataFrame:
     to the batch view (pinned by `tests/test_flight_pipeline.py`).
 
     Returns the DRAINED join as a batch DataFrame (memory-sink
-    verification harness, like the other stream queries)."""
-    import uuid as _uuid
-
+    verification harness, like the other stream queries). The sink's name
+    is constant: each drain runs on its own `sized_session` clone, whose
+    query manager and temp views no other drain shares."""
     from databricks_end_to_end_lakeflow_project_spark.streaming.structured import run_to_memory
 
     sides = {t: lake.silver.table(t) for t in SILVER_TABLES}
@@ -383,7 +383,7 @@ def business_silver_stream(lake: FlightLakehouse) -> DataFrame:
     # null-padded rows emit on eviction.
     return run_to_memory(
         build,
-        f"bizsilver_{_uuid.uuid4().hex[:8]}",
+        "bizsilver",
         input_rows=sum(t.rows() for t in sides.values()),
         extra_conf={"spark.sql.streaming.noDataMicroBatches.enabled": "false"},
         spark=lake.spark,

@@ -160,7 +160,9 @@ def build_dim(
         last_load = max_key = None
     src = source.filter(F.col(cfg.cdc_col) >= last_load) if last_load is not None else source
 
-    # 2. one change per business key (W1 dedup)
+    # 2. one change per business key (W1 dedup); unlike the fact, which
+    # leaves it to the upsert's merge, the dense surrogate keys below
+    # need one row per new key
     src = latest_by_key(src, cfg.business_keys, [cfg.cdc_col])
 
     # 3. old-vs-new split via left join on business keys (reference J2)
@@ -237,9 +239,13 @@ def build_fact(
     target: ManagedParquetTable,
     cfg: FactConfig,
     clock: dt.datetime | None = None,
-) -> DataFrame:
-    """One incremental fact build: cursor slice → dedup to grain →
-    broadcast star joins to fetch surrogate keys → upsert on the grain.
+) -> None:
+    """One incremental fact build: cursor slice → broadcast star joins to
+    fetch surrogate keys → upsert on the grain. The slice is not deduped
+    first: the upsert's one-window merge keeps the latest row per grain
+    key (`merge_upsert_plan`), also on a first write over an empty
+    target, and the left joins to dimensions unique on their business
+    keys only add columns to each row.
 
     Unmatched dimension rows keep a NULL surrogate key (the reference's
     LEFT JOIN semantics — FIXTURES.md notes bookings contain passenger ids
@@ -248,10 +254,7 @@ def build_fact(
     last_load = _high_water(target, [cfg.cdc_col])[0] if target.exists() else None
     # an existing but EMPTY target has no cursor: slicing on `>= NULL`
     # would drop every later row and leave the fact empty forever
-    src = source.filter(F.col(cfg.cdc_col) >= last_load) if last_load is not None else source
-    src = latest_by_key(src, cfg.grain_keys, [cfg.cdc_col])
-
-    out = src
+    out = source.filter(F.col(cfg.cdc_col) >= last_load) if last_load is not None else source
     surrogate_cols = []
     for spec in cfg.dims:
         dim_cols = list(dict.fromkeys([*spec.join_on.values(), spec.surrogate_key]))
@@ -277,4 +280,3 @@ def build_fact(
     batch = out.select(*keep).withColumn("update_date", _clock_col(clock))
 
     target.upsert(batch, cfg.grain_keys, cfg.cdc_col)
-    return batch

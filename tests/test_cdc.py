@@ -1,6 +1,12 @@
 from __future__ import annotations
 
+import contextlib
 import datetime as dt
+import fcntl
+import os
+import subprocess
+import sys
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -10,6 +16,9 @@ from databricks_end_to_end_lakeflow_project_spark.operators.cdc import (
     latest_by_key,
     merge_upsert_plan,
 )
+
+
+_REPO = Path(__file__).resolve().parents[1]
 
 
 def _ts(s: str) -> dt.datetime:
@@ -856,85 +865,88 @@ def test_scd2_apply_conflicts_with_commit_between_read_and_commit(
     assert _stage_dirs(t) == []
 
 
+@contextlib.contextmanager
+def _lock_holder(path: str):
+    """A subprocess that takes the commit lock of the table at ``path``
+    and holds it until it is killed; yields its Popen."""
+    code = (
+        "import sys\n"
+        "from databricks_end_to_end_lakeflow_project_spark.operators.cdc import "
+        "ManagedParquetTable\n"
+        "with ManagedParquetTable(None, sys.argv[1])._locked():\n"
+        "    print('locked', flush=True)\n"
+        "    sys.stdin.read()\n"
+    )
+    holder = subprocess.Popen(
+        [sys.executable, "-c", code, path],
+        stdin=subprocess.PIPE, stdout=subprocess.PIPE, cwd=_REPO,
+    )
+    try:
+        assert holder.stdout.readline() == b"locked\n"
+        yield holder
+    finally:
+        holder.kill()
+        holder.wait()
+
+
+def _short_lock_timeout(monkeypatch, seconds: float = 0.3) -> None:
+    orig = ManagedParquetTable._commit
+    monkeypatch.setattr(
+        ManagedParquetTable,
+        "_commit",
+        lambda self, ev, timeout=30.0: orig(self, ev, timeout=seconds),
+    )
+
+
 def test_stale_lock_of_dead_owner_is_broken(spark, tmp_path):
-    """A writer SIGKILLed between mkdir and rmdir leaves the lock dir
-    behind with its pid inside; the NEXT commit must break that lock
-    (the pid is dead — it cannot be mid-commit) instead of timing out
-    forever with no remediation path."""
-    import os
-    import subprocess
-
-    from databricks_end_to_end_lakeflow_project_spark.operators.cdc import (
-        ManagedParquetTable,
-    )
-
+    """A writer SIGKILLed while it holds the commit lock must not block
+    the next commit: the kernel drops the flock with the dead process's
+    descriptors, so the lock is free at once and the lock file stays."""
     t = ManagedParquetTable(spark, str(tmp_path / "t"))
-    df = spark.range(3).selectExpr("id AS k")
-    # a pid that existed but is now certainly dead
-    p = subprocess.Popen(["true"])
-    p.wait()
-    lock = f"{t.path}.__lock"
-    os.makedirs(lock)
-    with open(os.path.join(lock, "pid"), "w") as fh:
-        fh.write(str(p.pid))
+    with _lock_holder(t.path) as holder:
+        holder.kill()
+        holder.wait()
+    lock = os.path.join(t._log_dir(), ".lock")
+    with open(lock) as fh:
+        fcntl.flock(fh, fcntl.LOCK_EX | fcntl.LOCK_NB)  # raises if still held
 
-    t.overwrite(df)  # must break the stale lock, not TimeoutError
+    t.overwrite(spark.range(3).selectExpr("id AS k"))
     assert t.read().count() == 3 and t.version() == 1
-    assert not os.path.exists(lock), "lock released after the commit"
-
-
-def test_stale_lock_without_pid_breaks_after_grace(spark, tmp_path):
-    """A lock dir that never grew a pid file (owner died inside the
-    two-syscall acquire window) is broken once its mtime is older than
-    the grace period."""
-    import os
-    import time as _time
-
-    from databricks_end_to_end_lakeflow_project_spark.operators.cdc import (
-        ManagedParquetTable,
-    )
-
-    t = ManagedParquetTable(spark, str(tmp_path / "t"))
-    lock = f"{t.path}.__lock"
-    os.makedirs(lock)
-    past = _time.time() - 60
-    os.utime(lock, (past, past))
-
-    t.overwrite(spark.range(2).selectExpr("id AS k"))
-    assert t.read().count() == 2
-    assert not os.path.exists(lock)
+    assert os.path.exists(lock), "the lock file is never removed"
 
 
 def test_lock_timeout_cleans_staged_tmp(spark, tmp_path, monkeypatch):
     """A commit that times out on a held lock must clean its staged
     __tmp_ dir just like a version conflict does — a busy table must
     not leak one abandoned stage per failed writer."""
-    import os
-
-    from databricks_end_to_end_lakeflow_project_spark.operators.cdc import (
-        ManagedParquetTable,
-    )
-
-    orig = ManagedParquetTable._commit
-    monkeypatch.setattr(
-        ManagedParquetTable,
-        "_commit",
-        lambda self, ev, timeout=30.0: orig(self, ev, timeout=0.3),
-    )
+    _short_lock_timeout(monkeypatch)
     t = ManagedParquetTable(spark, str(tmp_path / "t"))
-    # a LIVE owner holds the lock (this process), so breaking is illegal
-    lock = f"{t.path}.__lock"
-    os.makedirs(lock)
-    with open(os.path.join(lock, "pid"), "w") as fh:
-        fh.write(str(os.getpid()))
-    try:
+    # a live holder: this test, on its own descriptor
+    os.makedirs(t._log_dir())
+    with open(os.path.join(t._log_dir(), ".lock"), "a") as fh:
+        fcntl.flock(fh, fcntl.LOCK_EX)
         with pytest.raises(TimeoutError):
             t.overwrite(spark.range(1).selectExpr("id AS k"))
         leftovers = [d for d in os.listdir(tmp_path) if "__tmp_" in d]
         assert leftovers == [], "staged dir must be cleaned on timeout"
-    finally:
-        os.remove(os.path.join(lock, "pid"))
-        os.rmdir(lock)
+
+
+def test_commit_waits_for_a_lock_held_by_another_process(spark, tmp_path, monkeypatch):
+    """While another process holds the table's commit lock a commit here
+    times out and leaves no stage; once that process is SIGKILLed the
+    next commit goes through within the same short timeout."""
+    _short_lock_timeout(monkeypatch)
+    t = ManagedParquetTable(spark, str(tmp_path / "t"))
+    df = spark.range(2).selectExpr("id AS k")
+    with _lock_holder(t.path) as holder:
+        with pytest.raises(TimeoutError):
+            t.overwrite(df)
+        assert [d for d in os.listdir(tmp_path) if "__tmp_" in d] == []
+        assert t.version() == 0
+        holder.kill()
+        holder.wait()
+        t.overwrite(df)
+    assert t.version() == 1 and t.read().count() == 2
 
 
 @pytest.mark.parametrize("op", ["overwrite", "append", "pruned_upsert"])

@@ -13,9 +13,9 @@ commit at one of three kill points:
 The injected `_Kill` derives from BaseException, so none of the
 protocol's `except (ConcurrentWriteError, TimeoutError)` cleanup handlers
 run — the on-disk data state an `os.kill(pid, SIGKILL)` would leave. (The
-directory lock is additionally released by the context manager; a
-crash-held lock is the stale-lock machinery's job, covered by its own
-tests.) The killed writer's stage dir carries our live pid, so each case
+commit lock is released as the exception unwinds, as the kernel releases
+the `flock` of a killed process; `tests/test_cdc.py` kills a real lock
+holder.) The killed writer's stage dir carries our live pid, so each case
 marks it dead before the sweep, as the real crash would.
 
 Invariants asserted at EVERY kill point:

@@ -170,6 +170,24 @@ def test_business_silver_stream_equals_batch(spark, tmp_path_factory):
     assert 0 < n <= 1000 and n == batch.count()
 
 
+def test_business_silver_stream_drains_run_concurrently(lake):
+    """The drain's memory sink has one constant name: two drains at once
+    over one lake each run on their own session clone, so neither meets
+    the other's query or view, and both return the same rows."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from databricks_end_to_end_lakeflow_project_spark.plans.flight_pipeline import (
+        business_silver_stream,
+    )
+
+    def drain(_):
+        return sorted(map(tuple, business_silver_stream(lake).collect()), key=repr)
+
+    with ThreadPoolExecutor(2) as pool:
+        a, b = pool.map(drain, range(2))
+    assert a and a == b
+
+
 def test_fact_fills_after_run_with_only_invalid_bookings(spark, tmp_path):
     """A first run whose bookings all fail expectations leaves an EMPTY
     fact table; its NULL cursor must not slice away the next run's
